@@ -5,9 +5,11 @@
 
 Run from the root of a checkout. The first run builds the harness and the
 engine from source with sbt (perfbench/build.sbt); later runs reuse the
-build while the sources are unchanged. Everything the run writes stays in
-the checkout: build output under perfbench/target, generated inputs,
-traces and run records under perfbench/.work.
+build while the sources are unchanged. Inputs are generated by a JVM of
+their own when the seed's are not cached yet, so the measured JVM's set-up
+never includes generation. Everything the run writes stays in the checkout:
+build output under perfbench/target, generated inputs, traces and run
+records under perfbench/.work.
 
 The last stdout line is one JSON object {correct, attempted, failed,
 metrics}: the end-to-end metrics of BENCHMARK.json with --trace 0, its
@@ -131,6 +133,16 @@ def run_jvm(cmd, stdout, timeout):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def generate(classpath, extra, workload, seed, trace):
+    """Write the inputs of one run in a JVM of its own; a no-op when cached."""
+    cmd = jvm_command(classpath, extra, [
+        "--workload", workload, "--seed", str(seed), "--seconds", "0",
+        "--trace", str(trace), "--generate", "1"])
+    code, _ = run_jvm(cmd, sys.stderr, JVM_TIMEOUT_S)
+    if code != 0:
+        fail(f"input generation exited {code}", 1)
+
+
 def class_archive(classpath, stamp):
     """JVM class-data-sharing archive of the build's classes, made once per
     build by a short stream_arrivals run (it loads the pipeline, sink and
@@ -143,6 +155,7 @@ def class_archive(classpath, stamp):
             if old.startswith("perfbench-") and ".jsa" in old:
                 os.remove(os.path.join(os.path.dirname(archive), old))
         print("[perfbench] dumping the class archive", file=sys.stderr)
+        generate(classpath, [], "stream_arrivals", 0, 0)
         cmd = jvm_command(classpath, [f"-XX:ArchiveClassesAtExit={archive}.tmp"], [
             "--workload", "stream_arrivals", "--seed", "0", "--seconds", "1", "--trace", "0"])
         code, _ = run_jvm(cmd, sys.stderr, BUILD_TIMEOUT_S)
@@ -193,6 +206,7 @@ def main():
     os.utime(WORK)
     prune_generated()
     cds = class_archive(classpath, stamp)
+    generate(classpath, cds, args.workload, args.seed, args.trace)
     cmd = jvm_command(classpath, cds, [
         "--workload", args.workload, "--seed", str(args.seed),
         "--seconds", str(args.seconds), "--trace", str(args.trace)])

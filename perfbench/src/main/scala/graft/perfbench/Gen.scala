@@ -19,8 +19,9 @@ import graft.streaming.StreamingPipeline
   * Every random draw is a hash of (seed, row id, salt), so a seed gives
   * the same rows whatever the partitioning. The program under test only
   * ever sees the parquet files written here. Files are cached under
-  * `cacheRoot/v<Version>-<synth hash>/seed-<seed>`; generation runs
-  * before the first timed operation and outside `setup_s`.
+  * `cacheRoot/v<Version>-<synth hash>/seed-<seed>` and written by a JVM
+  * of their own (`--generate 1`), so a measured JVM, whose start is part
+  * of `setup_s`, never carries generation or its warming.
   */
 object Gen {
   /** Bump when any generated shape changes: old caches are then ignored. */
@@ -141,34 +142,38 @@ object Gen {
   /** Write `dir` once: a `_READY` marker makes later runs reuse it, and
     * a run cut short before the marker leaves nothing that is reused. */
   private def once(dir: String)(write: String => Unit): Unit =
-    if (!Files.exists(Paths.get(dir, "_READY"))) {
+    if (!ready(dir)) {
       Util.deleteTree(dir)
       write(dir)
       Files.write(Paths.get(dir, "_READY"), Array.emptyByteArray)
     }
 
-  /** Generate (or reuse) the inputs `workload` reads; a traced
-    * stream_arrivals run also reads the analytics inputs. */
-  def ensure(spark: SparkSession, cacheRoot: String, seed: Long, workload: String,
-             traced: Boolean): Inputs = {
-    val synthV = Integer.toHexString(Transcripts.synthSql("events").hashCode)
-    val in = Inputs(s"$cacheRoot/v$Version-$synthV/seed-$seed")
-    // a few 10^4-row tables: interpreting them is cheaper than compiling
-    // the synthesis SQL's generated code in a cold JVM
-    val conf = Seq("spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-    val saved = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
-    conf.foreach { case (k, v) => spark.conf.set(k, v) }
-    try generate(spark, in, seed, workload, traced)
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+  private def ready(dir: String): Boolean = Files.exists(Paths.get(dir, "_READY"))
+
+  /** The cached inputs of one (seed, workload, traced) run. */
+  final case class Cache(cacheRoot: String, seed: Long, workload: String, traced: Boolean) {
+    val inputs: Inputs = Inputs(s"$cacheRoot/v$Version-" +
+      s"${Integer.toHexString(Transcripts.synthSql("events").hashCode)}/seed-$seed")
+    /** The directories this run reads; a traced stream_arrivals run also
+      * reads the analytics inputs. */
+    def dirs: Seq[String] = workload match {
+      case "batch_backfill" => Seq(inputs.batch)
+      case _ if traced => Seq(inputs.streamFiles, inputs.transcripts, inputs.documents,
+        inputs.embeddings)
+      case _ => Seq(inputs.streamFiles)
     }
-    in
+    /** A filesystem check only: no Spark session is started. */
+    def ready: Boolean = dirs.forall(Gen.ready)
   }
 
-  private def generate(spark: SparkSession, in: Inputs, seed: Long, workload: String,
-                       traced: Boolean): Unit = {
+  /** Generate the inputs `cache` names that are not there yet. */
+  def generate(spark: SparkSession, cache: Cache): Unit = {
+    // a few 10^4-row tables: interpreting them is cheaper than compiling
+    // the synthesis SQL's generated code in a cold JVM
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    val Cache(_, seed, workload, traced) = cache
+    val in = cache.inputs
     def arrivals = transcripts(spark, seed, ArrivalEvents, ArrivalDays)
     if (workload == "batch_backfill") once(in.batch) { dir =>
       // replicas keep conv_hot as one key, like Bench.replicated

@@ -10,9 +10,12 @@ import graft.Graft
   * process, at local[nproc], calling the engine's public functions.
   *
   *   PerfBench --workload batch_backfill|stream_arrivals
-  *             --seed N --seconds S --trace 0|1 --work DIR
+  *             --seed N --seconds S --trace 0|1 --work DIR [--generate 1]
   *
-  * With `--trace 0` it times operations until their summed time reaches S
+  * With `--generate 1` it only writes the inputs of (workload, seed,
+  * trace) when they are not cached yet, so that input generation never
+  * shares a JVM with a measured run. Otherwise the inputs must exist:
+  * with `--trace 0` it times operations until their summed time reaches S
   * seconds and prints the end-to-end metrics; with `--trace 1` it runs the
   * traced decomposition and prints the per-layer metrics. Either way the
   * last stdout line is one JSON object {correct, attempted, failed,
@@ -21,18 +24,14 @@ import graft.Graft
 object PerfBench {
 
   final case class Args(workload: String, seed: Long, seconds: Double,
-                        trace: Boolean, work: String)
+                        trace: Boolean, work: String, generate: Boolean)
 
   private def parse(args: Array[String]): Args = {
     val m = args.grouped(2).collect { case Array(k, v) => k -> v }.toMap
     def need(k: String) = m.getOrElse(k, sys.error(s"missing $k"))
     Args(need("--workload"), need("--seed").toLong, need("--seconds").toDouble,
-      need("--trace") == "1", need("--work"))
+      need("--trace") == "1", need("--work"), m.get("--generate").contains("1"))
   }
-
-  /** Set-up rounds: each runs the workload's warm-up; round 1 also
-    * carries the JVM and session start. Their median is `setup_s`. */
-  val SetupRounds = 3
 
   def session(work: String): SparkSession = {
     val cores = Runtime.getRuntime.availableProcessors
@@ -61,8 +60,8 @@ object PerfBench {
   def overdue(t0: Long, seconds: Double): Boolean =
     (System.nanoTime() - t0) / 1e9 > 3 * seconds + 60
 
-  /** One workload: set-up warm-up, the oracle computed outside timing,
-    * the timed loop and the traced decomposition. */
+  /** One workload: the warm-up that ends set-up, the oracle computed
+    * outside timing, the timed loop and the traced decomposition. */
   trait Workload {
     def warmUp(spark: SparkSession): Unit
     def prepare(spark: SparkSession): Unit
@@ -90,39 +89,47 @@ object PerfBench {
       if (!ok) { failed += 1; System.err.println(s"[perfbench] $what FAILED") }
       ok
     }
-    /** The op-time metrics shared by every workload. A run holds 3-20
-      * operations, too few for a percentile above the median with ten
-      * samples beyond it, so the slowest operation is reported instead. */
-    def putOpTimes(samples: Seq[Double], p50: Double): Unit = {
+    /** The batch-time metrics shared by every workload. A run holds 3-20
+      * batches, too few for a percentile above the median with ten
+      * samples beyond it, so the slowest batch is reported instead. */
+    def putBatchTimes(samples: Seq[Double]): Unit = if (samples.nonEmpty) {
       opTimes ++= samples
-      put("op_p50_s", p50, "s")
-      put("op_max_s", samples.max, "s")
-      put("op_samples", samples.size.toDouble, "count")
+      put("batch_p50_s", Util.median(samples), "s")
+      put("batch_max_s", samples.max, "s")
+      put("batch_samples", samples.size.toDouble, "count")
     }
   }
 
   def main(argv: Array[String]): Unit = {
-    val jvmToMainS = (System.currentTimeMillis() -
-      java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime) / 1e3
+    val jvmStartMs = java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime
+    val jvmToMainS = (System.currentTimeMillis() - jvmStartMs) / 1e3
     val a = parse(argv)
     Files.createDirectories(Paths.get(a.work))
+    val gen = Gen.Cache(s"${a.work}/gen", a.seed, a.workload, a.trace)
+    if (a.generate) {
+      if (!gen.ready) {
+        val spark = session(a.work)
+        try Gen.generate(spark, gen) finally spark.stop()
+      }
+      sys.exit(0)
+    }
+    if (!gen.ready) sys.error(s"inputs of ${a.workload} seed ${a.seed} not generated: " +
+      "run with --generate 1 first")
     val runDir = s"${a.work}/run-${ProcessHandle.current().pid()}"
-    val (firstSession, firstStart) = Util.time(session(a.work))
-    val spark = firstSession
-    val (inputs, genS) = Util.time(Gen.ensure(spark, s"${a.work}/gen", a.seed, a.workload, a.trace))
+    val (spark, sessionS) = Util.time(session(a.work))
     val wl: Workload = a.workload match {
-      case "batch_backfill" => new BatchBackfill(inputs, runDir)
-      case "stream_arrivals" => new StreamArrivals(inputs, runDir)
+      case "batch_backfill" => new BatchBackfill(gen.inputs, runDir)
+      case "stream_arrivals" => new StreamArrivals(gen.inputs, runDir)
       case other => sys.error(s"unknown workload $other")
     }
-    // round 1 also carries the JVM and session start
-    val setups = (1 to SetupRounds).map { round =>
-      val (_, s) = Util.time(wl.warmUp(spark))
-      if (round == 1) jvmToMainS + firstStart + s else s
-    }
+    // the oracle before the warm-up, so the JIT work it causes is done
+    // before the first timed operation
     wl.prepare(spark)
+    val (_, warmUpS) = Util.time(wl.warmUp(spark))
     refKernel(spark) // its own first run compiles it; the record times warm runs
     val refBefore = refKernel(spark)
+    // set-up: process start to the first timed operation
+    val setupS = (System.currentTimeMillis() - jvmStartMs) / 1e3
     val out =
       if (!a.trace) wl.measure(spark, a.seconds)
       else {
@@ -140,15 +147,15 @@ object PerfBench {
     spark.stop()
     Util.deleteTree(runDir)
 
-    out.put("setup_s", Util.median(setups), "s")
+    out.put("setup_s", setupS, "s")
     out.put("host.nproc", Runtime.getRuntime.availableProcessors.toDouble, "count")
     out.put("host.ref_kernel_before_s", refBefore, "s")
     out.put("host.ref_kernel_after_s", refAfter, "s")
     val record = Seq(
       s""""workload":"${a.workload}"""", s""""seed":${a.seed}""",
-      s""""trace":${a.trace}""", s""""gen_s":${Util.num(genS)}""",
-      s""""jvm_to_main_s":${Util.num(jvmToMainS)}""", s""""first_session_s":${Util.num(firstStart)}""",
-      s""""setup_rounds_s":${setups.map(Util.num).mkString("[", ",", "]")}""",
+      s""""trace":${a.trace}""",
+      s""""jvm_to_main_s":${Util.num(jvmToMainS)}""", s""""session_s":${Util.num(sessionS)}""",
+      s""""warm_up_s":${Util.num(warmUpS)}""",
       s""""op_times_s":${out.opTimes.map(Util.num).mkString("[", ",", "]")}""") ++
       out.metrics.map { case (k, (v, u)) => s""""$k":{"value":${Util.num(v)},"unit":"$u"}""" }
     val line = record.mkString("{", ",", "}")

@@ -58,9 +58,11 @@ final class BatchBackfill(in: Gen.Inputs, runDir: String) extends Workload {
 
   private def nextRoot(): String = { n += 1; s"$runDir/batch-$n" }
 
-  /** One untimed batch run over the same input: smaller warm-up inputs
-    * left the first timed run ~30% slower than the rest. */
-  def warmUp(spark: SparkSession): Unit = {
+  /** Five untimed batch runs over the same input. Run times keep falling
+    * for the first five or six runs while the JIT compiles (C2 spent ~80 s
+    * of CPU in one 45 s run at local[4]); after two or three warm-up runs
+    * the timed runs still fell by 25-35% within the measured phase. */
+  def warmUp(spark: SparkSession): Unit = (1 to 5).foreach { _ =>
     val root = nextRoot()
     run(in.batch, root)
     Util.deleteTree(root)
@@ -69,45 +71,50 @@ final class BatchBackfill(in: Gen.Inputs, runDir: String) extends Workload {
   def prepare(spark: SparkSession): Unit =
     want = Checks.expected(spark, read(spark, in.batch))
 
-  /** One timed batch run plus its output check; returns the run time. */
+  /** One timed batch run plus its output check, its time appended to
+    * `times`; returns the run's sink root and whether the check held. */
   private def timedRun(spark: SparkSession, out: Outcome, times: mutable.Buffer[Double],
-                       wrap: (=> Unit) => Unit = body => body): String = {
+                       wrap: (=> Unit) => Unit = body => body): (String, Boolean) = {
     val root = nextRoot()
-    out.op("batch run") {
+    val ok = out.op("batch run") {
       val (_, t) = Util.time(wrap(run(in.batch, root)))
       times += t
       Checks.sinksMatch(spark, root, want) &&
         Checks.lineageEvents(spark, root) == Checks.routed(want)
     }
-    root
+    (root, ok)
   }
 
   def measure(spark: SparkSession, seconds: Double): Outcome = {
     val out = new Outcome
     val times = mutable.ArrayBuffer[Double]()
+    var committed = 0L
+    var bytes = 0L
     val t0 = System.nanoTime()
-    while ((times.sum < seconds || times.size < 3) && !PerfBench.overdue(t0, seconds))
-      Util.deleteTree(timedRun(spark, out, times))
-    val p50 = Util.median(times.toSeq)
-    out.put("events_per_s", Checks.routed(want) / p50, "1/s")
-    out.putOpTimes(times.toSeq, p50)
+    while ((times.sum < seconds || times.size < 3) && !PerfBench.overdue(t0, seconds)) {
+      val (root, ok) = timedRun(spark, out, times)
+      if (ok) { committed += Checks.routed(want); bytes += Checks.sinkFiles(root)._2 }
+      Util.deleteTree(root)
+    }
+    out.put("events_per_s", committed / times.sum, "1/s")
+    out.put("sink_bytes_per_event", bytes.toDouble / committed, "bytes")
+    out.putBatchTimes(times.toSeq)
     out
   }
 
   def traced(spark: SparkSession, trace: Trace): Outcome = {
     val out = new Outcome
-    val routedN = Checks.routed(want)
     // tracing overhead: the same batch run without and with spans
     val plain = mutable.ArrayBuffer[Double]()
     val spanned = mutable.ArrayBuffer[Double]()
     // ABBA order, so the JVM's warming over the four runs favours neither
     Seq(false, true, true, false).foreach { traced =>
-      if (traced) Util.deleteTree(timedRun(spark, out, spanned, body => { trace.span("batch_run")(body); () }))
-      else Util.deleteTree(timedRun(spark, out, plain))
+      if (traced) Util.deleteTree(timedRun(spark, out, spanned, body => { trace.span("batch_run")(body); () })._1)
+      else Util.deleteTree(timedRun(spark, out, plain)._1)
     }
     val runS = Util.median(spanned.toSeq)
     out.put("trace.overhead_ratio", runS / Util.median(plain.toSeq), "ratio")
-    out.putOpTimes(spanned.toSeq, runS)
+    out.putBatchTimes(spanned.toSeq)
 
     // pipeline layers as cumulative prefixes into noop; self = difference
     val input = read(spark, in.batch)
@@ -156,7 +163,6 @@ final class BatchBackfill(in: Gen.Inputs, runDir: String) extends Workload {
     val (files, bytes) = Checks.sinkFiles(root)
     out.put("sinks.Sinks.files_written", files.toDouble, "count")
     out.put("sinks.Sinks.bytes_written", bytes.toDouble, "bytes")
-    out.put("sinks.Sinks.bytes_per_event", bytes.toDouble / routedN, "bytes")
     Util.deleteTree(root)
 
     Kernels.pipeline(spark, trace, read(spark, in.batch), out)
@@ -166,21 +172,26 @@ final class BatchBackfill(in: Gen.Inputs, runDir: String) extends Workload {
 
 /** stream_arrivals: time-ordered small files drained through
   * `StreamingPipeline.start(availableNow, maxFilesPerTrigger = 1)` with a
-  * fresh checkpoint — one query at a time (closed loop). Drain d takes
-  * files [d*PerDrain, (d+1)*PerDrain) of the arrival sequence. Its traced
-  * run also traces the analytics operator leaves ([[AnalyticsLeaves]]). */
+  * fresh checkpoint — one query at a time (closed loop). The arrival
+  * sequence is cut into `Windows` whole windows of `PerDrain` files; drain
+  * d takes window d mod `Windows`, and the warm-up takes the files after
+  * the last window. Its traced run also traces the analytics operator
+  * leaves ([[AnalyticsLeaves]]). */
 final class StreamArrivals(in: Gen.Inputs, runDir: String) extends Workload {
   val PerDrain = 10
+  val Windows: Int = Gen.StreamFiles / PerDrain
   private val wants = mutable.Map[Seq[String], Checks.Counts]()
   private var drains = 0
 
+  private def part(i: Int): String = f"${in.streamFiles}/part-$i%04d.parquet"
+
   private def files(d: Int): Seq[String] = {
-    val first = (d * PerDrain) % Gen.StreamFiles
-    (first until first + PerDrain).map(i => f"${in.streamFiles}/part-$i%04d.parquet")
+    val first = (d % Windows) * PerDrain
+    (first until first + PerDrain).map(part)
   }
 
-  final case class Drain(wallS: Double, events: Long, progress: Seq[StreamingQueryProgress],
-                         ok: Boolean)
+  final case class Drain(wallS: Double, events: Long, bytes: Long,
+                         progress: Seq[StreamingQueryProgress], ok: Boolean)
 
   /** Copy `fileList` into a fresh input directory; returns the drain's dir. */
   private def stage(fileList: Seq[String]): String = {
@@ -201,45 +212,49 @@ final class StreamArrivals(in: Gen.Inputs, runDir: String) extends Workload {
   }
 
   /** Drain one window and check the sinks against the batch counts over
-    * the same files (computed outside the timed region). */
+    * the same files (computed outside the timed region). Staging, the
+    * drain and the check run inside one `Try`: a failure of any of them
+    * fails the window's micro-batches, and the run goes on. */
   private def drain(spark: SparkSession, out: Outcome, fileList: Seq[String],
                     trace: Option[Trace] = None): Drain = {
-    val dir = stage(fileList)
-    val want = wants.getOrElseUpdate(fileList, Checks.expected(spark,
-      spark.read.schema(StreamingPipeline.schema).parquet(s"$dir/in")))
+    var dir: Option[String] = None
     val t0 = System.nanoTime()
-    val progress = scala.util.Try(trace.fold(runQuery(spark, dir))(
-      _.span("stream_drain")(runQuery(spark, dir))._1))
-    val wallS = (System.nanoTime() - t0) / 1e9
-    progress.failed.foreach(_.printStackTrace())
-    val ps = progress.getOrElse(Nil)
-    val checked = progress.isSuccess && scala.util.Try {
-      val commits = Option(Paths.get(s"$dir/ckpt/commits").toFile.list()).getOrElse(Array.empty)
+    val result = scala.util.Try {
+      val d = stage(fileList)
+      dir = Some(d)
+      val want = wants.getOrElseUpdate(fileList, expected(spark, fileList))
+      val (ps, wallS) = Util.time(trace.fold(runQuery(spark, d))(
+        _.span("stream_drain")(runQuery(spark, d))._1))
+      val commits = Option(Paths.get(s"$d/ckpt/commits").toFile.list()).getOrElse(Array.empty)
         .count(_.forall(_.isDigit))
-      commits == fileList.size && ps.size == fileList.size &&
-        Checks.sinksMatch(spark, s"$dir/out", want) &&
-        Checks.lineageEvents(spark, s"$dir/out") == Checks.routed(want)
-    }.getOrElse(false)
+      val ok = commits == fileList.size && ps.size == fileList.size &&
+        Checks.sinksMatch(spark, s"$d/out", want) &&
+        Checks.lineageEvents(spark, s"$d/out") == Checks.routed(want)
+      Drain(wallS, Checks.routed(want), Checks.sinkFiles(s"$d/out")._2, ps, ok)
+    }
+    result.failed.foreach(_.printStackTrace())
+    val drained = result.getOrElse(Drain((System.nanoTime() - t0) / 1e9, 0L, 0L, Nil, ok = false))
     // one operation per micro-batch: a failed drain fails all of them
-    fileList.foreach(_ => out.op("micro-batch")(checked))
-    Util.deleteTree(dir)
-    Drain(wallS, Checks.routed(want), ps, checked)
+    fileList.foreach(_ => out.op("micro-batch")(drained.ok))
+    dir.foreach(Util.deleteTree)
+    drained
   }
 
-  private var warmUps = 0
-
-  /** A two-file drain from the end of the day, after the files the timed
-    * drains take: the micro-batch path keeps getting faster for its first
-    * dozen batches, and the query start is part of every drain. */
+  /** A drain of the 4 files after the last window: the query start and
+    * the first micro-batches of a JVM are the slowest. A 14-file warm-up
+    * doubled set-up without flattening the timed micro-batches. */
   def warmUp(spark: SparkSession): Unit = {
-    warmUps += 1
-    val last = Gen.StreamFiles - 2 * (warmUps - 1)
-    val dir = stage((last - 2 until last).map(i => f"${in.streamFiles}/part-$i%04d.parquet"))
+    val dir = stage((Windows * PerDrain until Gen.StreamFiles).map(part))
     runQuery(spark, dir)
     Util.deleteTree(dir)
   }
 
-  def prepare(spark: SparkSession): Unit = ()
+  private def expected(spark: SparkSession, fileList: Seq[String]): Checks.Counts =
+    Checks.expected(spark, spark.read.schema(StreamingPipeline.schema).parquet(fileList: _*))
+
+  /** The batch counts of every window, the drains' oracle. */
+  def prepare(spark: SparkSession): Unit =
+    (0 until Windows).map(files).foreach(f => wants(f) = expected(spark, f))
 
   private def batchMs(p: StreamingQueryProgress, k: String): Double =
     Option(p.durationMs.get(k)).map(_.doubleValue).getOrElse(0.0)
@@ -249,24 +264,26 @@ final class StreamArrivals(in: Gen.Inputs, runDir: String) extends Workload {
     if (ds.isEmpty) return
     val trig = ds.flatMap(_.progress.map(batchMs(_, "triggerExecution") / 1e3))
     out.put("events_per_s", ds.map(_.events).sum / ds.map(_.wallS).sum, "1/s")
-    out.putOpTimes(trig, Util.median(trig))
+    out.put("sink_bytes_per_event", ds.map(_.bytes).sum.toDouble / ds.map(_.events).sum, "bytes")
+    out.putBatchTimes(trig)
   }
 
   def measure(spark: SparkSession, seconds: Double): Outcome = {
     val out = new Outcome
     val ds = mutable.ArrayBuffer[Drain]()
-    while (ds.map(_.wallS).sum < seconds || ds.isEmpty)
+    val t0 = System.nanoTime()
+    while ((ds.map(_.wallS).sum < seconds || ds.isEmpty) && !PerfBench.overdue(t0, seconds))
       ds += drain(spark, out, files(ds.size))
     summarize(out, ds.toSeq)
     out
   }
 
   def traced(spark: SparkSession, trace: Trace): Outcome = {
+    // tracing overhead is measured on the batch runs (ABBA): one untraced
+    // drain before the traced one read the JVM's warming as overhead
     val out = new Outcome
-    val plain = drain(spark, out, files(0))
     val traced = drain(spark, out, files(0), Some(trace))
     summarize(out, Seq(traced))
-    out.put("trace.overhead_ratio", traced.wallS / plain.wallS, "ratio")
     val ps = traced.progress
     // micro-batch spans, placed on the drain span's clock
     ps.foreach { p =>
@@ -375,7 +392,7 @@ object Kernels {
   val SliceRows = 100000
   /** Documents of the text kernels' slice: the declarative Winnow twin
     * (an interpreted O(n·w) lambda tree) takes ~5 ms per document. */
-  val DocSliceRows = 500
+  val DocSliceRows = 200
   val Reps = 5
 
   private def medianPass(trace: Trace, name: String, df: DataFrame): Double =

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.Transcripts
 
 /** Benchmark main — the BASELINE.md evidence:
   *
@@ -14,67 +12,11 @@ import graft.sources.Transcripts
   *    sandbox stand-in for the north rule's N vs 4N executors criterion
   *  - skew evidence: ordered (shuffle-by-conv) pipeline timed with and
   *    without salting of the hot conversation
+  *  - the operator leaves of [[BenchLeaves]], in registry order
   *
   * Prints ONE JSON line per the driver contract.
   */
 object Bench {
-
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-bench-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      // the staged bench corpus is 64 small files; without these the
-      // file-bin packer (128MB target + 4MB open cost) collapses the scan
-      // to ~3 splits and caps parallelism — a small-file artifact a real
-      // multi-TB table doesn't have
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "0")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    Graft.prep(s)
-  }
-
-  /** Replicate the transcript corpus deterministically: conv_id gets a
-    * replica suffix EXCEPT the hot conversation, which stays one key so
-    * the 20% skew survives replication. The replica RANGE is the
-    * partitioned stream side and the corpus is broadcast, so the bench
-    * input is spread over 2×cpus tasks regardless of the single source
-    * parquet file (at real scale the scan itself provides the splits). */
-  private def replicated(spark: SparkSession, sfDir: String, factor: Int, cpus: Int): DataFrame = {
-    val t = Transcripts.load(spark, sfDir)
-    val reps = spark.range(0, factor.toLong, 1, cpus * 2).select(col("id").as("rep"))
-    reps.crossJoin(broadcast(t)).withColumn("conv_id",
-      when(col("conv_id") === "conv_hot", col("conv_id"))
-        .otherwise(concat(col("conv_id"), lit("_r"), col("rep"))))
-      .drop("rep")
-  }
-
-  private def timeNoop(df: DataFrame): Double = {
-    val t0 = System.nanoTime()
-    df.write.format("noop").mode("overwrite").save()
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** Stage the replicated corpus to partitioned parquet ONCE so the timed
-    * path is scan → pipeline → noop, with scan parallelism from the file
-    * splits — like a real multi-file table, not the synth/broadcast. */
-  private def stage(sfDir: String, factor: Int, parts: Int): String = {
-    // key includes the synthesis SQL hash so a changed generator never
-    // reuses stale staged data across rounds
-    val synthV = math.abs(Transcripts.synthSql("x").hashCode)
-    val dir = s"/tmp/graft_bench_${math.abs(sfDir.hashCode)}_${factor}_${parts}_$synthV"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/_SUCCESS"))) {
-      val spark = session(8)
-      try replicated(spark, sfDir, factor, 8)
-        .repartition(parts).write.mode("overwrite").parquet(dir)
-      finally spark.stop()
-    }
-    dir
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -86,7 +28,7 @@ object Bench {
     val low = math.max(maxLevel / 16, 2)
     val high = math.min(low * 4, maxLevel) // clamp when driver passes small CPUS
     val factor = sys.env.get("SPARK_GRAFT_REPL").map(_.toInt).getOrElse(50)
-    val staged = stage(sfDir, factor, high * 4)
+    val staged = BenchLeaves.stage(sfDir, factor, high * 4)
 
     var routedRows = 0L
     var inputRows = 0L
@@ -116,7 +58,7 @@ object Bench {
     var recCount = 0
 
     def visit(cpus: Int): Unit = {
-      val spark = session(cpus)
+      val spark = BenchLeaves.session(cpus)
       def tick(): Double = {
         val t0 = System.nanoTime()
         spark.range(0L, 1L << 29, 1L, cpus)
@@ -138,436 +80,26 @@ object Bench {
       }
       try {
         val input = spark.read.parquet(staged)
-        // time the sink-shaped projection — the columns the production
-        // sinks consume (doc_json + routing/partition keys), not the
-        // full-width debug frame
-        val routed = Pipeline.transform(input, spark)
-          .select("conv_id", "turn_idx", "ts", "name", "sink_index", "doc_json")
+        // time the sink-shaped projection, not the full-width debug frame
+        val routed = BenchLeaves.routed(input)
         // warmup: full plan once (codegen + JIT) before timing
-        timeNoop(routed)
+        BenchLeaves.timeNoop(routed)
         if (routedRows == 0L) { routedRows = routed.count(); inputRows = input.count() }
 
         // min-of-N: high-core timings on this shared VM see transient
         // contention spikes; the min is the contention-free estimate. The
         // low level is long and stable (2 samples); high/max get 3.
         val samples = if (cpus == low) 2 else 3
-        val tPipe = Seq.fill(samples)(timeNoop(routed)).min
+        val tPipe = Seq.fill(samples)(BenchLeaves.timeNoop(routed)).min
         val better = math.min(results.getOrElse(s"pipeline_c$cpus", Double.MaxValue), tPipe)
         results(s"pipeline_c$cpus") = better
         rates(cpus) = routedRows / better
 
-        // ordered variants only at the max level (skew evidence);
-        // cache the routed frame so the timings isolate the ordering
-        // shuffle+sort instead of re-measuring the parse pipeline.
-        // The block runs at BOTH max-level visits (rec() merges by min).
+        // the registry's leaves only at the max level; the block runs at
+        // BOTH max-level visits (rec() merges by min)
         if (cpus == maxLevel) {
-          val cached = routed.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-          cached.count()
-          val plain = cached.repartition(col("conv_id"))
-            .sortWithinPartitions("conv_id", "turn_idx")
-          rec("ordered_plain")(() => timeNoop(plain))
-          val salted = graft.operators.TurnOrdering
-            .saltedRepartition(cached, Seq("conv_hot"), cpus)
-            .sortWithinPartitions("conv_id", "_salt", "turn_idx")
-          rec("ordered_salted")(() => timeNoop(salted))
-          cached.unpersist()
-
-          // training-data headliners on a replicated docs corpus
-          val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-            .crossJoin(spark.range(0, factor.toLong, 1, cpus).select(col("id").as("rep")))
-            .withColumn("doc_id", col("doc_id") + col("rep") * 1000000L).drop("rep")
-            .repartition(cpus * 2)
-          val sigRun = () => timeNoop(dedup.Dedup.signatures(docs))
-          rec("minhash_sigs")(sigRun)
-          val simRun = () => timeNoop(dedup.Dedup.simhashDf(docs))
-          rec("simhash")(simRun)
-          val vecs = spark.read.parquet(s"$sfDir/embeddings.parquet")
-          rec("ann_topk")(() => timeNoop(ann.Similarity.bruteTopK(vecs)))
-          rec("route_counts")(() => timeNoop(
-            operators.Routing.perSinkCounts(routed)))
-
-          // corpus-shaping ops: tf-idf over the replicated docs; curation
-          // on a 10× distinct-text corpus (each replica is a planted
-          // near-dup of its original, so the LSH + cluster stages do real
-          // work); sessionization over the full staged transcript corpus
-          val tfRun = () => timeNoop(text.TfIdf.topTerms(docs))
-          rec("tfidf")(tfRun)
-          val docs10 = spark.read.parquet(s"$sfDir/documents.parquet")
-            .crossJoin(spark.range(0, 10L, 1, cpus).select(col("id").as("rep")))
-            .withColumn("doc_id", col("doc_id") * 16 + col("rep"))
-            .withColumn("text", concat(col("text"), lit(" r"), col("rep")))
-            .drop("rep").repartition(cpus * 2)
-          val curRun = () => timeNoop(dedup.Curation.curate(docs10))
-          rec("curation")(curRun)
-          val sessRun = () => timeNoop(operators.Sessionize.sessionStats(input))
-          rec("sessionize")(sessRun)
-
-          // round-3 corpus ops: hot-shingle aggregation + join-back
-          // (boilerplate), the same plus the interval-merge window
-          // (dup_spans), and the two-pass Lloyd step on the vectors
-          val bpRun = () => timeNoop(text.Boilerplate.stats(docs))
-          rec("boilerplate")(bpRun)
-          val dsRun = () => timeNoop(text.Boilerplate.dupSpanCoverage(docs))
-          rec("dup_spans")(dsRun)
-          val kmRun = () => timeNoop(ann.Centroids.kmeansIteration(vecs))
-          rec("kmeans_step")(kmRun)
-
-          // round-4 ops: SFT rendering over the full staged transcripts
-          // (one conv_id exchange, maxTurns-bounded groups), boilerplate
-          // scrub (hot-span removal + per-row rewrite), and BM25 retrieval
-          // on the 10× docs corpus — query count is the cost knob here:
-          // the synthetic corpus's ~40-word vocabulary makes every doc a
-          // candidate for every query, so the bench probes a handful of
-          // queries (real corpora have power-law vocabularies and
-          // posting-list selectivity)
-          val renRun = () => timeNoop(operators.Conversations.renderChat(input))
-          rec("chat_render")(renRun)
-          val scrubRun = () => timeNoop(text.Boilerplate.scrub(docs))
-          rec("boiler_scrub")(scrubRun)
-          val bmRun = () => timeNoop(text.Bm25.topK(docs10, queryMod = 100003))
-          rec("bm25_topk")(bmRun)
-
-          // round-5 ops: conversation-level dedup over the full staged
-          // transcripts (conv-key agg + 128-bit-keyed group), per-lang
-          // quality deciles over the 50× docs (tiny (lang, logit) agg +
-          // broadcast bucket join-back), and the SemDeDup verdict over
-          // the embeddings (multi-probe LSH pair probe)
-          val cdRun = () => timeNoop(operators.Conversations.convDedup(input))
-          rec("conv_dedup")(cdRun)
-          val qdRun = () => timeNoop(text.CorpusOps.qualityDeciles(docs))
-          rec("quality_deciles")(qdRun)
-          val sdRun = () => timeNoop(ann.Similarity.semanticDedup(vecs))
-          rec("semantic_dedup")(sdRun)
-
-          // round-6 ops: sketch aggregates over the parsed stream (the
-          // bounded-state alternatives to exact percentiles/distincts),
-          // the pruned-bigram LM scorer over the replicated docs, and
-          // conversation-level near-dup LSH over template sequences
-          // (turn-bounded: the sequence prefix is the dedup signal; the
-          // hot conversation would otherwise collect 1M turns in one row)
-          val parsedB = Pipeline.parse(input)
-          val hlRun = () => timeNoop(operators.Sketches.hllDistinct(parsedB))
-          rec("hll_sketch")(hlRun)
-          val lhRun = () => timeNoop(operators.Sketches.logHistPercentiles(parsedB))
-          rec("log_hist")(lhRun)
-          val lmRun = () => timeNoop(text.LangModel.lmScore(docs))
-          rec("lm_score")(lmRun)
-          // near-dup over the UNREPLICATED slice: the 50× bench replicas
-          // are exact copies, so every conversation sits in a 50-clique
-          // and the (correct) all-pairs output within cliques is
-          // quadratic by construction — a staging artifact, not the
-          // operator's shape on a real corpus
-          val cnRun = () => timeNoop(operators.Conversations.convNearDup(
-            input.filter((col("conv_id").endsWith("_r0") ||
-              col("conv_id") === "conv_hot") && col("turn_idx") < 256)))
-          rec("conv_neardup")(cnRun)
-          // round-7 ops: the Bloom prefilter over the replicated docs
-          // (shingle explode → 8 KB word table → map-only probe) and the
-          // z-order layout stats (pure map + one ≤64-row aggregate)
-          val blRun = () => timeNoop(operators.Sketches.bloomPrefilter(docs))
-          rec("bloom_prefilter")(blRun)
-          val zoRun = () => timeNoop(operators.Layout.layoutStats(docs))
-          rec("zorder_layout")(zoRun)
-          // tokenizer APPLY (explode + 5 fold levels + one agg) and the
-          // one-Expand rollup report
-          val beRun = () => timeNoop(text.LangModel.bpeEncodeStats(docs))
-          rec("bpe_encode")(beRun)
-          val crRun = () => timeNoop(text.TextAnalysis.corpusRollup(docs))
-          rec("corpus_rollup")(crRun)
-          // round-8 ops: DSIR selection (bounded bucket table + broadcast
-          // probe) and the inverted-index build (the vocabulary-sized
-          // posting-stats artifact)
-          val dwRun = () => timeNoop(text.Selection.dsirWeights(docs))
-          rec("dsir_weights")(dwRun)
-          val poRun = () => timeNoop(text.Bm25.postings(docs))
-          rec("postings")(poRun)
-
-          // round-9 ops: weighted PageRank over the tool-transition graph
-          // (the corpus window pass dominates; the iterations run on the
-          // |tools|²-bounded edge table) — timed as a whole build because
-          // the unrolled loop materializes eagerly; blocked edit-distance
-          // dedup on the 10× near-dup corpus (each replica differs from
-          // its base by a 2-char suffix, so the Levenshtein stage does
-          // real within-block work); triangle counting on the login
-          // co-occurrence graph (corpus pass + aggregate-sized wedge join)
-          def timeBuild(f: => DataFrame): Double = {
-            val t0 = System.nanoTime()
-            f.write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          }
-          val prRun = () => timeBuild(graph.Graphs.toolPageRank(input))
-          rec("pagerank")(prRun)
-          // skew evidence for SEQUENCE windows (the ordered_plain/salted
-          // pair covers repartition+sort): plain per-conv lag vs the
-          // chunk-split window + boundary stitch on the same input — the
-          // hot conversation is 20% of all rows in ONE sort task
-          val tepRun = () => timeNoop(graph.Graphs.toolTransitionEdges(input))
-          rec("tool_edges_plain")(tepRun)
-          val tesRun = () => timeNoop(
-            operators.SkewWindows.toolTransitionEdgesSalted(input))
-          rec("tool_edges_salted")(tesRun)
-          // production entry: the measured-crossover dispatcher — timed
-          // by-name so the key-count dispatch scan is INSIDE the clock;
-          // must track the best of the two demonstration branches
-          val teaRun = () => timeBuild(
-            operators.SkewWindows.toolTransitionEdgesAuto(input))
-          rec("tool_edges_auto")(teaRun)
-          val edRun = () => timeNoop(dedup.EditDedup.editPairs(docs10))
-          rec("edit_dedup")(edRun)
-          val trRun = () => timeNoop(graph.Graphs.loginTriangles(parsedB))
-          rec("triangles")(trRun)
-
-          // round-10 ops: the generic as-of join (tool turns pick up the
-          // latest change-log row at or before their ts — one key exchange
-          // + window, no broadcast; tool cardinality is tiny, so this also
-          // stresses the few-hot-keys sort path) and fixed-k trigram
-          // mining (conv window → distinct → bounded agg)
-          val tTool = input.filter(col("tool") =!= "")
-          val changes = tTool.filter(col("turn_idx") % 37 === 0)
-            .groupBy(col("tool"), col("ts").as("cfg_ts"))
-            .agg((max(length(col("text"))).cast("long") % 997L).as("cfg_ver"))
-          val aoRun = () => timeNoop(operators.AsOf.unionAsOf(
-            tTool.select("conv_id", "turn_idx", "tool", "ts"),
-            changes, "tool", "ts", "cfg_ts"))
-          rec("asof_join")(aoRun)
-          val tgRun = () => timeNoop(
-            operators.Conversations.frequentTrigrams(input))
-          rec("action_trigrams")(tgRun)
-
-          // round-11 ops: robust median/MAD anomaly (one corpus hash-agg,
-          // percentile work on the cached hourly frame); sorted-
-          // neighborhood near-dup on the 10× suffix-edit corpus (each
-          // replica sorts adjacent to its base — candidates are LINEAR in
-          // n where a hot LSH bucket would be quadratic); the τ=0.5
-          // mixture sample (plan agg + one source-keyed admit window)
-          val raRun = () => timeNoop(
-            operators.Aggregates.robustAnomaly(parsedB))
-          rec("robust_anomaly")(raRun)
-          val snRun = () => timeNoop(
-            dedup.SortedNeighborhood.similarPairs(docs10))
-          rec("snm_pairs")(snRun)
-          val mxRun = () => timeNoop(
-            operators.Sampling.mixtureSample(docs, budget = 100000L))
-          rec("mixture_sample")(mxRun)
-          // per-source distinct-shingle diversity: the count-distinct
-          // two-phase expansion is the cost; one source-keyed exchange
-          val dvRun = () => timeNoop(text.CorpusOps.diversityStats(docs))
-          rec("diversity")(dvRun)
-          val ciRun = () => timeNoop(
-            operators.TrainingExport.curriculumInterleave(docs))
-          rec("curriculum")(ciRun)
-
-          // round-12 ops: fuzzy LSH-band decontamination (eval band set
-          // broadcast, corpus map-side probe), the per-source HLL overlap
-          // matrix (one scan → register grids), per-lang robust quality z
-          // (map scoring + two bounded histograms), the duplicate-size
-          // histogram (content-key agg — the 50× replicas form real
-          // clusters), retrieval eval (queries×k rehydrate only), the
-          // cluster-balanced sample, and the 2-epoch shuffle plan
-          val fdRun = () => timeNoop(text.Decontaminate.fuzzyFlags(docs))
-          rec("fuzzy_decontam")(fdRun)
-          val soRun = () => timeNoop(
-            operators.Sketches.sourceOverlapMatrix(docs))
-          rec("source_overlap")(soRun)
-          val qzRun = () => timeNoop(text.CorpusOps.qualityZ(docs))
-          rec("quality_z")(qzRun)
-          val dhRun = () => timeNoop(dedup.Dedup.dupSizeHistogram(docs))
-          rec("dup_histogram")(dhRun)
-          val reRun = () => timeNoop(
-            text.Bm25.retrievalEval(docs10, queryMod = 100003))
-          rec("retrieval_eval")(reRun)
-          val csRun = () => timeNoop(
-            operators.Sampling.clusterBalancedSample(vecs, budget = 1000L))
-          rec("cluster_sample")(csRun)
-          val esRun = () => timeNoop(
-            operators.TrainingExport.epochShuffle(docs, epochs = 2))
-          rec("epoch_shuffle")(esRun)
-
-          // round-13 ops. Excision runs on the 10× corpus and is a
-          // worst-case measure by construction: the ~40-word synthetic
-          // vocabulary makes nearly every 3-shingle benchmark-tainted, so
-          // per-doc matched-position sets approach the full shingle count
-          // (real corpora excise slivers). dup_attribution sees the 50×
-          // replicas as real 50-clusters; the b-bit screen rides the same
-          // LSH candidates curation exercises; term_audit/script_profile
-          // are pure map regex batteries; prune_plan is one fused-score
-          // pass into a ≤41-row window; seasonal reuses the parsed frame.
-          val exRun = () => timeNoop(text.Decontaminate.excise(docs10))
-          rec("decontam_excise")(exRun)
-          val daRun = () => timeNoop(dedup.Dedup.dupAttribution(docs))
-          rec("dup_attribution")(daRun)
-          val bbRun = () => timeNoop(dedup.Dedup.bbitEstimates(docs10))
-          rec("bbit_screen")(bbRun)
-          val taRun = () => timeNoop(text.Blocklist.termAudit(docs))
-          rec("term_audit")(taRun)
-          val spRun = () => timeNoop(text.TextAnalysis.scriptProfile(docs))
-          rec("script_profile")(spRun)
-          val ppRun = () => timeNoop(text.Selection.prunePlanShare(docs))
-          rec("prune_plan")(ppRun)
-          val saRun = () => timeNoop(operators.Aggregates.seasonalAnomaly(parsedB))
-          rec("seasonal_anomaly")(saRun)
-
-          // round-14 ops: vocab_drift and token_concentration share the
-          // one (source, tok) explode+hash-agg shape (drift adds the
-          // dense-grid pairwise pass on the aggregate); inter_arrival is
-          // the (name, hour) lag window + per-name moment agg over the
-          // full parsed bench corpus; ivf_separation is the broadcast
-          // n×k scan with the map-side top-2 collapse.
-          val vdRun = () => timeNoop(text.CorpusOps.vocabDrift(docs))
-          rec("vocab_drift")(vdRun)
-          val tcRun = () => timeNoop(text.CorpusOps.tokenConcentration(docs10))
-          rec("token_concentration")(tcRun)
-          val iaRun = () => timeNoop(operators.Aggregates.interArrival(parsedB))
-          rec("inter_arrival")(iaRun)
-          val smRun = () => timeNoop(ann.Similarity.separationMargin(vecs))
-          rec("ivf_separation")(smRun)
-
-          // round-15 ops: lateness is one per-file running-max window +
-          // |names| hash-agg; tool_pareto is one corpus hash-agg with
-          // window work on |tools| rows; reword_retries is one conv
-          // window (lag of role + distinct token set) + conv hash-agg.
-          val lpRun = () => timeNoop(operators.Aggregates.latenessProfile(parsedB))
-          rec("lateness_profile")(lpRun)
-          val tpRun = () => timeNoop(operators.Conversations.toolCostPareto(input))
-          rec("tool_pareto")(tpRun)
-          val rrRun = () => timeNoop(operators.Conversations.rewordRetries(input))
-          rec("reword_retries")(rrRun)
-
-          // round-16 ops: the DQ rule battery is one compiled map pass +
-          // 1-row agg; star CC is a driver fixpoint loop (timed via its
-          // own action, not noop) over the chain-fixture edge set.
-          val dqRun = () => timeNoop(operators.DqRules.ruleAudit(parsedB))
-          rec("dq_rules")(dqRun)
-          val ccEdges = docs.select(col("doc_id").as("a"),
-            (col("doc_id") + 1L).as("b"))
-            .filter((col("doc_id") + 1L) % 100 =!= 0)
-          val ccRun = () => {
-            val t0 = System.nanoTime()
-            graph.Graphs.connectedComponentsStar(ccEdges).write
-              .format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          }
-          rec("connected_components")(ccRun)
-          // round-17: both detectors run on the (name, day) aggregate —
-          // the corpus cost is the one dailyCounts hash-agg each.
-          val vtRun = () => timeNoop(operators.Aggregates.volumeTrend(parsedB))
-          rec("volume_trend")(vtRun)
-          val cuRun = () => timeNoop(operators.Aggregates.cusumChangepoints(parsedB))
-          rec("cusum")(cuRun)
-          // round-18: the phrase probe re-shuffles only the anchor
-          // sliver; KS runs one corpus hash-agg into tiny CDF windows.
-          // Phrase search runs on the UNREPLICATED slice for the same
-          // reason convNearDup does: the 50× bench replicas are exact
-          // copies, so every query phrase matches every replica of every
-          // matching doc and the result set is quadratic in the replica
-          // count by construction — a staging artifact, not the
-          // operator's shape on a real corpus (measured 85 s replicated
-          // vs ~4 s unreplicated with identical plans).
-          val psRun = () => timeNoop(
-            text.Bm25.phraseSearch(docs.filter(col("doc_id") < 1000000L)))
-          rec("phrase_search")(psRun)
-          val ksRun = () => timeNoop(operators.Aggregates.ksDrift(parsedB))
-          rec("ks_drift")(ksRun)
-          // round-19: homoglyph fold is the exact-dedup hash-agg with a
-          // translate() prepended; FD audit and TTL sim are aggregate work.
-          val hgRun = () => timeNoop(dedup.Dedup.homoglyphDups(docs10))
-          rec("homoglyph_dups")(hgRun)
-          val ttlRun = () => timeNoop(operators.Governance.ttlSimulation(parsedB))
-          rec("ttl_simulation")(ttlRun)
-          // round-20: injection is a map-only regex battery + conv agg;
-          // salient passage is the df agg + chunk explode + doc window.
-          val injRun = () => timeNoop(text.Injection.scan(input))
-          rec("injection_scan")(injRun)
-          val spRun2 = () => timeNoop(text.TfIdf.salientPassage(docs))
-          rec("salient_passage")(spRun2)
-          // round-21: pass@k is one conv agg + task window on conv rows;
-          // collocations is the bigram/unigram agg pair.
-          val pkRun = () => timeNoop(operators.Conversations.passAtK(parsedB))
-          rec("pass_at_k")(pkRun)
-          val clRun = () => timeNoop(text.LangModel.collocations(docs))
-          rec("collocations")(clRun)
-
-          // round-22: KMV set algebra / fertility / DP counts / k=v
-          // schema census are each ONE corpus pass into a bounded agg;
-          // IVM applies a signed delta to the pre-materialized daily
-          // aggregate (the view exists before the refresh starts, so
-          // only delta-agg + merge is timed); k-center is k driver-
-          // sequenced corpus passes timed around its own actions.
-          val kvRun = () => timeNoop(operators.Sketches.kmvSetOps(docs))
-          rec("kmv_sketch")(kvRun)
-          val ftRun = () => timeNoop(text.LangModel.fertility(docs))
-          rec("fertility")(ftRun)
-          val dpRun = () => timeNoop(operators.Governance.dpCounts(docs))
-          rec("dp_counts")(dpRun)
-          val asRun = () => timeNoop(operators.DqRules.inferSchema(input))
-          rec("arg_schema")(asRun)
-          val ivmCols = parsedB.select("name", "ts", "turn_idx")
-          val ivmOld = operators.Aggregates
-            .dailyCounts(ivmCols.filter(col("turn_idx") % 7 =!= 3))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          ivmOld.count()
-          val ivmDelta = ivmCols.filter(col("turn_idx") % 7 === 3)
-            .withColumn("sign", lit(1L)).select("name", "ts", "sign")
-          val ivRun = () => timeNoop(
-            operators.Aggregates.incrementalRefresh(ivmOld, ivmDelta))
-          rec("ivm_refresh")(ivRun)
-          ivmOld.unpersist()
-          val kcRun = () => {
-            val t0 = System.nanoTime()
-            ann.Centroids.kCenterSelect(vecs).write
-              .format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          }
-          rec("kcenter")(kcRun)
-
-          // round-23: bootstrap CI fans the 2-int projection 64× and
-          // map-side-combines into a 64-row agg — near the cost of 64
-          // corpus passes compressed into one scan
-          val bcRun = () => timeNoop(operators.Sampling.bootstrapCI(docs))
-          rec("bootstrap_ci")(bcRun)
-          // winnowing: O(n·w) per-row selection, census only on the
-          // ~2/(w+1) winnowed sample
-          val wnRun = () => timeNoop(dedup.Dedup.winnowStats(docs))
-          rec("winnow")(wnRun)
-          // rolling distinct: one corpus pass into the day×64 register
-          // grid; the 7-day merge is a window on that aggregate (the
-          // exact column intentionally included — it IS the recount
-          // this sketch replaces, so the gap is visible in the timing)
-          val rdRun = () =>
-            timeNoop(operators.Sketches.hllRollingDistinct(input))
-          rec("rolling_distinct")(rdRun)
-          // max-coverage runs k driver-sequenced rounds and returns a
-          // local frame — time around its own actions, like kcenter
-          val mcRun = () => {
-            val t0 = System.nanoTime()
-            text.Selection.maxCoverageSelect(docs).write
-              .format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          }
-          rec("max_coverage")(mcRun)
-          // k-anon generalization: one finest-grain agg + broadcast
-          // grid joins back over the corpus
-          val kgRun = () => timeNoop(operators.Governance.kAnonGeneralize(docs))
-          rec("kanon_generalize")(kgRun)
-          // sweep line: conv-span agg + day-keyed windows + day-grid math
-          val cpRun = () =>
-            timeNoop(operators.Sessionize.concurrencyProfile(input))
-          rec("concurrency")(cpRun)
-          // template mining: head-vocab agg collected once, then a
-          // map-only fused rebuild + skeleton census (one exchange)
-          val ltRun = () => timeNoop(operators.DqRules.logTemplates(input))
-          rec("log_templates")(ltRun)
-          // bursts: one (day, tok) agg + grid math + day-window top-k
-          val tbRun = () => timeNoop(operators.Conversations.termBursts(input))
-          rec("term_bursts")(tbRun)
-          // zone maps: narrow projection + (layout × shard) grid agg
-          val zmRun = () => timeNoop(operators.Layout.zoneMapAudit(input))
-          rec("zonemap_audit")(zmRun)
-          // two-pass exact selection vs builtin full-group sort: the
-          // same numbers, bounded memory — both timed for the A/B
-          val eqRun = () =>
-            timeNoop(operators.Aggregates.exactQuantiles2Pass(parsedB))
-          rec("exact_quantiles_2pass")(eqRun)
+          val in = BenchLeaves.inputs(spark, sfDir, factor, cpus, input, routed)
+          BenchLeaves.all.foreach(leaf => leaf.run(in)(rec(leaf.name)))
 
           // lmScore/convNearDup persist their reused intermediates;
           // drop them so repeated bench runs don't accumulate cache

@@ -1,53 +1,104 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.Transcripts
 
 /** Isolation bench (guide §1.4): times any SUBSET of the Bench.scala
-  * headline queries on the SAME staged corpus with the SAME session
-  * configuration and the same noop-sink methodology, so a single operator
-  * can be A/B-ed in seconds instead of re-running the full 25-minute
-  * harness. Never used for driver-facing numbers — Bench.scala stays the
-  * one measurement contract; this main exists so optimization rounds can
-  * iterate per-query (see OPTIMIZATION_r06.md).
+  * headline leaves ([[BenchLeaves]]) on the SAME staged corpus with the
+  * SAME session configuration and timing modes, so a single operator can
+  * be A/B-ed in seconds instead of re-running the full 25-minute harness.
+  * Never used for driver-facing numbers — Bench.scala stays the one
+  * measurement contract; this main exists so optimization rounds can
+  * iterate per-query (see OPTIMIZATION_r06.md). Besides the registry it
+  * knows the old formulations of a few leaves, for A/B runs.
   *
   * Usage: sbt "runMain graft.BenchExtra q1 q2 ..." (no args = all).
   * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_REPL,
   *      SPARK_GRAFT_SAMPLES (min-of-N per query, default 2).
   */
 object BenchExtra {
+  import BenchLeaves.noop
 
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-bench-extra-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "0")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    Graft.prep(s)
-  }
-
-  private def timeNoop(df: DataFrame): Double = {
-    val t0 = System.nanoTime()
-    df.write.format("noop").mode("overwrite").save()
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** Same staged-corpus key as Bench.stage — reuses the harness's staging
-    * so both mains time identical inputs. */
-  private def stagedDir(sfDir: String, factor: Int, parts: Int): String = {
-    val synthV = math.abs(Transcripts.synthSql("x").hashCode)
-    val dir = s"/tmp/graft_bench_${math.abs(sfDir.hashCode)}_${factor}_${parts}_$synthV"
-    require(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/_SUCCESS")),
-      s"staged corpus missing at $dir — run graft.Bench once first")
-    dir
-  }
+  // ---- old-formulation A/B twins (round-6 regression adjudication) ----
+  private val twins: Seq[BenchLeaves.Leaf] = Seq(
+    noop("reword_chunked")(in =>
+      operators.Conversations.rewordRetries(in.input, hotKeyRows = 1L)),
+    noop("injection_lengate") { in =>
+      // the wave-1 form: length>=48 gate (regex runs on ~every row)
+      val withLt = in.input.select(col("conv_id"), col("turn_idx"),
+        col("text"), lower(col("text")).as("_lt"))
+      val lt = col("_lt"); val tc = col("text")
+      val gates: Map[String, org.apache.spark.sql.Column] = Map(
+        "override" -> (lt.contains("ignore ") || lt.contains("disregard ")),
+        "exfil" -> (lt.contains("system prompt") ||
+          lt.contains("hidden instructions") || lt.contains("initial prompt")),
+        "encoding" -> (length(tc) >= 48),
+        "roleplay" -> (lt.contains("you are now") || lt.contains("pretend to be") ||
+          lt.contains("jailbreak") || lt.contains("developer mode") ||
+          lt.contains("do anything now")))
+      val flags = graft.text.Injection.Patterns.map { case (cat, re) =>
+        cat -> (gates(cat) && col("text").rlike(re)) }
+      val any = flags.map(_._2).reduce(_ || _)
+      val perTurn = withLt.select(
+        col("conv_id") +: col("turn_idx") +:
+          flags.map { case (c, f) => f.as(s"f_$c") } :+ any.as("f_any"): _*)
+      perTurn.groupBy("conv_id").agg(
+        count(lit(1)).as("n_turns"),
+        sum(when(col("f_override"), 1L).otherwise(0L)).as("n_override"),
+        sum(when(col("f_exfil"), 1L).otherwise(0L)).as("n_exfil"),
+        sum(when(col("f_encoding"), 1L).otherwise(0L)).as("n_encoding"),
+        sum(when(col("f_roleplay"), 1L).otherwise(0L)).as("n_roleplay"),
+        sum(when(col("f_any"), 1L).otherwise(0L)).as("n_flagged"),
+        min(when(col("f_any"), col("turn_idx"))).as("first_offending_turn"))
+        .filter(col("n_flagged") > 0)
+    },
+    noop("rolling_old") { in =>
+      import org.apache.spark.sql.expressions.Window
+      val keyCol = "conv_id"; val windowDays = 7
+      val h = conv(substring(md5(col(keyCol)), 1, 8), 16, 10).cast("long")
+      val dayNum = (unix_timestamp(col("ts")) / 86400L).cast("long")
+      val dayRegs = in.input
+        .select(dayNum.as("day_num"), h.bitwiseAND(lit(63L)).as("reg"),
+          shiftright(h, 6).as("v"))
+        .withColumn("rank",
+          when(col("v") === 0L, 27L)
+            .otherwise(lit(27L) - length(bin(col("v")))))
+        .groupBy("day_num", "reg").agg(max("rank").as("m"))
+      val days = dayRegs.select("day_num").distinct()
+      val grid = days
+        .withColumn("reg", explode(sequence(lit(0L), lit(63L))))
+        .join(dayRegs, Seq("day_num", "reg"), "left")
+        .na.fill(0L, Seq("m"))
+      val frame = Window.partitionBy("reg").orderBy(col("day_num"))
+        .rangeBetween(-(windowDays - 1L), 0L)
+      val rolled = grid.withColumn("mr", max("m").over(frame))
+        .filter(col("mr") > 0L)
+      val est = operators.Sketches.hllEstimate(rolled.select(
+          col("day_num").as("name"), col("reg"), col("mr").as("m")))
+        .withColumnRenamed("name", "day_num")
+      val pairs = in.input
+        .select(dayNum.as("kday"), col(keyCol).as("k")).distinct()
+      val exact = broadcast(days)
+        .join(pairs, col("kday").between(
+          col("day_num") - (windowDays - 1L), col("day_num")))
+        .groupBy("day_num").agg(countDistinct("k").as("exact_distinct"))
+      est.join(exact, Seq("day_num"))
+        .withColumn("err_x1e3",
+          floor(abs(col("hll_est") - col("exact_distinct")) * lit(1000.0)
+            / col("exact_distinct")).cast("long"))
+        .select("day_num", "exact_distinct", "nonzero_regs", "sum_pow",
+          "hll_est", "err_x1e3")
+    },
+    noop("chat_old")(in => in.input
+      .filter(col("turn_idx") < 4096)
+      .groupBy("conv_id")
+      .agg(array_sort(collect_list(struct(col("turn_idx"), col("role"), col("text"))))
+        .as("turns"))
+      .select(col("conv_id"),
+        size(col("turns")).cast("long").as("n_turns"),
+        array_join(transform(col("turns"),
+          t => concat(lit("<|"), t("role"), lit("|>"), t("text"))), "\n")
+          .as("rendered"))
+      .withColumn("n_chars", length(col("rendered")).cast("long"))))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -56,227 +107,25 @@ object BenchExtra {
     val high = math.min(low * 4, maxLevel)
     val factor = sys.env.get("SPARK_GRAFT_REPL").map(_.toInt).getOrElse(50)
     val samples = sys.env.get("SPARK_GRAFT_SAMPLES").map(_.toInt).getOrElse(2)
-    val staged = stagedDir(sfDir, factor, high * 4)
+    // the corpus Bench stages and times, staged here if Bench has not run
+    val staged = BenchLeaves.stage(sfDir, factor, high * 4)
     val cpus = maxLevel
 
-    val spark = session(cpus)
+    val spark = BenchLeaves.session(cpus)
     val input = spark.read.parquet(staged)
-    val routed = Pipeline.transform(input, spark)
-      .select("conv_id", "turn_idx", "ts", "name", "sink_index", "doc_json")
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .crossJoin(spark.range(0, factor.toLong, 1, cpus).select(col("id").as("rep")))
-      .withColumn("doc_id", col("doc_id") + col("rep") * 1000000L).drop("rep")
-      .repartition(cpus * 2)
-    val docs10 = spark.read.parquet(s"$sfDir/documents.parquet")
-      .crossJoin(spark.range(0, 10L, 1, cpus).select(col("id").as("rep")))
-      .withColumn("doc_id", col("doc_id") * 16 + col("rep"))
-      .withColumn("text", concat(col("text"), lit(" r"), col("rep")))
-      .drop("rep").repartition(cpus * 2)
-    val vecs = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    lazy val parsedB = Pipeline.parse(input)
+    val in = BenchLeaves.inputs(spark, sfDir, factor, cpus, input, BenchLeaves.routed(input))
+    val leaves = BenchLeaves.all ++ twins
 
-    def timeBuild(f: => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      f.write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-
-    // name -> () => seconds; mirrors Bench.scala's per-query runners
-    val runners = scala.collection.immutable.ListMap[String, () => Double](
-      "pipeline_c32" -> (() => timeNoop(routed)),
-      "minhash_sigs" -> (() => timeNoop(dedup.Dedup.signatures(docs))),
-      "simhash" -> (() => timeNoop(dedup.Dedup.simhashDf(docs))),
-      "ann_topk" -> (() => timeNoop(ann.Similarity.bruteTopK(vecs))),
-      "route_counts" -> (() => timeNoop(operators.Routing.perSinkCounts(routed))),
-      "tfidf" -> (() => timeNoop(text.TfIdf.topTerms(docs))),
-      "curation" -> (() => timeNoop(dedup.Curation.curate(docs10))),
-      "sessionize" -> (() => timeNoop(operators.Sessionize.sessionStats(input))),
-      "boilerplate" -> (() => timeNoop(text.Boilerplate.stats(docs))),
-      "dup_spans" -> (() => timeNoop(text.Boilerplate.dupSpanCoverage(docs))),
-      "kmeans_step" -> (() => timeNoop(ann.Centroids.kmeansIteration(vecs))),
-      "chat_render" -> (() => timeNoop(operators.Conversations.renderChat(input))),
-      "boiler_scrub" -> (() => timeNoop(text.Boilerplate.scrub(docs))),
-      "bm25_topk" -> (() => timeNoop(text.Bm25.topK(docs10, queryMod = 100003))),
-      "conv_dedup" -> (() => timeNoop(operators.Conversations.convDedup(input))),
-      "quality_deciles" -> (() => timeNoop(text.CorpusOps.qualityDeciles(docs))),
-      "semantic_dedup" -> (() => timeNoop(ann.Similarity.semanticDedup(vecs))),
-      "hll_sketch" -> (() => timeNoop(operators.Sketches.hllDistinct(parsedB))),
-      "log_hist" -> (() => timeNoop(operators.Sketches.logHistPercentiles(parsedB))),
-      "lm_score" -> (() => timeNoop(text.LangModel.lmScore(docs))),
-      "conv_neardup" -> (() => timeNoop(operators.Conversations.convNearDup(
-        input.filter((col("conv_id").endsWith("_r0") ||
-          col("conv_id") === "conv_hot") && col("turn_idx") < 256)))),
-      "bloom_prefilter" -> (() => timeNoop(operators.Sketches.bloomPrefilter(docs))),
-      "zorder_layout" -> (() => timeNoop(operators.Layout.layoutStats(docs))),
-      "bpe_encode" -> (() => timeNoop(text.LangModel.bpeEncodeStats(docs))),
-      "corpus_rollup" -> (() => timeNoop(text.TextAnalysis.corpusRollup(docs))),
-      "dsir_weights" -> (() => timeNoop(text.Selection.dsirWeights(docs))),
-      "postings" -> (() => timeNoop(text.Bm25.postings(docs))),
-      "pagerank" -> (() => timeBuild(graph.Graphs.toolPageRank(input))),
-      "tool_edges_plain" -> (() => timeNoop(graph.Graphs.toolTransitionEdges(input))),
-      "tool_edges_salted" -> (() => timeNoop(
-        operators.SkewWindows.toolTransitionEdgesSalted(input))),
-      "tool_edges_auto" -> (() => timeBuild(
-        operators.SkewWindows.toolTransitionEdgesAuto(input))),
-      "edit_dedup" -> (() => timeNoop(dedup.EditDedup.editPairs(docs10))),
-      "triangles" -> (() => timeNoop(graph.Graphs.loginTriangles(parsedB))),
-      "action_trigrams" -> (() => timeNoop(
-        operators.Conversations.frequentTrigrams(input))),
-      "robust_anomaly" -> (() => timeNoop(operators.Aggregates.robustAnomaly(parsedB))),
-      "snm_pairs" -> (() => timeNoop(dedup.SortedNeighborhood.similarPairs(docs10))),
-      "mixture_sample" -> (() => timeNoop(
-        operators.Sampling.mixtureSample(docs, budget = 100000L))),
-      "diversity" -> (() => timeNoop(text.CorpusOps.diversityStats(docs))),
-      "curriculum" -> (() => timeNoop(
-        operators.TrainingExport.curriculumInterleave(docs))),
-      "fuzzy_decontam" -> (() => timeNoop(text.Decontaminate.fuzzyFlags(docs))),
-      "source_overlap" -> (() => timeNoop(operators.Sketches.sourceOverlapMatrix(docs))),
-      "quality_z" -> (() => timeNoop(text.CorpusOps.qualityZ(docs))),
-      "dup_histogram" -> (() => timeNoop(dedup.Dedup.dupSizeHistogram(docs))),
-      "retrieval_eval" -> (() => timeNoop(
-        text.Bm25.retrievalEval(docs10, queryMod = 100003))),
-      "cluster_sample" -> (() => timeNoop(
-        operators.Sampling.clusterBalancedSample(vecs, budget = 1000L))),
-      "epoch_shuffle" -> (() => timeNoop(
-        operators.TrainingExport.epochShuffle(docs, epochs = 2))),
-      "decontam_excise" -> (() => timeNoop(text.Decontaminate.excise(docs10))),
-      "dup_attribution" -> (() => timeNoop(dedup.Dedup.dupAttribution(docs))),
-      "bbit_screen" -> (() => timeNoop(dedup.Dedup.bbitEstimates(docs10))),
-      "term_audit" -> (() => timeNoop(text.Blocklist.termAudit(docs))),
-      "script_profile" -> (() => timeNoop(text.TextAnalysis.scriptProfile(docs))),
-      "prune_plan" -> (() => timeNoop(text.Selection.prunePlanShare(docs))),
-      "seasonal_anomaly" -> (() => timeNoop(operators.Aggregates.seasonalAnomaly(parsedB))),
-      "vocab_drift" -> (() => timeNoop(text.CorpusOps.vocabDrift(docs))),
-      "token_concentration" -> (() => timeNoop(text.CorpusOps.tokenConcentration(docs10))),
-      "inter_arrival" -> (() => timeNoop(operators.Aggregates.interArrival(parsedB))),
-      "ivf_separation" -> (() => timeNoop(ann.Similarity.separationMargin(vecs))),
-      "lateness_profile" -> (() => timeNoop(operators.Aggregates.latenessProfile(parsedB))),
-      "tool_pareto" -> (() => timeNoop(operators.Conversations.toolCostPareto(input))),
-      "reword_retries" -> (() => timeNoop(operators.Conversations.rewordRetries(input))),
-      "reword_chunked" -> (() => timeNoop(
-        operators.Conversations.rewordRetries(input, hotKeyRows = 1L))),
-      "dq_rules" -> (() => timeNoop(operators.DqRules.ruleAudit(parsedB))),
-      "connected_components" -> (() => {
-        val ccEdges = docs.select(col("doc_id").as("a"),
-          (col("doc_id") + 1L).as("b"))
-          .filter((col("doc_id") + 1L) % 100 =!= 0)
-        timeBuild(graph.Graphs.connectedComponentsStar(ccEdges))
-      }),
-      "volume_trend" -> (() => timeNoop(operators.Aggregates.volumeTrend(parsedB))),
-      "cusum" -> (() => timeNoop(operators.Aggregates.cusumChangepoints(parsedB))),
-      "phrase_search" -> (() => timeNoop(
-        text.Bm25.phraseSearch(docs.filter(col("doc_id") < 1000000L)))),
-      "ks_drift" -> (() => timeNoop(operators.Aggregates.ksDrift(parsedB))),
-      "homoglyph_dups" -> (() => timeNoop(dedup.Dedup.homoglyphDups(docs10))),
-      "ttl_simulation" -> (() => timeNoop(operators.Governance.ttlSimulation(parsedB))),
-      "injection_scan" -> (() => timeNoop(text.Injection.scan(input))),
-      "salient_passage" -> (() => timeNoop(text.TfIdf.salientPassage(docs))),
-      "pass_at_k" -> (() => timeNoop(operators.Conversations.passAtK(parsedB))),
-      "collocations" -> (() => timeNoop(text.LangModel.collocations(docs))),
-      "kmv_sketch" -> (() => timeNoop(operators.Sketches.kmvSetOps(docs))),
-      "fertility" -> (() => timeNoop(text.LangModel.fertility(docs))),
-      "dp_counts" -> (() => timeNoop(operators.Governance.dpCounts(docs))),
-      "arg_schema" -> (() => timeNoop(operators.DqRules.inferSchema(input))),
-      "kcenter" -> (() => timeBuild(ann.Centroids.kCenterSelect(vecs))),
-      "bootstrap_ci" -> (() => timeNoop(operators.Sampling.bootstrapCI(docs))),
-      "winnow" -> (() => timeNoop(dedup.Dedup.winnowStats(docs))),
-      "rolling_distinct" -> (() => timeNoop(operators.Sketches.hllRollingDistinct(input))),
-      "max_coverage" -> (() => timeBuild(text.Selection.maxCoverageSelect(docs))),
-      "kanon_generalize" -> (() => timeNoop(operators.Governance.kAnonGeneralize(docs))),
-      "concurrency" -> (() => timeNoop(operators.Sessionize.concurrencyProfile(input))),
-      "log_templates" -> (() => timeNoop(operators.DqRules.logTemplates(input))),
-      "term_bursts" -> (() => timeNoop(operators.Conversations.termBursts(input))),
-      "zonemap_audit" -> (() => timeNoop(operators.Layout.zoneMapAudit(input))),
-      "exact_quantiles_2pass" -> (() => timeNoop(
-        operators.Aggregates.exactQuantiles2Pass(parsedB))),
-      // ---- old-formulation A/B twins (round-6 regression adjudication) ----
-      "injection_lengate" -> (() => {
-        // the wave-1 form: length>=48 gate (regex runs on ~every row)
-        val withLt = input.select(col("conv_id"), col("turn_idx"),
-          col("text"), lower(col("text")).as("_lt"))
-        val lt = col("_lt"); val tc = col("text")
-        val gates: Map[String, org.apache.spark.sql.Column] = Map(
-          "override" -> (lt.contains("ignore ") || lt.contains("disregard ")),
-          "exfil" -> (lt.contains("system prompt") ||
-            lt.contains("hidden instructions") || lt.contains("initial prompt")),
-          "encoding" -> (length(tc) >= 48),
-          "roleplay" -> (lt.contains("you are now") || lt.contains("pretend to be") ||
-            lt.contains("jailbreak") || lt.contains("developer mode") ||
-            lt.contains("do anything now")))
-        val flags = graft.text.Injection.Patterns.map { case (cat, re) =>
-          cat -> (gates(cat) && col("text").rlike(re)) }
-        val any = flags.map(_._2).reduce(_ || _)
-        val perTurn = withLt.select(
-          col("conv_id") +: col("turn_idx") +:
-            flags.map { case (c, f) => f.as(s"f_$c") } :+ any.as("f_any"): _*)
-        timeNoop(perTurn.groupBy("conv_id").agg(
-            count(lit(1)).as("n_turns"),
-            sum(when(col("f_override"), 1L).otherwise(0L)).as("n_override"),
-            sum(when(col("f_exfil"), 1L).otherwise(0L)).as("n_exfil"),
-            sum(when(col("f_encoding"), 1L).otherwise(0L)).as("n_encoding"),
-            sum(when(col("f_roleplay"), 1L).otherwise(0L)).as("n_roleplay"),
-            sum(when(col("f_any"), 1L).otherwise(0L)).as("n_flagged"),
-            min(when(col("f_any"), col("turn_idx"))).as("first_offending_turn"))
-          .filter(col("n_flagged") > 0))
-      }),
-      "rolling_old" -> (() => {
-        import org.apache.spark.sql.expressions.Window
-        val keyCol = "conv_id"; val windowDays = 7
-        val h = conv(substring(md5(col(keyCol)), 1, 8), 16, 10).cast("long")
-        val dayNum = (unix_timestamp(col("ts")) / 86400L).cast("long")
-        val dayRegs = input
-          .select(dayNum.as("day_num"), h.bitwiseAND(lit(63L)).as("reg"),
-            shiftright(h, 6).as("v"))
-          .withColumn("rank",
-            when(col("v") === 0L, 27L)
-              .otherwise(lit(27L) - length(bin(col("v")))))
-          .groupBy("day_num", "reg").agg(max("rank").as("m"))
-        val days = dayRegs.select("day_num").distinct()
-        val grid = days
-          .withColumn("reg", explode(sequence(lit(0L), lit(63L))))
-          .join(dayRegs, Seq("day_num", "reg"), "left")
-          .na.fill(0L, Seq("m"))
-        val frame = Window.partitionBy("reg").orderBy(col("day_num"))
-          .rangeBetween(-(windowDays - 1L), 0L)
-        val rolled = grid.withColumn("mr", max("m").over(frame))
-          .filter(col("mr") > 0L)
-        val est = operators.Sketches.hllEstimate(rolled.select(
-            col("day_num").as("name"), col("reg"), col("mr").as("m")))
-          .withColumnRenamed("name", "day_num")
-        val pairs = input
-          .select(dayNum.as("kday"), col(keyCol).as("k")).distinct()
-        val exact = broadcast(days)
-          .join(pairs, col("kday").between(
-            col("day_num") - (windowDays - 1L), col("day_num")))
-          .groupBy("day_num").agg(countDistinct("k").as("exact_distinct"))
-        timeNoop(est.join(exact, Seq("day_num"))
-          .withColumn("err_x1e3",
-            floor(abs(col("hll_est") - col("exact_distinct")) * lit(1000.0)
-              / col("exact_distinct")).cast("long"))
-          .select("day_num", "exact_distinct", "nonzero_regs", "sum_pow",
-            "hll_est", "err_x1e3"))
-      }),
-      "chat_old" -> (() => timeNoop(input
-        .filter(col("turn_idx") < 4096)
-        .groupBy("conv_id")
-        .agg(array_sort(collect_list(struct(col("turn_idx"), col("role"), col("text"))))
-          .as("turns"))
-        .select(col("conv_id"),
-          size(col("turns")).cast("long").as("n_turns"),
-          array_join(transform(col("turns"),
-            t => concat(lit("<|"), t("role"), lit("|>"), t("text"))), "\n")
-            .as("rendered"))
-        .withColumn("n_chars", length(col("rendered")).cast("long"))))
-    )
-
-    val wanted = if (args.isEmpty) runners.keys.toSeq else args.toSeq
+    val wanted = if (args.isEmpty) leaves.map(_.name) else args.toSeq
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
     for (name <- wanted) {
-      val run = runners.getOrElse(name,
-        sys.error(s"unknown query '$name'; known: ${runners.keys.mkString(", ")}"))
+      val leaf = leaves.find(_.name == name).getOrElse(
+        sys.error(s"unknown query '$name'; known: ${leaves.map(_.name).mkString(", ")}"))
       spark.sparkContext.setJobDescription(s"extra:$name")
-      run() // warmup (codegen + JIT)
-      results(name) = Seq.fill(samples)(run()).min
+      results(name) = leaf.run(in) { clock =>
+        clock() // warmup (codegen + JIT)
+        Seq.fill(samples)(clock()).min
+      }
       spark.catalog.clearCache()
       println(f"[extra] $name ${results(name)}%.3f")
     }

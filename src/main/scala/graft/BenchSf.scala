@@ -23,20 +23,7 @@ import graft.sources.Transcripts
   * with tools/stage_sf1.py first).
   */
 object BenchSf {
-
-  private def timeNoop(df: DataFrame): Double = {
-    val t0 = System.nanoTime()
-    df.write.format("noop").mode("overwrite").save()
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** Driver-loop builders (pagerank/max_coverage/star CC) materialize
-    * eagerly inside the call — clock the whole build. */
-  private def timeBuild(f: => DataFrame): Double = {
-    val t0 = System.nanoTime()
-    f.write.format("noop").mode("overwrite").save()
-    (System.nanoTime() - t0) / 1e9
-  }
+  import BenchLeaves.{Leaf, eager, noop}
 
   def main(args: Array[String]): Unit = {
     val dirA = args.lift(0).getOrElse("/root/testdata/sf0.1")
@@ -65,84 +52,70 @@ object BenchSf {
       f"driver heap ${haveGb}%.1f GB < required ${wantGb}%.1f GB — launch " +
         "with -J-Xmx (spark.driver.memory cannot resize a running JVM)")
 
-    // (name, input-kind, builder) — input-kind keys the per-dir frames
-    def queries(t: DataFrame, docs: DataFrame, vecs: DataFrame)
-      : Seq[(String, () => DataFrame, Boolean)] = Seq(
-      ("pipeline_routed", () => Pipeline.transform(t, spark)
-        .select("conv_id", "turn_idx", "ts", "name", "sink_index", "doc_json"),
-        false),
-      ("reword_retries", () => operators.Conversations.rewordRetries(t), false),
-      ("decontam_excise", () => text.Decontaminate.excise(docs), false),
-      ("semantic_dedup", () => ann.Similarity.semanticDedup(vecs), false),
-      ("pagerank", () => graph.Graphs.toolPageRank(t), true),
-      ("max_coverage", () => text.Selection.maxCoverageSelect(docs), true),
-      ("dup_spans", () => text.Boilerplate.dupSpanCoverage(docs), false),
-      ("boiler_scrub", () => text.Boilerplate.scrub(docs), false),
-      ("term_bursts", () => operators.Conversations.termBursts(t), false),
-      ("snm_pairs", () => dedup.SortedNeighborhood.similarPairs(docs), false),
-      ("connected_components", () => graph.Graphs.connectedComponentsStar(
-        docs.select(col("doc_id").as("a"), (col("doc_id") + 1L).as("b"))
-          .filter((col("doc_id") + 1L) % 100 =!= 0)), true))
+    // the routed pipeline, then the Bench leaves of the top-10 sweep
+    val queries: Seq[Leaf] = noop("pipeline_routed")(_.routed) +: Seq(
+      "reword_retries", "decontam_excise", "semantic_dedup", "pagerank",
+      "max_coverage", "dup_spans", "boiler_scrub", "term_bursts",
+      "snm_pairs", "connected_components").map(BenchLeaves(_))
 
     // tier 2 (arg "full"): the dedup/ANN/text families most exposed to
     // clique blowup on the clone staging — the sweep that caught
     // semantic_dedup's 120× is worth running over every operator whose
     // candidate space depends on collision statistics
-    def tier2(t: DataFrame, docs: DataFrame, vecs: DataFrame)
-      : Seq[(String, () => DataFrame, Boolean)] = Seq(
-      ("minhash_sigs", () => dedup.Dedup.signatures(docs), false),
-      ("lsh_neardup_clusters", () => dedup.Dedup.nearDupClusters(docs), true),
-      ("curation", () => dedup.Curation.curate(docs), false),
-      ("edit_dedup", () => dedup.EditDedup.editPairs(docs), false),
-      ("winnow", () => dedup.Dedup.winnowStats(docs), false),
-      ("dup_histogram", () => dedup.Dedup.dupSizeHistogram(docs), false),
-      ("bm25_topk", () => text.Bm25.topK(docs, queryMod = 100003), false),
-      ("tfidf", () => text.TfIdf.topTerms(docs), false),
-      ("lm_score", () => text.LangModel.lmScore(docs), false),
-      ("bpe_encode", () => text.LangModel.bpeEncodeStats(docs), false),
-      ("injection_scan", () => text.Injection.scan(t), false),
-      ("dq_rules", () => operators.DqRules.ruleAudit(Pipeline.parse(t)), false),
-      ("log_templates", () => operators.DqRules.logTemplates(t), false),
-      ("sessionize", () => operators.Sessionize.sessionStats(t), false),
-      ("chat_render", () => operators.Conversations.renderChat(t), false),
-      ("conv_dedup", () => operators.Conversations.convDedup(t), false),
-      ("branching", () => operators.Conversations.branching(t), false),
+    val tier2: Seq[Leaf] = Seq(
+      BenchLeaves("minhash_sigs"),
+      eager("lsh_neardup_clusters")(in => dedup.Dedup.nearDupClusters(in.docs)),
+      BenchLeaves("curation"),
+      BenchLeaves("edit_dedup"),
+      BenchLeaves("winnow"),
+      BenchLeaves("dup_histogram"),
+      BenchLeaves("bm25_topk"),
+      BenchLeaves("tfidf"),
+      BenchLeaves("lm_score"),
+      BenchLeaves("bpe_encode"),
+      BenchLeaves("injection_scan"),
+      BenchLeaves("dq_rules"),
+      BenchLeaves("log_templates"),
+      BenchLeaves("sessionize"),
+      BenchLeaves("chat_render"),
+      BenchLeaves("conv_dedup"),
+      noop("branching")(in => operators.Conversations.branching(in.input)),
       // (brute-force topk deliberately absent: it is the QUADRATIC
       // eval baseline by contract — its 100× on 10× input is the
       // definition of the operator, not a finding)
-      ("ivf_topk", () => ann.Similarity.ivfTopK(vecs), false),
-      ("ivf_separation", () => ann.Similarity.separationMargin(vecs), false),
-      ("kmeans_step", () => ann.Centroids.kmeansIteration(vecs), false),
+      noop("ivf_topk")(in => ann.Similarity.ivfTopK(in.vecs)),
+      BenchLeaves("ivf_separation"),
+      BenchLeaves("kmeans_step"),
       // quantized-integer kernels riding VecSqDistExpr (round-5): the
       // codebook crossJoin (n×M×codebook sq-dists) and the k-center
       // selection rounds
-      ("pq_adc_topk", () => ann.PQ.adcTopK(vecs), false),
-      ("kcenter_select", () => ann.Centroids.kCenterSelect(vecs), false),
+      noop("pq_adc_topk")(in => ann.PQ.adcTopK(in.vecs)),
+      noop("kcenter_select")(in => ann.Centroids.kCenterSelect(in.vecs)),
       // round-5 session additions: the collapsed encode alone, the
       // fused sign-matrix map pass, and the dense-array Bloom probe
-      ("pq_encode", () => ann.PQ.encode(vecs), false),
-      ("rand_proj", () => ann.RandomProjection.project(vecs), false),
-      ("bloom_prefilter", () => operators.Sketches.bloomPrefilter(docs),
-        false),
+      noop("pq_encode")(in => ann.PQ.encode(in.vecs)),
+      noop("rand_proj")(in => ann.RandomProjection.project(in.vecs)),
+      BenchLeaves("bloom_prefilter"),
       // the r3-adjudicated multi-minute sf1 trio (q40/q176/q261): pair
       // output is quadratic in clone multiplicity BY CONTRACT, so the
       // judgment is time ratio vs OUTPUT-row ratio, never vs input
-      ("embed_neardup", () =>
-        ann.Similarity.nearDupPairsCollapsed(vecs), false),
-      ("setsim_join", () =>
-        dedup.SetSimJoin.similarPairs(docs, tauPermille = 600L), false),
-      ("lsh_sweep", () => dedup.Dedup.lshSweep(docs
-        .unionByName(docs.filter(col("doc_id") % 3 === 0)
-          .withColumn("doc_id", col("doc_id") + 1100000L)
-          .withColumn("text", concat(col("text"), lit(" tail marker"))))
-        .unionByName(docs.filter(col("doc_id") % 5 === 0)
-          .withColumn("doc_id", col("doc_id") + 2200000L)
-          .withColumn("text", concat(col("text"),
-            lit(" heavier edit with many extra trailing tokens appended here"
-              + " to pull the jaccard into a middle band"))))), false),
-      ("hll_sketch", () => operators.Sketches.hllDistinct(Pipeline.parse(t)),
-        false),
-      ("fuzzy_decontam", () => text.Decontaminate.fuzzyFlags(docs), false))
+      noop("embed_neardup")(in => ann.Similarity.nearDupPairsCollapsed(in.vecs)),
+      noop("setsim_join")(in =>
+        dedup.SetSimJoin.similarPairs(in.docs, tauPermille = 600L)),
+      noop("lsh_sweep") { in =>
+        val docs = in.docs
+        dedup.Dedup.lshSweep(docs
+          .unionByName(docs.filter(col("doc_id") % 3 === 0)
+            .withColumn("doc_id", col("doc_id") + 1100000L)
+            .withColumn("text", concat(col("text"), lit(" tail marker"))))
+          .unionByName(docs.filter(col("doc_id") % 5 === 0)
+            .withColumn("doc_id", col("doc_id") + 2200000L)
+            .withColumn("text", concat(col("text"),
+              lit(" heavier edit with many extra trailing tokens appended here"
+                + " to pull the jaccard into a middle band")))))
+      },
+      BenchLeaves("hll_sketch"),
+      BenchLeaves("fuzzy_decontam"))
 
     val times = scala.collection.mutable.LinkedHashMap[(String, String), Double]()
     val rows = scala.collection.mutable.LinkedHashMap[(String, String), Long]()
@@ -151,25 +124,28 @@ object BenchSf {
     // harness-only subset (comma-separated exact names) for targeted
     // re-sweeps of just-touched kernels; full table stays the default
     val only = sys.env.get("GRAFT_BENCHSF_ONLY").map(_.split(",").toSet)
+    val qs = (queries ++ (if (full) tier2 else Nil))
+      .filter(q => only.forall(_.contains(q.name)))
     def visit(tag: String, dir: String): Unit = {
       val t = Transcripts.load(spark, dir)
+      // one corpus per scale: the docs serve as Bench's 10× docs too
       val docs = spark.read.parquet(s"$dir/documents.parquet")
-      val vecs = spark.read.parquet(s"$dir/embeddings.parquet")
-      val qs = (queries(t, docs, vecs) ++
-        (if (full) tier2(t, docs, vecs) else Nil))
-        .filter(q => only.forall(_.contains(q._1)))
-      for ((name, build, eager) <- qs) {
+      val in = BenchLeaves.Inputs(t, BenchLeaves.routed(t), Pipeline.parse(t),
+        docs, docs, spark.read.parquet(s"$dir/embeddings.parquet"), 32)
+      for (leaf <- qs) {
+        val name = leaf.name
         // keep the last built frame so the row-count pass reuses it
         // instead of re-running eager driver-loop builders a 4th time
         var lastDf: DataFrame = null
-        val run = () =>
-          if (eager) timeBuild { lastDf = build(); lastDf }
-          else { lastDf = build(); timeNoop(lastDf) }
-        run() // warmup (codegen + JIT + shuffle-file cache)
-        val best = math.min(run(), run())
+        val opened = leaf.open(in)
+        val run = () => { val (secs, df) = leaf.timed(opened); lastDf = df; secs }
         val key = (name, tag)
-        times(key) = math.min(times.getOrElse(key, Double.MaxValue), best)
-        if (!rows.contains(key)) rows(key) = lastDf.count()
+        try {
+          run() // warmup (codegen + JIT + shuffle-file cache)
+          val best = math.min(run(), run())
+          times(key) = math.min(times.getOrElse(key, Double.MaxValue), best)
+          if (!rows.contains(key)) rows(key) = lastDf.count()
+        } finally opened.close()
         println(f"[$tag] $name%-22s ${times(key)}%8.2f s  rows=${rows(key)}")
         // operators that persist reused intermediates (lmScore, the
         // clone-collapse group table, CC rounds) must not accumulate
@@ -183,9 +159,7 @@ object BenchSf {
     // contention-free estimate (same discipline as Bench)
     visit("A", dirA); visit("B", dirB); visit("A", dirA)
 
-    val names = (queries(null, null, null) ++
-      (if (full) tier2(null, null, null) else Nil)).map(_._1)
-      .filter(n => only.forall(_.contains(n)))
+    val names = qs.map(_.name)
     println("\n| query | t(sfA) s | t(sfB) s | time ratio | rows A | rows B | row ratio |")
     println("|---|---|---|---|---|---|---|")
     for (n <- names) {

@@ -46,6 +46,12 @@ object DqRules {
     * violation, violation permille, and the lexicographically-first
     * offending (conv_id, turn_idx) sample key. */
   def ruleAudit(parsed: DataFrame, rules: Seq[Rule] = defaultRules): DataFrame = {
+    // rule names are spliced into column names and the stack() SQL below
+    rules.foreach { case (name, _, _) =>
+      if (!name.matches("[A-Za-z0-9_]+"))
+        throw new IllegalArgumentException(
+          s"rule name '$name' must match [A-Za-z0-9_]+")
+    }
     val sampleKey = concat(col("conv_id"), lit(":"),
       lpad(col("turn_idx").cast("string"), 6, "0"))
     val aggs = rules.flatMap { case (name, applies, ok) =>

@@ -93,8 +93,10 @@ object Sketches {
     * history. */
   def hllRegs(parsed: DataFrame, keyCol: String = "conv_id"): DataFrame = {
     val h = conv(substring(md5(col(keyCol)), 1, 8), 16, 10).cast("long")
-    // low 6 bits pick the register; the high 26 bits feed the rank
-    parsed
+    // low 6 bits pick the register; the high 26 bits feed the rank. A
+    // null key has no hash: it would form a (reg = null, m = null) row
+    // that hllEstimate counts as a nonzero register
+    parsed.filter(col(keyCol).isNotNull)
       .select(col("name"), h.bitwiseAND(lit(63L)).as("reg"),
         shiftright(h, 6).as("v"))
       .withColumn("rank",
@@ -133,8 +135,10 @@ object Sketches {
     // hllRegs(raw), and countDistinct(key) ≡ count over the distinct
     // pairs. The shared distinct subplan shuffles once (ReuseExchange);
     // previously regs and exact each re-scanned (and re-parsed) the
-    // corpus.
-    val pairs = parsed.select(col("name"), col(keyCol)).distinct()
+    // corpus. Null keys are not distinct values (countDistinct skips
+    // them), so they leave before the pairs.
+    val pairs = parsed.select(col("name"), col(keyCol))
+      .filter(col(keyCol).isNotNull).distinct()
     val perName = hllEstimate(hllRegs(pairs, keyCol))
     val exact = pairs.groupBy("name")
       .agg(count(lit(1)).as("exact_distinct"))

@@ -23,10 +23,13 @@ object Sinks {
 
   /** K1: hourly-partitioned NDJSON file sink. */
   def writeFile(routed: DataFrame, dir: String): Unit =
+    hourly(routed).write.mode("append").partitionBy("date_hour").text(dir)
+
+  /** The file sink's rows: `doc_json` keyed by its event hour. */
+  private def hourly(routed: DataFrame): DataFrame =
     routed
       .withColumn("date_hour", date_format(col("ts"), "yyyyMMdd_HH"))
       .select("date_hour", "doc_json")
-      .write.mode("append").partitionBy("date_hour").text(dir)
 
   /** K2: logstash-shaped NDJSON (single stream, newline framed). */
   def writeLogstash(routed: DataFrame, dir: String): Unit =
@@ -34,10 +37,7 @@ object Sinks {
 
   /** K3: elastic bulk framing partitioned by routed index. */
   def writeElastic(routed: DataFrame, dir: String): Unit =
-    routed
-      .withColumn("bulk", concat(
-        lit("{\"index\":{\"_index\":\""), col("sink_index"), lit("\"}}\n"),
-        col("doc_json")))
+    graft.operators.Routing.bulkFrame(routed)
       .select("sink_index", "bulk")
       .write.mode("append").partitionBy("sink_index").text(dir)
 
@@ -88,12 +88,10 @@ object Sinks {
     * passes over the data. */
   def writeFileObserved(routed: DataFrame, dir: String): (Long, Long) = {
     val obs = org.apache.spark.sql.Observation()
-    val observed = routed
-      .withColumn("date_hour", date_format(col("ts"), "yyyyMMdd_HH"))
-      .select("date_hour", "doc_json")
+    hourly(routed)
       .observe(obs, count(lit(1)).as("n_routed"),
         sum(length(col("doc_json"))).as("bytes"))
-    observed.write.mode("append").partitionBy("date_hour").text(dir)
+      .write.mode("append").partitionBy("date_hour").text(dir)
     val row = obs.get
     (row("n_routed").asInstanceOf[Long],
       row.get("bytes").map(_.asInstanceOf[Long]).getOrElse(0L))

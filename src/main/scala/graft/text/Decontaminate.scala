@@ -158,36 +158,4 @@ object Decontaminate {
       .withColumn("kept_permille",
         expr("(n_tokens - n_excised) * 1000 DIV greatest(n_tokens, 1)"))
   }
-
-  /** The pre-rewrite span-removal form — `filter(toks, (t, i) ->
-    * !exists(mpos, ...))`, O(T·M) per row — kept as the measured A/B
-    * reference for [[excise]]'s `array_except` rewrite (same precedent as
-    * [[Classifier.scoreDeclarative]] for the fused scorer). Same output
-    * by construction; `BenchStages excise` runs both on the bench corpus
-    * and on a contamination-dense fixture. Not part of the public
-    * surface. */
-  def exciseProbeScan(docs: DataFrame, benchMod: Int = 97): DataFrame = {
-    val sh = docs
-      .select(col("doc_id"), Dedup.shingleHashes(col("text")).as("arr"))
-      .select(col("doc_id"), posexplode(col("arr")).as(Seq("pos", "sh")))
-    val bench = sh.filter(col("doc_id") % benchMod === 0)
-      .select(col("sh").as("bsh")).distinct()
-    val matched = sh.filter(col("doc_id") % benchMod =!= 0)
-      .join(broadcast(bench), col("sh") === col("bsh"))
-      .groupBy("doc_id").agg(collect_set(col("pos")).as("mpos"))
-    docs.filter(col("doc_id") % benchMod =!= 0)
-      .join(matched, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        graft.text.TextAnalysis.tokens(col("text")).as("toks"), col("mpos"))
-      .withColumn("keep",
-        when(col("mpos").isNull, col("toks"))
-          .otherwise(filter(col("toks"), (t, i) =>
-            !exists(col("mpos"), p => i >= p && i <= p + lit(2)))))
-      .select(col("doc_id"),
-        size(col("toks")).cast("long").as("n_tokens"),
-        (size(col("toks")) - size(col("keep"))).cast("long").as("n_excised"),
-        array_join(col("keep"), " ").as("clean_text"))
-      .withColumn("kept_permille",
-        expr("(n_tokens - n_excised) * 1000 DIV greatest(n_tokens, 1)"))
-  }
 }

@@ -1012,6 +1012,17 @@ class OperatorsSpec extends SparkSpec {
     assert(out("client_addr_shape") == ((3L, 1L, 333L, "c2:000001")))
   }
 
+  test("ruleAudit: a rule name outside [A-Za-z0-9_]+ is rejected by name") {
+    import TestSpark.spark.implicits._
+    val parsed = Seq(("c1", 1L, "login")).toDF("conv_id", "turn_idx", "name")
+    val bad = "x', 1, 2, 3, 'y"
+    val e = intercept[IllegalArgumentException] {
+      operators.DqRules.ruleAudit(parsed,
+        Seq(("ok_rule", lit(true), lit(true)), (bad, lit(true), lit(true))))
+    }
+    assert(e.getMessage.contains(bad))
+  }
+
   test("incrementalRefresh: delta-applied aggregate == full recompute; zero rows drop") {
     import TestSpark.spark.implicits._
     def ts(d: Int) = java.sql.Timestamp.valueOf(f"2024-01-$d%02d 10:00:00")

@@ -49,6 +49,20 @@ class SketchesSpec extends SparkSpec {
     assert(again.getLong(3) == sumPow && again.getLong(4) == est)
   }
 
+  test("hllDistinct: null keys count neither as a distinct key nor as a register") {
+    val keys = Seq(Some("c1"), Some("c2"), Some("c3"), Some("c2"))
+    val withNulls = (keys ++ Seq(None, None)).map(k => ("e", k)).toDF("name", "conv_id")
+    val plain = keys.map(k => ("e", k)).toDF("name", "conv_id")
+    assert(Sketches.hllRegs(withNulls).filter(col("reg").isNull).count() == 0L)
+    val r = Sketches.hllDistinct(withNulls).collect()
+    assert(r.length == 1 && r(0).getLong(1) == 3L)
+    // the sketch sees exactly what it sees without the null rows
+    assert(r.toSeq == Sketches.hllDistinct(plain).collect().toSeq)
+    // a name whose every key is null has nothing to sketch
+    val allNull = Seq(("n", None: Option[String])).toDF("name", "conv_id")
+    assert(Sketches.hllDistinct(allNull).count() == 0L)
+  }
+
   test("hllRegs merge: element-wise max of shard tables equals the full table") {
     val half1 = (1 to 250).map(i => ("e", f"conv_$i%06d")).toDF("name", "conv_id")
     val half2 = (200 to 500).map(i => ("e", f"conv_$i%06d")).toDF("name", "conv_id")

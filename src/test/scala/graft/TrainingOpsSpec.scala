@@ -36,6 +36,25 @@ class TrainingOpsSpec extends SparkSpec {
     assert(out("c1") == "<|user|>hi\n<|assistant|>hello!")
   }
 
+  test("renderChat: a duplicated turn_idx renders in one pinned order") {
+    // turn 1 appears twice with different roles: W1 (turn_idx unique per
+    // conversation) does not hold, and the tie falls to the rendered
+    // segment, so "<|assistant|>" sorts before "<|user|>"
+    val dup = Seq(
+      ("d1", 0, "user", "q"),
+      ("d1", 1, "user", "again"),
+      ("d1", 1, "assistant", "answer"),
+      ("d1", 2, "user", "thanks"))
+    val want = "<|user|>q\n<|assistant|>answer\n<|user|>again\n<|user|>thanks"
+    for (rows <- Seq(dup, dup.reverse)) {
+      val out = Conversations.renderChat(
+        spark.createDataFrame(rows).toDF("conv_id", "turn_idx", "role", "text"))
+        .collect()
+      assert(out.length == 1)
+      assert(out(0).getLong(1) == 4L && out(0).getString(2) == want)
+    }
+  }
+
   test("lossMaskSpans: every span extracts its own segment from the render") {
     val rendered = Conversations.renderChat(tdf).collect()
       .map(r => r.getString(0) -> r.getString(2)).toMap

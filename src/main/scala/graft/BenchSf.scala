@@ -86,7 +86,7 @@ object BenchSf {
       noop("ivf_topk")(in => ann.Similarity.ivfTopK(in.vecs)),
       BenchLeaves("ivf_separation"),
       BenchLeaves("kmeans_step"),
-      // quantized-integer kernels riding VecSqDistExpr (round-5): the
+      // quantized-integer kernels riding the VecSqDist kernel (round-5): the
       // codebook crossJoin (n×M×codebook sq-dists) and the k-center
       // selection rounds
       noop("pq_adc_topk")(in => ann.PQ.adcTopK(in.vecs)),

@@ -1,15 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, GraftBridge, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.functions.ParseTurnExpr
+import org.apache.spark.sql.types.IntegerType
+import graft.dedup.{LevBanded, Shingles, TokenHash}
+import graft.functions.{FusedParse, Kernel}
 
-/** SparkSessionExtensions entry point: registers the engine's custom
-  * Catalyst expression as a SQL function so pure-SQL users get the fused
-  * parse too:
+/** SparkSessionExtensions entry point: registers the engine's fused
+  * kernels as SQL functions so pure-SQL users get the fused parse too:
   *
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   *   SELECT parse_turn(text).error_number FROM transcripts
@@ -20,32 +21,37 @@ import graft.functions.ParseTurnExpr
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("parse_turn"),
-      new ExpressionInfo(classOf[ParseTurnExpr].getName, "parse_turn"),
-      (children: Seq[Expression]) => ParseTurnExpr(children.head)))
-    // the fused dedup-stage expressions, for pure-SQL users:
-    //   SELECT token_sketches(text).mh0, shingle_hashes(text) FROM docs
-    ext.injectFunction((
-      new FunctionIdentifier("token_sketches"),
-      new ExpressionInfo(classOf[graft.dedup.TokenHashExpr].getName,
-        "token_sketches"),
-      (children: Seq[Expression]) => graft.dedup.TokenHashExpr(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[graft.dedup.ShingleHashExpr].getName,
-        "shingle_hashes"),
-      (children: Seq[Expression]) => graft.dedup.ShingleHashExpr(children.head)))
-    // banded Levenshtein: lev_banded(l, r, k) — k a foldable int literal
-    ext.injectFunction((
-      new FunctionIdentifier("lev_banded"),
-      new ExpressionInfo(classOf[graft.dedup.LevBandedExpr].getName,
-        "lev_banded"),
-      (children: Seq[Expression]) => graft.dedup.LevBandedExpr(
-        children(0), children(1),
-        children(2).eval().asInstanceOf[Number].intValue())))
+    GraftExtensions.functions.foreach(ext.injectFunction)
     // optimizer rule: plain-SQL bounded-levenshtein predicates run the
     // banded kernel (see plans.BandedLevRewrite)
     ext.injectOptimizerRule(_ => graft.plans.BandedLevRewrite)
   }
+}
+
+object GraftExtensions {
+  /** The SQL functions, each built by the Column builder the engine calls:
+    *   SELECT token_sketches(text).mh0, shingle_hashes(text) FROM docs
+    *   SELECT lev_banded(a, b, 5) FROM pairs   -- k an integer constant */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    function("parse_turn", 1)(a => FusedParse.parsed(col(a(0)))),
+    function("token_sketches", 1)(a => TokenHash.sketches(col(a(0)))),
+    function("shingle_hashes", 1)(a => Shingles.shingles(col(a(0)))),
+    function("lev_banded", 3) { a =>
+      val k = a(2)
+      val value = if (k.foldable && k.dataType == IntegerType) k.eval() else null
+      if (value == null) throw new IllegalArgumentException(
+        s"lev_banded: k (argument 3) must be a non-null INT constant, got ${k.sql}")
+      LevBanded.levBanded(col(a(0)), col(a(1)), value.asInstanceOf[Int])
+    })
+
+  private def col(e: Expression): Column = GraftBridge.column(e)
+
+  private def function(name: String, arity: Int)(build: Seq[Expression] => Column)
+      : (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =
+    (new FunctionIdentifier(name), new ExpressionInfo(classOf[Kernel].getName, name),
+      (args: Seq[Expression]) => {
+        if (args.length != arity) throw new IllegalArgumentException(
+          s"$name takes $arity arguments, got ${args.length}")
+        GraftBridge.expression(build(args))
+      })
 }

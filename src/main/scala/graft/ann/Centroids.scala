@@ -187,7 +187,7 @@ object Centroids {
         transform(col("embedding"),
           x => floor(x.cast("double") * 1000.0).cast("long")).as("q"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // fused integer sq-dist kernel (VecSqDistExpr) — n×k evaluations per
+    // fused integer sq-dist kernel (VecSqDist) — n×k evaluations per
     // selection round; bit-identical to the HOF fold (VecSqDistParity)
     val d2 = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
       VecSqDist.sqDistFused(a, b)

@@ -49,7 +49,7 @@ object PQ {
         x => floor(x.cast("double") * 1000000.0).cast("long")).as("q"))
 
   /** Squared L2 between two equal-length long arrays — the fused
-    * [[VecSqDistExpr]] kernel (round-5; evaluated n×M×codebook times in
+    * [[VecSqDist]] kernel (round-5; evaluated n×M×codebook times in
     * the crossJoin below, where the HOF form ran interpreted). */
   private def l2sq(a: Column, b: Column): Column =
     VecSqDist.sqDistFused(a, b)

@@ -34,7 +34,7 @@ object RandomProjection {
     else -1L
 
   /** (vec_id, proj) with proj = outDim exact-integer components (×1e6).
-    * Round-5: each component is one fused [[VecDotLExpr]] against its
+    * Round-5: each component is one fused [[VecDotL]] kernel against its
     * constant sign row (was outDim interpreted aggregate/zip_with trees
     * per input row — ~outDim·dim lambda rows on a map-only pass whose
     * cost should be the scan). Same ascending fold, same wrap, same

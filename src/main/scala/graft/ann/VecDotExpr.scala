@@ -11,8 +11,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * out here. The declarative form (`aggregate(zip_with(a, b, …))`) is a
   * higher-order-function tree, which Spark evaluates INTERPRETED with a
   * per-element lambda row — outside every whole-stage-codegen span. One
-  * static-call loop replaces it (the TokenHashExpr/QCosExpr house
-  * pattern), keeping the surrounding operators inside codegen.
+  * static-call loop replaces it (the [[QCos]] pattern), keeping the
+  * surrounding operators inside codegen.
   *
   * SEMANTICS CONTRACT — bit-identical to
   * `aggregate(zip_with(a, b, (x, y) => x.double * y.double), 0.0, +)`:

@@ -1,9 +1,8 @@
 package graft.ann
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.LongType
 
 /** Fused long-array dot product — the integer sibling of [[VecDotExpr]]
   * for the sign-matrix family: [[RandomProjection.project]] evaluates
@@ -36,32 +35,7 @@ object VecDotL {
     s
   }
 
-  /** Column form over two `array<long>` columns. */
-  def dotFused(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(VecDotLExpr(
-      GraftBridge.expression(a), GraftBridge.expression(b)))
-  }
-}
-
-case class VecDotLExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "vec_dot_l"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VecDotL.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val r = ctx.freshName("vecDotLRes")
-      s"""java.lang.Long $r = graft.ann.VecDotL.compute($a, $b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $r.longValue(); }""".stripMargin
-    })
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): VecDotLExpr =
-    copy(left = newLeft, right = newRight)
+  /** Column form over two `array<long>` columns: `vec_dot_l(a, b)`. */
+  def dotFused(a: Column, b: Column): Column =
+    graft.functions.Kernel.call("vec_dot_l", this, "compute", LongType, Seq(a, b))
 }

@@ -1,9 +1,8 @@
 package graft.ann
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.LongType
 
 /** Fused integer squared L2 distance — the long-array kernel of the
   * quantized ANN family: PQ codebook build / encode / ADC distance
@@ -22,7 +21,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
   *    on LongType wrap exactly like Java longs, so overflow agrees;
   *  - length mismatch ⇒ null (zip_with pads the short side with null,
   *    null terms poison the sum); any null element ⇒ null; empty arrays
-  *    ⇒ 0; null array ⇒ null (BinaryExpression null-intolerance).
+  *    ⇒ 0; null array ⇒ null (the kernel's null-in, null-out rule).
   * VecSqDistParity in SimilaritySpec pins bit-equality against the
   * declarative form over quantized corpus pairs plus adversarial shapes;
   * the PQ/k-center oracle rows (q89/q90/q249) re-gate end-to-end.
@@ -43,32 +42,7 @@ object VecSqDist {
     s
   }
 
-  /** Column form over two `array<long>` columns. */
-  def sqDistFused(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(VecSqDistExpr(
-      GraftBridge.expression(a), GraftBridge.expression(b)))
-  }
-}
-
-case class VecSqDistExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "vec_sqdist"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VecSqDist.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val r = ctx.freshName("vecSqDistRes")
-      s"""java.lang.Long $r = graft.ann.VecSqDist.compute($a, $b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $r.longValue(); }""".stripMargin
-    })
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): VecSqDistExpr =
-    copy(left = newLeft, right = newRight)
+  /** Column form over two `array<long>` columns: `vec_sqdist(a, b)`. */
+  def sqDistFused(a: Column, b: Column): Column =
+    graft.functions.Kernel.call("vec_sqdist", this, "compute", LongType, Seq(a, b))
 }

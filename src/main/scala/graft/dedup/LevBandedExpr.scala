@@ -1,8 +1,7 @@
 package graft.dedup
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.types.{DataType, IntegerType}
+import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Banded (Ukkonen) Levenshtein — the [[EditDedup]] verify-stage kernel.
@@ -20,7 +19,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * string ONCE to a codepoint array, then runs the O(min(n,m)·k) band
   * with early abandon (returns −1 as soon as a whole DP row exceeds k).
   * Codegen is a static call (one tight primitive loop, no allocation
-  * beyond the two int arrays), the house pattern of QCosExpr/TokenHash.
+  * beyond the two int arrays), the `levenshtein_banded`
+  * [[graft.functions.Kernel]].
   */
 object LevBanded {
 
@@ -63,28 +63,8 @@ object LevBanded {
     if (prev(m) > k) -1 else prev(m)
   }
 
-  /** Column form. */
-  def levBanded(l: Column, r: Column, k: Int): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(LevBandedExpr(
-      GraftBridge.expression(l), GraftBridge.expression(r), k))
-  }
-}
-
-case class LevBandedExpr(left: Expression, right: Expression, k: Int)
-    extends BinaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-  override def prettyName: String = "levenshtein_banded"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    LevBanded.dist(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String], k)
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.dedup.LevBanded.dist($a, $b, $k);")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): LevBandedExpr =
-    copy(left = newLeft, right = newRight)
+  /** Column form: `levenshtein_banded(l, r, k)`. */
+  def levBanded(l: Column, r: Column, k: Int): Column =
+    graft.functions.Kernel.call("levenshtein_banded", this, "dist", IntegerType,
+      Seq(l, r), Seq(k))
 }

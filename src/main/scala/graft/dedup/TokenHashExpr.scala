@@ -2,9 +2,10 @@ package graft.dedup
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.util.CollationAwareUTF8String
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.Kernel
 
 /** Fused token-hash sketches: ONE pass over the text computes the 8
   * MinHash values, the 16-bit SimHash and the rolling fingerprint — the
@@ -13,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * SEMANTICS CONTRACT: element-for-element identical to the declarative
   * chain in [[graft.text.TextAnalysis]] + [[Dedup]] — Spark `lower()`
-  * (UTF8String lowercase), Java `\s+` token splitting with empties
+  * ([[TokenHash.lower]]), Java `\s+` token splitting with empties
   * dropped, per-CODEPOINT polynomial fold, `array_min` of an empty
   * shingle array = null. TokenHashParitySpec asserts equality over the
   * corpus and adversarial strings; the DuckDB oracle re-checks q33/q35/
@@ -29,13 +30,16 @@ object TokenHash {
       StructField("simhash", LongType, nullable = false),
       StructField("fp", LongType, nullable = false)))
 
-  def sketches(text: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(TokenHashExpr(GraftBridge.expression(text)))
-  }
+  def sketches(text: Column): Column =
+    Kernel.call("token_sketches", this, "compute", outputSchema, Seq(text))
 
   private def isWs(c: Char) = // Java regex \s
     c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
+
+  /** Spark's `lower()` under its default ICU case mappings, which lowercase
+    * a capital sigma by its word context differently from
+    * `UTF8String.toLowerCase` (KernelParitySpec pins the equality). */
+  def lower(input: UTF8String): String = CollationAwareUTF8String.toLowerCase(input).toString
 
   /** Token hashes: whitespace tokens of the LOWERED text, each folded
     * per codepoint as (acc*31 + cp) mod P starting at 7. */
@@ -61,7 +65,7 @@ object TokenHash {
   /** All sketches in one pass over the token-hash array. */
   def compute(input: UTF8String): InternalRow = {
     if (input == null) return null
-    val th = tokHashes(input.toLowerCase.toString)
+    val th = tokHashes(lower(input))
     val n = th.length
     // minhash over 3-shingles; empty shingle set → nulls (array_min([]))
     val mins = Array.fill[java.lang.Long](NumHashes)(null)
@@ -113,13 +117,11 @@ object TokenHash {
 object Shingles {
   import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 
-  def shingles(text: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(ShingleHashExpr(GraftBridge.expression(text)))
-  }
+  def shingles(text: Column): Column = Kernel.call("shingle_hashes", this, "compute",
+    ArrayType(LongType, containsNull = false), Seq(text))
 
   def compute(input: UTF8String): ArrayData = {
-    val th = TokenHash.tokHashes(input.toLowerCase.toString)
+    val th = TokenHash.tokHashes(TokenHash.lower(input))
     val P = TokenHash.P
     val n = math.max(th.length - 2, 0)
     val out = new Array[Long](n)
@@ -132,22 +134,6 @@ object Shingles {
   }
 }
 
-case class ShingleHashExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "shingle_hashes"
-  override def nullSafeEval(input: Any): Any =
-    Shingles.compute(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.dedup.Shingles.compute($c);")
-  override protected def withNewChildInternal(newChild: Expression): ShingleHashExpr =
-    copy(child = newChild)
-}
-
 /** Fused character-n-gram hash array — the char-level sibling of
   * [[Shingles]] for the n-gram Jaccard family ([[Dedup.charNgramHashes]]
   * consumers: q43/q55 n-gram near-dup). One native pass replaces the
@@ -157,7 +143,7 @@ case class ShingleHashExpr(child: Expression) extends UnaryExpression {
   * lambda tree ran twice per doc side).
   *
   * SEMANTICS CONTRACT: element-for-element identical to the declarative
-  * chain — Spark `lower()` (UTF8String lowercase), `\s+` runs collapsed
+  * chain — Spark `lower()` ([[TokenHash.lower]]), `\s+` runs collapsed
   * to ONE space INCLUDING leading/trailing runs (regexp_replace, no
   * trim), per-CODEPOINT `ascii()` codes (Java regex split("") is
   * codepoint-aware), (acc*31 + cp) % P fold seeded at 7 over each
@@ -167,10 +153,8 @@ case class ShingleHashExpr(child: Expression) extends UnaryExpression {
 object CharNgrams {
   import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 
-  def hashes(text: Column, n: Int): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(CharNgramExpr(GraftBridge.expression(text), n))
-  }
+  def hashes(text: Column, n: Int): Column = Kernel.call("char_ngram_hashes", this,
+    "compute", ArrayType(LongType, containsNull = false), Seq(text), Seq(n))
 
   private[dedup] def isWsChar(c: Char) = // Java regex \s
     c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
@@ -178,7 +162,7 @@ object CharNgrams {
 
   def compute(input: UTF8String, n: Int): ArrayData = {
     val P = TokenHash.P
-    val s = input.toLowerCase.toString
+    val s = TokenHash.lower(input)
     // collapse \s+ runs to single ' ' (leading/trailing kept as a space)
     val len = s.length
     val norm = new java.lang.StringBuilder(len)
@@ -228,10 +212,8 @@ object CdcBoundaries {
     StructField("n_chars", LongType, nullable = false),
     StructField("n_boundaries", LongType, nullable = false)))
 
-  def stats(text: Column, n: Int, modulus: Int): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(CdcBoundaryExpr(GraftBridge.expression(text), n, modulus))
-  }
+  def stats(text: Column, n: Int, modulus: Int): Column =
+    Kernel.call("cdc_boundaries", this, "compute", outputSchema, Seq(text), Seq(n, modulus))
 
   def compute(input: UTF8String, n: Int, modulus: Int): InternalRow = {
     // ONE normalization walk: each emitted codepoint (a \s+ run collapses
@@ -241,7 +223,7 @@ object CdcBoundaries {
     // CharNgrams contract) and tests the boundary predicate. No codepoint
     // array, no hash array — O(n) stack-local state per row.
     val P = TokenHash.P
-    val s = input.toLowerCase.toString
+    val s = TokenHash.lower(input)
     val len = s.length
     val ring = new Array[Long](n)
     var idx = 0      // ring write position; after a write, oldest is at idx
@@ -274,53 +256,4 @@ object CdcBoundaries {
     }
     InternalRow(filled, b)
   }
-}
-
-case class CdcBoundaryExpr(child: Expression, n: Int, modulus: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = CdcBoundaries.outputSchema
-  override def nullable: Boolean = true
-  override def prettyName: String = "cdc_boundaries"
-  override def nullSafeEval(input: Any): Any =
-    CdcBoundaries.compute(input.asInstanceOf[UTF8String], n, modulus)
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.dedup.CdcBoundaries.compute($c, $n, $modulus);")
-  override protected def withNewChildInternal(newChild: Expression): CdcBoundaryExpr =
-    copy(child = newChild)
-}
-
-case class CharNgramExpr(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "char_ngram_hashes"
-  override def nullSafeEval(input: Any): Any =
-    CharNgrams.compute(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.dedup.CharNgrams.compute($c, $n);")
-  override protected def withNewChildInternal(newChild: Expression): CharNgramExpr =
-    copy(child = newChild)
-}
-
-case class TokenHashExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = TokenHash.outputSchema
-  override def nullable: Boolean = true
-  override def prettyName: String = "token_sketches"
-  override def nullSafeEval(input: Any): Any =
-    TokenHash.compute(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.dedup.TokenHash.compute($c);")
-  override protected def withNewChildInternal(newChild: Expression): TokenHashExpr =
-    copy(child = newChild)
 }

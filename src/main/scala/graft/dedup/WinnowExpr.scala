@@ -2,7 +2,6 @@ package graft.dedup
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -13,8 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * ([[Dedup.winnowSelectDeclarative]]) is an interpreted
   * `aggregate`-inside-`transform` tree (O(n·w) argmin re-walked per
   * window, no codegen); this pass is a monotonic-deque sliding minimum —
-  * O(n) total, inside whole-stage codegen as a static call, the
-  * FusedParse / TokenHash / LevBandedExpr house convention.
+  * O(n) total, inside whole-stage codegen as a static call (the
+  * `winnow_stats` [[graft.functions.Kernel]]).
   *
   * SEMANTICS CONTRACT: identical output to the declarative chain —
   * same tokenization + 3-shingle hashes ([[Shingles]], proven in
@@ -32,14 +31,13 @@ object Winnow {
     StructField("fps", ArrayType(LongType, containsNull = false),
       nullable = false)))
 
-  def stats(text: Column, w: Int): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(WinnowExpr(GraftBridge.expression(text), w))
-  }
+  def stats(text: Column, w: Int): Column =
+    graft.functions.Kernel.call("winnow_stats", this, "compute", outputSchema, Seq(text),
+      Seq(w))
 
   /** n_grams + distinct winnowed fps in one pass. `w` must be ≥ 1. */
   def compute(input: UTF8String, w: Int): InternalRow = {
-    val th = TokenHash.tokHashes(input.toLowerCase.toString)
+    val th = TokenHash.tokHashes(TokenHash.lower(input))
     val P = TokenHash.P
     val n = math.max(th.length - 2, 0)
     val sh = new Array[Long](n)
@@ -79,20 +77,4 @@ object Winnow {
     }
     InternalRow(n.toLong, new GenericArrayData(out.toArray))
   }
-}
-
-case class WinnowExpr(child: Expression, w: Int) extends UnaryExpression {
-  override def dataType: DataType = Winnow.outputSchema
-  override def nullable: Boolean = true
-  override def prettyName: String = "winnow_stats"
-  override def nullSafeEval(input: Any): Any =
-    Winnow.compute(input.asInstanceOf[UTF8String], w)
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.dedup.Winnow.compute($c, $w);")
-  override protected def withNewChildInternal(newChild: Expression): WinnowExpr =
-    copy(child = newChild)
 }

@@ -2,12 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.functions.{col, struct}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Fused enrichment: ONE custom Expression computing the seven derived
+/** Fused enrichment: ONE [[Kernel]] call computing the seven derived
   * per-row fields (severity value/keyword, category, description, acct_app
   * ×2, 18456 state description) in a single pass — the enrich-stage
   * sibling of [[FusedParse]] and [[JsonDoc]].
@@ -74,11 +73,8 @@ object FusedEnrich {
     StructField("xe_state_description", StringType)))
 
   /** The fused column over an already-parsed frame. */
-  def derived: Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(EnrichExpr(
-      GraftBridge.expression(struct(inputCols.map(col): _*))))
-  }
+  def derived: Column = Kernel.call("fused_enrich", this, "evalRow", outputSchema,
+    Seq(struct(inputCols.map(col): _*)))
 
   // 18456 state table compiled to a lookup map (same source list as the
   // declarative when-chain and the oracle CASE)
@@ -291,7 +287,8 @@ object FusedEnrich {
     Derived(sev, keyword, category, description, acct, acctClient, stateDesc)
   }
 
-  /** Static entry used by both eval and generated code. */
+  /** The `fused_enrich` kernel ([[Kernel]]): parsed-field struct →
+    * derived-enrichment struct, one switch per row. */
   def evalRow(row: InternalRow): InternalRow = {
     if (row == null) return null
     val d = compute(row)
@@ -299,26 +296,4 @@ object FusedEnrich {
     InternalRow(d.sev, s(d.keyword), s(d.category), s(d.description),
       s(d.acctApp), s(d.acctAppClient), s(d.stateDesc))
   }
-}
-
-/** The Expression node: parsed-field struct → derived-enrichment struct,
-  * one switch per row; codegen emits a direct static call. */
-case class EnrichExpr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = FusedEnrich.outputSchema
-  override def nullable: Boolean = true
-  override def prettyName: String = "fused_enrich"
-
-  override def nullSafeEval(input: Any): Any =
-    FusedEnrich.evalRow(input.asInstanceOf[InternalRow])
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.FusedEnrich.evalRow($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): EnrichExpr =
-    copy(child = newChild)
 }

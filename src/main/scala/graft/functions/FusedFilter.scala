@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.BooleanType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused standard-filter predicate over RAW text — the whole
@@ -26,11 +25,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * the retained declarative predicate row-for-row. */
 object FusedFilter {
 
-  def keepStandard(text: Column, role: Column, tool: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(StandardFilterExpr(GraftBridge.expression(text),
-      GraftBridge.expression(role), GraftBridge.expression(tool)))
-  }
+  /** `standard_filter_keep(text, role, tool)`: never null; the kernel
+    * sees null arguments. */
+  def keepStandard(text: Column, role: Column, tool: Column): Column =
+    Kernel.call("standard_filter_keep", this, "keep", BooleanType, Seq(text, role, tool),
+      nulls = Kernel.NotNull)
 
   /** The F1–F7 + default-chain decision. Null text → drop (matches the
     * declarative stack's null propagation into Filter). */
@@ -66,43 +65,4 @@ object FusedFilter {
       return tool != null && tool.toString == "sql_query"
     true
   }
-}
-
-case class StandardFilterExpr(first: Expression, second: Expression,
-                              third: Expression) extends TernaryExpression {
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = false
-  override def prettyName: String = "standard_filter_keep"
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val t = first.eval(input)
-    val r = second.eval(input)
-    val o = third.eval(input)
-    FusedFilter.keep(t.asInstanceOf[UTF8String], r.asInstanceOf[UTF8String],
-      o.asInstanceOf[UTF8String])
-  }
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val tEv = first.genCode(ctx)
-    val rEv = second.genCode(ctx)
-    val oEv = third.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${tEv.code}
-        ${rEv.code}
-        ${oEv.code}
-        boolean ${ev.value} = graft.functions.FusedFilter.keep(
-          ${tEv.isNull} ? null : ${tEv.value},
-          ${rEv.isNull} ? null : ${rEv.value},
-          ${oEv.isNull} ? null : ${oEv.value});
-        """,
-      isNull = FalseLiteral)
-  }
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression)
-      : StandardFilterExpr =
-    copy(first = newFirst, second = newSecond, third = newThird)
 }

@@ -2,13 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Fused single-pass parse: a custom Catalyst `Expression` that computes
+/** Fused single-pass parse: the `parse_turn` [[Kernel]] call that computes
   * every field of the Grok battery in ~3 scans of the text instead of ~25
   * independent regex passes (SURVEY.md §4 "the one candidate for a custom
   * Expression — measure first"; measured: the battery dominates pipeline
@@ -94,22 +91,20 @@ object FusedParse {
 
   val schema: StructType = StructType(fields)
 
-  def parsed(text: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(ParseTurnExpr(GraftBridge.expression(text)))
-  }
+  /** text → struct of all parsed fields, one row scan (`parse_turn`). */
+  def parsed(text: Column): Column =
+    Kernel.call("parse_turn", this, "parseRow", schema, Seq(text))
 
-  /** Cheap name-only extraction column (PRE-parse filter stage). */
-  def nameLite(text: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(NameLiteExpr(GraftBridge.expression(text)))
-  }
+  /** Cheap name-only extraction column (PRE-parse filter stage). The
+    * filter predicates must not reference the full `parse_turn` output,
+    * because predicate pushdown substitutes the expensive expression into
+    * every predicate (measured: filters cost 3× the parse itself). */
+  def nameLite(text: Column): Column =
+    Kernel.call("event_name_lite", this, "eventNameLite", StringType, Seq(text))
 
   /** Cheap error-number-only extraction column (PRE-parse filter stage). */
-  def errorNumLite(text: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(ErrorNumLiteExpr(GraftBridge.expression(text)))
-  }
+  def errorNumLite(text: Column): Column =
+    Kernel.call("error_number_lite", this, "errorNumberLite", LongType, Seq(text))
 
   // ---- exact-parity scanners -------------------------------------------------
 
@@ -449,9 +444,9 @@ object FusedParse {
     waitType: String, batch: String,
     elRaw: String, elProc: String, elMsg: String)
 
-  /** Static-forwarder entry for codegen (StaticInvoke generates a direct
-    * `FusedParse.parseRow(utf8)` call inside whole-stage codegen — no
-    * CodegenFallback interpreter break). */
+  /** The `parse_turn` kernel ([[Kernel]]): interpreted eval invokes it,
+    * generated code calls `FusedParse.parseRow(utf8)` directly, so the
+    * parse stage stays inside whole-stage codegen. */
   def parseRow(input: UTF8String): InternalRow = {
     if (input == null) return null
     val t = input.toString
@@ -490,7 +485,7 @@ object FusedParse {
   }
 
   /** Event-name prefix only (^event=([a-z_0-9]+)) — the cheap extraction
-    * the pre-parse filter stage uses (see [[NameLiteExpr]]). */
+    * the pre-parse filter stage uses (see [[nameLite]]). */
   def nameOf(t: String): String = {
     if (!t.startsWith("event=")) return ""
     var j = 6
@@ -502,6 +497,12 @@ object FusedParse {
 
   /** Error number only (group 1 of the triple) — cheap filter extraction. */
   def errorNumberOf(t: String): java.lang.Long = errorTriple(t)._1
+
+  /** The `event_name_lite` kernel. */
+  def eventNameLite(u: UTF8String): UTF8String = UTF8String.fromString(nameOf(u.toString))
+
+  /** The `error_number_lite` kernel. */
+  def errorNumberLite(u: UTF8String): java.lang.Long = errorNumberOf(u.toString)
 
   def parseAll(t: String): Parsed = parseAllWith(t, KeyScan.scan(t))
 
@@ -555,68 +556,4 @@ object FusedParse {
       kn(KeyScan.DbId), kn(KeyScan.SignalDuration), kn(KeyScan.SessionId),
       ks(KeyScan.WaitType), batchText(t), elRaw, elProc, elMsg)
   }
-}
-
-/** The Expression node: text → struct of all parsed fields, one row scan.
-  * Codegen emits a direct static call to `FusedParse.parseRow`, so the
-  * parse stage stays inside whole-stage codegen (no interpreter break). */
-case class ParseTurnExpr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = FusedParse.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "parse_turn"
-
-  override def nullSafeEval(input: Any): Any =
-    FusedParse.parseRow(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.FusedParse.parseRow($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): ParseTurnExpr =
-    copy(child = newChild)
-}
-
-/** Cheap per-row event-name extraction for the PRE-parse filter stage: the
-  * filter predicates must not reference the full ParseTurnExpr output,
-  * because predicate pushdown substitutes the expensive expression into
-  * every predicate (measured: filters cost 3× the parse itself). */
-case class NameLiteExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "event_name_lite"
-  override def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(FusedParse.nameOf(input.asInstanceOf[UTF8String].toString))
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.functions.FusedParse.nameOf($c.toString()));")
-  override protected def withNewChildInternal(newChild: Expression): NameLiteExpr =
-    copy(child = newChild)
-}
-
-/** Cheap error-number extraction (triple group 1) for the filter stage. */
-case class ErrorNumLiteExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "error_number_lite"
-  override def nullSafeEval(input: Any): Any =
-    FusedParse.errorNumberOf(input.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    val boxed = ctx.freshName("en")
-    nullSafeCodeGen(ctx, ev, c => s"""
-      java.lang.Long $boxed = graft.functions.FusedParse.errorNumberOf($c.toString());
-      if ($boxed == null) { ${ev.isNull} = true; } else { ${ev.value} = $boxed.longValue(); }""")
-  }
-  override protected def withNewChildInternal(newChild: Expression): ErrorNumLiteExpr =
-    copy(child = newChild)
 }

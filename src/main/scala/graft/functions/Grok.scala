@@ -36,7 +36,7 @@ object Grok {
 
   /** Full parse projection: transcript turns → flat typed event columns —
     * the reference's `xe.Parse` equivalent (pkg/xe/xe.go:125-252), fused
-    * into ONE custom-Expression scan per row (see [[FusedParse]]). The
+    * into ONE `parse_turn` kernel scan per row (see [[FusedParse]]). The
     * two-projection split keeps CollapseProject from inlining the
     * expensive parse into each of the 23 field extractions. */
   def parse(turns: DataFrame): DataFrame = {
@@ -145,7 +145,7 @@ object Grok {
     when(length(c) > n, concat(substring(c, 1, n), lit("..."))).otherwise(c)
 
   /** NFC normalize-only UDF — the declarative reference path; production
-    * uses the codegen'd [[Nfc.left]] Expression instead. */
+    * uses the codegen'd [[Nfc.left]] kernel instead. */
   private lazy val nfcNormalize = udf((s: String) =>
     if (s == null) null
     else java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFC))

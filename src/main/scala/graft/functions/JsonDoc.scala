@@ -54,7 +54,7 @@ case class JsonDocExpr(child: Expression) extends UnaryExpression {
         case '\t' => sb.append("\\t")
         case '\b' => sb.append("\\b")
         case '\f' => sb.append("\\f")
-        case x if x < ' ' => sb.append(f"\\u${x.toInt}%04x")
+        case x if x < ' ' => sb.append(f"\\u${x.toInt}%04X") // Jackson's hex case
         case x => sb.append(x)
       }
       i += 1

@@ -3,8 +3,7 @@ package graft.functions
 import java.text.Normalizer
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** P7 unicode-safe truncation WITH NFC normalization — the full semantics
@@ -16,9 +15,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * exceeds n. Note the reference returns the NORMALIZED string even when
   * no truncation happens — we preserve that.
   *
-  * Spark has no built-in NFC function, so the production path is a custom
-  * Catalyst Expression ([[NfcLeftExpr]]) whose codegen emits a direct
-  * static call — no UDF barrier, stays inside whole-stage codegen. The
+  * Spark has no built-in NFC function, so the production path is the
+  * `nfc_left` [[Kernel]], whose codegen emits a direct static call to
+  * [[Nfc.eval]] — no UDF barrier, stays inside whole-stage codegen. The
   * declarative reference implementation is [[Grok.nfcLeft]] (built-ins +
   * a normalize-only UDF); the DuckDB oracle re-implements the same
   * definition via `nfc_normalize` (see Oracle.oNfcLeft).
@@ -49,29 +48,7 @@ object Nfc {
     UTF8String.fromString(truncateNfc(u.toString, n))
   }
 
-  /** Column builder over the custom Expression — the production path. */
-  def left(c: Column, n: Int): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(NfcLeftExpr(GraftBridge.expression(c), n))
-  }
-}
-
-/** text → NFC-aware n-codepoint truncation; codegen is a static call. */
-case class NfcLeftExpr(child: Expression, n: Int) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "nfc_left"
-
-  override def nullSafeEval(input: Any): Any =
-    Nfc.eval(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.Nfc.eval($c, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): NfcLeftExpr =
-    copy(child = newChild)
+  /** `nfc_left(c, n)` — the production path; nullable only when `c` is. */
+  def left(c: Column, n: Int): Column =
+    Kernel.call("nfc_left", this, "eval", StringType, Seq(c), Seq(n), Kernel.ArgNullable)
 }

@@ -2,9 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Declarative data-quality rule audit — the rule-TABLE-driven validator
@@ -318,10 +317,8 @@ object DqRules {
   * corpus + adversarial strings. The declared tokenization of q250 is
   * unchanged — only the engine evaluating it. */
 object KvExtract {
-  def kvs(text: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(KvExtractExpr(GraftBridge.expression(text)))
-  }
+  def kvs(text: Column): Column = graft.functions.Kernel.call("kv_extract", this,
+    "compute", ArrayType(StringType, containsNull = false), Seq(text))
 
   private def isCls(c: Char) =
     (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == '_'
@@ -345,20 +342,4 @@ object KvExtract {
     }
     new GenericArrayData(out.toArray[Any])
   }
-}
-
-case class KvExtractExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "kv_extract"
-  override def nullSafeEval(input: Any): Any =
-    KvExtract.compute(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.operators.KvExtract.compute($c);")
-  override protected def withNewChildInternal(newChild: Expression): KvExtractExpr =
-    copy(child = newChild)
 }

@@ -140,7 +140,7 @@ object Filters {
   /** The same predicate stack evaluated on RAW text — the production
     * pre-parse placement. The predicates use the cheap name/error-number
     * lite expressions instead of the full-parse columns: predicate
-    * pushdown would otherwise substitute the 51-field ParseTurnExpr into
+    * pushdown would otherwise substitute the 51-field `parse_turn` into
     * every predicate below the parse projection (measured: the filter
     * stage cost 3× the parse itself). Semantics are identical — the lite
     * extractions are the same scanners (FilterPlacementSpec asserts row

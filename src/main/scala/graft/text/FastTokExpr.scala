@@ -1,10 +1,10 @@
 package graft.text
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.Kernel
 
 /** Fused whitespace tokenizers — the array-producing siblings of
   * [[TokenScore]]/[[graft.dedup.TokenHash]] for the ~30 call sites that
@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * SEMANTICS CONTRACT (FastTokSpec): element-for-element identical to
   * [[TextAnalysis.tokensDeclarative]] / [[TextAnalysis.tokHashesDeclarative]]
-  * — Spark `lower()` (UTF8String lowercase), Java-regex `\s` separators
+  * — Spark `lower()` ([[graft.dedup.TokenHash.lower]]), Java-regex `\s` separators
   * (space, tab, newline, vtab, ff, cr), empties dropped, per-CODEPOINT
   * polynomial fold (acc*31 + cp) mod P seeded at 7. The token walk is the
   * SAME loop [[graft.dedup.TokenHash.tokHashes]] already pins in
@@ -31,27 +31,23 @@ object FastTok {
 
   /** Lowered whitespace tokens — fused twin of
     * [[TextAnalysis.tokensDeclarative]]. */
-  def tokens(text: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(FastTokensExpr(GraftBridge.expression(text), lower = true))
-  }
+  def tokens(text: Column): Column = tokenArray(text, lower = true)
 
   /** Case-preserving whitespace tokens — fused twin of
     * `filter(split(text, "\\s+"), _ =!= "")`. */
-  def rawTokens(text: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(FastTokensExpr(GraftBridge.expression(text), lower = false))
-  }
+  def rawTokens(text: Column): Column = tokenArray(text, lower = false)
+
+  private def tokenArray(text: Column, lower: Boolean): Column =
+    Kernel.call("fast_tokens", this, "computeTokens",
+      ArrayType(StringType, containsNull = false), Seq(text), Seq(lower))
 
   /** Token-hash array — fused twin of [[TextAnalysis.tokHashesDeclarative]]
     * (the [[graft.dedup.TokenHash.tokHashes]] loop, parity-pinned). */
-  def tokHashes(text: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(FastTokHashesExpr(GraftBridge.expression(text)))
-  }
+  def tokHashes(text: Column): Column = Kernel.call("fast_tok_hashes", this,
+    "computeHashes", ArrayType(LongType, containsNull = false), Seq(text))
 
   def computeTokens(input: UTF8String, lower: Boolean): ArrayData = {
-    val s = (if (lower) input.toLowerCase else input).toString
+    val s = if (lower) graft.dedup.TokenHash.lower(input) else input.toString
     val n = s.length
     val buf = scala.collection.mutable.ArrayBuffer[UTF8String]()
     var i = 0
@@ -68,23 +64,21 @@ object FastTok {
 
   def computeHashes(input: UTF8String): ArrayData =
     new GenericArrayData(
-      graft.dedup.TokenHash.tokHashes(input.toLowerCase.toString))
+      graft.dedup.TokenHash.tokHashes(graft.dedup.TokenHash.lower(input)))
 
   /** BPE-ish pre-tokenizer count — fused twin of
     * `size(regexp_extract_all(text, "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]", 0))`
     * ([[TextAnalysis.BpePattern]]): one native walk counting letter runs,
     * digit runs, and single non-alnum-non-ws CODEPOINTS (Java regex `.`
     * class matches per codepoint, so a surrogate pair is one match). */
-  def bpeCount(text: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(BpeCountExpr(GraftBridge.expression(text)))
-  }
+  def bpeCount(text: Column): Column =
+    Kernel.call("bpe_count", this, "computeBpeCount", IntegerType, Seq(text))
 
-  def computeBpeCount(input: UTF8String): Long = {
+  def computeBpeCount(input: UTF8String): Int = {
     val s = input.toString
     val n = s.length
     var i = 0
-    var cnt = 0L
+    var cnt = 0
     while (i < n) {
       val c = s.charAt(i)
       if ((c >= 'A' && c <= 'Z') || (c >= 'a' && c <= 'z')) {
@@ -105,55 +99,6 @@ object FastTok {
   }
 }
 
-case class BpeCountExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-  override def prettyName: String = "bpe_count"
-  override def nullSafeEval(input: Any): Any =
-    FastTok.computeBpeCount(input.asInstanceOf[UTF8String]).toInt
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = (int) graft.text.FastTok.computeBpeCount($c);")
-  override protected def withNewChildInternal(newChild: Expression): BpeCountExpr =
-    copy(child = newChild)
-}
-
-case class FastTokensExpr(child: Expression, lower: Boolean)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "fast_tokens"
-  override def nullSafeEval(input: Any): Any =
-    FastTok.computeTokens(input.asInstanceOf[UTF8String], lower)
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.text.FastTok.computeTokens($c, $lower);")
-  override protected def withNewChildInternal(newChild: Expression): FastTokensExpr =
-    copy(child = newChild)
-}
-
-case class FastTokHashesExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "fast_tok_hashes"
-  override def nullSafeEval(input: Any): Any =
-    FastTok.computeHashes(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.text.FastTok.computeHashes($c);")
-  override protected def withNewChildInternal(newChild: Expression): FastTokHashesExpr =
-    copy(child = newChild)
-}
-
 /** Fused |A ∩ B| over two string arrays — value-identical to
   * `size(array_intersect(a, b))` (distinct common elements; parity in
   * FastTokSpec incl. duplicate/empty/unicode shapes) without
@@ -162,11 +107,8 @@ case class FastTokHashesExpr(child: Expression) extends UnaryExpression {
 object ArrIntersectSize {
   import org.apache.spark.sql.catalyst.util.ArrayData
 
-  def of(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(ArrIntersectSizeExpr(
-      GraftBridge.expression(a), GraftBridge.expression(b)))
-  }
+  def of(a: Column, b: Column): Column =
+    Kernel.call("arr_intersect_size", this, "compute", LongType, Seq(a, b))
 
   def compute(a: ArrayData, b: ArrayData): Long = {
     val nb = b.numElements()
@@ -184,24 +126,4 @@ object ArrIntersectSize {
     }
     c
   }
-}
-
-case class ArrIntersectSizeExpr(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "arr_intersect_size"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    ArrIntersectSize.compute(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.text.ArrIntersectSize.compute($a, $b);")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ArrIntersectSizeExpr =
-    copy(left = newLeft, right = newRight)
 }

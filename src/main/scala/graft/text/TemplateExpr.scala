@@ -2,8 +2,7 @@ package graft.text
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused log-template rebuild: ONE native pass over the turn text maps
@@ -11,8 +10,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * (miss) and re-joins — the rebuild kernel under
   * [[graft.operators.DqRules.logTemplates]]. The head vocabulary is a
   * BROADCAST set (≤ corpus_tokens / minCount entries by Zipf — an
-  * aggregate, not a corpus), folded into the expression the
-  * FusedParse / TokenScoreExpr way, so the rebuild is map-only: no
+  * aggregate, not a corpus), a constant parameter of the `log_template`
+  * [[graft.functions.Kernel]], so the rebuild is map-only: no
   * second full-token exchange, no per-turn collect_list + sort. The
   * only shuffle left in the rebuild plan is the final template census
   * hash-agg (asserted in PlanSpec; the declarative reference's
@@ -27,16 +26,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * re-checks end-to-end in DuckDB.
   */
 object LogTemplate {
-  def rebuild(text: Column, keep: Broadcast[java.util.HashSet[String]]): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(TemplateRewriteExpr(GraftBridge.expression(text), keep))
-  }
+  def rebuild(text: Column, keep: Broadcast[java.util.HashSet[String]]): Column =
+    graft.functions.Kernel.call("log_template", this, "compute", StringType, Seq(text),
+      Seq(keep))
 
   private def isWs(c: Char) = // Java regex \s
     c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
 
   /** Template string, or null when the text has zero tokens. */
-  def compute(input: UTF8String, keep: java.util.HashSet[String]): UTF8String = {
+  def compute(input: UTF8String, keepBc: Broadcast[java.util.HashSet[String]]): UTF8String = {
+    val keep = keepBc.value
     val s = input.toString
     val n = s.length
     val sb = new java.lang.StringBuilder(n)
@@ -55,26 +54,4 @@ object LogTemplate {
     }
     if (!any) null else UTF8String.fromString(sb.toString)
   }
-}
-
-case class TemplateRewriteExpr(child: Expression,
-    keep: Broadcast[java.util.HashSet[String]]) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "log_template"
-  override def nullSafeEval(input: Any): Any =
-    LogTemplate.compute(input.asInstanceOf[UTF8String], keep.value)
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    val bcRef = ctx.addReferenceObj("templateKeepBc", keep,
-      "org.apache.spark.broadcast.Broadcast")
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.text.LogTemplate.compute($c,
-        (java.util.HashSet) $bcRef.value());
-      ${ev.isNull} = ${ev.value} == null;""")
-  }
-  override protected def withNewChildInternal(newChild: Expression): TemplateRewriteExpr =
-    copy(child = newChild)
 }

@@ -2,7 +2,6 @@ package graft.text
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -26,13 +25,11 @@ object TokenScore {
     StructField("n_tokens", LongType, nullable = false),
     StructField("score_sum", LongType, nullable = false)))
 
-  def scoreStruct(text: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(TokenScoreExpr(GraftBridge.expression(text)))
-  }
+  def scoreStruct(text: Column): Column =
+    graft.functions.Kernel.call("token_score", this, "compute", outputSchema, Seq(text))
 
   def compute(input: UTF8String): InternalRow = {
-    val th = graft.dedup.TokenHash.tokHashes(input.toLowerCase.toString)
+    val th = graft.dedup.TokenHash.tokHashes(graft.dedup.TokenHash.lower(input))
     var s = 0L
     var i = 0
     while (i < th.length) {
@@ -41,20 +38,4 @@ object TokenScore {
     }
     InternalRow(th.length.toLong, s)
   }
-}
-
-case class TokenScoreExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = TokenScore.outputSchema
-  override def nullable: Boolean = true
-  override def prettyName: String = "token_score"
-  override def nullSafeEval(input: Any): Any =
-    TokenScore.compute(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.text.TokenScore.compute($c);")
-  override protected def withNewChildInternal(newChild: Expression): TokenScoreExpr =
-    copy(child = newChild)
 }

@@ -24,14 +24,14 @@ class MainSpec extends SparkSpec {
     assert(Files.exists(Paths.get(s"$root/out/elastic")))
   }
 
+  // the registrations GraftExtensions injects
+  private def registerSqlFunctions(): Unit =
+    GraftExtensions.functions.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+    }
+
   test("parse_turn is usable from SQL via the extension's function builder") {
-    // same registration the GraftExtensions injectFunction performs
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-    spark.sessionState.functionRegistry.registerFunction(
-      new FunctionIdentifier("parse_turn"),
-      new ExpressionInfo(classOf[functions.ParseTurnExpr].getName, "parse_turn"),
-      (children: Seq[Expression]) => functions.ParseTurnExpr(children.head))
+    registerSqlFunctions()
     Transcripts.load(spark, tiny).createOrReplaceTempView("t_sql")
     val out = spark.sql(
       "SELECT parse_turn(text).error_number AS en FROM t_sql WHERE parse_turn(text).name = 'error_reported'")
@@ -40,25 +40,10 @@ class MainSpec extends SparkSpec {
   }
 
   test("token_sketches and shingle_hashes are usable from SQL") {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-    spark.sessionState.functionRegistry.registerFunction(
-      new FunctionIdentifier("token_sketches"),
-      new ExpressionInfo(classOf[dedup.TokenHashExpr].getName, "token_sketches"),
-      (children: Seq[Expression]) => dedup.TokenHashExpr(children.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      new FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[dedup.ShingleHashExpr].getName, "shingle_hashes"),
-      (children: Seq[Expression]) => dedup.ShingleHashExpr(children.head))
+    registerSqlFunctions()
     import TestSpark.spark.implicits._
     Seq((1L, "one two three four")).toDF("doc_id", "text")
       .createOrReplaceTempView("d_sql")
-    spark.sessionState.functionRegistry.registerFunction(
-      new FunctionIdentifier("lev_banded"),
-      new ExpressionInfo(classOf[dedup.LevBandedExpr].getName, "lev_banded"),
-      (children: Seq[Expression]) => dedup.LevBandedExpr(
-        children(0), children(1),
-        children(2).eval().asInstanceOf[Number].intValue()))
     val lv = spark.sql(
       "SELECT lev_banded('kitten', 'sitting', 5) AS d, lev_banded('aa', 'zzzz', 1) AS x")
       .collect()(0)
@@ -90,5 +75,19 @@ class MainSpec extends SparkSpec {
       Seq((1L, "one two three four")).toDF("doc_id", "text"))
       .collect()(0).getLong(1)
     assert(r.getLong(0) == want)
+  }
+
+  test("lev_banded rejects a column k, a NULL k and a wrong argument count by name") {
+    registerSqlFunctions()
+    import TestSpark.spark.implicits._
+    Seq(("kitten", "sitting", 3)).toDF("a", "b", "k").createOrReplaceTempView("lev_sql")
+    for ((q, why) <- Seq(
+        "SELECT lev_banded(a, b, k) FROM lev_sql" -> "k (argument 3)",
+        "SELECT lev_banded(a, b, NULL) FROM lev_sql" -> "k (argument 3)",
+        "SELECT lev_banded(a, b) FROM lev_sql" -> "takes 3 arguments, got 2")) {
+      val e = intercept[IllegalArgumentException](spark.sql(q).collect())
+      assert(e.getMessage.contains("lev_banded") && e.getMessage.contains(why),
+        s"$q: ${e.getMessage}")
+    }
   }
 }

@@ -11,8 +11,9 @@ import org.apache.spark.sql.SparkSession
   *   graft.Main stream <inputDir> <outRoot> <checkpointDir> [--once]
   *
   * In batch mode the routed frame is written to all sinks once with
-  * lineage; in stream mode the checkpointed streaming pipeline runs until
-  * stopped (or drains once with --once).
+  * lineage (`Sinks.writeAll` orders it by conversation and turn); in
+  * stream mode the checkpointed streaming pipeline runs until stopped (or
+  * drains once with --once).
   */
 object Main {
   def main(args: Array[String]): Unit = {
@@ -36,10 +37,7 @@ object Main {
         val input = spark.read
           .schema(streaming.StreamingPipeline.schema)
           .parquet(inputDir)
-        val routed = Pipeline.transform(input, spark)
-          .repartition(org.apache.spark.sql.functions.col("conv_id"))
-          .sortWithinPartitions("conv_id", "turn_idx")
-        sinks.Sinks.writeAll(routed, outRoot)
+        sinks.Sinks.writeAll(Pipeline.transform(input, spark), outRoot)
       case "stream" =>
         require(args.length >= 4, "stream mode needs <checkpointDir>")
         val once = args.contains("--once")

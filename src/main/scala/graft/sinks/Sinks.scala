@@ -1,6 +1,7 @@
 package graft.sinks
 
 import java.nio.file.{Files, Paths}
+import scala.util.Using
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,10 +17,15 @@ import org.apache.spark.sql.functions._
   *    (`pkg/sink/sink_elastic.go:113-145`).
   *
   * The reference writes serially to each sink per event (README.md:455,
-  * "performance isn't that great"); here the routed batch is cached once
-  * and each sink is a column projection + partitioned write.
+  * "performance isn't that great"); here [[writeAll]] orders the routed
+  * batch by conversation and turn, caches only the five columns the sinks
+  * read ([[SinkColumns]]) and writes each sink as a column projection +
+  * partitioned write of that one cached frame.
   */
 object Sinks {
+
+  /** The columns [[writeAll]]'s sinks and lineage rows read. */
+  val SinkColumns: Seq[String] = Seq("ts", "doc_json", "sink_index", "src_file", "src_offset")
 
   /** K1: hourly-partitioned NDJSON file sink. */
   def writeFile(routed: DataFrame, dir: String): Unit =
@@ -47,9 +53,9 @@ object Sinks {
   def applyRetention(spark: SparkSession, dir: String, retainHours: Int): Seq[String] = {
     val p = Paths.get(dir)
     if (!Files.exists(p)) return Nil
-    val parts = Files.list(p).iterator().asScala.toSeq
+    val parts = Using.resource(Files.list(p))(_.iterator().asScala.toSeq
       .map(_.getFileName.toString).filter(_.startsWith("date_hour="))
-      .sorted
+      .sorted)
     if (parts.isEmpty) return Nil
     val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd_HH")
     def hourOf(s: String) =
@@ -58,18 +64,28 @@ object Sinks {
     val dropped = parts.filter(part =>
       hourOf(part).isBefore(maxHour.minusHours(retainHours.toLong)))
     dropped.foreach { part =>
-      val d = p.resolve(part)
-      Files.walk(d).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+      Using.resource(Files.walk(p.resolve(part)))(
+        _.iterator().asScala.toSeq.reverse.foreach(Files.delete))
     }
     dropped
   }
 
-  /** Write all sinks from one cached routed batch + return per-sink counts
-    * (A2). Lineage row per source file is appended to `lineageDir`
-    * (ST2/A7: sink write precedes lineage commit = at-least-once, like the
-    * reference's sink-then-state order, process_session.go:145-162). */
+  /** W1 + the sink frame: each conversation co-located in one partition
+    * and ordered by turn within it, projected to [[SinkColumns]]. Column
+    * pruning keeps every other routed column out of the ordering exchange
+    * (and out of the cache [[writeAll]] puts on this frame). */
+  private[graft] def sinkFrame(routed: DataFrame): DataFrame =
+    routed.repartition(col("conv_id"))
+      .sortWithinPartitions("conv_id", "turn_idx")
+      .select(SinkColumns.map(col): _*)
+
+  /** Write all sinks from one cached [[sinkFrame]] of the routed batch;
+    * this is the one place of the W1 turn ordering. Lineage rows per
+    * source file are appended to `root/lineage` (ST2/A7: sink write
+    * precedes lineage commit = at-least-once, like the reference's
+    * sink-then-state order, process_session.go:145-162). */
   def writeAll(routed: DataFrame, root: String, batchId: Long = 0L): Unit = {
-    val cached = routed.persist()
+    val cached = sinkFrame(routed).persist()
     try {
       writeFile(cached, s"$root/file")
       writeLogstash(cached, s"$root/logstash")

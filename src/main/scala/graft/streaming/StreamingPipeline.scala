@@ -16,11 +16,12 @@ import graft.sinks.Sinks
   *    `pkg/status/status.go:273-363`) — resumable, at-least-once into the
   *    sinks exactly like the reference (sink write precedes state commit).
   *  - transforms: the SAME column pipeline as batch (Pipeline.transform),
-  *    applied inside foreachBatch so the per-conversation ordering sort and
-  *    the broadcast joins run as plain batch ops per micro-batch.
-  *  - sinks: K1/K2/K3 NDJSON writers from one cached routed frame +
+  *    applied inside foreachBatch so the broadcast joins run as plain
+  *    batch ops per micro-batch.
+  *  - sinks: `Sinks.writeAll`, as in batch: the per-conversation ordering
+  *    sort (W1), K1/K2/K3 NDJSON writers from one cached sink frame, and
   *    per-batch lineage rows `(src_file, offset range, count, batch_id)`
-  *    (A7/E11) and observe() counters (A1).
+  *    (A7/E11).
   */
 object StreamingPipeline {
 
@@ -34,6 +35,18 @@ object StreamingPipeline {
     StructField("tool", StringType), StructField("ts", TimestampNTZType),
     StructField("src_file", StringType), StructField("src_offset", LongType)))
 
+  /** Prepares the session (`Graft.prep`) and returns the file-stream
+    * source over `inputDir`, with real per-file lineage from the source
+    * itself (E11 analog). */
+  private def source(spark: SparkSession, inputDir: String,
+                     maxFilesPerTrigger: Option[Int]): DataFrame = {
+    graft.Graft.prep(spark)
+    val reader = spark.readStream.schema(schema)
+    maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n))
+      .parquet(inputDir)
+      .withColumn("src_file", regexp_extract(input_file_name(), "([^/]+)$", 1))
+  }
+
   /** Start the streaming pipeline: inputDir → sinks under outRoot, with
     * checkpoint. availableNow=true drains what exists then stops (the
     * one-shot `xelogstash` mode, cmd/xelogstash/main_app.go:41); false
@@ -42,14 +55,7 @@ object StreamingPipeline {
             checkpointDir: String, availableNow: Boolean = true,
             maxFilesPerTrigger: Option[Int] = None,
             quarantineDir: Option[String] = None): StreamingQuery = {
-    graft.Graft.prep(spark)
-    var reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader = reader.option("maxFilesPerTrigger", n))
-    val src = reader.parquet(inputDir)
-      // real per-file lineage from the source itself (E11 analog):
-      .withColumn("src_file", regexp_extract(input_file_name(), "([^/]+)$", 1))
-
-    val writer = src.writeStream
+    val writer = source(spark, inputDir, maxFilesPerTrigger).writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // dead-letter quarantine (the rows F7 drops), written per batch
@@ -59,13 +65,7 @@ object StreamingPipeline {
           graft.operators.Filters.deadLetterRaw(batch)
             .write.mode("overwrite").parquet(s"$qd/batch=$batchId")
         }
-        val routed = Pipeline.transform(batch, spark)
-          // stable turn ordering before routing (W1): co-locate each
-          // conversation, order by turn within it
-          .repartition(col("conv_id"))
-          .sortWithinPartitions("conv_id", "turn_idx")
-        Sinks.writeAll(routed, outRoot, batchId)
-        ()
+        Sinks.writeAll(Pipeline.transform(batch, spark), outRoot, batchId)
       }
     val q = if (availableNow) writer.trigger(Trigger.AvailableNow()).start()
             else writer.trigger(Trigger.ProcessingTime("5 seconds")).start()
@@ -106,18 +106,11 @@ object StreamingPipeline {
       Reliability.checkpointIntegrity(checkpointDir).swap.foreach(msg =>
         throw new IllegalStateException(s"refusing to resume: $msg"))
 
-    graft.Graft.prep(spark)
-    var reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader = reader.option("maxFilesPerTrigger", n))
-    val src = reader.parquet(inputDir)
-      .withColumn("src_file", regexp_extract(input_file_name(), "([^/]+)$", 1))
-    val writer = src.writeStream
+    val writer = source(spark, inputDir, maxFilesPerTrigger).writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         reloader.foreach(_.poll())
         val base = Pipeline.transform(batch, spark)
-          .repartition(col("conv_id"))
-          .sortWithinPartitions("conv_id", "turn_idx")
         val routed = reloader.map(_.current).fold(base) { cfg =>
           base.filter(
             graft.operators.Filters.excludeEvents(cfg.excludedEvents) &&
@@ -126,7 +119,6 @@ object StreamingPipeline {
         Reliability.withRetry(maxSinkAttempts, baseMs = sinkRetryBaseMs) { _ =>
           Sinks.writeAll(routed, outRoot, batchId)
         }
-        ()
       }
     if (availableNow) writer.trigger(Trigger.AvailableNow()).start()
     else writer.trigger(Trigger.ProcessingTime("1 second")).start()

@@ -24,7 +24,9 @@ import graft.text.{ArrIntersectSize, Classifier, FastTok, LogTemplate, Packing, 
   * Inputs: fixed-seed scalacheck strings, sf0.001 transcript turns, and
   * adversarial strings (null, empty, whitespace-only, surrogate pairs, NUL,
   * a 64 KB string); the array kernels get fixed-seed arrays plus null,
-  * empty, duplicate, null-element, length-mismatched and zero arrays. */
+  * empty, duplicate, null-element, length-mismatched and zero arrays.
+  * json_doc also gets invalid UTF-8, control bytes, extreme longs and
+  * timestamps, checked against literal documents. */
 class KernelParitySpec extends SparkSpec {
   import KernelParitySpec._
 
@@ -138,6 +140,58 @@ class KernelParitySpec extends SparkSpec {
     persisted("arrays", all.map { case (id, _, r) => Row(id +: r: _*) }, schema)
   }
 
+  private val jsonDocId0 = 200000L
+
+  private def bytes(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
+
+  /** json_doc on input the corpus never produces: (label, string bytes,
+    * long, int, timestamp micros, document). Each row sets one feature; null
+    * fields are dropped. The documents are the bytes the String-based
+    * serializer wrote, kept as literals. */
+  private val jsonDocCases: Seq[(String, Array[Byte], Any, Any, Any, String)] = Seq(
+    ("invalid_utf8_c3_28", bytes(0xC3, 0x28), null, null, null, "{\"s\":\"\uFFFD(\"}"),
+    ("lone_0x80", bytes(0x61, 0x80, 0x62), null, null, null, "{\"s\":\"a\uFFFDb\"}"),
+    ("nul_controls_del", bytes(0x61, 0x00, 0x62, 0x1F, 0x0B, 0x7F, 0x0A, 0x09, 0x0D, 0x08, 0x0C),
+      null, null, null, "{\"s\":\"a\\u0000b\\u001F\\u000B\u007F\\n\\t\\r\\b\\f\"}"),
+    ("four_byte", bytes(0xF0, 0x9F, 0x98, 0x80, 0x20, 0xC3, 0xA9), null, null, null,
+      "{\"s\":\"\uD83D\uDE00 \u00E9\"}"),
+    ("quote_backslash", bytes(0x22, 0x5C, 0x22, 0x5C, 0x5C), null, null, null,
+      "{\"s\":\"\\\"\\\\\\\"\\\\\\\\\"}"),
+    ("long_int_min", null, Long.MinValue, Int.MinValue, null,
+      "{\"l\":-9223372036854775808,\"i\":-2147483648}"),
+    ("long_int_max", null, Long.MaxValue, Int.MaxValue, null,
+      "{\"l\":9223372036854775807,\"i\":2147483647}"),
+    ("ts_0001_01_01", null, null, null, -62135596800000000L,
+      "{\"ntz\":\"0001-01-01T00:00:00.000\",\"utc\":\"0001-01-01T00:00:00.000Z\"}"),
+    ("ts_minus_1us", null, null, null, -1L,
+      "{\"ntz\":\"1969-12-31T23:59:59.999\",\"utc\":\"1969-12-31T23:59:59.999Z\"}"),
+    ("ts_9999_last_us", null, null, null, 253402300799999999L,
+      "{\"ntz\":\"9999-12-31T23:59:59.999\",\"utc\":\"9999-12-31T23:59:59.999Z\"}"),
+    ("ts_year_10000", null, null, null, 253402300800000000L,
+      "{\"ntz\":\"+10000-01-01T00:00:00.000\",\"utc\":\"+10000-01-01T00:00:00.000Z\"}"))
+
+  private lazy val jsonDocInput: DataFrame = {
+    val all = jsonDocCases.zipWithIndex.map { case (c, k) => (jsonDocId0 + k, c) }
+    labels ++= all.map { case (id, c) => id -> c._1 }
+    val schema = StructType(Seq(StructField("id", LongType, nullable = false),
+      StructField("bin", BinaryType), StructField("l", LongType),
+      StructField("i", IntegerType), StructField("us", LongType)))
+    persisted("json_doc_cases", all.map { case (id, (_, b, l, i, us, _)) => Row(id, b, l, i, us) },
+      schema)
+  }
+
+  /** The documents the cases expect, keyed like the kernel's output. */
+  private def jsonDocExpected: DataFrame = spark.createDataFrame(
+    java.util.Arrays.asList(jsonDocCases.zipWithIndex.map { case (c, k) =>
+      Row(jsonDocId0 + k, c._6) }: _*),
+    StructType(Seq(StructField("id", LongType), StructField("doc", StringType))))
+
+  /** The binary cast keeps invalid UTF-8 as it is, so the kernel sees it. */
+  private val caseString = col("bin").cast("string")
+  private val caseDoc = struct(caseString.as("s"), col("l"), col("i"),
+    timestamp_micros(col("us")).cast("timestamp_ntz").as("ntz"),
+    timestamp_micros(col("us")).as("utc"))
+
   private def persisted(name: String, rows: Seq[Row], schema: StructType): DataFrame = {
     // a parquet scan, not a local relation the optimizer would evaluate
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
@@ -198,6 +252,9 @@ class KernelParitySpec extends SparkSpec {
         Grok.nfcLeft(coalesce(col("text"), lit("")), 8))),
     row("json_doc", texts, JsonDoc.jsonDoc(docStruct), StringType, true,
       colTwin(texts, JsonDoc.jsonDoc(docStruct), to_json(docStruct))),
+    new K("json_doc (adversarial bytes and values)", "json_doc", jsonDocInput,
+      JsonDoc.jsonDoc(caseDoc), StringType, true,
+      () => (jsonDocInput.select(col("id"), JsonDoc.jsonDoc(caseDoc)), jsonDocExpected)),
     row("token_sketches", texts, TokenHash.sketches(col("text")), TokenHash.outputSchema, true,
       () => (Dedup.signatures(docs), Dedup.signaturesDeclarative(docs)),
       () => (Dedup.simhashDf(docs), Dedup.simhashDfDeclarative(docs)),
@@ -340,6 +397,12 @@ class KernelParitySpec extends SparkSpec {
         assert(it.divergences == pinned, "interpreted run vs twin")
       }
     }
+  }
+
+  test("json_doc's adversarial strings reach the kernel with their invalid UTF-8") {
+    val invalid = jsonDocInput.filter(caseString.isNotNull && try_validate_utf8(caseString).isNull)
+      .select("id").collect().map(r => labels(r.getLong(0))).toSet
+    assert(invalid == Set("invalid_utf8_c3_28", "lone_0x80"))
   }
 
   test("the routed pipeline calls the fused kernels directly in generated code") {

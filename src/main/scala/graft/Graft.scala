@@ -9,6 +9,13 @@ import org.apache.spark.sql.SparkSession
   * `pkg/xe/xe.go:69-107`) and the DuckDB oracle comparisons both want
   * permissive NULL-on-miscast behavior, so we pin ANSI off, UTC, and AQE on
   * (skew-join handling is part of the north rule).
+  *
+  * It also installs [[graft.sinks.LocalFs]] as the SparkContext's `file:`
+  * file system: without native libhadoop, Hadoop's local file system
+  * starts a `chmod` process for every file, `.crc` file and directory
+  * the sinks and the streaming checkpoint create, and a `readlink`
+  * process for both ends of every checkpoint-log rename. Every entry
+  * point already calls `prep`; a repeated call changes nothing.
   */
 object Graft {
   def prep(spark: SparkSession): SparkSession = {
@@ -23,6 +30,7 @@ object Graft {
     // interpreted bytecode and is ~3x slower than split-expression codegen.
     // Measured on the description template stage: 4.4s -> 1.8s.
     c.set("spark.sql.codegen.hugeMethodLimit", "8000")
+    sinks.LocalFs.install(spark.sparkContext.hadoopConfiguration)
     spark
   }
 }

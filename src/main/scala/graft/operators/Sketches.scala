@@ -91,7 +91,12 @@ object Sketches {
     * concatenated inputs ([[hllMergeRegs]], proven in SketchesSpec), which
     * is what lets per-day/per-partition sketches fold without re-reading
     * history. */
-  def hllRegs(parsed: DataFrame, keyCol: String = "conv_id"): DataFrame = {
+  def hllRegs(parsed: DataFrame, keyCol: String = "conv_id"): DataFrame =
+    hllRanks(parsed, keyCol).groupBy("name", "reg").agg(max("rank").as("m"))
+
+  /** (name, reg, rank) per non-null key: the register a key hashes to and
+    * the rank it offers that register. */
+  private def hllRanks(parsed: DataFrame, keyCol: String): DataFrame = {
     val h = conv(substring(md5(col(keyCol)), 1, 8), 16, 10).cast("long")
     // low 6 bits pick the register; the high 26 bits feed the rank. A
     // null key has no hash: it would form a (reg = null, m = null) row
@@ -102,7 +107,6 @@ object Sketches {
       .withColumn("rank",
         when(col("v") === 0L, 27L)
           .otherwise(lit(27L) - length(bin(col("v")))))
-      .groupBy("name", "reg").agg(max("rank").as("m"))
   }
 
   /** Merge two register tables (element-wise max). */
@@ -112,11 +116,12 @@ object Sketches {
   /** Per-name estimate off a (name, reg, m) register table — the READ side
     * of the sketch, shared by the batch q132, the set-algebra q184, and
     * the streaming [[graft.streaming.HllStream]]. Integer-exact: power-of-
-    * two sums, IntegralDivide, table-lookup linear counting. */
-  def hllEstimate(regs: DataFrame): DataFrame =
+    * two sums, IntegralDivide, table-lookup linear counting. `extra`
+    * aggregates over the same per-name group ride along as columns. */
+  def hllEstimate(regs: DataFrame, extra: Column*): DataFrame =
     regs.groupBy("name").agg(
       count(lit(1)).as("nonzero_regs"),
-      sum(expr("shiftleft(CAST(1 AS BIGINT), CAST(27 - m AS INT))")).as("s_obs"))
+      sum(expr("shiftleft(CAST(1 AS BIGINT), CAST(27 - m AS INT))")).as("s_obs") +: extra: _*)
       .withColumn("sum_pow",
         col("s_obs") + (lit(64L) - col("nonzero_regs")) * lit(134217728L))
       .withColumn("hll_raw",
@@ -129,20 +134,17 @@ object Sketches {
       .drop("s_obs", "hll_raw")
 
   def hllDistinct(parsed: DataFrame, keyCol: String = "conv_id"): DataFrame = {
-    // ONE corpus pass: both the register table and the exact diagnostic
-    // derive from the distinct (name, key) pairs — max(rank) over
-    // duplicates is idempotent, so hllRegs(distinct pairs) ≡
-    // hllRegs(raw), and countDistinct(key) ≡ count over the distinct
-    // pairs. The shared distinct subplan shuffles once (ReuseExchange);
-    // previously regs and exact each re-scanned (and re-parsed) the
-    // corpus. Null keys are not distinct values (countDistinct skips
-    // them), so they leave before the pairs.
+    // ONE corpus pass: the registers and the exact diagnostic both come
+    // off the distinct (name, key) pairs. max(rank) over duplicates is
+    // idempotent, so the registers equal hllRegs(raw); each distinct key
+    // lands in exactly one register, so the exact distinct count is the
+    // sum of the per-register pair counts. Null keys are not distinct
+    // values (countDistinct skips them), so they leave before the pairs.
     val pairs = parsed.select(col("name"), col(keyCol))
       .filter(col(keyCol).isNotNull).distinct()
-    val perName = hllEstimate(hllRegs(pairs, keyCol))
-    val exact = pairs.groupBy("name")
-      .agg(count(lit(1)).as("exact_distinct"))
-    perName.join(exact, Seq("name"))
+    val regs = hllRanks(pairs, keyCol).groupBy("name", "reg")
+      .agg(max("rank").as("m"), count(lit(1)).as("n"))
+    hllEstimate(regs, sum("n").as("exact_distinct"))
       .withColumn("err_x1e3",
         floor(abs(col("hll_est") - col("exact_distinct")) * lit(1000.0)
           / col("exact_distinct")).cast("long"))

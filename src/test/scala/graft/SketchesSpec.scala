@@ -1,11 +1,15 @@
 package graft
 
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import graft.operators.Sketches
 
 /** Specs for the sketch-shaped aggregates: log2-histogram percentiles
   * (q129) and the HLL-style distinct sketch (q132). */
-class SketchesSpec extends SparkSpec {
+class SketchesSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import TestSpark.spark.implicits._
 
   test("logHistPercentiles: bucket cumulative reads give power-of-2 floors") {
@@ -47,6 +51,21 @@ class SketchesSpec extends SparkSpec {
       (1 to 500).map(i => ("e", f"conv_$i%06d")).toDF("name", "conv_id"))
       .collect()(0)
     assert(again.getLong(3) == sumPow && again.getLong(4) == est)
+  }
+
+  test("hllDistinct: one plan branch over the input feeds the registers and the exact count") {
+    val dir = "/tmp/graft_sketches_spec_hll"
+    (1 to 500).flatMap(i => Seq.fill(2)((s"e${i % 3}", f"conv_$i%06d")))
+      .toDF("name", "conv_id").write.mode("overwrite").parquet(dir)
+    val out = Sketches.hllDistinct(spark.read.parquet(dir))
+    def plan = out.queryExecution.executedPlan
+    def scans = collect(plan) { case s: FileSourceScanExec => s }.size
+    assert(scans == 1, plan) // as planned; a second branch would scan again
+    assert(out.collect().map(_.getLong(1)).sum == 500L)
+    // as run: no branch for AQE to fold into a reused exchange, no join
+    assert(scans == 1, plan)
+    assert(collect(plan) { case e: ReusedExchangeExec => e }.isEmpty, plan)
+    assert(collect(plan) { case j: BaseJoinExec => j }.isEmpty, plan)
   }
 
   test("hllDistinct: null keys count neither as a distinct key nor as a register") {

@@ -103,7 +103,7 @@ object StateBench {
       val q = graft.streaming.HllStream.start(stream, s"$root/hll",
         s"$root/hll_ckpt")
       q.awaitTermination()
-      val cur = graft.streaming.HllStream.currentDir(s"$root/hll").get
+      val cur = graft.streaming.FoldState.current(s"$root/hll").get
       val stateRows = spark.read.parquet(cur).count()
       val inCum = spark.read.parquet(s"$root/hll_in/*").count()
       rows += (("hll", tag, i, inCum, stateRows, dirBytes(cur)))
@@ -120,7 +120,7 @@ object StateBench {
       val q = graft.streaming.AnomalyStream.start(stream, s"$root/ano",
         s"$root/ano_ckpt")
       q.awaitTermination()
-      val cur = graft.streaming.AnomalyStream.currentDir(s"$root/ano").get
+      val cur = graft.streaming.FoldState.current(s"$root/ano").get
       val stateRows = spark.read.parquet(cur).count()
       val inCum = spark.read.parquet(s"$root/ano_in/*").count()
       rows += (("anomaly", tag, i, inCum, stateRows, dirBytes(cur)))

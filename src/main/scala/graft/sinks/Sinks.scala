@@ -1,6 +1,7 @@
 package graft.sinks
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import scala.util.Using
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -152,10 +153,4 @@ object Sinks {
         greatest(lit(1L), ceil(col("sum_chars") / lit(targetChars.toDouble)).cast("long")))
       .withColumn("rows_per_file",
         ceil(col("n_rows") / col("n_files").cast("double")).cast("long"))
-
-  private implicit class IterAsScala[A](it: java.util.Iterator[A]) {
-    def asScala: Iterator[A] = new Iterator[A] {
-      def hasNext = it.hasNext; def next() = it.next()
-    }
-  }
 }

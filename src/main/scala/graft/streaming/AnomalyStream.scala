@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.Aggregates
 
 /** Continuous robust anomaly monitoring — the streaming twin of
@@ -17,26 +17,16 @@ import graft.operators.Aggregates
   * touched — each flag judged against the all-history robust baseline,
   * which a batch-local detector cannot see.
   *
-  * Same alternating-directory + pointer-flip discipline as [[CmsStream]]:
-  * addition is NOT idempotent, so a batch retried after the pointer flip
-  * must be skipped or it would double-count.
+  * Replay: addition is NOT idempotent, so a batch retried after its
+  * commit must be skipped — [[FoldState]] does — or it would double-count.
   */
 object AnomalyStream {
 
-  def currentDir(root: String): Option[String] = {
-    val ptr = new java.io.File(s"$root/CURRENT")
-    if (ptr.exists()) Some(java.nio.file.Files.readString(ptr.toPath).trim)
-    else None
-  }
-
   /** The live accumulated (name, hour, n) table; empty before commit 1. */
   def hourlyTable(spark: SparkSession, root: String): DataFrame =
-    currentDir(root) match {
-      case Some(d) => spark.read.parquet(d)
-      case None => spark.range(0).select(
-        col("id").cast("string").as("name"),
-        col("id").cast("timestamp").as("hour"), col("id").as("n"))
-    }
+    FoldState.table(spark, root)(spark.range(0).select(
+      col("id").cast("string").as("name"),
+      col("id").cast("timestamp").as("hour"), col("id").as("n")))
 
   /** Start over an event stream (needs `name` and `ts` columns). Per
     * batch, `root/flags` receives one row per (name, hour) cell present
@@ -47,33 +37,18 @@ object AnomalyStream {
     * layout and the exactly-once discipline don't change. */
   def start(events: DataFrame, root: String, checkpoint: String,
             zX1e3Min: Long = 3500L, seasonal: Boolean = false): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val next = s"$root/hourly_${batchId % 2}"
-        if (!currentDir(root).contains(next)) {
-          val batchHourly = Aggregates.hourlyCounts(batch)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val merged = hourlyTable(spark, root)
-            .unionByName(batchHourly)
-            .groupBy("name", "hour").agg(sum("n").as("n"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val flags =
-            if (seasonal) Aggregates.seasonalAnomalyFromHourly(merged, zX1e3Min)
-            else Aggregates.robustAnomalyFromHourly(merged, zX1e3Min)
-          flags.join(batchHourly.select("name", "hour"), Seq("name", "hour"),
-              "left_semi")
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(s"$root/flags")
-          merged.write.mode("overwrite").parquet(next)
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(s"$root/CURRENT"), next)
-          batchHourly.unpersist()
-          merged.unpersist()
-          ()
-        }
-      }
-      .start()
+    FoldState.start(events, root, checkpoint) { (batch, batchId, cache) =>
+      val batchHourly = cache(Aggregates.hourlyCounts(batch))
+      val merged = cache(hourlyTable(batch.sparkSession, root)
+        .unionByName(batchHourly)
+        .groupBy("name", "hour").agg(sum("n").as("n")))
+      val flags =
+        if (seasonal) Aggregates.seasonalAnomalyFromHourly(merged, zX1e3Min)
+        else Aggregates.robustAnomalyFromHourly(merged, zX1e3Min)
+      flags.join(batchHourly.select("name", "hour"), Seq("name", "hour"),
+          "left_semi")
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(s"$root/flags")
+      merged
+    }
 }

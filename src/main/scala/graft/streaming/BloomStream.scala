@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.Sketches
 
 /** Continuous Bloom prefilter — the streaming twin of
@@ -16,65 +16,37 @@ import graft.operators.Sketches
   * the shard tables), and at any history length, where a key-set state
   * store would grow without bound.
   *
-  * Same alternating-directory + pointer-flip discipline as
-  * [[SnapshotStream]]: readers never see a half-written table, and a
-  * batch retried after the pointer flip is skipped (already applied —
-  * and re-merging would anyway be idempotent: bit_or is).
+  * Replay: [[FoldState]] skips a batch retried after its commit, and even
+  * a double merge would be harmless — bit_or is idempotent.
   */
 object BloomStream {
 
-  def currentDir(root: String): Option[String] = {
-    val ptr = new java.io.File(s"$root/CURRENT")
-    if (ptr.exists()) Some(java.nio.file.Files.readString(ptr.toPath).trim)
-    else None
-  }
-
   /** The live word table; empty (0-row) frame before the first commit. */
   def wordTable(spark: SparkSession, root: String): DataFrame =
-    currentDir(root) match {
-      case Some(d) => spark.read.parquet(d)
-      case None =>
-        spark.range(0).select(col("id").as("word"), col("id").as("bits"))
-    }
+    FoldState.table(spark, root)(
+      spark.range(0).select(col("id").as("word"), col("id").as("bits")))
 
   /** Start the continuous prefilter over a document stream (doc_id, text).
     * Verdicts append to `root/verdicts`; the filter lives under `root`.
     * On a retry that died between the verdict append and the pointer
     * flip, verdicts are at-least-once (dedupe downstream on
-    * (batch_id, doc_id) if the sink needs exactly-once); the FILTER state
-    * itself is exactly-once via the pointer — and even a double merge
-    * would be harmless, bit_or being idempotent. */
+    * (batch_id, doc_id) if the sink needs exactly-once). */
   def start(docs: DataFrame, root: String, checkpoint: String,
             minShingles: Int = 3): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val next = s"$root/bloom_${batchId % 2}"
-        if (!currentDir(root).contains(next)) {
-          val sh = batch.select(col("doc_id"),
-            explode(array_distinct(
-              graft.dedup.Dedup.shingleHashes(col("text")))).as("sh"))
-            .withColumn("key", col("sh").cast("string"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val stored = wordTable(spark, root)
-          val verdicts = Sketches.bloomProbe(sh, "key",
-              Sketches.bloomRow(stored))
-            .groupBy("doc_id").agg(
-              count(lit(1)).as("n_shingles"),
-              sum(when(col("maybe_member"), 1L).otherwise(0L)).as("n_maybe"))
-            .withColumn("needs_verify", col("n_maybe") >= minShingles)
-            .withColumn("batch_id", lit(batchId))
-          verdicts.write.mode("append").parquet(s"$root/verdicts")
-          val merged = Sketches.bloomMerge(stored,
-            Sketches.bloomWordTable(sh, "key"))
-          merged.write.mode("overwrite").parquet(next)
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(s"$root/CURRENT"), next)
-          sh.unpersist()
-          ()
-        }
-      }
-      .start()
+    FoldState.start(docs, root, checkpoint) { (batch, batchId, cache) =>
+      val sh = cache(batch.select(col("doc_id"),
+        explode(array_distinct(
+          graft.dedup.Dedup.shingleHashes(col("text")))).as("sh"))
+        .withColumn("key", col("sh").cast("string")))
+      val stored = wordTable(batch.sparkSession, root)
+      val verdicts = Sketches.bloomProbe(sh, "key",
+          Sketches.bloomRow(stored))
+        .groupBy("doc_id").agg(
+          count(lit(1)).as("n_shingles"),
+          sum(when(col("maybe_member"), 1L).otherwise(0L)).as("n_maybe"))
+        .withColumn("needs_verify", col("n_maybe") >= minShingles)
+        .withColumn("batch_id", lit(batchId))
+      verdicts.write.mode("append").parquet(s"$root/verdicts")
+      Sketches.bloomMerge(stored, Sketches.bloomWordTable(sh, "key"))
+    }
 }

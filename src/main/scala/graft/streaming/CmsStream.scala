@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.Sketches
 
 /** Continuous count-min heavy-hitter counters — the streaming twin of
@@ -15,27 +15,16 @@ import graft.operators.Sketches
   * constant at any history length, where an exact per-template state
   * store would grow with the template space.
   *
-  * Same alternating-directory + pointer-flip discipline as
-  * [[BloomStream]]/[[SnapshotStream]]: readers never see a half-written
-  * table, and a batch retried after the pointer flip is skipped — the
-  * skip matters here, because unlike bit_or, ADDITION is not idempotent
-  * and a blind re-merge would double-count the batch. */
+  * Replay: ADDITION is not idempotent, so a blind re-merge would
+  * double-count the batch; [[FoldState]]'s skip of a batch retried after
+  * its commit is what keeps the counters exact. */
 object CmsStream {
-
-  def currentDir(root: String): Option[String] = {
-    val ptr = new java.io.File(s"$root/CURRENT")
-    if (ptr.exists()) Some(java.nio.file.Files.readString(ptr.toPath).trim)
-    else None
-  }
 
   /** The live counter table; empty frame before the first commit. */
   def counterTable(spark: SparkSession, root: String): DataFrame =
-    currentDir(root) match {
-      case Some(d) => spark.read.parquet(d)
-      case None => spark.range(0).select(
-        col("id").cast("int").as("row_idx"),
-        col("id").as("cell"), col("id").as("cnt"))
-    }
+    FoldState.table(spark, root)(spark.range(0).select(
+      col("id").cast("int").as("row_idx"),
+      col("id").as("cell"), col("id").as("cnt")))
 
   /** Start the continuous counter over a turn stream (needs a `text`
     * column). Per batch, `root/estimates` receives one row per DISTINCT
@@ -44,32 +33,17 @@ object CmsStream {
     * BEFORE this batch. */
   def start(turns: DataFrame, root: String, checkpoint: String,
             width: Int = 256, depth: Int = 4): StreamingQuery =
-    turns.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val next = s"$root/cms_${batchId % 2}"
-        if (!currentDir(root).contains(next)) {
-          val keyed = batch
-            .select(Sketches.templateKey(col("text")).as("tkey"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val stored = counterTable(spark, root)
-          val batchCounts = keyed.groupBy("tkey")
-            .agg(count(lit(1)).as("batch_n"))
-          val estimates = batchCounts
-            .join(Sketches.cmsProbe(batchCounts, stored, width, depth), "tkey")
-            .withColumnRenamed("cms_est", "hist_est")
-            .withColumn("batch_id", lit(batchId))
-          estimates.write.mode("append").parquet(s"$root/estimates")
-          val merged = Sketches.cmsMerge(stored,
-            Sketches.cmsCounterTable(keyed, width, depth))
-          merged.write.mode("overwrite").parquet(next)
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(s"$root/CURRENT"), next)
-          keyed.unpersist()
-          ()
-        }
-      }
-      .start()
+    FoldState.start(turns, root, checkpoint) { (batch, batchId, cache) =>
+      val keyed = cache(batch
+        .select(Sketches.templateKey(col("text")).as("tkey")))
+      val stored = counterTable(batch.sparkSession, root)
+      val batchCounts = keyed.groupBy("tkey")
+        .agg(count(lit(1)).as("batch_n"))
+      batchCounts
+        .join(Sketches.cmsProbe(batchCounts, stored, width, depth), "tkey")
+        .withColumnRenamed("cms_est", "hist_est")
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(s"$root/estimates")
+      Sketches.cmsMerge(stored, Sketches.cmsCounterTable(keyed, width, depth))
+    }
 }

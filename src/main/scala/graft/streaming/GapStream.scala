@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.Aggregates
 
 /** Continuous inter-arrival monitoring — the streaming twin of
@@ -20,32 +20,23 @@ import graft.operators.Aggregates
   * watermark carries. State is aggregate-sized: one moment row per
   * (name, hour) at any history length.
   *
-  * Same alternating-directory + pointer-flip discipline as [[CmsStream]]:
-  * the moment sums are NOT idempotent, so a batch retried after the
-  * pointer flip must be skipped or it would double-fold.
+  * Replay: the moment sums are NOT idempotent, so a batch retried after
+  * its commit must be skipped — [[FoldState]] does — or it would
+  * double-fold.
   */
 object GapStream {
-
-  def currentDir(root: String): Option[String] = {
-    val ptr = new java.io.File(s"$root/CURRENT")
-    if (ptr.exists()) Some(java.nio.file.Files.readString(ptr.toPath).trim)
-    else None
-  }
 
   /** The live accumulated per-(name, hour) moment table; empty before
     * the first commit. */
   def momentsTable(spark: SparkSession, root: String): DataFrame =
-    currentDir(root) match {
-      case Some(d) => spark.read.parquet(d)
-      case None => spark.range(0).select(
-        col("id").cast("string").as("name"),
-        col("id").cast("timestamp").as("hour"),
-        col("id").as("n_gaps"),
-        col("id").cast("decimal(28,0)").as("sum_g"),
-        col("id").cast("decimal(28,0)").as("sum_g2"),
-        col("id").as("max_gap_us"),
-        col("id").as("min_us"), col("id").as("max_us"))
-    }
+    FoldState.table(spark, root)(spark.range(0).select(
+      col("id").cast("string").as("name"),
+      col("id").cast("timestamp").as("hour"),
+      col("id").as("n_gaps"),
+      col("id").cast("decimal(28,0)").as("sum_g"),
+      col("id").cast("decimal(28,0)").as("sum_g2"),
+      col("id").as("max_gap_us"),
+      col("id").as("min_us"), col("id").as("max_us")))
 
   /** Stitch a batch's cell moments onto the accumulated table: disjoint
     * cells pass through, shared cells add their moment sums PLUS the one
@@ -84,30 +75,15 @@ object GapStream {
     * `turn_idx`). Per batch, `root/fano` receives the all-history
     * per-name inter-arrival profile for names the batch touched. */
   def start(events: DataFrame, root: String, checkpoint: String): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val next = s"$root/moments_${batchId % 2}"
-        if (!currentDir(root).contains(next)) {
-          val bm = Aggregates.gapMoments(batch)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val merged = mergeMoments(momentsTable(spark, root), bm)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val prof = Aggregates.interArrivalFromMoments(merged)
-          val touched = bm.select(col("name").as("t_name")).distinct()
-          prof
-            .join(touched, prof("name") <=> touched("t_name"), "left_semi")
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(s"$root/fano")
-          merged.write.mode("overwrite").parquet(next)
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(s"$root/CURRENT"), next)
-          bm.unpersist()
-          merged.unpersist()
-          ()
-        }
-      }
-      .start()
+    FoldState.start(events, root, checkpoint) { (batch, batchId, cache) =>
+      val bm = cache(Aggregates.gapMoments(batch))
+      val merged = cache(mergeMoments(momentsTable(batch.sparkSession, root), bm))
+      val prof = Aggregates.interArrivalFromMoments(merged)
+      val touched = bm.select(col("name").as("t_name")).distinct()
+      prof
+        .join(touched, prof("name") <=> touched("t_name"), "left_semi")
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(s"$root/fano")
+      merged
+    }
 }

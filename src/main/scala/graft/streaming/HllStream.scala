@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.Sketches
 
 /** Continuous distinct-count maintenance — the streaming twin of
@@ -15,61 +15,37 @@ import graft.operators.Sketches
   * per event name at ANY history length, where an exact distinct would
   * keep every key ever seen.
   *
-  * Same alternating-directory + pointer-flip discipline as [[CmsStream]],
-  * with one difference worth stating: register max-merge is IDEMPOTENT
-  * (max(max(s,b),b) = max(s,b)), so a batch replayed after a crash-before-
-  * flip re-merges harmlessly — the pointer flip here exists for reader
-  * atomicity, not for exactly-once arithmetic, where CMS's sum-fold needed
-  * the skip to avoid double-counting. */
+  * Replay: register max-merge is IDEMPOTENT (max(max(s,b),b) = max(s,b)),
+  * so a replayed batch re-merges harmlessly — [[FoldState]]'s pointer flip
+  * serves reader atomicity here, not exactly-once arithmetic as in
+  * [[CmsStream]]'s sum-fold. */
 object HllStream {
-
-  def currentDir(root: String): Option[String] = {
-    val ptr = new java.io.File(s"$root/CURRENT")
-    if (ptr.exists()) Some(java.nio.file.Files.readString(ptr.toPath).trim)
-    else None
-  }
 
   /** The live (name, reg, m) register table; empty before the first commit. */
   def regTable(spark: SparkSession, root: String): DataFrame =
-    currentDir(root) match {
-      case Some(d) => spark.read.parquet(d)
-      case None => spark.range(0).select(
-        col("id").cast("string").as("name"),
-        col("id").as("reg"), col("id").as("m"))
-    }
+    FoldState.table(spark, root)(spark.range(0).select(
+      col("id").cast("string").as("name"),
+      col("id").as("reg"), col("id").as("m")))
 
   /** Start over a keyed stream (needs `name` and `keyCol` columns). Per
     * batch, `root/estimates` receives one row per event name present in
     * the batch. */
   def start(keyed: DataFrame, root: String, checkpoint: String,
             keyCol: String = "conv_id"): StreamingQuery =
-    keyed.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val next = s"$root/hll_${batchId % 2}"
-        if (!currentDir(root).contains(next)) {
-          val stored = regTable(spark, root)
-          val merged = Sketches.hllMergeRegs(stored,
-            Sketches.hllRegs(batch, keyCol))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val before = Sketches.hllEstimate(stored)
-            .select(col("name"), col("hll_est").as("est_before"))
-          val after = Sketches.hllEstimate(merged)
-            .select(col("name"), col("hll_est").as("est_after"))
-          val names = batch.select("name").distinct()
-          names.join(before, Seq("name"), "left")
-            .join(after, Seq("name"), "left")
-            .na.fill(0L, Seq("est_before"))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(s"$root/estimates")
-          merged.write.mode("overwrite").parquet(next)
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(s"$root/CURRENT"), next)
-          merged.unpersist()
-          ()
-        }
-      }
-      .start()
+    FoldState.start(keyed, root, checkpoint) { (batch, batchId, cache) =>
+      val stored = regTable(batch.sparkSession, root)
+      val merged = cache(Sketches.hllMergeRegs(stored,
+        Sketches.hllRegs(batch, keyCol)))
+      val before = Sketches.hllEstimate(stored)
+        .select(col("name"), col("hll_est").as("est_before"))
+      val after = Sketches.hllEstimate(merged)
+        .select(col("name"), col("hll_est").as("est_after"))
+      batch.select("name").distinct()
+        .join(before, Seq("name"), "left")
+        .join(after, Seq("name"), "left")
+        .na.fill(0L, Seq("est_before"))
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(s"$root/estimates")
+      merged
+    }
 }

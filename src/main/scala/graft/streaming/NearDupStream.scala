@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.dedup.Dedup
 
 /** Continuous batch-vs-index near-dup screening — the streaming twin of
@@ -21,18 +21,10 @@ import graft.dedup.Dedup
   * estimator), the standard sketch-index trade. NearDupStreamSpec pins
   * the two regimes against each other on planted edits.
   *
-  * Same alternating-directory + pointer-flip discipline as
-  * [[SnapshotStream]]/[[CmsStream]]: the index fold (a row append) is NOT
-  * idempotent, so a batch retried after the flip must be — and is —
-  * skipped; readers always see a complete table.
+  * Replay: the index fold (a row append) is NOT idempotent, so a batch
+  * retried after its commit must be — and, by [[FoldState]], is — skipped.
   */
 object NearDupStream {
-
-  def currentDir(root: String): Option[String] = {
-    val ptr = new java.io.File(s"$root/CURRENT")
-    if (ptr.exists()) Some(java.nio.file.Files.readString(ptr.toPath).trim)
-    else None
-  }
 
   /** (doc_id, norm_h, mh0..mh7) for a static frame — the index row shape. */
   def indexRows(docs: DataFrame): DataFrame =
@@ -41,15 +33,9 @@ object NearDupStream {
 
   /** The live index; empty frame with the right schema before batch 0. */
   def indexTable(spark: SparkSession, root: String): DataFrame =
-    currentDir(root) match {
-      case Some(d) => spark.read.parquet(d)
-      case None =>
-        val sig = (0 until Dedup.NumHashes)
-          .map(i => col("id").as(s"mh$i"))
-        spark.range(0).select(
-          (col("id").as("doc_id") +: col("id").cast("string").as("norm_h") +:
-            sig): _*)
-    }
+    FoldState.table(spark, root)(spark.range(0).select(
+      (col("id").as("doc_id") +: col("id").cast("string").as("norm_h") +:
+        (0 until Dedup.NumHashes).map(i => col("id").as(s"mh$i"))): _*))
 
   /** Verdicts for one batch against a stored index frame (shared by the
     * stream and by tests): exact_dup on content-key match, near_dup when
@@ -99,26 +85,11 @@ object NearDupStream {
     * `root` behind the CURRENT pointer. */
   def start(docs: DataFrame, root: String, checkpoint: String,
             sigAgreeMin: Int = 500): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val next = s"$root/index_${batchId % 2}"
-        if (!currentDir(root).contains(next)) {
-          val stored = indexTable(spark, root)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          stored.count() // materialize BEFORE the overwrite below
-          screen(batch, stored, sigAgreeMin)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(s"$root/verdicts")
-          stored.unionByName(indexRows(batch))
-            .write.mode("overwrite").parquet(next)
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(s"$root/CURRENT"), next)
-          stored.unpersist()
-          ()
-        }
-      }
-      .start()
+    FoldState.start(docs, root, checkpoint) { (batch, batchId, cache) =>
+      val stored = cache(indexTable(batch.sparkSession, root))
+      screen(batch, stored, sigAgreeMin)
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(s"$root/verdicts")
+      stored.unionByName(indexRows(batch))
+    }
 }

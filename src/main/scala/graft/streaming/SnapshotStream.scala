@@ -1,23 +1,17 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.Incremental
 
 /** Streaming snapshot maintenance — the continuous twin of
   * [[graft.operators.Incremental.upsert]]: a CDC change stream folds into
-  * a latest-wins snapshot table via `foreachBatch`, the Structured
+  * a latest-wins snapshot table through [[FoldState]], the Structured
   * Streaming idiom for MERGE-style sinks Spark has no native writer for.
   *
-  * Per micro-batch: read the current snapshot, upsert the batch into it,
-  * write to the OTHER of two alternating directories, then flip a pointer
-  * file. The alternation makes each rewrite atomic-by-rename-analog
-  * (readers follow the pointer and never see a half-written snapshot) and
-  * the checkpoint makes the whole loop exactly-once: a replayed batch
-  * re-upserts the same rows and, because `upsert` is idempotent on equal
-  * versions (change side wins ties), the snapshot converges to the same
-  * state.
+  * Replay: a replayed batch re-upserts the same rows and, because `upsert`
+  * is idempotent on equal versions (change side wins ties), the snapshot
+  * converges to the same state.
   *
   * Scale shape: the per-batch cost is one union + hash-agg over
   * |snapshot| + |batch| — the same single-exchange plan as the batch
@@ -28,41 +22,16 @@ import graft.operators.Incremental
   */
 object SnapshotStream {
 
-  /** Resolve the live snapshot directory, if any batch has committed. */
-  def currentDir(root: String): Option[String] = {
-    val ptr = new java.io.File(s"$root/CURRENT")
-    if (ptr.exists()) Some(java.nio.file.Files.readString(ptr.toPath).trim)
-    else None
-  }
-
   /** Read the live snapshot (empty-schema-safe: callers supply the
     * frame's schema via the stream itself before the first commit). */
   def snapshot(spark: SparkSession, root: String): Option[DataFrame] =
-    currentDir(root).map(d => spark.read.parquet(d))
+    FoldState.current(root).map(d => spark.read.parquet(d))
 
   /** Start the maintenance loop over a change stream. */
   def start(changes: DataFrame, root: String, checkpoint: String,
             keyCols: Seq[String], versionCols: Seq[String]): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val next = s"$root/snap_${batchId % 2}"
-        // retry-after-flip: the pointer only moves AFTER a successful
-        // write, so CURRENT == next means this batch already applied in
-        // full — re-merging would read and overwrite the same directory
-        if (!currentDir(root).contains(next)) {
-          val merged = snapshot(spark, root) match {
-            case Some(base) => Incremental.upsert(base, batch, keyCols, versionCols)
-            case None => Incremental.upsert(
-              batch.limit(0), batch, keyCols, versionCols)
-          }
-          merged.write.mode("overwrite").parquet(next)
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(s"$root/CURRENT"), next)
-          ()
-        }
-      }
-      .start()
+    FoldState.start(changes, root, checkpoint) { (batch, _, _) =>
+      val base = snapshot(batch.sparkSession, root).getOrElse(batch.limit(0))
+      Incremental.upsert(base, batch, keyCols, versionCols)
+    }
 }

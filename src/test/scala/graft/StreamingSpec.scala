@@ -669,4 +669,148 @@ class StreamingSpec extends SparkSpec {
     assert(accFull == oneShotMoments,
       s"accumulated moments must equal the one-shot reduction")
   }
+
+  /** Drop the checkpoint's last `commits/<n>` entry, so a restart re-runs
+    * batch n as if the driver died after the fold's commit but before
+    * Spark's; returns n. */
+  private def dropLastCommit(ckpt: String): Long = {
+    val n = new java.io.File(s"$ckpt/commits").list()
+      .filter(_.forall(_.isDigit)).map(_.toLong).max
+    Files.delete(Paths.get(s"$ckpt/commits/$n"))
+    Files.deleteIfExists(Paths.get(s"$ckpt/commits/.$n.crc"))
+    n
+  }
+
+  test("stream fold: a failing output write leaves no frame of the fold " +
+    "in the session's cache") {
+    val root = "/tmp/graft_fold_cache_spec"
+    rm(root)
+    import TestSpark.spark.implicits._
+    Seq("error 123 occurred", "all good here").toDF("text")
+      .coalesce(1).write.parquet(s"$root/in/b1")
+    // a plain file where the estimates directory must go
+    Files.createDirectories(Paths.get(s"$root/state"))
+    Files.writeString(Paths.get(s"$root/state/estimates"), "blocker")
+    spark.catalog.clearCache() // what earlier suites left is not this fold's
+    val stream = spark.readStream.schema("text STRING")
+      .option("maxFilesPerTrigger", 1).parquet(s"$root/in/*")
+    val q = graft.streaming.CmsStream.start(stream, s"$root/state", s"$root/ckpt")
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      q.awaitTermination()
+    }
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the failed batch's persisted frames must be released")
+    assert(graft.streaming.FoldState.current(s"$root/state").isEmpty,
+      "a failed batch must not move the pointer")
+  }
+
+  test("stream fold: the CURRENT pointer only ever names a state directory " +
+    "while a drain flips it, and no temp file remains") {
+    val root = "/tmp/graft_fold_pointer_spec"
+    rm(root)
+    import TestSpark.spark.implicits._
+    (0 until 8).foreach { i =>
+      Seq(s"error $i occurred", s"batch $i text").toDF("text")
+        .coalesce(1).write.parquet(s"$root/in/b$i")
+    }
+    val state = s"$root/state"
+    val allowed = Set(s"$state/state_0", s"$state/state_1")
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val poller = new Thread(() =>
+      while (!done.get()) {
+        val v = scala.util.Try(graft.streaming.FoldState.current(state))
+        v.foreach(_.foreach(seen.add))
+        if (v.isFailure) seen.add(s"<${v.failed.get}>")
+        Thread.onSpinWait()
+      })
+    poller.start()
+    try {
+      val stream = spark.readStream.schema("text STRING")
+        .option("maxFilesPerTrigger", 1).parquet(s"$root/in/*")
+      graft.streaming.CmsStream.start(stream, state, s"$root/ckpt")
+        .awaitTermination()
+    } finally {
+      done.set(true)
+      poller.join()
+    }
+    import scala.jdk.CollectionConverters._
+    assert(seen.asScala.toSet == allowed,
+      s"the poller read a value that names no state directory: $seen")
+    assert(graft.streaming.FoldState.current(state).contains(s"$state/state_1"))
+    val left = new java.io.File(state).list().toSet
+    assert(left == Set("CURRENT", "state_0", "state_1", "estimates"),
+      s"unexpected files beside the pointer: $left")
+  }
+
+  test("stream fold replay: CmsStream skips a batch re-run after its state " +
+    "commit; counters and estimates stay exactly-once") {
+    val root = "/tmp/graft_cms_replay_spec"
+    rm(root)
+    import TestSpark.spark.implicits._
+    def drain(): Unit = {
+      val stream = spark.readStream.schema("text STRING")
+        .option("maxFilesPerTrigger", 1).parquet(s"$root/in/*")
+      graft.streaming.CmsStream.start(stream, s"$root/state", s"$root/ckpt")
+        .awaitTermination()
+    }
+    Seq("error 123 occurred", "error 999 occurred", "all good here")
+      .toDF("text").coalesce(1).write.parquet(s"$root/in/b1")
+    Seq("error 7 occurred", "novel text entirely").toDF("text")
+      .coalesce(1).write.parquet(s"$root/in/b2")
+    drain()
+    def estimates(n: Long) = spark.read.parquet(s"$root/state/estimates")
+      .filter(col("batch_id") === n).collect().map(_.toSeq).toSeq
+    val n = dropLastCommit(s"$root/ckpt")
+    assert(n == 1L)
+    val once = estimates(n)
+    assert(once.size == 2, s"batch $n has two distinct templates: $once")
+    drain()
+    assert(Files.exists(Paths.get(s"$root/ckpt/commits/$n")),
+      s"the restart must have re-run batch $n")
+    val streamed = graft.streaming.CmsStream.counterTable(spark, s"$root/state")
+      .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
+    val oneShot = operators.Sketches.cmsCounterTable(
+      spark.read.parquet(s"$root/in/*")
+        .select(operators.Sketches.templateKey(col("text")).as("tkey")))
+      .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
+    assert(streamed == oneShot, "the replayed batch must not be counted twice")
+    assert(estimates(n).sortBy(_.toString) == once.sortBy(_.toString),
+      s"batch $n's estimates must be written exactly once")
+  }
+
+  test("stream fold replay: NearDupStream skips a batch re-run after its " +
+    "state commit; the appended index and verdicts stay exactly-once") {
+    val root = "/tmp/graft_neardup_replay_spec"
+    rm(root)
+    import TestSpark.spark.implicits._
+    val textA = (1 to 40).map(i => s"alpha$i beta$i").mkString(" ")
+    def drain(): Unit = {
+      val stream = spark.readStream.schema("doc_id LONG, text STRING")
+        .option("maxFilesPerTrigger", 1).parquet(s"$root/in/*")
+      graft.streaming.NearDupStream.start(stream, s"$root/state", s"$root/ckpt")
+        .awaitTermination()
+    }
+    Seq((1L, textA), (2L, "gamma delta epsilon zeta eta theta iota kappa"))
+      .toDF("doc_id", "text").coalesce(1).write.parquet(s"$root/in/b1")
+    Seq((3L, textA), (4L, "lambda mu nu xi omicron pi rho sigma tau"))
+      .toDF("doc_id", "text").coalesce(1).write.parquet(s"$root/in/b2")
+    drain()
+    val n = dropLastCommit(s"$root/ckpt")
+    assert(n == 1L)
+    drain()
+    assert(Files.exists(Paths.get(s"$root/ckpt/commits/$n")),
+      s"the restart must have re-run batch $n")
+    val streamed = graft.streaming.NearDupStream
+      .indexTable(spark, s"$root/state").collect().map(_.toSeq).toSeq
+    val oneShot = graft.streaming.NearDupStream
+      .indexRows(spark.read.parquet(s"$root/in/*")).collect().map(_.toSeq).toSeq
+    assert(streamed.sortBy(_.toString) == oneShot.sortBy(_.toString),
+      "the replayed batch's index rows must be appended exactly once")
+    val verdicts = spark.read.parquet(s"$root/state/verdicts")
+      .filter(col("batch_id") === n).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toSeq
+    assert(verdicts.sorted == Seq(3L -> "exact_dup", 4L -> "new"),
+      s"batch $n's verdicts must be written exactly once: $verdicts")
+  }
 }

@@ -32,7 +32,7 @@ object Pipeline {
     * null fields dropped — matching the reference's absent-key semantics
     * (SURVEY.md §7.4.2). */
   def route(filtered: DataFrame, spark: SparkSession): DataFrame = {
-    val f = Routing.withSinkIndex(filtered, spark)
+    val f = Routing.withSinkIndex(filtered)
     f.withColumn("doc_json",
       graft.functions.JsonDoc.jsonDoc(struct(
         col("name"), col("conv_id"), col("turn_idx"), col("role"), col("tool"),

@@ -78,12 +78,12 @@ object SparkEntry {
           "version", "version_name", "tool_category", "role", "role_severity")),
 
     "q12_asof_entity" -> ((s, d) =>
-      Enrich.withEntityName(Pipeline.parsed(s, d), s)
+      Enrich.withEntityName(Pipeline.parsed(s, d))
         .select("conv_id", "turn_idx", "db_id", "entity_name")),
 
     "q13_error_flags" -> ((s, d) =>
       Enrich.withLoginFailedDesc(Enrich.withErrorFlags(
-        Enrich.withDerived(Pipeline.parsed(s, d)), s))
+        Enrich.withDerived(Pipeline.parsed(s, d))))
         .select("conv_id", "turn_idx", "error_number",
           "login_failed", "xe_is_event_logged", "login_failed_desc")),
 

@@ -6,9 +6,11 @@ import graft.sources.Lookups
 
 /** Enrichment stage: the ~15 derived `xe_*` fields computed inside the
   * reference's `Parse` (`pkg/xe/xe.go:194-251`), re-expressed as pure
-  * `Column` expressions plus broadcast lookup joins. All of it stays inside
-  * WholeStageCodegen; joins are broadcast (dims ≪ 1 MB) so no shuffle is
-  * introduced by enrichment at any scale.
+  * `Column` expressions. The pipeline's constant dimensions (entity names,
+  * error-id sets) are compiled into the expressions from `Lookups`'
+  * driver-side rows, as the reference reads its once-loaded `SQLInfo` maps
+  * per event: no join, exchange or broadcast job, so all of it stays inside
+  * WholeStageCodegen at any scale.
   */
 object Enrich {
 
@@ -190,39 +192,26 @@ object Enrich {
   ))
 
   // ---- E8/J2: as-of entity-name backfill (pkg/xe/xe.go:407-431) ------------
-  /** Scale-safe as-of join: the tiny dim is turned into validity intervals
-    * [valid_from, valid_to) via a window **on the dim side only**, then
-    * broadcast-joined — no window or extra shuffle ever touches the fact
-    * table, so the plan survives a 100× scale-up unchanged. */
-  def withEntityName(df: DataFrame, spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("entity_id").orderBy("valid_from")
-    // coalesce(1): SinglePartition satisfies the window's clustered
-    // distribution, so the tiny dim avoids even its own hash exchange —
-    // the whole pipeline plan is then exchange-free end to end
-    val dim = Lookups.entityNames(spark).coalesce(1)
-      .withColumn("valid_to", lead(col("valid_from"), 1).over(w))
-      .select(col("entity_id"), col("name").as("entity_name"),
-        col("valid_from"), col("valid_to"))
-    df.join(broadcast(dim),
-      df("db_id") === dim("entity_id") && df("ts") >= dim("valid_from") &&
-        (dim("valid_to").isNull || df("ts") < dim("valid_to")),
-      "left")
-      .drop("entity_id", "valid_from", "valid_to")
+  /** As-of lookup as one CASE over the dim's [valid_from, next valid_from)
+    * intervals, bounded by the `to_timestamp` literals the dim holds, so
+    * `ts` compares as it would against the dim; nothing is joined. */
+  def withEntityName(df: DataFrame): DataFrame = {
+    val arms = Lookups.entityIntervals.map { case (id, name, from, to) =>
+      val since = col("db_id") === id && col("ts") >= to_timestamp(lit(from))
+      (to.fold(since)(t => since && col("ts") < to_timestamp(lit(t))), name)
+    }
+    df.withColumn("entity_name", arms.tail.foldLeft(when(arms.head._1, arms.head._2)) {
+      case (c, (cond, name)) => c.when(cond, name)
+    })
   }
 
-  // ---- E9/E10: broadcast semi-join flags (pkg/xe/xe.go:206-211, :254-262) --
-  def withErrorFlags(df: DataFrame, spark: SparkSession): DataFrame = {
-    val login = Lookups.loginErrors(spark).withColumnRenamed("error_number", "len_")
-      .withColumn("login_failed_flag", lit(true))
-    val logged = Lookups.loggedErrors(spark).withColumnRenamed("error_number", "lgn_")
-      .withColumn("logged_flag", lit(true))
-    df.join(broadcast(login), df("error_number") === login("len_"), "left")
-      .join(broadcast(logged), df("error_number") === logged("lgn_"), "left")
-      .withColumn("login_failed", coalesce(col("login_failed_flag"), lit(false)))
-      .withColumn("xe_is_event_logged", coalesce(col("logged_flag"), lit(false)))
-      .drop("len_", "lgn_", "login_failed_flag", "logged_flag")
-  }
+  // ---- E9/E10: semi-join flags as set membership (pkg/xe/xe.go:206-211,
+  // :254-262); the optimizer turns the 72 logged ids into an InSet --------
+  def withErrorFlags(df: DataFrame): DataFrame = df
+    .withColumn("login_failed",
+      coalesce(col("error_number").isin(Lookups.loginErrorIds: _*), lit(false)))
+    .withColumn("xe_is_event_logged",
+      coalesce(col("error_number").isin(Lookups.loggedErrorIds: _*), lit(false)))
 
   // ---- 18456 state description (pkg/xe/xe.go:288-337) ----------------------
   def stateDescription: Column = {
@@ -279,6 +268,5 @@ object Enrich {
 
   /** Full enrichment pass over a parsed frame. */
   def enrich(parsed: DataFrame, spark: SparkSession): DataFrame =
-    withLoginFailedDesc(
-      withEntityName(withErrorFlags(withUnits(withDerived(parsed)), spark), spark))
+    withLoginFailedDesc(withEntityName(withErrorFlags(withUnits(withDerived(parsed)))))
 }

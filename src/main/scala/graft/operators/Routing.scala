@@ -1,19 +1,26 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sources.Lookups
 
-/** Routing stage: the elastic index-routing join with default (J5,
+/** Routing stage: the elastic index routing with default (J5,
   * `pkg/sink/sink_elastic.go:113-145`) and the per-sink fan-out frame.
-  * Routing is a broadcast left join + coalesce — zero shuffle.
+  * Routing is one CASE over the constant index map — zero shuffle.
   */
 object Routing {
 
-  /** Adds `sink_index` = map lookup by event name else default. */
-  def withSinkIndex(df: DataFrame, spark: SparkSession): DataFrame =
-    df.join(broadcast(Lookups.sinkIndexMap(spark)), Seq("name"), "left")
-      .withColumn("sink_index", coalesce(col("sink_index"), lit(Lookups.defaultIndex)))
+  /** Adds `sink_index` = map lookup by event name else default. `name`
+    * leads the output, the column order of the `USING (name)` join this
+    * lookup stands for. */
+  def withSinkIndex(df: DataFrame): DataFrame = {
+    val arms = Lookups.sinkIndexRows.map { case (name, idx) => (col("name") === name, idx) }
+    val index = arms.tail.foldLeft(when(arms.head._1, arms.head._2)) {
+      case (c, (cond, idx)) => c.when(cond, idx)
+    }
+    df.select(col("name") +: df.columns.filter(_ != "name").map(col) :+
+      index.otherwise(Lookups.defaultIndex).as("sink_index"): _*)
+  }
 
   /** The three sink shapes of the reference (K1 file / K2 logstash /
     * K3 elastic): one routed frame, each sink a projection over it. The

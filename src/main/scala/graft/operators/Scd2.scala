@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Slowly-changing-dimension (type 2) CONSTRUCTION from a change-event
   * stream: the pipeline stage that BUILDS the versioned dimension the
-  * as-of join (E8, `Enrich.withEntityName`) consumes — in the reference
+  * as-of lookup (E8, `Enrich.withEntityName`) consumes — in the reference
   * the server/domain lookup tables are maintained out-of-band
   * (`pkg/app/server.go` config lookups); at corpus scale the history has
   * to be derived from the events themselves.

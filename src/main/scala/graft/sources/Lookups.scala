@@ -3,12 +3,12 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Broadcastable dimension snapshots — the analog of the reference's
-  * `SQLInfo` lookup caches fetched once per connection
-  * (`pkg/xe/sqlinfo.go:13-34`, loaded at `:79-211`). Each dim exists twice:
-  * as a Spark DataFrame builder (engine side) and as a DuckDB-compatible SQL
-  * snippet (oracle side) — tiny, deterministic, kept in sync by the
-  * LookupsSpec parity test.
+/** Dimension snapshots — the analog of the reference's `SQLInfo` lookup
+  * caches fetched once per connection (`pkg/xe/sqlinfo.go:13-34`, loaded
+  * at `:79-211`). Each dim exists twice: as driver-side rows (engine side —
+  * a DataFrame builder, or the constants the pipeline's lookups compile
+  * into expressions) and as a DuckDB-compatible SQL snippet (oracle side) —
+  * tiny, deterministic, kept in sync by LookupsSpec.
   */
 object Lookups {
 
@@ -74,6 +74,12 @@ object Lookups {
       .withColumn("valid_from", to_timestamp(col("valid_from_s")))
       .drop("valid_from_s")
   }
+  /** `(entity_id, name, valid_from, next valid_from)`, the last version
+    * open-ended; the `yyyy-MM-dd HH:mm:ss` strings sort as time. */
+  val entityIntervals: Seq[(Long, String, String, Option[String])] =
+    entityNameRows.map { case (id, name, from) =>
+      (id, name, from, entityNameRows.collect { case (`id`, _, f) if f > from => f }.minOption)
+    }
   val entityNamesSql: String =
     "SELECT entity_id, name, CAST(valid_from_s AS TIMESTAMP) AS valid_from FROM (VALUES " +
       entityNameRows.map { case (i, n, v) => s"($i,'$n','$v')" }.mkString(", ") +
@@ -82,19 +88,13 @@ object Lookups {
   // ---- login_error_ids: `%login failed%` semi-join set
   // (pkg/xe/sqlinfo.go:244-270) ----------------------------------------------
   val loginErrorIds: Seq[Long] = Seq(18456L, 18401L, 18452L, 18470L, 17892L)
-  def loginErrors(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    loginErrorIds.toDF("error_number")
-  }
   val loginErrorsSql: String =
     "SELECT * FROM (VALUES " + loginErrorIds.map(i => s"($i)").mkString(", ") +
       ") AS l(error_number)"
 
   // ---- logged_error_ids: is_event_logged set (~1300 ids in the reference,
   // pkg/xe/sqlinfo.go:272-294); here: ids in [18000,18500) with id%7==3 ------
-  def loggedErrors(spark: SparkSession): DataFrame =
-    spark.range(18000, 18500).filter(col("id") % 7 === 3)
-      .select(col("id").as("error_number"))
+  val loggedErrorIds: Seq[Long] = (18000L until 18500L).filter(_ % 7 == 3)
   val loggedErrorsSql: String =
     "SELECT 18000 + i AS error_number FROM range(500) t(i) WHERE (18000 + i) % 7 = 3"
 

@@ -16,8 +16,9 @@ import graft.sinks.Sinks
   *    `pkg/status/status.go:273-363`) — resumable, at-least-once into the
   *    sinks exactly like the reference (sink write precedes state commit).
   *  - transforms: the SAME column pipeline as batch (Pipeline.transform),
-  *    applied inside foreachBatch so the broadcast joins run as plain
-  *    batch ops per micro-batch.
+  *    applied inside foreachBatch as a plain batch plan per micro-batch;
+  *    its constant lookups are expressions, so a micro-batch runs no
+  *    broadcast job.
   *  - sinks: `Sinks.writeAll`, as in batch: the per-conversation ordering
   *    sort (W1), K1/K2/K3 NDJSON writers from one cached sink frame, and
   *    per-batch lineage rows `(src_file, offset range, count, batch_id)`

@@ -9,7 +9,7 @@ class JsonDocSpec extends SparkSpec {
 
   test("json_doc output parses to the same documents as to_json") {
     val f = operators.Routing.withSinkIndex(
-      Pipeline.process(Transcripts.load(spark, tiny), spark), spark)
+      Pipeline.process(Transcripts.load(spark, tiny), spark))
     val docStruct = struct(
       col("name"), col("conv_id"), col("turn_idx"), col("role"), col("tool"),
       col("ts").as("@timestamp"),

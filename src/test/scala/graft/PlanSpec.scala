@@ -34,11 +34,17 @@ class PlanSpec extends SparkSpec {
   test("engine pipeline over a materialized transcript table is shuffle-free") {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val routed = Pipeline.transform(stagedInput, spark)
-    val plan = routed.queryExecution.executedPlan.toString
+    val exec = routed.queryExecution.executedPlan
+    val plan = exec.toString
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     assert(!plan.contains("Exchange hashpartitioning"),
       s"pipeline must be exchange-free end to end:\n${plan.take(2000)}")
-    assert(plan.contains("BroadcastHashJoin"), "lookup joins must broadcast")
+    // the constant lookups are expressions: no shuffle, no broadcast, no join
+    val offending = exec.collectWithSubqueries {
+      case p: org.apache.spark.sql.execution.exchange.Exchange => p.nodeName
+      case p: org.apache.spark.sql.execution.joins.BaseJoinExec => p.nodeName
+    }
+    assert(offending.isEmpty, s"routed plan has $offending:\n${plan.take(2000)}")
   }
 
   test("filters push down to the parquet scan") {

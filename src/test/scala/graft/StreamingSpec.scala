@@ -158,6 +158,42 @@ class StreamingSpec extends SparkSpec {
     assert(expected.except(sunk).count() == 0)
   }
 
+  test("stream micro-batch jobs: no broadcast job and at most 7 jobs per " +
+    "micro-batch over a one-file-per-trigger drain") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val root = "/tmp/graft_stream_jobs"
+    rm(root)
+    val t = Transcripts.load(spark, tiny)
+    t.filter(col("turn_idx") % 2 === 0).coalesce(1).write.parquet(s"$root/in/f1")
+    t.filter(col("turn_idx") % 2 =!= 0).coalesce(1).write.parquet(s"$root/in/f2")
+    // (query id, batch id, broadcast?) of every job a micro-batch runs
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Boolean)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = Option(e.properties).foreach { p =>
+        Option(p.getProperty("streaming.sql.batchId")).foreach { b =>
+          // a broadcast job carries the job tag "broadcast exchange (runId ...)"
+          jobs.add((p.getProperty("sql.streaming.queryId"), b.toLong,
+            Option(p.getProperty("spark.job.tags")).exists(_.contains("broadcast exchange"))))
+        }
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val q = try {
+      val q = StreamingPipeline.start(spark, s"$root/in/*", s"$root/sinks", s"$root/ckpt",
+        maxFilesPerTrigger = Some(1))
+      q.awaitTermination()
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      q
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val mine = jobs.asScala.toSeq.filter(_._1 == q.id.toString)
+    val perBatch = mine.groupBy(_._2).map { case (b, js) => b -> js.size }
+    info(s"jobs per micro-batch: $perBatch")
+    assert(perBatch.keySet == Set(0L, 1L), s"two micro-batches expected: $perBatch")
+    assert(mine.count(_._3) == 0, s"micro-batches ran ${mine.count(_._3)} broadcast jobs")
+    assert(perBatch.values.forall(_ <= 7), s"jobs per micro-batch: $perBatch")
+  }
+
   test("listener captures per-batch rows/sec metrics (A6, process_source.go:80-138)") {
     val root = "/tmp/graft_metrics_spec"
     rm(root)

@@ -1,14 +1,17 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 import org.apache.spark.sql.functions._
+import graft.sinks.Sinks
 import graft.sources.Transcripts
 import graft.streaming.{Reliability, StreamingPipeline}
 
 /** The reliability surface (ST5/ST6/ST8) driven on a REAL multi-executor
-  * cluster via spark-submit — the same behaviors ReliabilitySpec proves
-  * in-process, exercised through `startReliable` against separate
-  * executor JVMs (tools/cluster_bench.sh phase 3):
+  * cluster via spark-submit — the same behaviors StreamingReliabilitySpec
+  * proves in-process, exercised through `StreamingPipeline.start` against
+  * separate executor JVMs (tools/cluster_bench.sh phase 3):
   *
   *  - ST5: a ZEROED checkpoint (latest offsets file truncated to 0
   *    bytes) must REFUSE to resume with a typed error instead of
@@ -17,9 +20,10 @@ import graft.streaming.{Reliability, StreamingPipeline}
   *    a running ProcessingTime stream) is picked up by the debounced
   *    reloader, and events appended AFTER the rewrite are filtered by
   *    the NEW blacklist while earlier batches keep the old one;
-  *  - ST8: a sink whose first write attempt fails (the sink dir is
-  *    blocked by a regular file) succeeds after backoff once the
-  *    blocker clears, without failing the batch.
+  *  - ST8: the elastic sink's first write attempt fails (its dir is
+  *    blocked by a regular file, removed once the failure is seen); the
+  *    batch succeeds after backoff, and the file, logstash and elastic
+  *    sinks each hold the batch's rows exactly once.
   *
   * Prints one JSON line per surface; the script greps for
   * `"metric":"cluster_reliability"`. */
@@ -27,9 +31,18 @@ object ClusterReliability {
 
   import java.nio.file.{Files, Paths, Path}
 
-  private def rm(p: Path): Unit = if (Files.exists(p)) {
-    Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())
-      .forEach(x => Files.delete(x))
+  /** Removes `blocker` once a SQL execution fails: a sink write blocked
+    * by it fails its first attempt, and the ST8 retry (at least one
+    * backoff later) finds the path clear. Counts the failures seen
+    * (Spark reports a successful execution with an empty message). */
+  private[graft] final class UnblockOnFailure(blocker: Path) extends SparkListener {
+    @volatile var failures = 0
+    override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
+      case e: SparkListenerSQLExecutionEnd if e.errorMessage.exists(_.nonEmpty) =>
+        failures += 1
+        Files.deleteIfExists(blocker)
+      case _ =>
+    }
   }
 
   def main(args: Array[String]): Unit = {
@@ -44,14 +57,14 @@ object ClusterReliability {
       .fold(builder)(builder.master).getOrCreate()
     Graft.prep(spark)
     spark.sparkContext.setLogLevel("WARN")
-    rm(Paths.get(root))
+    Graft.rmTree(root)
 
     val t = Transcripts.load(spark, sfDir)
     val executors = spark.sparkContext.getExecutorMemoryStatus.size - 1
 
     // ---- ST5: zeroed checkpoint refuses to resume -------------------------
     t.repartition(2).write.parquet(s"$root/st5/in")
-    val q5 = StreamingPipeline.startReliable(spark, s"$root/st5/in",
+    val q5 = StreamingPipeline.start(spark, s"$root/st5/in",
       s"$root/st5/sinks", s"$root/st5/ckpt")
     q5.awaitTermination()
     // zero the newest offsets file — the reference's "state file zeroed
@@ -67,7 +80,7 @@ object ClusterReliability {
     Files.write(newest, Array.emptyByteArray)
     val refused =
       try {
-        StreamingPipeline.startReliable(spark, s"$root/st5/in",
+        StreamingPipeline.start(spark, s"$root/st5/in",
           s"$root/st5/sinks", s"$root/st5/ckpt")
         false
       } catch {
@@ -83,7 +96,7 @@ object ClusterReliability {
     // phase 1 files drain under the empty blacklist
     t.filter(col("src_offset") % 2 === 0)
       .repartition(2).write.parquet(s"$root/st6/in")
-    val q6 = StreamingPipeline.startReliable(spark, s"$root/st6/in",
+    val q6 = StreamingPipeline.start(spark, s"$root/st6/in",
       s"$root/st6/sinks", s"$root/st6/ckpt", reloader = Some(reloader),
       availableNow = false, maxFilesPerTrigger = Some(1))
     // guard on the path actually read (the NDJSON file sink); a read
@@ -134,27 +147,28 @@ object ClusterReliability {
     val loginsFinal = loginCount()
     val reloadHeld = loginsPhase1 > 0L && loginsFinal == loginsPhase1
 
-    // ---- ST8: sink retry/backoff clears a transient blocker ---------------
+    // ---- ST8: only the failed sink is retried ------------------------------
     t.repartition(2).write.parquet(s"$root/st8/in")
     Files.createDirectories(Paths.get(s"$root/st8/sinks"))
-    // block the file sink with a REGULAR FILE; attempt 1 must fail
-    Files.write(Paths.get(s"$root/st8/sinks/file"), "blocker".getBytes("UTF-8"))
-    val unblocker = new Thread(() => {
-      Thread.sleep(1500)
-      Files.deleteIfExists(Paths.get(s"$root/st8/sinks/file"))
-    })
-    unblocker.setDaemon(true)
-    unblocker.start()
-    val q8 = StreamingPipeline.startReliable(spark, s"$root/st8/in",
-      s"$root/st8/sinks", s"$root/st8/ckpt",
-      maxSinkAttempts = 8, sinkRetryBaseMs = 500L)
+    // block the elastic sink, written after file and logstash, with a
+    // REGULAR FILE: its attempt 1 must fail, and a retry of the whole
+    // batch would write file and logstash twice
+    val blocker = Paths.get(s"$root/st8/sinks/elastic")
+    Files.write(blocker, "blocker".getBytes("UTF-8"))
+    val unblocker = new UnblockOnFailure(blocker)
+    spark.sparkContext.addSparkListener(unblocker)
+    val q8 = StreamingPipeline.start(spark, s"$root/st8/in",
+      s"$root/st8/sinks", s"$root/st8/ckpt")
     q8.awaitTermination()
-    unblocker.join()
-    val st8Rows = spark.read.text(s"$root/st8/sinks/file").count()
+    spark.sparkContext.removeSparkListener(unblocker)
+    val st8Rows = Sinks.countsFromDisk(spark, s"$root/st8/sinks")
+      .groupBy("sink").agg(sum("n")).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap.withDefaultValue(0L)
     val batchRows = Pipeline.transform(t, spark).count()
-    val retriedOk = st8Rows == batchRows
+    val retriedOk = unblocker.failures > 0 &&
+      Seq("file", "logstash", "elastic").forall(st8Rows(_) == batchRows)
 
-    println(s"""{"metric":"cluster_reliability","executors":$executors,"st5_zeroed_checkpoint_refused":$refused,"st6_midquery_reload_filtered":$reloadHeld,"st6_logins_before":$loginsPhase1,"st6_logins_after":$loginsFinal,"st8_retry_recovered":$retriedOk,"st8_rows":$st8Rows,"st8_expected":$batchRows}""")
+    println(s"""{"metric":"cluster_reliability","executors":$executors,"st5_zeroed_checkpoint_refused":$refused,"st6_midquery_reload_filtered":$reloadHeld,"st6_logins_before":$loginsPhase1,"st6_logins_after":$loginsFinal,"st8_retry_recovered":$retriedOk,"st8_failed_writes":${unblocker.failures},"st8_file_rows":${st8Rows("file")},"st8_logstash_rows":${st8Rows("logstash")},"st8_elastic_rows":${st8Rows("elastic")},"st8_expected":$batchRows}""")
     spark.stop()
   }
 }

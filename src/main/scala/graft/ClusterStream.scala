@@ -32,12 +32,6 @@ object ClusterStream {
     Graft.prep(spark)
     spark.sparkContext.setLogLevel("WARN")
 
-    import java.nio.file.{Files, Paths}
-    def rm(p: java.nio.file.Path): Unit = if (Files.exists(p)) {
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(x => Files.delete(x))
-    }
-
     val t = Transcripts.load(spark, sfDir)
 
     // ---- stream-stream join phases (q279's streaming arm, ST-join on a
@@ -54,7 +48,7 @@ object ClusterStream {
         mm.getAs[java.time.LocalDateTime](1))
       val cut = lo.plus(java.time.Duration.between(lo, hi).dividedBy(2))
       if (phase == "join_init") {
-        rm(Paths.get(jroot))
+        Graft.rmTree(jroot)
         t.filter(col("ts") < lit(cut))
           .repartition(2).write.parquet(s"$jroot/in/f1")
       } else {
@@ -81,7 +75,7 @@ object ClusterStream {
     }
 
     if (phase == "init") {
-      rm(Paths.get(root))
+      Graft.rmTree(root)
       t.filter(col("src_offset") % 2 === 0)
         .repartition(2).write.mode("overwrite").parquet(s"$root/in")
     } else {
@@ -89,8 +83,8 @@ object ClusterStream {
         .repartition(2).write.mode("append").parquet(s"$root/in")
     }
 
-    streaming.StreamingPipeline.runOnce(spark, s"$root/in", s"$root/sinks",
-      s"$root/ckpt")
+    streaming.StreamingPipeline.start(spark, s"$root/in", s"$root/sinks",
+      s"$root/ckpt").awaitTermination()
 
     val counts = sinks.Sinks.countsFromDisk(spark, s"$root/sinks")
     val sinkRows = counts.agg(sum("n")).collect()(0).getLong(0)

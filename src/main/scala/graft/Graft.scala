@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+import java.util.Comparator
+import scala.util.Using
 import org.apache.spark.sql.SparkSession
 
 /** Session preparation shared by every query entry point.
@@ -32,5 +35,14 @@ object Graft {
     c.set("spark.sql.codegen.hugeMethodLimit", "8000")
     sinks.LocalFs.install(spark.sparkContext.hadoopConfiguration)
     spark
+  }
+
+  /** Deletes `dir` and everything under it, deepest entries first; a
+    * missing `dir` is a no-op. */
+  private[graft] def rmTree(dir: String): Unit = {
+    val p = Paths.get(dir)
+    if (Files.exists(p))
+      Using.resource(Files.walk(p))(_.sorted(Comparator.reverseOrder[Path]())
+        .forEach(x => Files.delete(x)))
   }
 }

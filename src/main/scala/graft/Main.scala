@@ -11,9 +11,10 @@ import org.apache.spark.sql.SparkSession
   *   graft.Main stream <inputDir> <outRoot> <checkpointDir> [--once]
   *
   * In batch mode the routed frame is written to all sinks once with
-  * lineage (`Sinks.writeAll` orders it by conversation and turn); in
-  * stream mode the checkpointed streaming pipeline runs until stopped (or
-  * drains once with --once).
+  * lineage (`Sinks.writeAll` orders it by conversation and turn), each
+  * sink in a single attempt; in stream mode `StreamingPipeline.start`
+  * runs until stopped (or drains once with --once): it refuses a damaged
+  * checkpoint and retries a failed sink write.
   */
 object Main {
   def main(args: Array[String]): Unit = {
@@ -41,9 +42,8 @@ object Main {
       case "stream" =>
         require(args.length >= 4, "stream mode needs <checkpointDir>")
         val once = args.contains("--once")
-        val q = streaming.StreamingPipeline.start(
-          spark, args(1), args(2), args(3), availableNow = once)
-        q.awaitTermination()
+        streaming.StreamingPipeline.start(
+          spark, args(1), args(2), args(3), availableNow = once).awaitTermination()
       case other => sys.error(s"unknown mode $other")
     }
     if (preexisting.isEmpty) spark.stop() // leave a caller-owned session alive

@@ -947,14 +947,9 @@ object SparkEntry {
     // never emit), so the streamed output equals the BATCH sessionizer —
     // oracled with q62's SQL.
     "q100_streaming_sessions" -> ((s, d) => {
-      import java.nio.file.{Files, Paths}
       import org.apache.spark.sql.streaming.Trigger
       val root = s"/tmp/graft_sess_${Math.floorMod(d.hashCode, 1 << 30)}"
-      def rm(p: java.nio.file.Path): Unit = if (Files.exists(p)) {
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(x => Files.delete(x))
-      }
-      rm(Paths.get(root))
+      Graft.rmTree(root)
       val t = Transcripts.load(s, d).select(col("conv_id"),
         col("turn_idx").cast("int").as("turn_idx"),
         col("ts").cast("timestamp").as("ts"))
@@ -1725,16 +1720,12 @@ object SparkEntry {
     }),
 
     "q50_streaming_counts" -> ((s, d) => {
-      import java.nio.file.{Files, Paths}
       val root = s"/tmp/graft_stream_${Math.floorMod(d.hashCode, 1 << 30)}"
-      def rm(p: java.nio.file.Path): Unit = if (Files.exists(p)) {
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(x => Files.delete(x))
-      }
-      rm(Paths.get(root))
+      Graft.rmTree(root)
       Transcripts.load(s, d).repartition(4)
         .write.parquet(s"$root/input")
-      streaming.StreamingPipeline.runOnce(s, s"$root/input", s"$root/sinks", s"$root/ckpt")
+      streaming.StreamingPipeline.start(s, s"$root/input", s"$root/sinks", s"$root/ckpt")
+        .awaitTermination()
       sinks.Sinks.countsFromDisk(s, s"$root/sinks")
         .withColumnRenamed("n", "n").select("sink", "route_key", "n")
     }),
@@ -1744,13 +1735,8 @@ object SparkEntry {
     // of the on-disk artifact (n_disk/bytes_disk) AND against DuckDB's
     // independent doc build (the oracle computes all four columns)
     "q297_observed_counters" -> ((s, d) => {
-      import java.nio.file.{Files, Paths}
       val root = s"/tmp/graft_observe_${Math.floorMod(d.hashCode, 1 << 30)}"
-      def rm(p: java.nio.file.Path): Unit = if (Files.exists(p)) {
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(x => Files.delete(x))
-      }
-      rm(Paths.get(root))
+      Graft.rmTree(root)
       val (n, bytes) = sinks.Sinks.writeFileObserved(Pipeline.routed(s, d), root)
       s.read.text(root).agg(
           count(lit(1)).cast("long").as("n_disk"),
@@ -1778,13 +1764,8 @@ object SparkEntry {
     // of a maxFilesPerTrigger=1 drain over a 4-file staging — 4 batches,
     // one file per batch, and the routed total matches DuckDB's
     "q299_batch_lineage" -> ((s, d) => {
-      import java.nio.file.{Files, Paths}
       val root = s"/tmp/graft_blimit_${Math.floorMod(d.hashCode, 1 << 30)}"
-      def rm(p: java.nio.file.Path): Unit = if (Files.exists(p)) {
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(x => Files.delete(x))
-      }
-      rm(Paths.get(root))
+      Graft.rmTree(root)
       Transcripts.load(s, d).repartition(4)
         .write.parquet(s"$root/input")
       val q = streaming.StreamingPipeline.start(s, s"$root/input",
@@ -1811,13 +1792,8 @@ object SparkEntry {
     // maxFilesPerTrigger=1). recentProgress is read from the QUERY object
     // (synchronous), not a listener, so there is no event-bus race.
     "q301_progress_totals" -> ((s, d) => {
-      import java.nio.file.{Files, Paths}
       val root = s"/tmp/graft_progress_${Math.floorMod(d.hashCode, 1 << 30)}"
-      def rm(p: java.nio.file.Path): Unit = if (Files.exists(p)) {
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(x => Files.delete(x))
-      }
-      rm(Paths.get(root))
+      Graft.rmTree(root)
       Transcripts.load(s, d).repartition(4)
         .write.parquet(s"$root/input")
       val q = streaming.StreamingPipeline.start(s, s"$root/input",
@@ -1847,13 +1823,8 @@ object SparkEntry {
     // row — including which windows emitted — is re-derived by DuckDB
     // from the same timestamp-floor predicate over the transcripts CTE.
     "q302_late_floor" -> ((s, d) => {
-      import java.nio.file.{Files, Paths}
       val root = s"/tmp/graft_latefloor_${Math.floorMod(d.hashCode, 1 << 30)}"
-      def rm(p: java.nio.file.Path): Unit = if (Files.exists(p)) {
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(x => Files.delete(x))
-      }
-      rm(Paths.get(root))
+      Graft.rmTree(root)
       val t = Transcripts.load(s, d).select("conv_id", "turn_idx", "ts")
       val late = t.filter(col("turn_idx") % 97 === 0)
         .withColumn("ts", col("ts") - expr("INTERVAL 9000 DAYS"))
@@ -1908,17 +1879,12 @@ object SparkEntry {
     // (the dropped-file count) all land in the accounting row DuckDB
     // re-derives from the transcripts CTE alone.
     "q304_applog_sink" -> ((s, d) => {
-      import java.nio.file.{Files, Paths}
       // floorMod, not math.abs (abs(Int.MinValue) is negative — ADVICE
       // r5); the dataset-keyed dir assumes ONE driver per dataset path at
       // a time (two concurrent runs over the same path would share it and
-      // the rm() below would race) — the Verify/driver contract.
+      // the rmTree below would race), as Verify runs it.
       val root = s"/tmp/graft_applog_${Math.floorMod(d.hashCode, 1 << 30)}"
-      def rm(p: java.nio.file.Path): Unit = if (Files.exists(p)) {
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(x => Files.delete(x))
-      }
-      rm(Paths.get(root))
+      Graft.rmTree(root)
       val t = Transcripts.load(s, d)
       val hourly = t.groupBy(date_trunc("hour", col("ts")).as("h"))
         .agg(count(lit(1)).as("n"),

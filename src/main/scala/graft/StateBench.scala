@@ -33,15 +33,6 @@ import graft.sources.Transcripts
   */
 object StateBench {
 
-  private def rm(path: String): Unit = {
-    val p = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(p)) {
-      java.nio.file.Files.walk(p)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(x => java.nio.file.Files.delete(x))
-    }
-  }
-
   private def dirBytes(path: String): Long = {
     val p = java.nio.file.Paths.get(path)
     if (!java.nio.file.Files.exists(p)) 0L
@@ -86,7 +77,7 @@ object StateBench {
 
   private def visit(spark: SparkSession, tag: String, dir: String): Unit = {
     val root = s"/tmp/graft_statebench_$tag"
-    rm(root)
+    Graft.rmTree(root)
     val t = Transcripts.load(spark, dir)
     val parsed = Pipeline.parse(t)
       .select(col("name"), col("conv_id"), col("ts"))

@@ -63,8 +63,8 @@ object Centroids {
     */
   def kmeansIteration(vecs: DataFrame, centroidMod: Int = 200): DataFrame = {
     // a0 feeds both the centroid update and the re-assignment; persisted so
-    // the n×k assignment pass runs once (released by the ContextCleaner
-    // when the result frame drops — same lifecycle as TfIdf's tf)
+    // the n×k assignment pass runs once (the cache lives until
+    // `unpersist` or `clearCache`, as TfIdf's tf does)
     val a0 = Similarity.ivfAssign(vecs, centroidMod)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cents1 = perKey(a0.withColumn("grp", col("cent_id")), "grp")

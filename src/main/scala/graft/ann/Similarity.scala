@@ -511,9 +511,9 @@ object Similarity {
                             dim: Int = 64): DataFrame = {
     // group frame + member rows (round-5 row-shaped convention: no
     // collect_list member arrays anywhere); persisted because it feeds
-    // the probe, both expansion joins, and the within-group leg — the
-    // ContextCleaner releases it when the result frame drops (the
-    // TfIdf.topTerms `tf` lifecycle)
+    // the probe, both expansion joins, and the within-group leg; the
+    // cache lives until `unpersist` or `clearCache` (as TfIdf.topTerms'
+    // `tf` does)
     val gmK = vecs.groupBy(col("embedding"))
       .agg(min(col("vec_id")).as("gid"), count(lit(1)).as("m"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -575,8 +575,8 @@ object Similarity {
     // form was one multi-GB row that would hit the 2 GiB limit long
     // before the quadratic it replaced. gmK feeds five plan legs (both
     // sides of nearDupPairs' probe, selfSim, and the member join), so it
-    // persists; the cache is released by the ContextCleaner once the
-    // result frame is dropped — the TfIdf.topTerms `tf` lifecycle.
+    // persists; the cache lives until `unpersist` or `clearCache` (as
+    // TfIdf.topTerms' `tf` does).
     val gmK = vecs.groupBy(col("embedding"))
       .agg(min(col("vec_id")).as("gid"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

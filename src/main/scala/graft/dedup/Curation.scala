@@ -46,7 +46,7 @@ object Curation {
     // join; cached so the exact-dedup shuffle (groupBy norm + join back)
     // runs once, not once per consumer. At 100 TB these two persists
     // replace three full corpus re-scans and a repeated exact-key
-    // exchange. Blocks release via the ContextCleaner.
+    // exchange. The cache lives until `unpersist` or `clearCache`.
     val withExact = normed.join(exactKeeper, "norm")
       .select(col("doc_id"), col("text"), col("exact_keeper"))
       .persist(StorageLevel.MEMORY_AND_DISK)

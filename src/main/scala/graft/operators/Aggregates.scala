@@ -621,8 +621,8 @@ object Aggregates {
                           bucketWidth: Long = 16L): DataFrame = {
     // the narrow (name, v, bucket) projection feeds BOTH the histogram
     // pass and the candidate-bucket join — persisted so the parse runs
-    // once, not once per pass (ContextCleaner-released when the result
-    // frame drops, the lmScore/topTerms lifecycle)
+    // once, not once per pass (the cache lives until `unpersist` or
+    // `clearCache`, as TfIdf.topTerms' tf does)
     val vals = parsed.select(col("name"), col("duration").cast("long").as("v"))
       .filter(col("v").isNotNull)
       .withColumn("bucket", expr(s"v DIV $bucketWidth"))

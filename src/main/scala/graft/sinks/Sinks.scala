@@ -84,18 +84,29 @@ object Sinks {
     * this is the one place of the W1 turn ordering. Lineage rows per
     * source file are appended to `root/lineage` (ST2/A7: sink write
     * precedes lineage commit = at-least-once, like the reference's
-    * sink-then-state order, process_session.go:145-162). */
-  def writeAll(routed: DataFrame, root: String, batchId: Long = 0L): Unit = {
+    * sink-then-state order, process_session.go:145-162).
+    *
+    * ST8: each of the four writes (file, logstash, elastic, lineage) is
+    * retried on its own, up to `maxAttempts` tries with
+    * [[graft.streaming.Reliability.withRetry]]'s backoff from a 1 s base
+    * — the reference retries only the failed write too
+    * (`pkg/ls2/write.go:52-98`). A retry re-reads the cached frame and
+    * rewrites only the sink that failed, so the sinks already written are
+    * not written twice. */
+  def writeAll(routed: DataFrame, root: String, batchId: Long = 0L,
+               maxAttempts: Int = 1): Unit = {
     val cached = sinkFrame(routed).persist()
+    def retried(write: => Unit): Unit =
+      graft.streaming.Reliability.withRetry(maxAttempts, baseMs = 1000L)(_ => write)
     try {
-      writeFile(cached, s"$root/file")
-      writeLogstash(cached, s"$root/logstash")
-      writeElastic(cached, s"$root/elastic")
-      cached.groupBy("src_file")
+      retried(writeFile(cached, s"$root/file"))
+      retried(writeLogstash(cached, s"$root/logstash"))
+      retried(writeElastic(cached, s"$root/elastic"))
+      retried(cached.groupBy("src_file")
         .agg(min("src_offset").as("min_offset"), max("src_offset").as("max_offset"),
           count(lit(1)).as("n_events"))
         .withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(s"$root/lineage")
+        .write.mode("append").parquet(s"$root/lineage"))
     } finally cached.unpersist()
   }
 

@@ -1,6 +1,8 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import scala.util.Using
+import scala.util.control.NonFatal
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Operational reliability semantics of the reference's service loop,
@@ -42,8 +44,10 @@ object Reliability {
   /** Run `op` (given the 1-based attempt number), retrying on exception up
     * to `maxAttempts` with [[backoffMs]] sleeps between attempts. The
     * reference retries forever; a bounded default keeps batch jobs from
-    * wedging — pass `Int.MaxValue` for service-loop semantics. `sleep` is
-    * injectable so tests run without wall-clock waits. */
+    * wedging — pass `Int.MaxValue` for service-loop semantics. An
+    * `InterruptedException`, or any failure while the thread's interrupt
+    * flag is set (a stopped query), is rethrown at once, never retried.
+    * `sleep` is injectable so tests run without wall-clock waits. */
   def withRetry[T](maxAttempts: Int = 5, baseMs: Long = 10000L,
                    capMs: Long = 120000L, seed: Long = 42L,
                    sleep: Long => Unit = Thread.sleep)(op: Int => T): T = {
@@ -51,7 +55,7 @@ object Reliability {
     while (true) {
       try return op(attempt)
       catch {
-        case e: Exception =>
+        case NonFatal(e) if !Thread.currentThread.isInterrupted =>
           if (attempt >= maxAttempts) throw e
           sleep(backoffMs(attempt, baseMs, capMs, seed = seed))
           attempt += 1
@@ -78,9 +82,12 @@ object Reliability {
   // ---- ST5: checkpoint state integrity ----------------------------------------
 
   /** Validate a Structured Streaming checkpoint the way the reference
-    * validates its state files: offset/commit metadata must exist, be
+    * validates its state files: offset/commit metadata must be
     * non-empty, not be zeroed (the all-0x00 corruption case of
-    * status.go:139-172), and batch ids must be contiguous. Returns
+    * status.go:139-172), and batch ids must be contiguous. Empty logs
+    * are healthy (no batch planned yet) unless a file-source log
+    * (`sources/<n>/`) holds batches: Spark would re-read every logged
+    * input after wiped offsets. Returns
     * Right(lastCommittedBatchId) or Left(diagnostic) — the diagnostic
     * names the damaged file so an operator can restore from a copy. */
   def checkpointIntegrity(checkpointDir: String): Either[String, Long] = {
@@ -112,10 +119,20 @@ object Reliability {
     val com = batchFiles(commits)
     val ids = off.map(_._1)
     val committed = com.map(_._1).toSet
+    // batch files of the file-source logs: `<id>` or `<id>.compact`
+    def sourceLogged: Boolean = {
+      val sources = Paths.get(checkpointDir, "sources")
+      Files.isDirectory(sources) && Using.resource(Files.walk(sources))(
+        _.anyMatch(p => Files.isRegularFile(p) &&
+          p.getFileName.toString.headOption.exists(_.isDigit)))
+    }
+    // Spark creates the log dirs up front, so a query that has planned no
+    // batch yet has empty ones: healthy, Right(-1)
     val problem: Option[String] =
-      if (off.isEmpty) Some(s"no offset files in $offsets")
-      else (off ++ com).flatMap { case (_, p) => corrupt(p) }.headOption
-        .orElse(ids.zip(ids.tail).collectFirst {
+      Option.when(off.isEmpty && sourceLogged)(
+        s"no offset files in $offsets, but the source log holds batches")
+        .orElse((off ++ com).flatMap { case (_, p) => corrupt(p) }.headOption)
+        .orElse(ids.zip(ids.drop(1)).collectFirst {
           case (a, b) if b != a + 1 => s"offset gap: batch $a -> $b"
         })
         .orElse(if (committed.subsetOf(ids.toSet)) None

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -22,7 +23,11 @@ import graft.sinks.Sinks
   *  - sinks: `Sinks.writeAll`, as in batch: the per-conversation ordering
   *    sort (W1), K1/K2/K3 NDJSON writers from one cached sink frame, and
   *    per-batch lineage rows `(src_file, offset range, count, batch_id)`
-  *    (A7/E11).
+  *    (A7/E11); a failed sink write is retried alone (ST8).
+  *
+  * [[start]] is the one entry point: `graft.Main stream`, the q50/q299/q301
+  * drains and the reliability checks (ST5 checkpoint integrity, ST6 config
+  * reload, ST8 sink retry) all run the same micro-batch body.
   */
 object StreamingPipeline {
 
@@ -48,15 +53,40 @@ object StreamingPipeline {
       .withColumn("src_file", regexp_extract(input_file_name(), "([^/]+)$", 1))
   }
 
+  /** Trigger interval of a polling (`availableNow = false`) run. */
+  private val PollInterval = "5 seconds"
+
   /** Start the streaming pipeline: inputDir → sinks under outRoot, with
     * checkpoint. availableNow=true drains what exists then stops (the
     * one-shot `xelogstash` mode, cmd/xelogstash/main_app.go:41); false
-    * polls like the sqlxewriter service loop. */
+    * polls every [[PollInterval]] like the sqlxewriter service loop.
+    * The reliability surfaces (SURVEY §2.11) are part of every run:
+    *
+    *  - ST5: an EXISTING checkpoint is integrity-checked before resuming;
+    *    damaged state (zeroed/truncated metadata, batch-id gaps) refuses to
+    *    start instead of silently replaying from a corrupt cursor.
+    *  - ST6: an optional [[Reliability.ConfigReloader]] is polled at the
+    *    start of each micro-batch; a debounced reload swaps the
+    *    config-driven event blacklist + filter rule chain applied to the
+    *    batch — the restartless analog of the reference's fsnotify reload.
+    *  - ST8: each sink write of [[Sinks.writeAll]] is tried up to 5 times
+    *    with exponential backoff from 1 s; a retry rewrites only the sink
+    *    that failed, and a stop is not retried.
+    *
+    * ST7 (graceful stop) is [[Reliability.stopGracefully]] on the returned
+    * query; ST9 (single instance) is enforced by Spark per checkpoint and
+    * can be made explicit with [[Reliability.withInstanceLock]] around the
+    * whole run. */
   def start(spark: SparkSession, inputDir: String, outRoot: String,
             checkpointDir: String, availableNow: Boolean = true,
             maxFilesPerTrigger: Option[Int] = None,
-            quarantineDir: Option[String] = None): StreamingQuery = {
-    val writer = source(spark, inputDir, maxFilesPerTrigger).writeStream
+            quarantineDir: Option[String] = None,
+            reloader: Option[Reliability.ConfigReloader] = None): StreamingQuery = {
+    if (Files.exists(Paths.get(checkpointDir, "offsets")))
+      Reliability.checkpointIntegrity(checkpointDir).swap.foreach(msg =>
+        throw new IllegalStateException(s"refusing to resume: $msg"))
+
+    source(spark, inputDir, maxFilesPerTrigger).writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // dead-letter quarantine (the rows F7 drops), written per batch
@@ -66,50 +96,6 @@ object StreamingPipeline {
           graft.operators.Filters.deadLetterRaw(batch)
             .write.mode("overwrite").parquet(s"$qd/batch=$batchId")
         }
-        Sinks.writeAll(Pipeline.transform(batch, spark), outRoot, batchId)
-      }
-    val q = if (availableNow) writer.trigger(Trigger.AvailableNow()).start()
-            else writer.trigger(Trigger.ProcessingTime("5 seconds")).start()
-    q
-  }
-
-  /** Drain everything currently in inputDir and stop (synchronous). */
-  def runOnce(spark: SparkSession, inputDir: String, outRoot: String,
-              checkpointDir: String): Unit = {
-    val q = start(spark, inputDir, outRoot, checkpointDir, availableNow = true)
-    q.awaitTermination()
-  }
-
-  /** [[start]] with the reliability surfaces wired in (SURVEY §2.11):
-    *
-    *  - ST5: an EXISTING checkpoint is integrity-checked before resuming;
-    *    damaged state (zeroed/truncated metadata, batch-id gaps) refuses to
-    *    start instead of silently replaying from a corrupt cursor.
-    *  - ST6: an optional [[Reliability.ConfigReloader]] is polled between
-    *    micro-batches; a debounced reload swaps the config-driven event
-    *    blacklist + filter rule chain applied to each batch — the
-    *    restartless analog of the reference's fsnotify reload.
-    *  - ST8: sink writes retry with exponential backoff + jitter instead of
-    *    failing the batch on the first transient sink error.
-    *
-    * ST7 (graceful stop) is [[Reliability.stopGracefully]] on the returned
-    * query; ST9 (single instance) is enforced by Spark per checkpoint and
-    * can be made explicit with [[Reliability.withInstanceLock]] around the
-    * whole run. */
-  def startReliable(spark: SparkSession, inputDir: String, outRoot: String,
-                    checkpointDir: String,
-                    reloader: Option[Reliability.ConfigReloader] = None,
-                    maxSinkAttempts: Int = 5, sinkRetryBaseMs: Long = 1000L,
-                    availableNow: Boolean = true,
-                    maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    import java.nio.file.{Files, Paths}
-    if (Files.exists(Paths.get(checkpointDir, "offsets")))
-      Reliability.checkpointIntegrity(checkpointDir).swap.foreach(msg =>
-        throw new IllegalStateException(s"refusing to resume: $msg"))
-
-    val writer = source(spark, inputDir, maxFilesPerTrigger).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         reloader.foreach(_.poll())
         val base = Pipeline.transform(batch, spark)
         val routed = reloader.map(_.current).fold(base) { cfg =>
@@ -117,12 +103,10 @@ object StreamingPipeline {
             graft.operators.Filters.excludeEvents(cfg.excludedEvents) &&
               graft.operators.Filters.filterChain(cfg.rules))
         }
-        Reliability.withRetry(maxSinkAttempts, baseMs = sinkRetryBaseMs) { _ =>
-          Sinks.writeAll(routed, outRoot, batchId)
-        }
+        Sinks.writeAll(routed, outRoot, batchId, maxAttempts = 5)
       }
-    if (availableNow) writer.trigger(Trigger.AvailableNow()).start()
-    else writer.trigger(Trigger.ProcessingTime("1 second")).start()
+      .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(PollInterval))
+      .start()
   }
 
   // ---- stateful sampler (A8 via flatMapGroupsWithState) ---------------------

@@ -66,9 +66,9 @@ object TfIdf {
       explode(TextAnalysis.tokHashes(col("text"))).as("tok"))
     // tf feeds BOTH the join and the df aggregate; persisted so the
     // explode+hash scan runs exactly once (exchange reuse does not fire
-    // across the extra final-agg level here — measured). The cache is
-    // released by the ContextCleaner once the result frame is dropped,
-    // the same lifecycle globalSeq uses.
+    // across the extra final-agg level here — measured). The cache lives
+    // until `unpersist` or `clearCache`: Spark's CacheManager holds it
+    // after the result frame is dropped.
     val tf = toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // df derives from tf — its rows are already distinct (doc, tok) pairs,

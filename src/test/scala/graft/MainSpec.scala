@@ -1,27 +1,49 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.sources.Transcripts
 
 class MainSpec extends SparkSpec {
 
-  private def rm(dir: String): Unit = {
-    val p = Paths.get(dir)
-    if (Files.exists(p))
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(x => Files.delete(x))
-  }
-
   test("batch main writes all sinks + lineage (one-shot xelogstash mode)") {
     val root = "/tmp/graft_main_spec"
-    rm(root)
+    Graft.rmTree(root)
     Transcripts.load(spark, tiny).write.parquet(s"$root/in")
     Main.main(Array("batch", s"$root/in", s"$root/out"))
     val n = spark.read.text(s"$root/out/logstash").count()
     assert(n == Pipeline.routed(spark, tiny).count())
     assert(Files.exists(Paths.get(s"$root/out/lineage")))
     assert(Files.exists(Paths.get(s"$root/out/elastic")))
+  }
+
+  private def perSinkCounts(root: String): Map[(String, String), Long] =
+    sinks.Sinks.countsFromDisk(spark, root).collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+
+  test("stream main --once writes the same per-sink counts as batch main") {
+    val root = "/tmp/graft_main_stream"
+    Graft.rmTree(root)
+    Transcripts.load(spark, tiny).repartition(2).write.parquet(s"$root/in")
+    Main.main(Array("batch", s"$root/in", s"$root/batch"))
+    Main.main(Array("stream", s"$root/in", s"$root/stream", s"$root/ckpt", "--once"))
+    val stream = perSinkCounts(s"$root/stream")
+    assert(stream.nonEmpty && stream == perSinkCounts(s"$root/batch"))
+  }
+
+  test("stream main refuses to resume over a checkpoint whose newest offsets file is zeroed") {
+    val root = "/tmp/graft_main_zeroed"
+    Graft.rmTree(root)
+    Transcripts.load(spark, tiny).limit(500).write.parquet(s"$root/in")
+    val stream = Array("stream", s"$root/in", s"$root/out", s"$root/ckpt", "--once")
+    Main.main(stream)
+    val offsets = Paths.get(s"$root/ckpt/offsets")
+    val newest = Files.list(offsets).iterator().asScala
+      .map(_.getFileName.toString).filter(_.forall(_.isDigit)).maxBy(_.toLong)
+    Files.write(offsets.resolve(newest), Array.fill[Byte](32)(0))
+    val e = intercept[IllegalStateException](Main.main(stream))
+    assert(e.getMessage.contains("refusing to resume"), e.getMessage)
   }
 
   // the registrations GraftExtensions injects

@@ -54,9 +54,7 @@ class OperatorsSpec extends SparkSpec {
   test("file-sink retention drops hour partitions older than retain window") {
     val root = "/tmp/graft_retention_spec"
     val p = Paths.get(root)
-    if (Files.exists(p))
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(x => Files.delete(x))
+    Graft.rmTree(root)
     val routed = Pipeline.routed(spark, tiny)
     Sinks.writeFile(routed, root)
     val partsBefore = Files.list(p).filter(_.getFileName.toString.startsWith("date_hour=")).count()
@@ -69,10 +67,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("observe() counters ride the sink write (A1/A2)") {
     val root = "/tmp/graft_observe_spec"
-    val p = Paths.get(root)
-    if (Files.exists(p))
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(x => Files.delete(x))
+    Graft.rmTree(root)
     val routed = Pipeline.routed(spark, tiny)
     val (n, bytes) = Sinks.writeFileObserved(routed, root)
     assert(n == routed.count())

@@ -12,11 +12,8 @@ class PlanSpec extends SparkSpec {
   private val staged = "/tmp/graft_plan_spec"
 
   private lazy val stagedInput = {
-    val p = Paths.get(staged)
     if (!Files.exists(Paths.get(s"$staged/_SUCCESS"))) {
-      if (Files.exists(p))
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(x => Files.delete(x))
+      Graft.rmTree(staged)
       Transcripts.load(spark, tiny).write.parquet(staged)
     }
     spark.read.parquet(staged)

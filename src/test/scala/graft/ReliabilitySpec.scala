@@ -12,12 +12,10 @@ import graft.sinks.AppLog
 class ReliabilitySpec extends AnyFunSuite {
 
   private def freshDir(name: String): String = {
-    val p = Paths.get(s"/tmp/graft_rel_$name")
-    if (Files.exists(p))
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(x => Files.delete(x))
-    Files.createDirectories(p)
-    p.toString
+    val p = s"/tmp/graft_rel_$name"
+    Graft.rmTree(p)
+    Files.createDirectories(Paths.get(p))
+    p
   }
 
   // ---- ST8 -------------------------------------------------------------------
@@ -55,6 +53,28 @@ class ReliabilitySpec extends AnyFunSuite {
     assert(e.getMessage == "always" && calls == 3)
   }
 
+  test("ST8 withRetry: an interrupt is rethrown at once, without a sleep") {
+    var sleeps = 0
+    var calls = 0
+    intercept[InterruptedException] {
+      Reliability.withRetry(maxAttempts = 5, sleep = _ => sleeps += 1) { _ =>
+        calls += 1; throw new InterruptedException("stopped")
+      }
+    }
+    assert(calls == 1 && sleeps == 0)
+    // a job cancelled by a stop fails with a plain exception while the
+    // stopping thread's interrupt flag is set
+    Thread.currentThread.interrupt()
+    try {
+      intercept[RuntimeException] {
+        Reliability.withRetry(maxAttempts = 5, sleep = _ => sleeps += 1) { _ =>
+          calls += 1; throw new RuntimeException("job cancelled")
+        }
+      }
+    } finally Thread.interrupted()
+    assert(calls == 2 && sleeps == 0)
+  }
+
   // ---- ST5 -------------------------------------------------------------------
 
   test("ST5 checkpoint integrity: healthy, zeroed, gapped (status.go:139-172)") {
@@ -79,6 +99,18 @@ class ReliabilitySpec extends AnyFunSuite {
     assert(gapped.isLeft && gapped.swap.toOption.get.contains("gap"))
 
     assert(Reliability.checkpointIntegrity("/tmp/graft_rel_nonexistent").isLeft)
+  }
+
+  test("ST5 checkpoint integrity: empty logs resume, wiped offsets over a source log refuse") {
+    val root = freshDir("ckpt_wiped")
+    Seq("offsets", "commits", "sources/0").foreach(d =>
+      Files.createDirectories(Paths.get(root, d)))
+    // a query that has planned no batch yet
+    assert(Reliability.checkpointIntegrity(root) == Right(-1L))
+    // offsets and commits wiped, the file-source log still names batch 0
+    Files.write(Paths.get(root, "sources", "0", "0"), "v1\n{\"path\":\"a\"}".getBytes)
+    val wiped = Reliability.checkpointIntegrity(root)
+    assert(wiped.isLeft && wiped.swap.toOption.get.contains("source log"))
   }
 
   // ---- ST9 -------------------------------------------------------------------

@@ -1,21 +1,75 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Routing
+import graft.sinks.Sinks
 import graft.sources.Transcripts
 import graft.streaming.{Reliability, StreamingPipeline}
 
-/** startReliable end-to-end: ST6 hot-reload swaps the filter chain
-  * mid-query, ST7 graceful stop, ST5 corrupted-checkpoint refusal. */
+/** The reliability surfaces of `StreamingPipeline.start` end-to-end: ST6
+  * hot-reload swaps the filter chain mid-query, ST7 graceful stop, ST5
+  * corrupted-checkpoint refusal, and ST8 per-sink retry — a failed elastic
+  * write is retried alone, so no sink holds a row twice. */
 class StreamingReliabilitySpec extends SparkSpec {
 
   private def fresh(name: String): String = {
-    val p = Paths.get(s"/tmp/graft_relstream_$name")
-    if (Files.exists(p))
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(x => Files.delete(x))
-    Files.createDirectories(p)
-    p.toString
+    val p = s"/tmp/graft_relstream_$name"
+    Graft.rmTree(p)
+    Files.createDirectories(Paths.get(p))
+    p
+  }
+
+  /** Runs `write` with a plain file at `sinks/elastic`, removed once a SQL
+    * execution fails: the first elastic write fails and a retry finds the
+    * path clear. Returns the number of failed executions seen. */
+  private def withElasticBlocked(sinks: String)(write: => Unit): Int = {
+    Files.createDirectories(Paths.get(sinks))
+    val blocker = Paths.get(sinks, "elastic")
+    Files.write(blocker, "blocker".getBytes)
+    val unblocker = new ClusterReliability.UnblockOnFailure(blocker)
+    spark.sparkContext.addSparkListener(unblocker)
+    try write
+    finally {
+      ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(unblocker)
+    }
+    unblocker.failures
+  }
+
+  /** Per sink, the rows on disk equal the routed rows, and the lineage
+    * rows count each routed row once. */
+  private def assertWrittenOnce(sinks: String, routed: DataFrame): Unit = {
+    val got = Sinks.countsFromDisk(spark, sinks).select("sink", "route_key", "n")
+    val want = Routing.perSinkCounts(routed).select("sink", "route_key", "n")
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+      "per-sink counts on disk differ from the routed counts")
+    val lineage = spark.read.parquet(s"$sinks/lineage")
+      .agg(sum("n_events")).collect()(0).getLong(0)
+    assert(lineage == routed.count())
+  }
+
+  test("ST8: a failed elastic write through writeAll is retried alone") {
+    val root = fresh("partial_writeall")
+    val routed = Pipeline.routed(spark, tiny)
+    val failures = withElasticBlocked(s"$root/sinks") {
+      Sinks.writeAll(routed, s"$root/sinks", maxAttempts = 3)
+    }
+    assert(failures >= 1, "the blocked elastic write must fail once")
+    assertWrittenOnce(s"$root/sinks", routed)
+  }
+
+  test("ST8: a failed elastic write through start is retried alone") {
+    val root = fresh("partial_start")
+    Transcripts.load(spark, tiny).repartition(2).write.parquet(s"$root/in")
+    val failures = withElasticBlocked(s"$root/sinks") {
+      StreamingPipeline.start(spark, s"$root/in", s"$root/sinks", s"$root/ckpt")
+        .awaitTermination()
+    }
+    assert(failures >= 1, "the blocked elastic write must fail once")
+    assertWrittenOnce(s"$root/sinks", Pipeline.routed(spark, tiny))
   }
 
   test("ST6+ST7: mid-query config reload swaps the event blacklist; graceful stop") {
@@ -29,7 +83,7 @@ class StreamingReliabilitySpec extends SparkSpec {
     // part 1 staged before start
     t.filter(col("conv_id") =!= "conv_hot").limit(2000)
       .repartition(2).write.parquet(s"$root/in")
-    val q = StreamingPipeline.startReliable(spark, s"$root/in", s"$root/sinks",
+    val q = StreamingPipeline.start(spark, s"$root/in", s"$root/sinks",
       s"$root/ckpt", reloader = Some(reloader), availableNow = false)
     try {
       q.processAllAvailable()
@@ -63,7 +117,7 @@ class StreamingReliabilitySpec extends SparkSpec {
     val root = fresh("corrupt")
     Transcripts.load(spark, tiny).limit(500)
       .repartition(1).write.parquet(s"$root/in")
-    val q = StreamingPipeline.startReliable(spark, s"$root/in", s"$root/sinks",
+    val q = StreamingPipeline.start(spark, s"$root/in", s"$root/sinks",
       s"$root/ckpt")
     q.awaitTermination()
 
@@ -79,9 +133,22 @@ class StreamingReliabilitySpec extends SparkSpec {
     Files.write(target, Array.fill[Byte](32)(0))
 
     val e = intercept[IllegalStateException] {
-      StreamingPipeline.startReliable(spark, s"$root/in", s"$root/sinks",
+      StreamingPipeline.start(spark, s"$root/in", s"$root/sinks",
         s"$root/ckpt")
     }
     assert(e.getMessage.contains("zeroed"))
+  }
+
+  test("ST5: a checkpoint that has committed no batch yet resumes") {
+    val root = fresh("empty")
+    Files.createDirectories(Paths.get(s"$root/in"))
+    def drain(): Unit = StreamingPipeline.start(spark, s"$root/in", s"$root/sinks",
+      s"$root/ckpt").awaitTermination()
+    drain() // no input: the checkpoint keeps empty offsets and commits dirs
+    Transcripts.load(spark, tiny).limit(500).write.mode("append").parquet(s"$root/in")
+    drain()
+    val staged = spark.read.schema(StreamingPipeline.schema).parquet(s"$root/in")
+    assert(spark.read.text(s"$root/sinks/logstash").count() ==
+      Pipeline.transform(staged, spark).count())
   }
 }

@@ -11,16 +11,9 @@ import graft.streaming.StreamingPipeline
   * only new rows routed, no duplicates; lineage sums equal routed totals. */
 class StreamingSpec extends SparkSpec {
 
-  private def rm(dir: String): Unit = {
-    val p = Paths.get(dir)
-    if (Files.exists(p))
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(x => Files.delete(x))
-  }
-
   test("streaming resumes from checkpoint without duplicating committed batches") {
     val root = "/tmp/graft_stream_spec"
-    rm(root)
+    Graft.rmTree(root)
     val t = Transcripts.load(spark, tiny).cache()
     val part1 = t.filter(col("turn_idx") % 2 === 0)
     val part2 = t.filter(col("turn_idx") % 2 =!= 0)
@@ -30,13 +23,15 @@ class StreamingSpec extends SparkSpec {
 
     // batch 1: only part1 staged
     part1.coalesce(1).write.parquet(s"$root/input/f1")
-    StreamingPipeline.runOnce(spark, s"$root/input/*", s"$root/sinks", s"$root/ckpt")
+    StreamingPipeline.start(spark, s"$root/input/*", s"$root/sinks", s"$root/ckpt")
+      .awaitTermination()
     val after1 = spark.read.text(s"$root/sinks/logstash").count()
     assert(after1 == routed1)
 
     // append part2, resume with the SAME checkpoint
     part2.coalesce(1).write.parquet(s"$root/input/f2")
-    StreamingPipeline.runOnce(spark, s"$root/input/*", s"$root/sinks", s"$root/ckpt")
+    StreamingPipeline.start(spark, s"$root/input/*", s"$root/sinks", s"$root/ckpt")
+      .awaitTermination()
     val after2 = spark.read.text(s"$root/sinks/logstash").count()
     assert(after2 == total, s"expected $total routed rows, got $after2 (dupes or loss)")
 
@@ -54,7 +49,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming dead-letter quarantine captures unnameable rows with " +
     "lineage; the happy-path sinks exclude them") {
     val root = "/tmp/graft_stream_dlq"
-    rm(root)
+    Graft.rmTree(root)
     val t = Transcripts.load(spark, tiny)
     val mangled = t.withColumn("text",
       when(col("turn_idx") % 50 === 7, lit(""))
@@ -82,7 +77,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sp = spark
     import TestSpark.spark.implicits._
     val root = "/tmp/graft_throttle_stream"
-    rm(root)
+    Graft.rmTree(root)
     // increasing event times inside ONE hour cell: the zero-delay
     // watermark advances past batch 1, so batch 2 must sit later
     def at(i: Int) = java.sql.Timestamp.valueOf(
@@ -120,9 +115,10 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming sink counts equal batch pipeline counts (routed-row equality)") {
     val root = "/tmp/graft_stream_spec2"
-    rm(root)
+    Graft.rmTree(root)
     Transcripts.load(spark, tiny).repartition(3).write.parquet(s"$root/input")
-    StreamingPipeline.runOnce(spark, s"$root/input", s"$root/sinks", s"$root/ckpt")
+    StreamingPipeline.start(spark, s"$root/input", s"$root/sinks", s"$root/ckpt")
+      .awaitTermination()
     val streamCounts = Sinks.countsFromDisk(spark, s"$root/sinks")
     val batchCounts = graft.operators.Routing.perSinkCounts(Pipeline.routed(spark, tiny))
     assert(streamCounts.except(batchCounts).count() == 0)
@@ -162,7 +158,7 @@ class StreamingSpec extends SparkSpec {
     "micro-batch over a one-file-per-trigger drain") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val root = "/tmp/graft_stream_jobs"
-    rm(root)
+    Graft.rmTree(root)
     val t = Transcripts.load(spark, tiny)
     t.filter(col("turn_idx") % 2 === 0).coalesce(1).write.parquet(s"$root/in/f1")
     t.filter(col("turn_idx") % 2 =!= 0).coalesce(1).write.parquet(s"$root/in/f2")
@@ -196,12 +192,13 @@ class StreamingSpec extends SparkSpec {
 
   test("listener captures per-batch rows/sec metrics (A6, process_source.go:80-138)") {
     val root = "/tmp/graft_metrics_spec"
-    rm(root)
+    Graft.rmTree(root)
     val t = Transcripts.load(spark, tiny)
     t.write.parquet(s"$root/in")
     val (l, drain) = graft.streaming.StreamingMetrics.attach(spark)
     try {
-      StreamingPipeline.runOnce(spark, s"$root/in", s"$root/sinks", s"$root/ckpt")
+      StreamingPipeline.start(spark, s"$root/in", s"$root/sinks", s"$root/ckpt")
+        .awaitTermination()
       // listener delivery is async; poll briefly
       var metrics = drain()
       var waited = 0
@@ -216,7 +213,7 @@ class StreamingSpec extends SparkSpec {
 
   test("watermarked windowed aggregation over the stream (ST4, look_back analog)") {
     val root = "/tmp/graft_watermark_spec"
-    rm(root)
+    Graft.rmTree(root)
     Transcripts.load(spark, tiny).write.parquet(s"$root/in")
     val stream = spark.readStream
       .schema(StreamingPipeline.schema).parquet(s"$root/in")
@@ -247,7 +244,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming sessionization closes sessions in-batch and by watermark timeout") {
     implicit val sp = spark
     val root = "/tmp/graft_sess_stream_spec"
-    rm(root)
+    Graft.rmTree(root)
     Transcripts.load(spark, tiny).write.parquet(s"$root/in")
     val stream = spark.readStream
       .schema(StreamingPipeline.schema).parquet(s"$root/in")
@@ -279,7 +276,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming dedup keeps first arrival per content hash across batches") {
     val root = "/tmp/graft_dedup_stream_spec"
-    rm(root)
+    Graft.rmTree(root)
     import TestSpark.spark.implicits._
     // two batches with overlap: batch 2 replays doc 1's text and adds new
     Seq((1L, "alpha beta"), (2L, "gamma delta"))
@@ -307,7 +304,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming snapshot maintenance: foreachBatch upsert converges to " +
     "the batch merge across micro-batches") {
     val root = "/tmp/graft_snapshot_spec"
-    rm(root)
+    Graft.rmTree(root)
     import TestSpark.spark.implicits._
     val schema = "conv_id STRING, turn_idx INT, text STRING, src_offset LONG"
     def drain(): Unit = {
@@ -345,7 +342,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming CMS counters: history estimate sees prior batches, " +
     "accumulated table equals the one-shot build") {
     val root = "/tmp/graft_cms_stream_spec"
-    rm(root)
+    Graft.rmTree(root)
     import TestSpark.spark.implicits._
     def drain(): Unit = {
       val stream = spark.readStream.schema("text STRING")
@@ -386,7 +383,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming HLL distinct: est_before sees prior batches only; " +
     "accumulated registers equal the one-shot sketch") {
     val root = "/tmp/graft_hll_stream_spec"
-    rm(root)
+    Graft.rmTree(root)
     import TestSpark.spark.implicits._
     def drain(): Unit = {
       val stream = spark.readStream.schema("name STRING, conv_id STRING")
@@ -425,7 +422,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming seasonal anomaly: per-hod baseline across batches == " +
     "the one-shot seasonal operator on the concatenation") {
     val root = "/tmp/graft_seasonal_stream_spec"
-    rm(root)
+    Graft.rmTree(root)
     import TestSpark.spark.implicits._
     def ts(d: Int, h: Int, m: Int) =
       java.sql.Timestamp.valueOf(f"2024-01-0$d $h%02d:$m%02d:00")
@@ -468,7 +465,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming robust anomaly: batch cells judged against the ALL-" +
     "history baseline; accumulated table equals the one-shot hourly agg") {
     val root = "/tmp/graft_anomaly_stream_spec"
-    rm(root)
+    Graft.rmTree(root)
     import TestSpark.spark.implicits._
     val ts = (h: Int, m: Int) =>
       java.sql.Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
@@ -519,7 +516,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming Bloom prefilter: replayed content flags on the NEXT " +
     "batch, and the accumulated table equals the one-shot build") {
     val root = "/tmp/graft_bloom_stream_spec"
-    rm(root)
+    Graft.rmTree(root)
     import TestSpark.spark.implicits._
     val text1 = (1 to 30).map(i => s"alpha$i beta$i").mkString(" ")
     val text2 = (1 to 30).map(i => s"gamma$i delta$i").mkString(" ")
@@ -565,7 +562,7 @@ class StreamingSpec extends SparkSpec {
       .select("name", "ts", "conv_id", "turn_idx")
     // run through flatMapGroupsWithState via a memory-source streaming query
     val root = "/tmp/graft_sampler_spec"
-    rm(root)
+    Graft.rmTree(root)
     input.write.parquet(s"$root/in")
     val stream = spark.readStream
       .schema(input.schema).parquet(s"$root/in")
@@ -588,7 +585,7 @@ class StreamingSpec extends SparkSpec {
 
   test("stream-stream tool-latency join equals the batch lead-window form") {
     val root = "/tmp/graft_latency_spec"
-    rm(root)
+    Graft.rmTree(root)
     val t = Transcripts.load(spark, tiny)
       .select("conv_id", "turn_idx", "role", "ts")
     t.write.parquet(s"$root/in")
@@ -611,7 +608,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming near-dup index: exact copies and light edits flag against " +
     "history; the accumulated index equals the one-shot build") {
     val root = "/tmp/graft_neardup_stream_spec"
-    rm(root)
+    Graft.rmTree(root)
     import TestSpark.spark.implicits._
     val textA = (1 to 40).map(i => s"alpha$i beta$i").mkString(" ")
     val textB = (1 to 40).map(i => s"gamma$i delta$i").mkString(" ")
@@ -657,7 +654,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming gap moments: boundary gap stitched across batches; " +
     "profile and accumulated state equal the one-shot operator") {
     val root = "/tmp/graft_gap_stream_spec"
-    rm(root)
+    Graft.rmTree(root)
     import TestSpark.spark.implicits._
     val ts = (h: Int, m: Int, s: Int) =>
       java.sql.Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:$s%02d")
@@ -720,7 +717,7 @@ class StreamingSpec extends SparkSpec {
   test("stream fold: a failing output write leaves no frame of the fold " +
     "in the session's cache") {
     val root = "/tmp/graft_fold_cache_spec"
-    rm(root)
+    Graft.rmTree(root)
     import TestSpark.spark.implicits._
     Seq("error 123 occurred", "all good here").toDF("text")
       .coalesce(1).write.parquet(s"$root/in/b1")
@@ -743,7 +740,7 @@ class StreamingSpec extends SparkSpec {
   test("stream fold: the CURRENT pointer only ever names a state directory " +
     "while a drain flips it, and no temp file remains") {
     val root = "/tmp/graft_fold_pointer_spec"
-    rm(root)
+    Graft.rmTree(root)
     import TestSpark.spark.implicits._
     (0 until 8).foreach { i =>
       Seq(s"error $i occurred", s"batch $i text").toDF("text")
@@ -782,7 +779,7 @@ class StreamingSpec extends SparkSpec {
   test("stream fold replay: CmsStream skips a batch re-run after its state " +
     "commit; counters and estimates stay exactly-once") {
     val root = "/tmp/graft_cms_replay_spec"
-    rm(root)
+    Graft.rmTree(root)
     import TestSpark.spark.implicits._
     def drain(): Unit = {
       val stream = spark.readStream.schema("text STRING")
@@ -818,7 +815,7 @@ class StreamingSpec extends SparkSpec {
   test("stream fold replay: NearDupStream skips a batch re-run after its " +
     "state commit; the appended index and verdicts stay exactly-once") {
     val root = "/tmp/graft_neardup_replay_spec"
-    rm(root)
+    Graft.rmTree(root)
     import TestSpark.spark.implicits._
     val textA = (1 to 40).map(i => s"alpha$i beta$i").mkString(" ")
     def drain(): Unit = {

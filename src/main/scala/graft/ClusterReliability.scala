@@ -20,10 +20,10 @@ import graft.streaming.{Reliability, StreamingPipeline}
   *    a running ProcessingTime stream) is picked up by the debounced
   *    reloader, and events appended AFTER the rewrite are filtered by
   *    the NEW blacklist while earlier batches keep the old one;
-  *  - ST8: the elastic sink's first write attempt fails (its dir is
-  *    blocked by a regular file, removed once the failure is seen); the
-  *    batch succeeds after backoff, and the file, logstash and elastic
-  *    sinks each hold the batch's rows exactly once.
+  *  - ST8: the first attempt of the staged sink write fails (its
+  *    staging directory is blocked by a regular file, removed once the
+  *    failure is seen); the batch succeeds after backoff, and the file,
+  *    logstash and elastic sinks each hold the batch's rows exactly once.
   *
   * Prints one JSON line per surface; the script greps for
   * `"metric":"cluster_reliability"`. */
@@ -150,10 +150,10 @@ object ClusterReliability {
     // ---- ST8: only the failed sink is retried ------------------------------
     t.repartition(2).write.parquet(s"$root/st8/in")
     Files.createDirectories(Paths.get(s"$root/st8/sinks"))
-    // block the elastic sink, written after file and logstash, with a
-    // REGULAR FILE: its attempt 1 must fail, and a retry of the whole
-    // batch would write file and logstash twice
-    val blocker = Paths.get(s"$root/st8/sinks/elastic")
+    // block the staging directory of the one sink write with a REGULAR
+    // FILE: its attempt 1 must fail, and the retry must leave every sink
+    // with the batch's rows once
+    val blocker = Paths.get(s"$root/st8/sinks/_staging")
     Files.write(blocker, "blocker".getBytes("UTF-8"))
     val unblocker = new UnblockOnFailure(blocker)
     spark.sparkContext.addSparkListener(unblocker)

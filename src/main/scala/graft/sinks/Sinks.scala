@@ -1,10 +1,16 @@
 package graft.sinks
 
+import java.io.IOException
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import scala.util.Using
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path, PathFilter}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import graft.operators.Routing
 
 /** The three sink shapes of the reference, re-expressed as partitioned
   * NDJSON writers (`Sinker` contract, `pkg/sink/sink.go:10-19`):
@@ -19,24 +25,33 @@ import org.apache.spark.sql.functions._
   *
   * The reference writes serially to each sink per event (README.md:455,
   * "performance isn't that great"); here [[writeAll]] orders the routed
-  * batch by conversation and turn, caches only the five columns the sinks
-  * read ([[SinkColumns]]) and writes each sink as a column projection +
-  * partitioned write of that one cached frame.
+  * batch by conversation and turn and writes every sink line in ONE
+  * partitioned text write into a batch-scoped staging directory
+  * (`root/_staging/batch=<id>`), then publishes the staged files into the
+  * sink directories by rename. The lineage rows and the per-sink rows and
+  * bytes ride on that write as one `observe()`.
   */
 object Sinks {
 
   /** The columns [[writeAll]]'s sinks and lineage rows read. */
   val SinkColumns: Seq[String] = Seq("ts", "doc_json", "sink_index", "src_file", "src_offset")
 
+  /** The sink directories under a sink root, in publish order. */
+  val SinkNames: Seq[String] = Seq("file", "logstash", "elastic")
+
+  /** Rows one sink received, and their UTF-8 bytes, newlines included. */
+  final case class Written(rows: Long, bytes: Long)
+
   /** K1: hourly-partitioned NDJSON file sink. */
   def writeFile(routed: DataFrame, dir: String): Unit =
     hourly(routed).write.mode("append").partitionBy("date_hour").text(dir)
 
+  /** The event hour that keys the file sink's partitions. */
+  private def dateHour: Column = date_format(col("ts"), "yyyyMMdd_HH")
+
   /** The file sink's rows: `doc_json` keyed by its event hour. */
   private def hourly(routed: DataFrame): DataFrame =
-    routed
-      .withColumn("date_hour", date_format(col("ts"), "yyyyMMdd_HH"))
-      .select("date_hour", "doc_json")
+    routed.select(dateHour.as("date_hour"), col("doc_json"))
 
   /** K2: logstash-shaped NDJSON (single stream, newline framed). */
   def writeLogstash(routed: DataFrame, dir: String): Unit =
@@ -44,7 +59,7 @@ object Sinks {
 
   /** K3: elastic bulk framing partitioned by routed index. */
   def writeElastic(routed: DataFrame, dir: String): Unit =
-    graft.operators.Routing.bulkFrame(routed)
+    Routing.bulkFrame(routed)
       .select("sink_index", "bulk")
       .write.mode("append").partitionBy("sink_index").text(dir)
 
@@ -71,43 +86,168 @@ object Sinks {
     dropped
   }
 
-  /** W1 + the sink frame: each conversation co-located in one partition
-    * and ordered by turn within it, projected to [[SinkColumns]]. Column
-    * pruning keeps every other routed column out of the ordering exchange
-    * (and out of the cache [[writeAll]] puts on this frame). */
+  /** W1 + the sink frame: each conversation co-located in one of
+    * `spark.sql.shuffle.partitions` partitions and ordered by turn within
+    * it, projected to [[SinkColumns]]. Column pruning keeps every other
+    * routed column out of the ordering exchange. The partition count is
+    * explicit so AQE keeps it: coalescing the exchange would change the
+    * write's task count and the sinks' file count. */
   private[graft] def sinkFrame(routed: DataFrame): DataFrame =
-    routed.repartition(col("conv_id"))
+    routed.repartition(routed.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+        col("conv_id"))
       .sortWithinPartitions("conv_id", "turn_idx")
       .select(SinkColumns.map(col): _*)
 
-  /** Write all sinks from one cached [[sinkFrame]] of the routed batch;
-    * this is the one place of the W1 turn ordering. Lineage rows per
-    * source file are appended to `root/lineage` (ST2/A7: sink write
-    * precedes lineage commit = at-least-once, like the reference's
-    * sink-then-state order, process_session.go:145-162).
+  /** The rows of `root/lineage`: one per `src_file` of a batch. */
+  private[graft] val LineageSchema: StructType = StructType(Seq(
+    StructField("src_file", StringType), StructField("min_offset", LongType),
+    StructField("max_offset", LongType), StructField("n_events", LongType, nullable = false),
+    StructField("batch_id", LongType, nullable = false)))
+
+  /** Per `src_file` of a sink frame: min and max `src_offset` (null when
+    * every offset of the file is null) and the row count, as ONE aggregate
+    * so the lineage rides on the staged write's `observe()`. The buffer
+    * is a Java map, so a null `src_file` is a group of its own (a Spark
+    * map key cannot be null); the result is an array of rows. */
+  private object FileLineage extends Aggregator[(String, java.lang.Long),
+      java.util.HashMap[String, Array[Long]], Seq[(String, Option[Long], Option[Long], Long)]] {
+    // per file: min offset, max offset, non-null offsets, rows
+    def zero: java.util.HashMap[String, Array[Long]] = new java.util.HashMap()
+    def reduce(b: java.util.HashMap[String, Array[Long]],
+               in: (String, java.lang.Long)): java.util.HashMap[String, Array[Long]] = {
+      val s = b.computeIfAbsent(in._1, _ => Array(Long.MaxValue, Long.MinValue, 0L, 0L))
+      if (in._2 != null) {
+        s(0) = math.min(s(0), in._2); s(1) = math.max(s(1), in._2); s(2) += 1
+      }
+      s(3) += 1
+      b
+    }
+    def merge(a: java.util.HashMap[String, Array[Long]],
+              b: java.util.HashMap[String, Array[Long]]): java.util.HashMap[String, Array[Long]] = {
+      b.forEach((f, y) => a.merge(f, y, (x, y) =>
+        Array(math.min(x(0), y(0)), math.max(x(1), y(1)), x(2) + y(2), x(3) + y(3))))
+      a
+    }
+    def finish(b: java.util.HashMap[String, Array[Long]])
+        : Seq[(String, Option[Long], Option[Long], Long)] =
+      b.asScala.toSeq.map { case (f, s) =>
+        (f, Option.when(s(2) > 0)(s(0)), Option.when(s(2) > 0)(s(1)), s(3))
+      }
+    def bufferEncoder: Encoder[java.util.HashMap[String, Array[Long]]] = Encoders.kryo
+    def outputEncoder: Encoder[Seq[(String, Option[Long], Option[Long], Long)]] = ExpressionEncoder()
+  }
+
+  private val fileLineage =
+    udaf(FileLineage, Encoders.tuple(Encoders.STRING, Encoders.LONG))
+
+  /** UTF-8 bytes of a text-sink line, its newline included. */
+  private def lineBytes(c: Column): Column = sum(coalesce(octet_length(c), lit(0)) + 1)
+
+  /** The staged write: every row of the sink frame as its three sink
+    * lines — (`file`, its event hour, `doc_json`), (`logstash`, no key,
+    * `doc_json`) and (`elastic`, `sink_index`, the bulk pair) — in one
+    * text write partitioned by sink and key, overwriting `dir`. The writer
+    * sorts each task's lines by (sink, key); its in-memory sort is stable,
+    * so each file keeps the sink frame's turn order, as the per-sink
+    * writes of the cached frame did. Returns what the write's
+    * `observe()` counted: `rows`, `doc_bytes`, `bulk_bytes` and `lineage`
+    * ([[FileLineage]]). */
+  private def stage(routed: DataFrame, dir: String): Map[String, Any] = {
+    val obs = Observation()
+    def line(sink: String, key: Column, value: String): Column =
+      struct(lit(sink).as("sink"), key.as("key"), col(value).as("value"))
+    Routing.bulkFrame(sinkFrame(routed))
+      .observe(obs, count(lit(1)).as("rows"), lineBytes(col("doc_json")).as("doc_bytes"),
+        lineBytes(col("bulk")).as("bulk_bytes"),
+        fileLineage(col("src_file"), col("src_offset")).as("lineage"))
+      .select(explode(array(line("file", dateHour, "doc_json"),
+        line("logstash", lit(null).cast(StringType), "doc_json"),
+        line("elastic", col("sink_index"), "bulk"))).as("line"))
+      .select("line.*")
+      .write.mode("overwrite").partitionBy("sink", "key").text(dir)
+    obs.get
+  }
+
+  /** The lineage rows of one batch from its observed [[FileLineage]],
+    * ordered by `src_file` (a null file first). */
+  private def lineageRows(spark: SparkSession, files: Seq[Row], batchId: Long): DataFrame = {
+    val rows = files.sortBy(r => Option(r.getString(0)))
+      .map(r => Row(r.get(0), r.get(1), r.get(2), r.get(3), batchId))
+    spark.createDataFrame(rows.asJava, LineageSchema).coalesce(1)
+  }
+
+  private val visible: PathFilter = p => !p.getName.startsWith(".") && !p.getName.startsWith("_")
+
+  /** Moves `sink`'s staged part files under `staged` into its directory
+    * under `root` — `file/date_hour=K`, `logstash` or
+    * `elastic/sink_index=K` — and writes the sink's `_SUCCESS`. A rename
+    * carries a file's `.crc` along, and `mkdirs` applies the umask, as
+    * the write's own committer does. Only the files still staged move, so
+    * a repeat after a failure publishes each file once. */
+  private def publish(fs: FileSystem, staged: Path, root: Path, sink: String): Unit = {
+    val from = new Path(staged, s"sink=$sink")
+    val keyDirs = if (fs.exists(from)) fs.listStatus(from, visible).toSeq.map(_.getPath) else Nil
+    keyDirs.foreach { k =>
+      val key = k.getName.stripPrefix("key=")
+      val to = sink match {
+        case "file" => new Path(root, s"file/date_hour=$key")
+        case "logstash" => new Path(root, "logstash")
+        case "elastic" => new Path(root, s"elastic/sink_index=$key")
+      }
+      if (!fs.mkdirs(to)) throw new IOException(s"cannot create $to")
+      fs.listStatus(k, visible).foreach { f =>
+        val dst = new Path(to, f.getPath.getName)
+        if (!fs.rename(f.getPath, dst)) throw new IOException(s"cannot move ${f.getPath} to $dst")
+      }
+    }
+    fs.create(new Path(root, s"$sink/_SUCCESS"), true).close()
+  }
+
+  /** Writes all sinks of the routed batch with ONE Spark write; this is
+    * the one place of the W1 turn ordering. Per batch, three jobs: the
+    * ordering exchange's map stage, the staged write, and the lineage
+    * append.
     *
-    * ST8: each of the four writes (file, logstash, elastic, lineage) is
-    * retried on its own, up to `maxAttempts` tries with
+    *  1. Stage: [[sinkFrame]]'s rows as file, logstash and elastic lines
+    *     in one partitioned text write into `root/_staging/batch=<id>`
+    *     (overwritten), with an `observe()` that counts the lineage and
+    *     the per-sink rows and bytes on the same pass.
+    *  1. Publish: each sink's staged files are renamed into `root/file`,
+    *     `root/logstash` and `root/elastic`, each with its `_SUCCESS`.
+    *  1. Lineage: the observed rows per source file are appended to
+    *     `root/lineage` (ST2/A7: sink write precedes lineage commit =
+    *     at-least-once, like the reference's sink-then-state order,
+    *     process_session.go:145-162), and the staging directory is
+    *     deleted.
+    *
+    * ST8: the staged write, each sink's publish and the lineage append are
+    * retried on their own, up to `maxAttempts` tries with
     * [[graft.streaming.Reliability.withRetry]]'s backoff from a 1 s base
-    * — the reference retries only the failed write too
-    * (`pkg/ls2/write.go:52-98`). A retry re-reads the cached frame and
-    * rewrites only the sink that failed, so the sinks already written are
-    * not written twice. */
+    * (`sleep` waits it out) — the reference retries only the failed write
+    * too (`pkg/ls2/write.go:52-98`). A repeated staged write replaces its
+    * own staging directory and a repeated publish moves only the files
+    * still staged, so no sink is written twice.
+    *
+    * Returns each sink's rows and bytes, from the staged write's
+    * `observe()`. */
   def writeAll(routed: DataFrame, root: String, batchId: Long = 0L,
-               maxAttempts: Int = 1): Unit = {
-    val cached = sinkFrame(routed).persist()
-    def retried(write: => Unit): Unit =
-      graft.streaming.Reliability.withRetry(maxAttempts, baseMs = 1000L)(_ => write)
-    try {
-      retried(writeFile(cached, s"$root/file"))
-      retried(writeLogstash(cached, s"$root/logstash"))
-      retried(writeElastic(cached, s"$root/elastic"))
-      retried(cached.groupBy("src_file")
-        .agg(min("src_offset").as("min_offset"), max("src_offset").as("max_offset"),
-          count(lit(1)).as("n_events"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(s"$root/lineage"))
-    } finally cached.unpersist()
+               maxAttempts: Int = 1, sleep: Long => Unit = Thread.sleep): Map[String, Written] = {
+    val spark = routed.sparkSession
+    def retried[T](op: => T): T =
+      graft.streaming.Reliability.withRetry(maxAttempts, baseMs = 1000L, sleep = sleep)(_ => op)
+    val staged = new Path(s"$root/_staging/batch=$batchId")
+    val seen = retried(stage(routed, staged.toString))
+    val fs = staged.getFileSystem(spark.sessionState.newHadoopConf())
+    val rootPath = new Path(root)
+    SinkNames.foreach(sink => retried(publish(fs, staged, rootPath, sink)))
+    retried(lineageRows(spark, seen("lineage").asInstanceOf[Seq[Row]], batchId)
+      .write.mode("append").parquet(s"$root/lineage"))
+    fs.delete(staged, true)
+    if (fs.listStatus(staged.getParent).isEmpty) fs.delete(staged.getParent, false)
+    val rows = seen("rows").asInstanceOf[Long]
+    def bytes(k: String) = Option(seen(k)).fold(0L)(_.asInstanceOf[Long])
+    Map("file" -> Written(rows, bytes("doc_bytes")), "logstash" -> Written(rows, bytes("doc_bytes")),
+      "elastic" -> Written(rows, bytes("bulk_bytes")))
   }
 
   /** A1/A2 as observe() metrics: events-written count + byte totals

@@ -21,9 +21,12 @@ import graft.sinks.Sinks
   *    its constant lookups are expressions, so a micro-batch runs no
   *    broadcast job.
   *  - sinks: `Sinks.writeAll`, as in batch: the per-conversation ordering
-  *    sort (W1), K1/K2/K3 NDJSON writers from one cached sink frame, and
-  *    per-batch lineage rows `(src_file, offset range, count, batch_id)`
-  *    (A7/E11); a failed sink write is retried alone (ST8).
+  *    sort (W1), then ONE text write of the K1/K2/K3 NDJSON lines into
+  *    `<outRoot>/_staging/batch=<id>`, published into the sink directories
+  *    by rename, and per-batch lineage rows `(src_file, offset range,
+  *    count, batch_id)` observed on that write (A7/E11) — 3 Spark jobs per
+  *    micro-batch. A failed staged write or sink publish is retried alone
+  *    (ST8).
   *
   * [[start]] is the one entry point: `graft.Main stream`, the q50/q299/q301
   * drains and the reliability checks (ST5 checkpoint integrity, ST6 config
@@ -69,9 +72,10 @@ object StreamingPipeline {
     *    start of each micro-batch; a debounced reload swaps the
     *    config-driven event blacklist + filter rule chain applied to the
     *    batch — the restartless analog of the reference's fsnotify reload.
-    *  - ST8: each sink write of [[Sinks.writeAll]] is tried up to 5 times
-    *    with exponential backoff from 1 s; a retry rewrites only the sink
-    *    that failed, and a stop is not retried.
+    *  - ST8: [[Sinks.writeAll]]'s staged write, each sink's publish and
+    *    the lineage append are each tried up to 5 times with exponential
+    *    backoff from 1 s; a retry repeats only the step that failed, and a
+    *    stop is not retried.
     *
     * ST7 (graceful stop) is [[Reliability.stopGracefully]] on the returned
     * query; ST9 (single instance) is enforced by Spark per checkpoint and
@@ -104,6 +108,7 @@ object StreamingPipeline {
               graft.operators.Filters.filterChain(cfg.rules))
         }
         Sinks.writeAll(routed, outRoot, batchId, maxAttempts = 5)
+        ()
       }
       .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(PollInterval))
       .start()

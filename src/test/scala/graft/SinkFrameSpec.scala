@@ -1,18 +1,24 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions.col
 import graft.sinks.Sinks
 import graft.sources.Transcripts
+import graft.streaming.StreamingPipeline
 
 /** W1 at the sinks: `Sinks.writeAll` writes every sink file with each
-  * conversation's lines in turn order, from one sink frame that shuffles
-  * and caches only the columns the sinks read. */
+  * conversation's lines in turn order, in one Spark write whose only
+  * exchange shuffles the columns the sinks read, with no cache. */
 class SinkFrameSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val root = "/tmp/graft_sink_frame_spec"
@@ -61,21 +67,42 @@ class SinkFrameSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(multiTurn > 0, "no file holds two turns of one conversation")
   }
 
-  test("the sink frame shuffles and caches only the sink columns") {
-    val routed = Pipeline.routed(spark, tiny)
-    val frame = Sinks.sinkFrame(routed).persist()
+  test("the one sink write shuffles only the sink columns and caches nothing") {
+    // read back from parquet, as `graft.Main batch` does: the synthesized
+    // transcripts come hash-partitioned by conv_id already
+    walk(s"$root/plan_in").reverse.foreach(Files.delete)
+    Transcripts.load(spark, tiny).write.parquet(s"$root/plan_in")
+    val routed = Pipeline.transform(
+      spark.read.schema(StreamingPipeline.schema).parquet(s"$root/plan_in"), spark)
+    val plans = new ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    walk(s"$root/plan").reverse.foreach(Files.delete)
+    spark.listenerManager.register(listener)
     try {
-      val scans = collect(frame.queryExecution.executedPlan) { case s: InMemoryTableScanExec => s }
-      assert(scans.size == 1)
-      assert(scans.head.relation.output.map(_.name) == Sinks.SinkColumns)
-      val orderings = collect(scans.head.relation.cachedPlan) {
-        case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_COL => e
-      }
-      assert(orderings.size == 1)
-      val allowed = Sinks.SinkColumns.toSet ++ Set("conv_id", "turn_idx")
-      val shuffled = orderings.head.output.map(_.name)
-      assert(shuffled.toSet.subsetOf(allowed), s"shuffled: $shuffled")
-      assert(routed.columns.toSet.diff(allowed).nonEmpty) // the routed frame is wider
-    } finally frame.unpersist()
+      Sinks.writeAll(routed, s"$root/plan")
+      ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    // the staged text write: the one query that reads the routed batch
+    val writes = plans.asScala.toSeq.collect {
+      case qe if (qe.logical match {
+        case c: InsertIntoHadoopFsRelationCommand => c.outputPath.toString.contains("/_staging/")
+        case _ => false
+      }) => qe.executedPlan
+    }
+    assert(writes.size == 1, s"${writes.size} staged writes")
+    val exchanges = collect(writes.head) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.map(_.shuffleOrigin) == Seq(REPARTITION_BY_NUM), exchanges)
+    val allowed = Sinks.SinkColumns.toSet ++ Set("conv_id", "turn_idx")
+    val shuffled = exchanges.head.output.map(_.name)
+    assert(shuffled.toSet.subsetOf(allowed), s"shuffled: $shuffled")
+    assert(routed.columns.toSet.diff(allowed).nonEmpty) // the routed frame is wider
+    assert(collect(writes.head) { case s: InMemoryTableScanExec => s }.isEmpty)
+    assert(plans.asScala.forall(_.optimizedPlan.collectFirst { case r: InMemoryRelation => r }.isEmpty),
+      "no query of writeAll reads a cached relation")
+    assert(!Files.exists(Paths.get(s"$root/plan/_staging")))
   }
 }

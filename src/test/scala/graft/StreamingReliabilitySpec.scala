@@ -11,8 +11,9 @@ import graft.streaming.{Reliability, StreamingPipeline}
 
 /** The reliability surfaces of `StreamingPipeline.start` end-to-end: ST6
   * hot-reload swaps the filter chain mid-query, ST7 graceful stop, ST5
-  * corrupted-checkpoint refusal, and ST8 per-sink retry — a failed elastic
-  * write is retried alone, so no sink holds a row twice. */
+  * corrupted-checkpoint refusal, and ST8 per-step retry — a failed staged
+  * write or elastic publish is retried alone, so no sink holds a row
+  * twice. */
 class StreamingReliabilitySpec extends SparkSpec {
 
   private def fresh(name: String): String = {
@@ -22,12 +23,11 @@ class StreamingReliabilitySpec extends SparkSpec {
     p
   }
 
-  /** Runs `write` with a plain file at `sinks/elastic`, removed once a SQL
-    * execution fails: the first elastic write fails and a retry finds the
+  /** Runs `write` with a plain file at `blocker`, removed once a SQL
+    * execution fails: the first staged write fails and a retry finds the
     * path clear. Returns the number of failed executions seen. */
-  private def withElasticBlocked(sinks: String)(write: => Unit): Int = {
-    Files.createDirectories(Paths.get(sinks))
-    val blocker = Paths.get(sinks, "elastic")
+  private def withBlockedWrite(blocker: java.nio.file.Path)(write: => Unit): Int = {
+    Files.createDirectories(blocker.getParent)
     Files.write(blocker, "blocker".getBytes)
     val unblocker = new ClusterReliability.UnblockOnFailure(blocker)
     spark.sparkContext.addSparkListener(unblocker)
@@ -49,26 +49,34 @@ class StreamingReliabilitySpec extends SparkSpec {
     val lineage = spark.read.parquet(s"$sinks/lineage")
       .agg(sum("n_events")).collect()(0).getLong(0)
     assert(lineage == routed.count())
+    assert(!Files.exists(Paths.get(sinks, "_staging")), "the staging directory remains")
   }
 
   test("ST8: a failed elastic write through writeAll is retried alone") {
+    // the elastic publish fails on a plain file at sinks/elastic (after the
+    // file and logstash publishes); the retry's backoff removes it
     val root = fresh("partial_writeall")
     val routed = Pipeline.routed(spark, tiny)
-    val failures = withElasticBlocked(s"$root/sinks") {
-      Sinks.writeAll(routed, s"$root/sinks", maxAttempts = 3)
-    }
-    assert(failures >= 1, "the blocked elastic write must fail once")
+    val blocker = Paths.get(root, "sinks", "elastic")
+    Files.createDirectories(blocker.getParent)
+    Files.write(blocker, "blocker".getBytes)
+    var failures = 0
+    Sinks.writeAll(routed, s"$root/sinks", maxAttempts = 3,
+      sleep = _ => { failures += 1; Files.delete(blocker) })
+    assert(failures == 1, "the blocked elastic publish must fail once")
     assertWrittenOnce(s"$root/sinks", routed)
   }
 
   test("ST8: a failed elastic write through start is retried alone") {
+    // the staged write, which carries the elastic lines, fails on a plain
+    // file at sinks/_staging
     val root = fresh("partial_start")
     Transcripts.load(spark, tiny).repartition(2).write.parquet(s"$root/in")
-    val failures = withElasticBlocked(s"$root/sinks") {
+    val failures = withBlockedWrite(Paths.get(root, "sinks", "_staging")) {
       StreamingPipeline.start(spark, s"$root/in", s"$root/sinks", s"$root/ckpt")
         .awaitTermination()
     }
-    assert(failures >= 1, "the blocked elastic write must fail once")
+    assert(failures >= 1, "the blocked staged write must fail once")
     assertWrittenOnce(s"$root/sinks", Pipeline.routed(spark, tiny))
   }
 

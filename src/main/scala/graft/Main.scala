@@ -13,11 +13,13 @@ import org.apache.spark.sql.SparkSession
   * In batch mode the routed frame is written to all sinks once with
   * lineage: `Sinks.writeAll` orders it by conversation and turn, writes
   * every sink's lines in one Spark write into `<outRoot>/_staging/batch=0`
-  * and publishes them into `file/`, `logstash/` and `elastic/` (3 Spark
-  * jobs: the ordering exchange, the write, the lineage append), each step
-  * in a single attempt; in stream mode `StreamingPipeline.start` runs
-  * until stopped (or drains once with --once): it refuses a damaged
-  * checkpoint and retries a failed staged write or sink publish.
+  * and publishes them into `file/`, `logstash/` and `elastic/` (2 Spark
+  * jobs: the ordering exchange and the write; the driver writes the
+  * lineage parquet itself), each step in a single attempt; in stream mode
+  * `StreamingPipeline.start` runs until stopped (or drains once with
+  * --once), planning its sink frame once per query: it refuses a damaged
+  * checkpoint and retries a failed staged write, sink publish or lineage
+  * append.
   */
 object Main {
   def main(args: Array[String]): Unit = {

@@ -2,14 +2,20 @@ package graft.sinks
 
 import java.io.IOException
 import java.nio.file.{Files, Paths}
+import java.util.UUID
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 import org.apache.hadoop.fs.{FileSystem, Path, PathFilter}
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Observation, Row, SparkSession}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, GraftBridge, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.operators.Routing
 
 /** The three sink shapes of the reference, re-expressed as partitioned
@@ -29,7 +35,10 @@ import graft.operators.Routing
   * partitioned text write into a batch-scoped staging directory
   * (`root/_staging/batch=<id>`), then publishes the staged files into the
   * sink directories by rename. The lineage rows and the per-sink rows and
-  * bytes ride on that write as one `observe()`.
+  * bytes ride on that write as one `observe()`; the driver writes the
+  * lineage rows itself, so a batch runs 2 Spark jobs. A stream plans its
+  * sink frame once per query ([[SinkPlan]]) and rebinds it to each
+  * micro-batch's rows.
   */
 object Sinks {
 
@@ -88,15 +97,31 @@ object Sinks {
 
   /** W1 + the sink frame: each conversation co-located in one of
     * `spark.sql.shuffle.partitions` partitions and ordered by turn within
-    * it, projected to [[SinkColumns]]. Column pruning keeps every other
-    * routed column out of the ordering exchange. The partition count is
-    * explicit so AQE keeps it: coalescing the exchange would change the
-    * write's task count and the sinks' file count. */
+    * it, projected to [[SinkColumns]], plus the elastic `bulk` pair
+    * ([[Routing.bulkFrame]]): every column the staged write reads. Column
+    * pruning keeps every other routed column out of the ordering exchange.
+    * The partition count is explicit so AQE keeps it: coalescing the
+    * exchange would change the write's task count and the sinks' file
+    * count. */
   private[graft] def sinkFrame(routed: DataFrame): DataFrame =
-    routed.repartition(routed.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+    Routing.bulkFrame(routed
+      .repartition(routed.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
         col("conv_id"))
       .sortWithinPartitions("conv_id", "turn_idx")
-      .select(SinkColumns.map(col): _*)
+      .select(SinkColumns.map(col): _*))
+
+  /** [[sinkFrame]] over `routedOf` of a batch, planned once: the frame is
+    * built and analysed over an empty placeholder with `schema`'s columns
+    * in `spark`, and never optimized or run. [[bind]] puts a batch's rows
+    * in the placeholder's place ([[GraftBridge.rebind]]) and returns a
+    * frame of `spark`, so the batch's jobs run with `spark`'s artifacts
+    * and reuse the code it has already generated. */
+  private[graft] final class SinkPlan(spark: SparkSession, schema: StructType)(
+      routedOf: DataFrame => DataFrame) {
+    private val leaf = GraftBridge.placeholder(spark, schema)
+    private val template = sinkFrame(routedOf(leaf))
+    def bind(rows: DataFrame): DataFrame = GraftBridge.rebind(spark, template, leaf, rows)
+  }
 
   /** The rows of `root/lineage`: one per `src_file` of a batch. */
   private[graft] val LineageSchema: StructType = StructType(Seq(
@@ -133,8 +158,11 @@ object Sinks {
       b.asScala.toSeq.map { case (f, s) =>
         (f, Option.when(s(2) > 0)(s(0)), Option.when(s(2) > 0)(s(1)), s(3))
       }
-    def bufferEncoder: Encoder[java.util.HashMap[String, Array[Long]]] = Encoders.kryo
-    def outputEncoder: Encoder[Seq[(String, Option[Long], Option[Long], Long)]] = ExpressionEncoder()
+    // built once: ExpressionEncoder() derives its serializer by reflection
+    @transient lazy val bufferEncoder: Encoder[java.util.HashMap[String, Array[Long]]] =
+      Encoders.kryo
+    @transient lazy val outputEncoder: Encoder[Seq[(String, Option[Long], Option[Long], Long)]] =
+      ExpressionEncoder()
   }
 
   private val fileLineage =
@@ -143,7 +171,7 @@ object Sinks {
   /** UTF-8 bytes of a text-sink line, its newline included. */
   private def lineBytes(c: Column): Column = sum(coalesce(octet_length(c), lit(0)) + 1)
 
-  /** The staged write: every row of the sink frame as its three sink
+  /** The staged write: every row of the [[sinkFrame]] `frame` as its three sink
     * lines — (`file`, its event hour, `doc_json`), (`logstash`, no key,
     * `doc_json`) and (`elastic`, `sink_index`, the bulk pair) — in one
     * text write partitioned by sink and key, overwriting `dir`. The writer
@@ -152,11 +180,11 @@ object Sinks {
     * writes of the cached frame did. Returns what the write's
     * `observe()` counted: `rows`, `doc_bytes`, `bulk_bytes` and `lineage`
     * ([[FileLineage]]). */
-  private def stage(routed: DataFrame, dir: String): Map[String, Any] = {
+  private def stage(frame: DataFrame, dir: String): Map[String, Any] = {
     val obs = Observation()
     def line(sink: String, key: Column, value: String): Column =
       struct(lit(sink).as("sink"), key.as("key"), col(value).as("value"))
-    Routing.bulkFrame(sinkFrame(routed))
+    frame
       .observe(obs, count(lit(1)).as("rows"), lineBytes(col("doc_json")).as("doc_bytes"),
         lineBytes(col("bulk")).as("bulk_bytes"),
         fileLineage(col("src_file"), col("src_offset")).as("lineage"))
@@ -170,20 +198,43 @@ object Sinks {
 
   /** The lineage rows of one batch from its observed [[FileLineage]],
     * ordered by `src_file` (a null file first). */
-  private def lineageRows(spark: SparkSession, files: Seq[Row], batchId: Long): DataFrame = {
-    val rows = files.sortBy(r => Option(r.getString(0)))
-      .map(r => Row(r.get(0), r.get(1), r.get(2), r.get(3), batchId))
-    spark.createDataFrame(rows.asJava, LineageSchema).coalesce(1)
+  private def lineageRows(files: Seq[Row], batchId: Long): Seq[InternalRow] =
+    files.sortBy(r => Option(r.getString(0))).map(r =>
+      InternalRow(Option(r.getString(0)).map(UTF8String.fromString).orNull,
+        r.get(1), r.get(2), r.get(3), batchId))
+
+  /** Writes `rows` as one [[LineageSchema]] parquet file into `dir` with
+    * `ParquetFileFormat`'s own writer, on the driver: the rows are already
+    * here, so no Spark job runs. The file is named and framed as a
+    * one-task parquet write names and frames it. */
+  private def stageLineage(spark: SparkSession, rows: Seq[InternalRow], dir: Path): Unit = {
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val writers = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, LineageSchema)
+    val task = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID("", 0, TaskType.MAP, 0, 0))
+    val file = new Path(dir, s"part-00000-${UUID.randomUUID}-c000${writers.getFileExtension(task)}")
+    val out = writers.newInstance(file.toString, LineageSchema, task)
+    try rows.foreach(out.write) finally out.close()
   }
 
   private val visible: PathFilter = p => !p.getName.startsWith(".") && !p.getName.startsWith("_")
 
+  /** Renames the files of `from` into `to`, which `mkdirs` creates with
+    * the umask, as a write's own committer does. A rename carries a
+    * file's `.crc` along. Only the files still in `from` move, so a repeat
+    * after a failure moves each file once. */
+  private def moveFiles(fs: FileSystem, from: Path, to: Path): Unit = {
+    if (!fs.mkdirs(to)) throw new IOException(s"cannot create $to")
+    fs.listStatus(from, visible).foreach { f =>
+      val dst = new Path(to, f.getPath.getName)
+      if (!fs.rename(f.getPath, dst)) throw new IOException(s"cannot move ${f.getPath} to $dst")
+    }
+  }
+
   /** Moves `sink`'s staged part files under `staged` into its directory
     * under `root` — `file/date_hour=K`, `logstash` or
-    * `elastic/sink_index=K` — and writes the sink's `_SUCCESS`. A rename
-    * carries a file's `.crc` along, and `mkdirs` applies the umask, as
-    * the write's own committer does. Only the files still staged move, so
-    * a repeat after a failure publishes each file once. */
+    * `elastic/sink_index=K` ([[moveFiles]]) — and writes the sink's
+    * `_SUCCESS`. */
   private def publish(fs: FileSystem, staged: Path, root: Path, sink: String): Unit = {
     val from = new Path(staged, s"sink=$sink")
     val keyDirs = if (fs.exists(from)) fs.listStatus(from, visible).toSeq.map(_.getPath) else Nil
@@ -194,54 +245,68 @@ object Sinks {
         case "logstash" => new Path(root, "logstash")
         case "elastic" => new Path(root, s"elastic/sink_index=$key")
       }
-      if (!fs.mkdirs(to)) throw new IOException(s"cannot create $to")
-      fs.listStatus(k, visible).foreach { f =>
-        val dst = new Path(to, f.getPath.getName)
-        if (!fs.rename(f.getPath, dst)) throw new IOException(s"cannot move ${f.getPath} to $dst")
-      }
+      moveFiles(fs, k, to)
     }
     fs.create(new Path(root, s"$sink/_SUCCESS"), true).close()
   }
 
   /** Writes all sinks of the routed batch with ONE Spark write; this is
-    * the one place of the W1 turn ordering. Per batch, three jobs: the
-    * ordering exchange's map stage, the staged write, and the lineage
-    * append.
+    * the one place of the W1 turn ordering: [[write]] of the routed
+    * batch's [[sinkFrame]]. */
+  def writeAll(routed: DataFrame, root: String, batchId: Long = 0L,
+               maxAttempts: Int = 1, sleep: Long => Unit = Thread.sleep): Map[String, Written] =
+    write(sinkFrame(routed), root, batchId, maxAttempts, sleep)
+
+  /** Writes a [[sinkFrame]] to every sink and its lineage rows. Per batch,
+    * two Spark jobs: the ordering exchange's map stage and the staged
+    * write.
     *
-    *  1. Stage: [[sinkFrame]]'s rows as file, logstash and elastic lines
-    *     in one partitioned text write into `root/_staging/batch=<id>`
+    *  1. Stage: the frame's rows as file, logstash and elastic lines in
+    *     one partitioned text write into `root/_staging/batch=<id>`
     *     (overwritten), with an `observe()` that counts the lineage and
     *     the per-sink rows and bytes on the same pass.
     *  1. Publish: each sink's staged files are renamed into `root/file`,
     *     `root/logstash` and `root/elastic`, each with its `_SUCCESS`.
-    *  1. Lineage: the observed rows per source file are appended to
-    *     `root/lineage` (ST2/A7: sink write precedes lineage commit =
-    *     at-least-once, like the reference's sink-then-state order,
-    *     process_session.go:145-162), and the staging directory is
-    *     deleted.
+    *  1. Lineage: the driver writes the observed rows per source file as
+    *     one parquet file into the staging directory ([[stageLineage]])
+    *     and renames it into `root/lineage` with its `_SUCCESS` (ST2/A7:
+    *     sink write precedes lineage commit = at-least-once, like the
+    *     reference's sink-then-state order, process_session.go:145-162);
+    *     then the staging directory is deleted.
     *
     * ST8: the staged write, each sink's publish and the lineage append are
     * retried on their own, up to `maxAttempts` tries with
     * [[graft.streaming.Reliability.withRetry]]'s backoff from a 1 s base
     * (`sleep` waits it out) — the reference retries only the failed write
     * too (`pkg/ls2/write.go:52-98`). A repeated staged write replaces its
-    * own staging directory and a repeated publish moves only the files
-    * still staged, so no sink is written twice.
+    * own staging directory, a repeated publish moves only the files still
+    * staged and a repeated lineage append writes its file once, so no sink
+    * and no lineage row is written twice.
     *
     * Returns each sink's rows and bytes, from the staged write's
     * `observe()`. */
-  def writeAll(routed: DataFrame, root: String, batchId: Long = 0L,
-               maxAttempts: Int = 1, sleep: Long => Unit = Thread.sleep): Map[String, Written] = {
-    val spark = routed.sparkSession
+  private[graft] def write(frame: DataFrame, root: String, batchId: Long, maxAttempts: Int,
+                           sleep: Long => Unit = Thread.sleep): Map[String, Written] = {
+    val spark = frame.sparkSession
     def retried[T](op: => T): T =
       graft.streaming.Reliability.withRetry(maxAttempts, baseMs = 1000L, sleep = sleep)(_ => op)
     val staged = new Path(s"$root/_staging/batch=$batchId")
-    val seen = retried(stage(routed, staged.toString))
+    val seen = retried(stage(frame, staged.toString))
     val fs = staged.getFileSystem(spark.sessionState.newHadoopConf())
     val rootPath = new Path(root)
     SinkNames.foreach(sink => retried(publish(fs, staged, rootPath, sink)))
-    retried(lineageRows(spark, seen("lineage").asInstanceOf[Seq[Row]], batchId)
-      .write.mode("append").parquet(s"$root/lineage"))
+    val lineage = lineageRows(seen("lineage").asInstanceOf[Seq[Row]], batchId)
+    val stagedLineage = new Path(staged, "lineage")
+    var lineageStaged = false
+    retried {
+      if (!lineageStaged) {
+        fs.delete(stagedLineage, true) // what a failed attempt left
+        stageLineage(spark, lineage, stagedLineage)
+        lineageStaged = true
+      }
+      moveFiles(fs, stagedLineage, new Path(rootPath, "lineage"))
+      fs.create(new Path(rootPath, "lineage/_SUCCESS"), true).close()
+    }
     fs.delete(staged, true)
     if (fs.listStatus(staged.getParent).isEmpty) fs.delete(staged.getParent, false)
     val rows = seen("rows").asInstanceOf[Long]

@@ -17,16 +17,20 @@ import graft.sinks.Sinks
   *    `pkg/status/status.go:273-363`) — resumable, at-least-once into the
   *    sinks exactly like the reference (sink write precedes state commit).
   *  - transforms: the SAME column pipeline as batch (Pipeline.transform),
-  *    applied inside foreachBatch as a plain batch plan per micro-batch;
-  *    its constant lookups are expressions, so a micro-batch runs no
-  *    broadcast job.
-  *  - sinks: `Sinks.writeAll`, as in batch: the per-conversation ordering
+  *    planned once per query: its sink frame is analysed over a
+  *    placeholder of the source's schema (`Sinks.SinkPlan`) and each
+  *    micro-batch's rows are bound in the placeholder's place, in the
+  *    session passed to [[start]], so a micro-batch plans only its own
+  *    rows and a new query's jobs reuse the code earlier queries
+  *    generated. Its constant lookups are expressions, so a micro-batch
+  *    runs no broadcast job.
+  *  - sinks: `Sinks.write`, as in batch: the per-conversation ordering
   *    sort (W1), then ONE text write of the K1/K2/K3 NDJSON lines into
   *    `<outRoot>/_staging/batch=<id>`, published into the sink directories
   *    by rename, and per-batch lineage rows `(src_file, offset range,
-  *    count, batch_id)` observed on that write (A7/E11) — 3 Spark jobs per
-  *    micro-batch. A failed staged write or sink publish is retried alone
-  *    (ST8).
+  *    count, batch_id)` observed on that write (A7/E11) and written by the
+  *    driver — 2 Spark jobs per micro-batch. A failed staged write, sink
+  *    publish or lineage append is retried alone (ST8).
   *
   * [[start]] is the one entry point: `graft.Main stream`, the q50/q299/q301
   * drains and the reliability checks (ST5 checkpoint integrity, ST6 config
@@ -71,8 +75,10 @@ object StreamingPipeline {
     *  - ST6: an optional [[Reliability.ConfigReloader]] is polled at the
     *    start of each micro-batch; a debounced reload swaps the
     *    config-driven event blacklist + filter rule chain applied to the
-    *    batch — the restartless analog of the reference's fsnotify reload.
-    *  - ST8: [[Sinks.writeAll]]'s staged write, each sink's publish and
+    *    batch by rebuilding the query's sink plan, the only time it is
+    *    rebuilt — the restartless analog of the reference's fsnotify
+    *    reload.
+    *  - ST8: [[Sinks.write]]'s staged write, each sink's publish and
     *    the lineage append are each tried up to 5 times with exponential
     *    backoff from 1 s; a retry repeats only the step that failed, and a
     *    stop is not retried.
@@ -90,7 +96,15 @@ object StreamingPipeline {
       Reliability.checkpointIntegrity(checkpointDir).swap.foreach(msg =>
         throw new IllegalStateException(s"refusing to resume: $msg"))
 
-    source(spark, inputDir, maxFilesPerTrigger).writeStream
+    val in = source(spark, inputDir, maxFilesPerTrigger)
+    def sinkPlan(cfg: Option[graft.sources.ConfigSource.JobConfig]) =
+      new Sinks.SinkPlan(spark, in.schema)({ rows =>
+        val base = Pipeline.transform(rows, spark)
+        cfg.fold(base)(c => base.filter(graft.operators.Filters.excludeEvents(c.excludedEvents) &&
+          graft.operators.Filters.filterChain(c.rules)))
+      })
+    var plan = sinkPlan(reloader.map(_.current))
+    in.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // dead-letter quarantine (the rows F7 drops), written per batch
@@ -100,14 +114,8 @@ object StreamingPipeline {
           graft.operators.Filters.deadLetterRaw(batch)
             .write.mode("overwrite").parquet(s"$qd/batch=$batchId")
         }
-        reloader.foreach(_.poll())
-        val base = Pipeline.transform(batch, spark)
-        val routed = reloader.map(_.current).fold(base) { cfg =>
-          base.filter(
-            graft.operators.Filters.excludeEvents(cfg.excludedEvents) &&
-              graft.operators.Filters.filterChain(cfg.rules))
-        }
-        Sinks.writeAll(routed, outRoot, batchId, maxAttempts = 5)
+        reloader.foreach(_.poll().foreach(cfg => plan = sinkPlan(Some(cfg))))
+        Sinks.write(plan.bind(batch), outRoot, batchId, maxAttempts = 5)
         ()
       }
       .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(PollInterval))

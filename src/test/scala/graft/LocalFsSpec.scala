@@ -79,6 +79,13 @@ class LocalFsSpec extends SparkSpec {
         assert(nio.exists(_._1.startsWith(sub)), s"nothing under $sub")
       assert(nio.exists(_._1.endsWith(".crc")))
       assert(nio == stock, s"umask $umask")
+      // the driver writes the lineage files: they get the umask too
+      for (sinks <- Seq("batch", "stream")) {
+        val lineage = nio.filter(_._1.startsWith(s"$sinks/lineage"))
+        assert(lineage.count(_._1.endsWith(".parquet.crc")) >= 1, lineage)
+        for ((p, mode) <- lineage)
+          assert(mode == (if (p == s"$sinks/lineage") dir else file), s"umask $umask: $p $mode")
+      }
       if (umask == "022") {
         val (dirs, files) = nio.partition { case (p, _) => Files.isDirectory(Paths.get(s"$root/nio_$umask/$p")) }
         assert(files.forall(_._2 == file), files.filter(_._2 != file))

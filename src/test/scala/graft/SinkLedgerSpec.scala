@@ -2,14 +2,19 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.Type.Repetition
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.sinks.Sinks
 
 /** What `Sinks.writeAll` observes on its one staged write: the lineage
-  * rows per source file, equal to the `groupBy` twin below, and each
-  * sink's rows and bytes, equal to what lands on disk. */
+  * rows per source file, equal to the `groupBy` twin below and written by
+  * the driver as one parquet file, and each sink's rows and bytes, equal
+  * to what lands on disk. */
 class SinkLedgerSpec extends SparkSpec {
 
   private val root = "/tmp/graft_sink_ledger_spec"
@@ -84,5 +89,31 @@ class SinkLedgerSpec extends SparkSpec {
       }
       assert(!Files.exists(Paths.get(out, "_staging")))
     }
+  }
+
+  test("the driver writes the lineage rows as one parquet file: LineageSchema, " +
+    "src_file order with the null file first, a _SUCCESS") {
+    val out = fresh("driver_lineage")
+    Sinks.writeAll(synthetic, out, batchId = 7L)
+    val dir = Paths.get(out, "lineage")
+    val names = Files.list(dir).iterator().asScala.map(_.getFileName.toString).toSeq.sorted
+    val parts = names.filter(_.startsWith("part-"))
+    assert(parts.size == 1 && parts.head.endsWith(".snappy.parquet"), names)
+    assert(names.toSet == Set(parts.head, s".${parts.head}.crc", "_SUCCESS", "._SUCCESS.crc"), names)
+    val file = new Path(dir.resolve(parts.head).toString)
+    val footer = {
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, spark.sessionState.newHadoopConf()))
+      try r.getFooter.getFileMetaData finally r.close()
+    }
+    // Spark's own schema record, nullability included, and parquet's repetitions
+    assert(DataType.fromJson(footer.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+      == Sinks.LineageSchema)
+    assert(Sinks.LineageSchema.fields.toSeq.map(f => footer.getSchema.getType(Seq(f.name): _*).getRepetition) ==
+      Sinks.LineageSchema.fields.toSeq.map(f => if (f.nullable) Repetition.OPTIONAL else Repetition.REQUIRED))
+    val got = spark.read.parquet(file.toString).collect().toSeq.map(_.toSeq)
+    assert(got == Seq(
+      Seq(null, 2L, 2L, 2L, 7L), Seq("a.parquet", 1L, 9L, 3L, 7L),
+      Seq("b.parquet", 7L, 7L, 2L, 7L), Seq("c.parquet", null, null, 1L, 7L)))
+    assert(!Files.exists(Paths.get(out, "_staging")))
   }
 }

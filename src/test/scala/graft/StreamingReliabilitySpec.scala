@@ -1,9 +1,15 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.operators.Routing
 import graft.sinks.Sinks
 import graft.sources.Transcripts
@@ -12,8 +18,8 @@ import graft.streaming.{Reliability, StreamingPipeline}
 /** The reliability surfaces of `StreamingPipeline.start` end-to-end: ST6
   * hot-reload swaps the filter chain mid-query, ST7 graceful stop, ST5
   * corrupted-checkpoint refusal, and ST8 per-step retry — a failed staged
-  * write or elastic publish is retried alone, so no sink holds a row
-  * twice. */
+  * write, elastic publish or lineage publish is retried alone, so no sink
+  * holds a row twice and the lineage counts each row once. */
 class StreamingReliabilitySpec extends SparkSpec {
 
   private def fresh(name: String): String = {
@@ -67,6 +73,22 @@ class StreamingReliabilitySpec extends SparkSpec {
     assertWrittenOnce(s"$root/sinks", routed)
   }
 
+  test("ST8: a failed lineage publish through writeAll is retried alone") {
+    // a plain file at sinks/lineage fails the lineage publish after every
+    // sink is published; the retry's backoff removes it
+    val root = fresh("partial_lineage")
+    val routed = Pipeline.routed(spark, tiny)
+    val blocker = Paths.get(root, "sinks", "lineage")
+    Files.createDirectories(blocker.getParent)
+    Files.write(blocker, "blocker".getBytes)
+    var failures = 0
+    Sinks.writeAll(routed, s"$root/sinks", maxAttempts = 3,
+      sleep = _ => { failures += 1; Files.delete(blocker) })
+    assert(failures == 1, "the blocked lineage publish must fail once")
+    assertWrittenOnce(s"$root/sinks", routed)
+    assert(Files.list(blocker).iterator().asScala.count(_.getFileName.toString.startsWith("part-")) == 1)
+  }
+
   test("ST8: a failed elastic write through start is retried alone") {
     // the staged write, which carries the elastic lines, fails on a plain
     // file at sinks/_staging
@@ -80,9 +102,31 @@ class StreamingReliabilitySpec extends SparkSpec {
     assertWrittenOnce(s"$root/sinks", Pipeline.routed(spark, tiny))
   }
 
+  /** Per staged write of `sinks` that succeeded in `spark`: its batch id
+    * and the `exprId`s its rebound sink plan gives the batch's rows
+    * (`GraftBridge.rebind`), which name the plan's template. */
+  private final class TemplateProbe(sinks: String) extends QueryExecutionListener {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[Long])]()
+    private val staged = s"$sinks/_staging/batch=(\\d+)".r.unanchored
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      qe.logical match {
+        case c: InsertIntoHadoopFsRelationCommand => c.outputPath.toString match {
+          case staged(b) => c.query.collectFirst {
+            case Project(list, _: LogicalRDD) if list.forall(_.isInstanceOf[Alias]) =>
+              list.map(_.exprId.id)
+          }.foreach(ids => seen.add(b.toLong -> ids))
+          case _ =>
+        }
+        case _ =>
+      }
+    override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+  }
+
   test("ST6+ST7: mid-query config reload swaps the event blacklist; graceful stop") {
     val root = fresh("reload")
     val t = Transcripts.load(spark, tiny)
+    val probe = new TemplateProbe(s"$root/sinks")
+    spark.listenerManager.register(probe)
 
     val cfgPath = s"$root/job.json"
     Files.write(Paths.get(cfgPath), """{"excluded_events": []}""".getBytes)
@@ -95,6 +139,7 @@ class StreamingReliabilitySpec extends SparkSpec {
       s"$root/ckpt", reloader = Some(reloader), availableNow = false)
     try {
       q.processAllAvailable()
+      val part1 = q.lastProgress.batchId
       def loginCount(): Long = {
         val dir = Paths.get(s"$root/sinks/logstash")
         if (!Files.exists(dir)) 0L
@@ -114,11 +159,30 @@ class StreamingReliabilitySpec extends SparkSpec {
       q.processAllAvailable()
 
       assert(loginCount() == logins1, "post-reload batches must drop logins")
-      assert(totalCount() > total1, "part 2 still routed its other events")
+      val total2 = totalCount()
+      assert(total2 > total1, "part 2 still routed its other events")
+
+      // part 3 arrives with the config unchanged: poll() returns None
+      t.filter(col("conv_id") =!= "conv_hot").limit(3000)
+        .repartition(2).write.mode("append").parquet(s"$root/in")
+      q.processAllAvailable()
+      assert(loginCount() == logins1 && totalCount() > total2)
+      // one sink plan until the reload, one after it: the template is
+      // rebuilt exactly when poll() returns a new config
+      ListenerBusDrain(spark.sparkContext)
+      val templates = probe.seen.asScala.toSeq.sortBy(_._1)
+      assert(templates.map(_._1) == (0L to q.lastProgress.batchId), templates)
+      val (before, after) = templates.partition(_._1 <= part1)
+      assert(before.nonEmpty && after.size >= 2, templates)
+      assert(before.map(_._2).distinct.size == 1 && after.map(_._2).distinct.size == 1 &&
+        before.head._2 != after.head._2, templates)
 
       assert(Reliability.stopGracefully(q))
       assert(!q.isActive)
-    } finally if (q.isActive) q.stop()
+    } finally {
+      if (q.isActive) q.stop()
+      spark.listenerManager.unregister(probe)
+    }
   }
 
   test("ST5: a zeroed checkpoint metadata file refuses resume") {

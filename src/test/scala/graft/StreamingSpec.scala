@@ -154,22 +154,25 @@ class StreamingSpec extends SparkSpec {
     assert(expected.except(sunk).count() == 0)
   }
 
-  test("stream micro-batch jobs: no broadcast job and at most 7 jobs per " +
-    "micro-batch over a one-file-per-trigger drain") {
+  test("stream micro-batch jobs: no broadcast job, no parquet write and at most 2 " +
+    "jobs per micro-batch over a one-file-per-trigger drain") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val root = "/tmp/graft_stream_jobs"
     Graft.rmTree(root)
     val t = Transcripts.load(spark, tiny)
     t.filter(col("turn_idx") % 2 === 0).coalesce(1).write.parquet(s"$root/in/f1")
     t.filter(col("turn_idx") % 2 =!= 0).coalesce(1).write.parquet(s"$root/in/f2")
-    // (query id, batch id, broadcast?) of every job a micro-batch runs
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Boolean)]()
+    // (query id, batch id, broadcast?, parquet write?) of every job a
+    // micro-batch runs
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Boolean, Boolean)]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = Option(e.properties).foreach { p =>
         Option(p.getProperty("streaming.sql.batchId")).foreach { b =>
-          // a broadcast job carries the job tag "broadcast exchange (runId ...)"
+          // a broadcast job carries the job tag "broadcast exchange (runId ...)";
+          // a parquet write's stages are named after its call site, "parquet at ..."
           jobs.add((p.getProperty("sql.streaming.queryId"), b.toLong,
-            Option(p.getProperty("spark.job.tags")).exists(_.contains("broadcast exchange"))))
+            Option(p.getProperty("spark.job.tags")).exists(_.contains("broadcast exchange")),
+            e.stageInfos.exists(_.name.startsWith("parquet at "))))
         }
       }
     }
@@ -188,8 +191,10 @@ class StreamingSpec extends SparkSpec {
     info(s"jobs per micro-batch: $perBatch")
     assert(perBatch.keySet == Set(0L, 1L), s"two micro-batches expected: $perBatch")
     assert(mine.count(_._3) == 0, s"micro-batches ran ${mine.count(_._3)} broadcast jobs")
-    // the sink exchange's map stage, the staged write, the lineage append
-    assert(perBatch.values.forall(_ <= 3), s"jobs per micro-batch: $perBatch")
+    // the driver writes the lineage rows: no job appends them
+    assert(mine.count(_._4) == 0, s"micro-batches ran ${mine.count(_._4)} parquet writes")
+    // the sink exchange's map stage and the staged write
+    assert(perBatch.values.forall(_ <= 2), s"jobs per micro-batch: $perBatch")
     assert(spark.sharedState.cacheManager.isEmpty, "a micro-batch left a cached frame")
   }
 

@@ -11,11 +11,12 @@ import org.apache.spark.sql.SparkSession
   *   graft.Main stream <inputDir> <outRoot> <checkpointDir> [--once]
   *
   * In batch mode the routed frame is written to all sinks once with
-  * lineage: `Sinks.writeAll` orders it by conversation and turn, writes
-  * every sink's lines in one Spark write into `<outRoot>/_staging/batch=0`
-  * and publishes them into `file/`, `logstash/` and `elastic/` (2 Spark
-  * jobs: the ordering exchange and the write; the driver writes the
-  * lineage parquet itself), each step in a single attempt; in stream mode
+  * lineage: `Sinks.writeAll` orders it by conversation and turn, has one
+  * job's tasks write every sink's lines into `<outRoot>/_staging/batch=0`
+  * and publishes the files they list into `file/`, `logstash/` and
+  * `elastic/` (2 Spark jobs: the ordering exchange and the write; the
+  * driver writes the lineage parquet itself), each step in a single
+  * attempt; in stream mode
   * `StreamingPipeline.start` runs until stopped (or drains once with
   * --once), planning its sink frame once per query: it refuses a damaged
   * checkpoint and retries a failed staged write, sink publish or lineage

@@ -1,22 +1,23 @@
 package graft.sinks
 
-import java.io.IOException
+import java.io.{IOException, OutputStream}
 import java.nio.file.{Files, Paths}
 import java.util.UUID
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 import org.apache.hadoop.fs.{FileSystem, Path, PathFilter}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, GraftBridge, Observation, Row, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import graft.operators.Routing
+import graft.operators.{Filters, Routing}
 
 /** The three sink shapes of the reference, re-expressed as partitioned
   * NDJSON writers (`Sinker` contract, `pkg/sink/sink.go:10-19`):
@@ -31,14 +32,17 @@ import graft.operators.Routing
   *
   * The reference writes serially to each sink per event (README.md:455,
   * "performance isn't that great"); here [[writeAll]] orders the routed
-  * batch by conversation and turn and writes every sink line in ONE
-  * partitioned text write into a batch-scoped staging directory
-  * (`root/_staging/batch=<id>`), then publishes the staged files into the
-  * sink directories by rename. The lineage rows and the per-sink rows and
-  * bytes ride on that write as one `observe()`; the driver writes the
-  * lineage rows itself, so a batch runs 2 Spark jobs. A stream plans its
-  * sink frame once per query ([[SinkPlan]]) and rebinds it to each
-  * micro-batch's rows.
+  * batch by conversation and turn, and ONE job's tasks write every sink
+  * line themselves, through the Hadoop file system, into their own
+  * attempt directories under a batch-scoped staging directory
+  * (`root/_staging/batch=<id>`): no Spark file writer and no commit
+  * protocol. The tasks return the files they wrote, the per-sink rows and
+  * bytes and the lineage rows; only the listed files are published into
+  * the sink directories by rename, and the driver writes the lineage rows
+  * itself, so a batch runs 2 Spark jobs. The sink files are named and
+  * laid out as Spark's `partitionBy(...).text` writer lays them out. A
+  * stream plans its sink frame once per query ([[SinkPlan]]) and rebinds
+  * it to each micro-batch's rows.
   */
 object Sinks {
 
@@ -97,30 +101,37 @@ object Sinks {
 
   /** W1 + the sink frame: each conversation co-located in one of
     * `spark.sql.shuffle.partitions` partitions and ordered by turn within
-    * it, projected to [[SinkColumns]], plus the elastic `bulk` pair
-    * ([[Routing.bulkFrame]]): every column the staged write reads. Column
-    * pruning keeps every other routed column out of the ordering exchange.
-    * The partition count is explicit so AQE keeps it: coalescing the
-    * exchange would change the write's task count and the sinks' file
-    * count. */
+    * it, with only [[SinkColumns]] in the ordering exchange (column pruning
+    * keeps every other routed column out of it), then projected to the
+    * rows the staged write reads: the file sink's `date_hour` key,
+    * `doc_json`, the elastic sink's `sink_index` key and `bulk` pair
+    * ([[Routing.bulkFrame]]), and the lineage's `src_file` and
+    * `src_offset`. The partition count is explicit so AQE keeps it:
+    * coalescing the exchange would change the write's task count and the
+    * sinks' file count. */
   private[graft] def sinkFrame(routed: DataFrame): DataFrame =
     Routing.bulkFrame(routed
       .repartition(routed.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
         col("conv_id"))
       .sortWithinPartitions("conv_id", "turn_idx")
       .select(SinkColumns.map(col): _*))
+      .select(dateHour.as("date_hour"), col("doc_json"), col("sink_index"), col("bulk"),
+        col("src_file"), col("src_offset"))
 
   /** [[sinkFrame]] over `routedOf` of a batch, planned once: the frame is
     * built and analysed over an empty placeholder with `schema`'s columns
     * in `spark`, and never optimized or run. [[bind]] puts a batch's rows
     * in the placeholder's place ([[GraftBridge.rebind]]) and returns a
     * frame of `spark`, so the batch's jobs run with `spark`'s artifacts
-    * and reuse the code it has already generated. */
+    * and reuse the code it has already generated; [[quarantine]] does the
+    * same for the batch's [[Filters.deadLetterRaw]] rows. */
   private[graft] final class SinkPlan(spark: SparkSession, schema: StructType)(
       routedOf: DataFrame => DataFrame) {
     private val leaf = GraftBridge.placeholder(spark, schema)
     private val template = sinkFrame(routedOf(leaf))
+    private lazy val deadLetters = Filters.deadLetterRaw(leaf)
     def bind(rows: DataFrame): DataFrame = GraftBridge.rebind(spark, template, leaf, rows)
+    def quarantine(rows: DataFrame): DataFrame = GraftBridge.rebind(spark, deadLetters, leaf, rows)
   }
 
   /** The rows of `root/lineage`: one per `src_file` of a batch. */
@@ -129,79 +140,125 @@ object Sinks {
     StructField("max_offset", LongType), StructField("n_events", LongType, nullable = false),
     StructField("batch_id", LongType, nullable = false)))
 
-  /** Per `src_file` of a sink frame: min and max `src_offset` (null when
-    * every offset of the file is null) and the row count, as ONE aggregate
-    * so the lineage rides on the staged write's `observe()`. The buffer
-    * is a Java map, so a null `src_file` is a group of its own (a Spark
-    * map key cannot be null); the result is an array of rows. */
-  private object FileLineage extends Aggregator[(String, java.lang.Long),
-      java.util.HashMap[String, Array[Long]], Seq[(String, Option[Long], Option[Long], Long)]] {
-    // per file: min offset, max offset, non-null offsets, rows
-    def zero: java.util.HashMap[String, Array[Long]] = new java.util.HashMap()
-    def reduce(b: java.util.HashMap[String, Array[Long]],
-               in: (String, java.lang.Long)): java.util.HashMap[String, Array[Long]] = {
-      val s = b.computeIfAbsent(in._1, _ => Array(Long.MaxValue, Long.MinValue, 0L, 0L))
-      if (in._2 != null) {
-        s(0) = math.min(s(0), in._2); s(1) = math.max(s(1), in._2); s(2) += 1
-      }
-      s(3) += 1
-      b
-    }
-    def merge(a: java.util.HashMap[String, Array[Long]],
-              b: java.util.HashMap[String, Array[Long]]): java.util.HashMap[String, Array[Long]] = {
-      b.forEach((f, y) => a.merge(f, y, (x, y) =>
-        Array(math.min(x(0), y(0)), math.max(x(1), y(1)), x(2) + y(2), x(3) + y(3))))
-      a
-    }
-    def finish(b: java.util.HashMap[String, Array[Long]])
-        : Seq[(String, Option[Long], Option[Long], Long)] =
-      b.asScala.toSeq.map { case (f, s) =>
-        (f, Option.when(s(2) > 0)(s(0)), Option.when(s(2) > 0)(s(1)), s(3))
-      }
-    // built once: ExpressionEncoder() derives its serializer by reflection
-    @transient lazy val bufferEncoder: Encoder[java.util.HashMap[String, Array[Long]]] =
-      Encoders.kryo
-    @transient lazy val outputEncoder: Encoder[Seq[(String, Option[Long], Option[Long], Long)]] =
-      ExpressionEncoder()
+  /** The rows of one `src_file` that a task wrote: the least and greatest
+    * non-null `src_offset`, how many offsets were not null, and the rows. */
+  private final case class Span(file: String, min: Long, max: Long, offsets: Long, rows: Long) {
+    def +(o: Span): Span =
+      Span(file, math.min(min, o.min), math.max(max, o.max), offsets + o.offsets, rows + o.rows)
   }
 
-  private val fileLineage =
-    udaf(FileLineage, Encoders.tuple(Encoders.STRING, Encoders.LONG))
+  /** What one task attempt of the staged write wrote: the files in its
+    * `attempt` directory, each named by its path under the sink root, the
+    * bytes of its `doc_json` lines (the file and logstash sinks got them
+    * each) and of its bulk lines, and its rows as [[Span]]s. */
+  private final case class Staged(attempt: String, files: Seq[String], docBytes: Long,
+                                  bulkBytes: Long, lineage: Seq[Span])
 
-  /** UTF-8 bytes of a text-sink line, its newline included. */
-  private def lineBytes(c: Column): Column = sum(coalesce(octet_length(c), lit(0)) + 1)
+  /** The directory of `column`'s value `key`, named as Spark's
+    * `partitionBy` writer names it: a null or empty key is Hive's default
+    * partition, any other is path-escaped. */
+  private def keyDir(column: String, key: UTF8String): String =
+    if (key == null || key.numBytes == 0) s"$column=${ExternalCatalogUtils.DEFAULT_PARTITION_NAME}"
+    else s"$column=${ExternalCatalogUtils.escapePathName(key.toString)}"
 
-  /** The staged write: every row of the [[sinkFrame]] `frame` as its three sink
-    * lines — (`file`, its event hour, `doc_json`), (`logstash`, no key,
-    * `doc_json`) and (`elastic`, `sink_index`, the bulk pair) — in one
-    * text write partitioned by sink and key, overwriting `dir`. The writer
-    * sorts each task's lines by (sink, key); its in-memory sort is stable,
-    * so each file keeps the sink frame's turn order, as the per-sink
-    * writes of the cached frame did. Returns what the write's
-    * `observe()` counted: `rows`, `doc_bytes`, `bulk_bytes` and `lineage`
-    * ([[FileLineage]]). */
-  private def stage(frame: DataFrame, dir: String): Map[String, Any] = {
-    val obs = Observation()
-    def line(sink: String, key: Column, value: String): Column =
-      struct(lit(sink).as("sink"), key.as("key"), col(value).as("value"))
-    frame
-      .observe(obs, count(lit(1)).as("rows"), lineBytes(col("doc_json")).as("doc_bytes"),
-        lineBytes(col("bulk")).as("bulk_bytes"),
-        fileLineage(col("src_file"), col("src_offset")).as("lineage"))
-      .select(explode(array(line("file", dateHour, "doc_json"),
-        line("logstash", lit(null).cast(StringType), "doc_json"),
-        line("elastic", col("sink_index"), "bulk"))).as("line"))
-      .select("line.*")
-      .write.mode("overwrite").partitionBy("sink", "key").text(dir)
-    obs.get
+  /** A task of the staged write: its partition of a [[sinkFrame]] as sink
+    * lines — each row's `doc_json` into the file sink under its
+    * `date_hour` and into the logstash sink, and its `bulk` pair into the
+    * elastic sink under its `sink_index` — written through the root's
+    * Hadoop file system (`fs.create`, with `conf` broadcast once per
+    * write) into a directory of its own attempt under `dir`. Each
+    * (sink, key) gets one buffered file, named as Spark's writer names the
+    * task's file (`part-<partition>-<uuid>.c000.txt`), with its lines in
+    * the frame's order. A line is its text and a newline; a null is the
+    * newline alone, as in Spark's text writer. */
+  private final class StageTask(conf: GraftBridge.SharedConf, dir: String, uuid: String)
+      extends ((Int, Iterator[InternalRow]) => Iterator[Staged]) with Serializable {
+    def apply(partition: Int, rows: Iterator[InternalRow]): Iterator[Staged] = {
+      val attempt = s"attempt=${TaskContext.get().taskAttemptId()}"
+      val base = new Path(dir, attempt)
+      val fs = base.getFileSystem(conf.value)
+      val name = f"part-$partition%05d-$uuid.c000.txt"
+      val files = ArrayBuffer[String]()
+      val lineage = new java.util.HashMap[UTF8String, Array[Long]]()
+      var docBytes, bulkBytes = 0L
+      def text(r: InternalRow, i: Int): UTF8String = if (r.isNullAt(i)) null else r.getUTF8String(i)
+      Using.Manager { use =>
+        def open(sinkDir: String): OutputStream = {
+          files += s"$sinkDir/$name"
+          use(fs.create(new Path(base, files.last), false))
+        }
+        val hours, indices = new java.util.HashMap[UTF8String, OutputStream]()
+        def keyed(streams: java.util.HashMap[UTF8String, OutputStream], sink: String,
+                  column: String, key: UTF8String): OutputStream = {
+          val known = streams.get(key)
+          if (known != null) known
+          else {
+            val out = open(s"$sink/${keyDir(column, key)}")
+            streams.put(if (key == null) null else key.copy(), out)
+            out
+          }
+        }
+        lazy val logstash = open("logstash")
+        def line(out: OutputStream, value: UTF8String): Long = {
+          if (value != null) value.writeTo(out)
+          out.write('\n')
+          if (value == null) 1L else value.numBytes + 1L
+        }
+        rows.foreach { r =>
+          val doc = text(r, 1)
+          docBytes += line(keyed(hours, "file", "date_hour", text(r, 0)), doc)
+          line(logstash, doc)
+          bulkBytes += line(keyed(indices, "elastic", "sink_index", text(r, 2)), text(r, 3))
+          val file = text(r, 4)
+          var s = lineage.get(file)
+          if (s == null) {
+            s = Array(Long.MaxValue, Long.MinValue, 0L, 0L)
+            lineage.put(if (file == null) null else file.copy(), s)
+          }
+          if (!r.isNullAt(5)) {
+            val offset = r.getLong(5)
+            s(0) = math.min(s(0), offset); s(1) = math.max(s(1), offset); s(2) += 1
+          }
+          s(3) += 1
+        }
+      }.get
+      val spans = lineage.asScala.toSeq.map { case (f, s) =>
+        Span(Option(f).map(_.toString).orNull, s(0), s(1), s(2), s(3))
+      }
+      Iterator.single(Staged(attempt, files.toSeq, docBytes, bulkBytes, spans))
+    }
   }
 
-  /** The lineage rows of one batch from its observed [[FileLineage]],
-    * ordered by `src_file` (a null file first). */
-  private def lineageRows(files: Seq[Row], batchId: Long): Seq[InternalRow] =
-    files.sortBy(r => Option(r.getString(0))).map(r =>
-      InternalRow(Option(r.getString(0)).map(UTF8String.fromString).orNull,
-        r.get(1), r.get(2), r.get(3), batchId))
+  /** The name of the staged write's SQL execution, before its staging
+    * directory: `"graft.sinks.stage <dir>"`. */
+  private[graft] val StageExecution = "graft.sinks.stage"
+
+  /** The staged write: every row of the [[sinkFrame]] `frame` written by
+    * [[StageTask]]s into `dir`, as one SQL execution ([[StageExecution]])
+    * of two jobs — the ordering exchange's map stage and the tasks that
+    * write the lines. Returns each task's [[Staged]]: only the files a
+    * result lists are published, so what a failed or superseded attempt
+    * left under `dir` never reaches a sink. */
+  private def stage(frame: DataFrame, dir: Path): Seq[Staged] = {
+    val spark = frame.sparkSession
+    val uuid = UUID.randomUUID.toString
+    GraftBridge.withRows(frame, s"$StageExecution $dir") { rows =>
+      val conf = new GraftBridge.SharedConf(spark, spark.sessionState.newHadoopConf())
+      try rows.mapPartitionsWithIndex(new StageTask(conf, dir.toString, uuid)).collect().toSeq
+      finally conf.destroy()
+    }
+  }
+
+  /** The lineage rows of one batch from its tasks' [[Span]]s, one per
+    * `src_file`, ordered by file (a null file first); the offsets are null
+    * when every offset of the file is. */
+  private def lineageRows(tasks: Seq[Staged], batchId: Long): Seq[InternalRow] =
+    tasks.flatMap(_.lineage).groupMapReduce(_.file)(identity)(_ + _).values.toSeq
+      .sortBy(s => Option(s.file)).map { s =>
+        def offset(v: Long): Any = if (s.offsets > 0) v else null
+        InternalRow(Option(s.file).map(UTF8String.fromString).orNull, offset(s.min), offset(s.max),
+          s.rows, batchId)
+      }
 
   /** Writes `rows` as one [[LineageSchema]] parquet file into `dir` with
     * `ParquetFileFormat`'s own writer, on the driver: the rows are already
@@ -219,38 +276,31 @@ object Sinks {
 
   private val visible: PathFilter = p => !p.getName.startsWith(".") && !p.getName.startsWith("_")
 
-  /** Renames the files of `from` into `to`, which `mkdirs` creates with
-    * the umask, as a write's own committer does. A rename carries a
-    * file's `.crc` along. Only the files still in `from` move, so a repeat
-    * after a failure moves each file once. */
-  private def moveFiles(fs: FileSystem, from: Path, to: Path): Unit = {
-    if (!fs.mkdirs(to)) throw new IOException(s"cannot create $to")
-    fs.listStatus(from, visible).foreach { f =>
-      val dst = new Path(to, f.getPath.getName)
-      if (!fs.rename(f.getPath, dst)) throw new IOException(s"cannot move ${f.getPath} to $dst")
+  /** Renames each (from, to) pair's file, into directories that `mkdirs`
+    * creates with the umask, as a write's own committer does. A rename
+    * carries a file's `.crc` along. Only the files still at `from` move,
+    * so a repeat after a failure moves each file once. */
+  private def move(fs: FileSystem, files: Seq[(Path, Path)]): Unit = {
+    files.map(_._2.getParent).distinct.foreach { d =>
+      if (!fs.mkdirs(d)) throw new IOException(s"cannot create $d")
+    }
+    files.foreach { case (from, to) =>
+      if (fs.exists(from) && !fs.rename(from, to)) throw new IOException(s"cannot move $from to $to")
     }
   }
 
-  /** Moves `sink`'s staged part files under `staged` into its directory
-    * under `root` — `file/date_hour=K`, `logstash` or
-    * `elastic/sink_index=K` ([[moveFiles]]) — and writes the sink's
-    * `_SUCCESS`. */
-  private def publish(fs: FileSystem, staged: Path, root: Path, sink: String): Unit = {
-    val from = new Path(staged, s"sink=$sink")
-    val keyDirs = if (fs.exists(from)) fs.listStatus(from, visible).toSeq.map(_.getPath) else Nil
-    keyDirs.foreach { k =>
-      val key = k.getName.stripPrefix("key=")
-      val to = sink match {
-        case "file" => new Path(root, s"file/date_hour=$key")
-        case "logstash" => new Path(root, "logstash")
-        case "elastic" => new Path(root, s"elastic/sink_index=$key")
-      }
-      moveFiles(fs, k, to)
-    }
+  /** Moves `sink`'s files that `tasks` list from their attempt directories
+    * under `staged` to the same paths under `root` — `file/date_hour=K`,
+    * `logstash` or `elastic/sink_index=K` ([[move]]) — and writes the
+    * sink's `_SUCCESS`. */
+  private def publish(fs: FileSystem, staged: Path, root: Path, sink: String,
+                      tasks: Seq[Staged]): Unit = {
+    move(fs, for (t <- tasks; f <- t.files if f.startsWith(s"$sink/"))
+      yield new Path(staged, s"${t.attempt}/$f") -> new Path(root, f))
     fs.create(new Path(root, s"$sink/_SUCCESS"), true).close()
   }
 
-  /** Writes all sinks of the routed batch with ONE Spark write; this is
+  /** Writes all sinks of the routed batch with ONE staged write; this is
     * the one place of the W1 turn ordering: [[write]] of the routed
     * batch's [[sinkFrame]]. */
   def writeAll(routed: DataFrame, root: String, batchId: Long = 0L,
@@ -261,13 +311,14 @@ object Sinks {
     * two Spark jobs: the ordering exchange's map stage and the staged
     * write.
     *
-    *  1. Stage: the frame's rows as file, logstash and elastic lines in
-    *     one partitioned text write into `root/_staging/batch=<id>`
-    *     (overwritten), with an `observe()` that counts the lineage and
-    *     the per-sink rows and bytes on the same pass.
-    *  1. Publish: each sink's staged files are renamed into `root/file`,
-    *     `root/logstash` and `root/elastic`, each with its `_SUCCESS`.
-    *  1. Lineage: the driver writes the observed rows per source file as
+    *  1. Stage: the write's tasks write the frame's rows as file, logstash
+    *     and elastic lines into their own attempt directories under
+    *     `root/_staging/batch=<id>` ([[stage]]) and return the files they
+    *     wrote, their per-sink rows and bytes and their lineage.
+    *  1. Publish: each sink's listed files are renamed into `root/file`,
+    *     `root/logstash` and `root/elastic`, each with its `_SUCCESS`; a
+    *     file no task result lists stays behind.
+    *  1. Lineage: the driver writes the returned rows per source file as
     *     one parquet file into the staging directory ([[stageLineage]])
     *     and renames it into `root/lineage` with its `_SUCCESS` (ST2/A7:
     *     sink write precedes lineage commit = at-least-once, like the
@@ -278,24 +329,25 @@ object Sinks {
     * retried on their own, up to `maxAttempts` tries with
     * [[graft.streaming.Reliability.withRetry]]'s backoff from a 1 s base
     * (`sleep` waits it out) — the reference retries only the failed write
-    * too (`pkg/ls2/write.go:52-98`). A repeated staged write replaces its
-    * own staging directory, a repeated publish moves only the files still
-    * staged and a repeated lineage append writes its file once, so no sink
-    * and no lineage row is written twice.
+    * too (`pkg/ls2/write.go:52-98`). A repeated staged write writes new
+    * attempt directories and publishes only their files, a repeated
+    * publish moves only the files still staged and a repeated lineage
+    * append writes its file once, so no sink and no lineage row is
+    * written twice.
     *
-    * Returns each sink's rows and bytes, from the staged write's
-    * `observe()`. */
+    * Returns each sink's rows and bytes, as the staged write's tasks
+    * counted them. */
   private[graft] def write(frame: DataFrame, root: String, batchId: Long, maxAttempts: Int,
                            sleep: Long => Unit = Thread.sleep): Map[String, Written] = {
     val spark = frame.sparkSession
     def retried[T](op: => T): T =
       graft.streaming.Reliability.withRetry(maxAttempts, baseMs = 1000L, sleep = sleep)(_ => op)
     val staged = new Path(s"$root/_staging/batch=$batchId")
-    val seen = retried(stage(frame, staged.toString))
+    val tasks = retried(stage(frame, staged))
     val fs = staged.getFileSystem(spark.sessionState.newHadoopConf())
     val rootPath = new Path(root)
-    SinkNames.foreach(sink => retried(publish(fs, staged, rootPath, sink)))
-    val lineage = lineageRows(seen("lineage").asInstanceOf[Seq[Row]], batchId)
+    SinkNames.foreach(sink => retried(publish(fs, staged, rootPath, sink, tasks)))
+    val lineage = lineageRows(tasks, batchId)
     val stagedLineage = new Path(staged, "lineage")
     var lineageStaged = false
     retried {
@@ -304,15 +356,17 @@ object Sinks {
         stageLineage(spark, lineage, stagedLineage)
         lineageStaged = true
       }
-      moveFiles(fs, stagedLineage, new Path(rootPath, "lineage"))
-      fs.create(new Path(rootPath, "lineage/_SUCCESS"), true).close()
+      val published = new Path(rootPath, "lineage")
+      move(fs, fs.listStatus(stagedLineage, visible).toSeq.map(f =>
+        f.getPath -> new Path(published, f.getPath.getName)))
+      fs.create(new Path(published, "_SUCCESS"), true).close()
     }
     fs.delete(staged, true)
     if (fs.listStatus(staged.getParent).isEmpty) fs.delete(staged.getParent, false)
-    val rows = seen("rows").asInstanceOf[Long]
-    def bytes(k: String) = Option(seen(k)).fold(0L)(_.asInstanceOf[Long])
-    Map("file" -> Written(rows, bytes("doc_bytes")), "logstash" -> Written(rows, bytes("doc_bytes")),
-      "elastic" -> Written(rows, bytes("bulk_bytes")))
+    val rows = tasks.flatMap(_.lineage).map(_.rows).sum
+    val (docBytes, bulkBytes) = (tasks.map(_.docBytes).sum, tasks.map(_.bulkBytes).sum)
+    Map("file" -> Written(rows, docBytes), "logstash" -> Written(rows, docBytes),
+      "elastic" -> Written(rows, bulkBytes))
   }
 
   /** A1/A2 as observe() metrics: events-written count + byte totals

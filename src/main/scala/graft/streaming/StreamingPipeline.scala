@@ -17,19 +17,20 @@ import graft.sinks.Sinks
   *    `pkg/status/status.go:273-363`) — resumable, at-least-once into the
   *    sinks exactly like the reference (sink write precedes state commit).
   *  - transforms: the SAME column pipeline as batch (Pipeline.transform),
-  *    planned once per query: its sink frame is analysed over a
-  *    placeholder of the source's schema (`Sinks.SinkPlan`) and each
+  *    planned once per query: its sink frame and quarantine are analysed
+  *    over a placeholder of the source's schema (`Sinks.SinkPlan`) and each
   *    micro-batch's rows are bound in the placeholder's place, in the
   *    session passed to [[start]], so a micro-batch plans only its own
   *    rows and a new query's jobs reuse the code earlier queries
   *    generated. Its constant lookups are expressions, so a micro-batch
   *    runs no broadcast job.
   *  - sinks: `Sinks.write`, as in batch: the per-conversation ordering
-  *    sort (W1), then ONE text write of the K1/K2/K3 NDJSON lines into
-  *    `<outRoot>/_staging/batch=<id>`, published into the sink directories
-  *    by rename, and per-batch lineage rows `(src_file, offset range,
-  *    count, batch_id)` observed on that write (A7/E11) and written by the
-  *    driver — 2 Spark jobs per micro-batch. A failed staged write, sink
+  *    sort (W1), then ONE job whose tasks write the K1/K2/K3 NDJSON lines
+  *    into `<outRoot>/_staging/batch=<id>` and return the files they
+  *    wrote and the per-batch lineage rows `(src_file, offset range,
+  *    count, batch_id)` (A7/E11); the listed files are published into the
+  *    sink directories by rename and the driver writes the lineage — 2
+  *    Spark jobs per micro-batch. A failed staged write, sink
   *    publish or lineage append is retried alone (ST8).
   *
   * [[start]] is the one entry point: `graft.Main stream`, the q50/q299/q301
@@ -111,8 +112,7 @@ object StreamingPipeline {
         // BEFORE the happy path so a sink failure can't lose them; the
         // batch=<id> dir overwrite keeps replays effectively-once
         quarantineDir.foreach { qd =>
-          graft.operators.Filters.deadLetterRaw(batch)
-            .write.mode("overwrite").parquet(s"$qd/batch=$batchId")
+          plan.quarantine(batch).write.mode("overwrite").parquet(s"$qd/batch=$batchId")
         }
         reloader.foreach(_.poll().foreach(cfg => plan = sinkPlan(Some(cfg))))
         Sinks.write(plan.bind(batch), outRoot, batchId, maxAttempts = 5)

@@ -8,7 +8,6 @@ import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
-import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions.col
@@ -17,7 +16,7 @@ import graft.sources.Transcripts
 import graft.streaming.StreamingPipeline
 
 /** W1 at the sinks: `Sinks.writeAll` writes every sink file with each
-  * conversation's lines in turn order, in one Spark write whose only
+  * conversation's lines in turn order, in one staged write whose only
   * exchange shuffles the columns the sinks read, with no cache. */
 class SinkFrameSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
@@ -74,10 +73,10 @@ class SinkFrameSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     Transcripts.load(spark, tiny).write.parquet(s"$root/plan_in")
     val routed = Pipeline.transform(
       spark.read.schema(StreamingPipeline.schema).parquet(s"$root/plan_in"), spark)
-    val plans = new ConcurrentLinkedQueue[QueryExecution]()
+    val plans = new ConcurrentLinkedQueue[(String, QueryExecution)]()
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        plans.add(qe)
+        plans.add(funcName -> qe)
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     walk(s"$root/plan").reverse.foreach(Files.delete)
@@ -86,12 +85,10 @@ class SinkFrameSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       Sinks.writeAll(routed, s"$root/plan")
       ListenerBusDrain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
-    // the staged text write: the one query that reads the routed batch
+    // the staged write: the one query that reads the routed batch
     val writes = plans.asScala.toSeq.collect {
-      case qe if (qe.logical match {
-        case c: InsertIntoHadoopFsRelationCommand => c.outputPath.toString.contains("/_staging/")
-        case _ => false
-      }) => qe.executedPlan
+      case (name, qe) if name.startsWith(s"${Sinks.StageExecution} ") &&
+        name.contains("/_staging/") => qe.executedPlan
     }
     assert(writes.size == 1, s"${writes.size} staged writes")
     val exchanges = collect(writes.head) { case e: ShuffleExchangeExec => e }
@@ -101,7 +98,7 @@ class SinkFrameSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(shuffled.toSet.subsetOf(allowed), s"shuffled: $shuffled")
     assert(routed.columns.toSet.diff(allowed).nonEmpty) // the routed frame is wider
     assert(collect(writes.head) { case s: InMemoryTableScanExec => s }.isEmpty)
-    assert(plans.asScala.forall(_.optimizedPlan.collectFirst { case r: InMemoryRelation => r }.isEmpty),
+    assert(plans.asScala.forall(_._2.optimizedPlan.collectFirst { case r: InMemoryRelation => r }.isEmpty),
       "no query of writeAll reads a cached relation")
     assert(!Files.exists(Paths.get(s"$root/plan/_staging")))
   }

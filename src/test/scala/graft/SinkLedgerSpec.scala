@@ -11,16 +11,16 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.sinks.Sinks
 
-/** What `Sinks.writeAll` observes on its one staged write: the lineage
-  * rows per source file, equal to the `groupBy` twin below and written by
-  * the driver as one parquet file, and each sink's rows and bytes, equal
-  * to what lands on disk. */
+/** What the tasks of `Sinks.writeAll`'s one staged write return: the
+  * lineage rows per source file, equal to the `groupBy` twin below and
+  * written by the driver as one parquet file, and each sink's rows and
+  * bytes, equal to what lands on disk. */
 class SinkLedgerSpec extends SparkSpec {
 
   private val root = "/tmp/graft_sink_ledger_spec"
 
-  /** The lineage `writeAll` wrote before its rows rode on the staged
-    * write's `observe()`: one `groupBy` job over the sink frame. */
+  /** The lineage `writeAll` wrote before the staged write's tasks
+    * returned its rows: one `groupBy` job over the sink frame. */
   private def lineageTwin(frame: DataFrame, batchId: Long): DataFrame =
     frame.groupBy("src_file")
       .agg(min("src_offset").as("min_offset"), max("src_offset").as("max_offset"),

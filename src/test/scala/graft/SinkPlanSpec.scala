@@ -82,17 +82,26 @@ class SinkPlanSpec extends SparkSpec {
     }
   }
 
-  test("generated code is reused across queries: a second drain compiles no class") {
-    val dir = s"$root/codegen"
-    Graft.rmTree(dir)
-    Transcripts.load(spark, tiny).coalesce(1).write.parquet(s"$dir/in")
-    def drain(n: Int): Unit =
-      StreamingPipeline.start(spark, s"$dir/in", s"$dir/out$n", s"$dir/ckpt$n").awaitTermination()
-    drain(1)
-    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    drain(2)
-    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
-    assert(compiled == 0, s"the second drain compiled $compiled classes")
-    assert(sinkFilesByWrite(s"$dir/out2") == sinkFilesByWrite(s"$dir/out1"))
-  }
+  for (quarantine <- Seq(false, true))
+    test("generated code is reused across queries: a second drain " +
+      (if (quarantine) "with a quarantine " else "") + "compiles no class") {
+      val dir = s"$root/codegen_$quarantine"
+      Graft.rmTree(dir)
+      Transcripts.load(spark, tiny)
+        .withColumn("text", when(col("turn_idx") % 50 === 7, lit("")).otherwise(col("text")))
+        .coalesce(1).write.parquet(s"$dir/in")
+      def drain(n: Int): Unit =
+        StreamingPipeline.start(spark, s"$dir/in", s"$dir/out$n", s"$dir/ckpt$n",
+          quarantineDir = Option.when(quarantine)(s"$dir/dlq$n")).awaitTermination()
+      drain(1)
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      drain(2)
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      assert(compiled == 0, s"the second drain compiled $compiled classes")
+      assert(sinkFilesByWrite(s"$dir/out2") == sinkFilesByWrite(s"$dir/out1"))
+      if (quarantine) {
+        val dlq = rows(spark.read.parquet(s"$dir/dlq2/batch=0"))
+        assert(dlq.nonEmpty && dlq == rows(spark.read.parquet(s"$dir/dlq1/batch=0")))
+      }
+    }
 }

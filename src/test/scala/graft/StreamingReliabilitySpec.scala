@@ -7,7 +7,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Alias
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
-import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.operators.Routing
@@ -107,16 +106,13 @@ class StreamingReliabilitySpec extends SparkSpec {
     * (`GraftBridge.rebind`), which name the plan's template. */
   private final class TemplateProbe(sinks: String) extends QueryExecutionListener {
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[Long])]()
-    private val staged = s"$sinks/_staging/batch=(\\d+)".r.unanchored
+    private val staged = s"\\Q${Sinks.StageExecution} $sinks/_staging/batch=\\E(\\d+)".r
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-      qe.logical match {
-        case c: InsertIntoHadoopFsRelationCommand => c.outputPath.toString match {
-          case staged(b) => c.query.collectFirst {
-            case Project(list, _: LogicalRDD) if list.forall(_.isInstanceOf[Alias]) =>
-              list.map(_.exprId.id)
-          }.foreach(ids => seen.add(b.toLong -> ids))
-          case _ =>
-        }
+      funcName match {
+        case staged(b) => qe.logical.collectFirst {
+          case Project(list, _: LogicalRDD) if list.forall(_.isInstanceOf[Alias]) =>
+            list.map(_.exprId.id)
+        }.foreach(ids => seen.add(b.toLong -> ids))
         case _ =>
       }
     override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()

@@ -100,10 +100,6 @@ object Bench {
         if (cpus == maxLevel) {
           val in = BenchLeaves.inputs(spark, sfDir, factor, cpus, input, routed)
           BenchLeaves.all.foreach(leaf => leaf.run(in)(rec(leaf.name)))
-
-          // lmScore/convNearDup persist their reused intermediates;
-          // drop them so repeated bench runs don't accumulate cache
-          spark.catalog.clearCache()
         }
       } finally spark.stop()
     }

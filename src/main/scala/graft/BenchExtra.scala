@@ -126,7 +126,6 @@ object BenchExtra {
         clock() // warmup (codegen + JIT)
         Seq.fill(samples)(clock()).min
       }
-      spark.catalog.clearCache()
       println(f"[extra] $name ${results(name)}%.3f")
     }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }

@@ -108,8 +108,9 @@ object BenchLeaves {
   /** The frame is built before the clock starts; the clock covers its
     * noop write. */
   case object NoopWrite extends Timing
-  /** The clock covers the build too: driver-loop builders run their own
-    * jobs while building. */
+  /** The clock covers the build too: driver-loop builders, operators that
+    * materialize their result inside a [[Graft.cached]] scope and
+    * operators that sample their input run their own jobs while building. */
   case object EagerBuild extends Timing
 
   /** A leaf opened on its inputs: `build` makes the frame to time and
@@ -168,8 +169,8 @@ object BenchLeaves {
     // corpus-shaping ops: tf-idf over the replicated docs; curation on
     // the 10× distinct-text corpus (the LSH + cluster stages do real
     // work); sessionization over the full staged transcript corpus
-    noop("tfidf")(in => text.TfIdf.topTerms(in.docs)),
-    noop("curation")(in => dedup.Curation.curate(in.docs10)),
+    eager("tfidf")(in => text.TfIdf.topTerms(in.docs)),
+    eager("curation")(in => dedup.Curation.curate(in.docs10)),
     noop("sessionize")(in => operators.Sessionize.sessionStats(in.input)),
 
     // round-3 corpus ops: hot-shingle aggregation + join-back
@@ -177,7 +178,7 @@ object BenchLeaves {
     // (dup_spans), and the two-pass Lloyd step on the vectors
     noop("boilerplate")(in => text.Boilerplate.stats(in.docs)),
     noop("dup_spans")(in => text.Boilerplate.dupSpanCoverage(in.docs)),
-    noop("kmeans_step")(in => ann.Centroids.kmeansIteration(in.vecs)),
+    eager("kmeans_step")(in => ann.Centroids.kmeansIteration(in.vecs)),
 
     // round-4 ops: SFT rendering over the full staged transcripts
     // (one conv_id exchange, maxTurns-bounded groups), boilerplate
@@ -189,7 +190,7 @@ object BenchLeaves {
     // posting-list selectivity)
     noop("chat_render")(in => operators.Conversations.renderChat(in.input)),
     noop("boiler_scrub")(in => text.Boilerplate.scrub(in.docs)),
-    noop("bm25_topk")(in => text.Bm25.topK(in.docs10, queryMod = 100003)),
+    eager("bm25_topk")(in => text.Bm25.topK(in.docs10, queryMod = 100003)),
 
     // round-5 ops: conversation-level dedup over the full staged
     // transcripts (conv-key agg + 128-bit-keyed group), per-lang
@@ -197,8 +198,8 @@ object BenchLeaves {
     // broadcast bucket join-back), and the SemDeDup verdict over
     // the embeddings (multi-probe LSH pair probe)
     noop("conv_dedup")(in => operators.Conversations.convDedup(in.input)),
-    noop("quality_deciles")(in => text.CorpusOps.qualityDeciles(in.docs)),
-    noop("semantic_dedup")(in => ann.Similarity.semanticDedup(in.vecs)),
+    eager("quality_deciles")(in => text.CorpusOps.qualityDeciles(in.docs)),
+    eager("semantic_dedup")(in => ann.Similarity.semanticDedup(in.vecs)),
 
     // round-6 ops: sketch aggregates over the parsed stream (the
     // bounded-state alternatives to exact percentiles/distincts),
@@ -208,19 +209,19 @@ object BenchLeaves {
     // hot conversation would otherwise collect 1M turns in one row)
     noop("hll_sketch")(in => operators.Sketches.hllDistinct(in.parsedB)),
     noop("log_hist")(in => operators.Sketches.logHistPercentiles(in.parsedB)),
-    noop("lm_score")(in => text.LangModel.lmScore(in.docs)),
+    eager("lm_score")(in => text.LangModel.lmScore(in.docs)),
     // near-dup over the UNREPLICATED slice: the 50× bench replicas
     // are exact copies, so every conversation sits in a 50-clique
     // and the (correct) all-pairs output within cliques is
     // quadratic by construction — a staging artifact, not the
     // operator's shape on a real corpus
-    noop("conv_neardup")(in => operators.Conversations.convNearDup(
+    eager("conv_neardup")(in => operators.Conversations.convNearDup(
       in.input.filter((col("conv_id").endsWith("_r0") ||
         col("conv_id") === "conv_hot") && col("turn_idx") < 256))),
     // round-7 ops: the Bloom prefilter over the replicated docs
     // (shingle explode → 8 KB word table → map-only probe) and the
     // z-order layout stats (pure map + one ≤64-row aggregate)
-    noop("bloom_prefilter")(in => operators.Sketches.bloomPrefilter(in.docs)),
+    eager("bloom_prefilter")(in => operators.Sketches.bloomPrefilter(in.docs)),
     noop("zorder_layout")(in => operators.Layout.layoutStats(in.docs)),
     // tokenizer APPLY (explode + 5 fold levels + one agg) and the
     // one-Expand rollup report
@@ -229,7 +230,7 @@ object BenchLeaves {
     // round-8 ops: DSIR selection (bounded bucket table + broadcast
     // probe) and the inverted-index build (the vocabulary-sized
     // posting-stats artifact)
-    noop("dsir_weights")(in => text.Selection.dsirWeights(in.docs)),
+    eager("dsir_weights")(in => text.Selection.dsirWeights(in.docs)),
     noop("postings")(in => text.Bm25.postings(in.docs)),
 
     // round-9 ops: weighted PageRank over the tool-transition graph
@@ -255,7 +256,7 @@ object BenchLeaves {
     noop("edit_dedup")(in => dedup.EditDedup.editPairs(in.docs10)),
     // triangle counting on the login co-occurrence graph (corpus pass
     // + aggregate-sized wedge join)
-    noop("triangles")(in => graph.Graphs.loginTriangles(in.parsedB)),
+    eager("triangles")(in => graph.Graphs.loginTriangles(in.parsedB)),
 
     // round-10 ops: the generic as-of join (tool turns pick up the
     // latest change-log row at or before their ts — one key exchange
@@ -297,9 +298,9 @@ object BenchLeaves {
     // cluster-balanced sample, and the 2-epoch shuffle plan
     noop("fuzzy_decontam")(in => text.Decontaminate.fuzzyFlags(in.docs)),
     noop("source_overlap")(in => operators.Sketches.sourceOverlapMatrix(in.docs)),
-    noop("quality_z")(in => text.CorpusOps.qualityZ(in.docs)),
+    eager("quality_z")(in => text.CorpusOps.qualityZ(in.docs)),
     noop("dup_histogram")(in => dedup.Dedup.dupSizeHistogram(in.docs)),
-    noop("retrieval_eval")(in => text.Bm25.retrievalEval(in.docs10, queryMod = 100003)),
+    eager("retrieval_eval")(in => text.Bm25.retrievalEval(in.docs10, queryMod = 100003)),
     noop("cluster_sample")(in =>
       operators.Sampling.clusterBalancedSample(in.vecs, budget = 1000L)),
     noop("epoch_shuffle")(in => operators.TrainingExport.epochShuffle(in.docs, epochs = 2)),
@@ -327,7 +328,7 @@ object BenchLeaves {
     // the (name, hour) lag window + per-name moment agg over the
     // full parsed bench corpus; ivf_separation is the broadcast
     // n×k scan with the map-side top-2 collapse.
-    noop("vocab_drift")(in => text.CorpusOps.vocabDrift(in.docs)),
+    eager("vocab_drift")(in => text.CorpusOps.vocabDrift(in.docs)),
     noop("token_concentration")(in => text.CorpusOps.tokenConcentration(in.docs10)),
     noop("inter_arrival")(in => operators.Aggregates.interArrival(in.parsedB)),
     noop("ivf_separation")(in => ann.Similarity.separationMargin(in.vecs)),
@@ -338,7 +339,7 @@ object BenchLeaves {
     // window (lag of role + distinct token set) + conv hash-agg.
     noop("lateness_profile")(in => operators.Aggregates.latenessProfile(in.parsedB)),
     noop("tool_pareto")(in => operators.Conversations.toolCostPareto(in.input)),
-    noop("reword_retries")(in => operators.Conversations.rewordRetries(in.input)),
+    eager("reword_retries")(in => operators.Conversations.rewordRetries(in.input)),
 
     // round-16 ops: the DQ rule battery is one compiled map pass +
     // 1-row agg; star CC is a driver fixpoint loop (timed as a build,
@@ -352,7 +353,7 @@ object BenchLeaves {
     }),
     // round-17: both detectors run on the (name, day) aggregate —
     // the corpus cost is the one dailyCounts hash-agg each.
-    noop("volume_trend")(in => operators.Aggregates.volumeTrend(in.parsedB)),
+    eager("volume_trend")(in => operators.Aggregates.volumeTrend(in.parsedB)),
     noop("cusum")(in => operators.Aggregates.cusumChangepoints(in.parsedB)),
     // round-18: the phrase probe re-shuffles only the anchor
     // sliver; KS runs one corpus hash-agg into tiny CDF windows.
@@ -363,21 +364,21 @@ object BenchLeaves {
     // count by construction — a staging artifact, not the
     // operator's shape on a real corpus (measured 85 s replicated
     // vs ~4 s unreplicated with identical plans).
-    noop("phrase_search")(in =>
+    eager("phrase_search")(in =>
       text.Bm25.phraseSearch(in.docs.filter(col("doc_id") < 1000000L))),
-    noop("ks_drift")(in => operators.Aggregates.ksDrift(in.parsedB)),
+    eager("ks_drift")(in => operators.Aggregates.ksDrift(in.parsedB)),
     // round-19: homoglyph fold is the exact-dedup hash-agg with a
     // translate() prepended; FD audit and TTL sim are aggregate work.
-    noop("homoglyph_dups")(in => dedup.Dedup.homoglyphDups(in.docs10)),
+    eager("homoglyph_dups")(in => dedup.Dedup.homoglyphDups(in.docs10)),
     noop("ttl_simulation")(in => operators.Governance.ttlSimulation(in.parsedB)),
     // round-20: injection is a map-only regex battery + conv agg;
     // salient passage is the df agg + chunk explode + doc window.
     noop("injection_scan")(in => text.Injection.scan(in.input)),
-    noop("salient_passage")(in => text.TfIdf.salientPassage(in.docs)),
+    eager("salient_passage")(in => text.TfIdf.salientPassage(in.docs)),
     // round-21: pass@k is one conv agg + task window on conv rows;
     // collocations is the bigram/unigram agg pair.
     noop("pass_at_k")(in => operators.Conversations.passAtK(in.parsedB)),
-    noop("collocations")(in => text.LangModel.collocations(in.docs)),
+    eager("collocations")(in => text.LangModel.collocations(in.docs)),
 
     // round-22: KMV set algebra / fertility / DP counts / k=v
     // schema census are each ONE corpus pass into a bounded agg;
@@ -424,14 +425,14 @@ object BenchLeaves {
     noop("concurrency")(in => operators.Sessionize.concurrencyProfile(in.input)),
     // template mining: head-vocab agg collected once, then a
     // map-only fused rebuild + skeleton census (one exchange)
-    noop("log_templates")(in => operators.DqRules.logTemplates(in.input)),
+    eager("log_templates")(in => operators.DqRules.logTemplates(in.input)),
     // bursts: one (day, tok) agg + grid math + day-window top-k
     noop("term_bursts")(in => operators.Conversations.termBursts(in.input)),
     // zone maps: narrow projection + (layout × shard) grid agg
     noop("zonemap_audit")(in => operators.Layout.zoneMapAudit(in.input)),
     // two-pass exact selection vs builtin full-group sort: the
     // same numbers, bounded memory — both timed for the A/B
-    noop("exact_quantiles_2pass")(in => operators.Aggregates.exactQuantiles2Pass(in.parsedB))
+    eager("exact_quantiles_2pass")(in => operators.Aggregates.exactQuantiles2Pass(in.parsedB))
   )
 
   private lazy val byName: Map[String, Leaf] = all.map(l => l.name -> l).toMap

@@ -147,10 +147,6 @@ object BenchSf {
           if (!rows.contains(key)) rows(key) = lastDf.count()
         } finally opened.close()
         println(f"[$tag] $name%-22s ${times(key)}%8.2f s  rows=${rows(key)}")
-        // operators that persist reused intermediates (lmScore, the
-        // clone-collapse group table, CC rounds) must not accumulate
-        // cached blocks across a 30-query sweep
-        spark.catalog.clearCache()
       }
     }
 

@@ -2,8 +2,10 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
+import scala.collection.mutable.ArrayBuffer
 import scala.util.Using
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Session preparation shared by every query entry point.
   *
@@ -35,6 +37,28 @@ object Graft {
     c.set("spark.sql.codegen.hugeMethodLimit", "8000")
     sinks.LocalFs.install(spark.sparkContext.hadoopConfiguration)
     spark
+  }
+
+  /** The one way operator code caches: inside `body`, `cache(df)` persists
+    * `df` at MEMORY_AND_DISK, and every frame cached that way is
+    * unpersisted when `body` returns or throws, dependents first, so no
+    * query leaves an entry in the session's `CacheManager`. A body that
+    * returns a frame computed from its cached ones materializes it first
+    * (an eager `localCheckpoint`, whose blocks Spark's ContextCleaner frees
+    * with the frame). */
+  def cached[A](body: Cache => A): A = {
+    val cache = new Cache
+    try body(cache) finally cache.release()
+  }
+
+  final class Cache private[Graft] {
+    private val frames = ArrayBuffer.empty[DataFrame]
+    def apply(df: DataFrame): DataFrame = {
+      frames += df.persist(StorageLevel.MEMORY_AND_DISK)
+      df
+    }
+    // dependents first, so no cached plan is recompiled over a dropped one
+    private[Graft] def release(): Unit = frames.reverseIterator.foreach(_.unpersist())
   }
 
   /** Deletes `dir` and everything under it, deepest entries first; a

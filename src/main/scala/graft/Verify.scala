@@ -42,11 +42,6 @@ object Verify {
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Iterative operators (kCore, pageRank) return persisted frames the
-      // caller is meant to own; in this 180-query dump those add up to a
-      // heap OOM around query ~170. Each query is written out already —
-      // drop ALL cached blocks before the next one.
-      spark.catalog.clearCache()
     }
     Files.writeString(Paths.get(s"$outDir/timings.json"),
       timings.map { case (k, v) => s""""$k": ${f"$v%.2f"}""" }

@@ -2,6 +2,7 @@ package graft.ann
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Graft
 
 /** Per-group embedding centroids — the vector aggregation behind IVF
   * (re)training, per-class prototypes and drift monitoring: an
@@ -61,12 +62,10 @@ object Centroids {
     * construction (√n cells), so the centroid set always broadcasts;
     * nothing quadratic, nothing keyed on the vector payload.
     */
-  def kmeansIteration(vecs: DataFrame, centroidMod: Int = 200): DataFrame = {
-    // a0 feeds both the centroid update and the re-assignment; persisted so
-    // the n×k assignment pass runs once (the cache lives until
-    // `unpersist` or `clearCache`, as TfIdf's tf does)
-    val a0 = Similarity.ivfAssign(vecs, centroidMod)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  def kmeansIteration(vecs: DataFrame, centroidMod: Int = 200): DataFrame = Graft.cached { cache =>
+    // a0 feeds both the centroid update and the re-assignment; cached so
+    // the n×k assignment pass runs once
+    val a0 = cache(Similarity.ivfAssign(vecs, centroidMod))
     val cents1 = perKey(a0.withColumn("grp", col("cent_id")), "grp")
       .select(col("grp").as("cent_id"),
         transform(col("centroid_x1e6"), x => x.cast("double")).as("cent_emb"))
@@ -80,13 +79,14 @@ object Centroids {
       .select(col("vec_id"), col("cell0"), col("cell1"),
         when(col("cell0") =!= col("cell1"), lit(1L)).otherwise(lit(0L))
           .as("moved"))
+      .localCheckpoint()
   }
 
   /** Full k-means training loop: repeat (assign → quantized-mean update)
     * until no vector moves or `maxIter` is hit — the driver-side fixpoint
     * pattern [[graft.dedup.Dedup.duplicateClusters]] also uses (each
     * round is one broadcast assignment + one groups×dims aggregate;
-    * per-round frames persist and release as the loop advances; the
+    * per-round frames are checkpointed as the loop advances; the
     * movement count is the per-round action that decides convergence).
     * Returns the final assignment (vec_id, cent_id) plus the iteration
     * count that produced it, stamped on every row.
@@ -94,10 +94,8 @@ object Centroids {
     * No DuckDB oracle (iterative fixpoint; the single Lloyd STEP is the
     * oracled unit — q86); CurationSpec asserts monotone convergence. */
   def kmeansTrain(vecs: DataFrame, centroidMod: Int = 200,
-                  maxIter: Int = 5): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val q = vecs.select(col("vec_id"), col("embedding"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+                  maxIter: Int = 5): DataFrame = Graft.cached { cache =>
+    val q = cache(vecs.select(col("vec_id"), col("embedding")))
     // per-round frames are lineage-truncated by an eager localCheckpoint
     // (the kCore discipline): `next` references `assign` twice (centroid
     // update + re-assignment), so persist-only doubles the LOGICAL plan
@@ -126,7 +124,6 @@ object Centroids {
       converged = moved == 0
       iters += 1
     }
-    q.unpersist()
     assign.select(col("vec_id"), col("cent_id"), lit(iters.toLong).as("n_iters"))
   }
 
@@ -137,9 +134,8 @@ object Centroids {
     * the same broadcast n×k + cell equi-join scale shape as
     * [[Similarity.ivfTopK]]. */
   def ivfTopKTrained(vecs: DataFrame, k: Int = 5, queryMod: Int = 50,
-                     centroidMod: Int = 200): DataFrame = {
-    val a0 = Similarity.ivfAssign(vecs, centroidMod)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                     centroidMod: Int = 200): DataFrame = Graft.cached { cache =>
+    val a0 = cache(Similarity.ivfAssign(vecs, centroidMod))
     val cents1 = perKey(a0.withColumn("grp", col("cent_id")), "grp")
       .select(col("grp").as("cent_id"),
         transform(col("centroid_x1e6"), x => x.cast("double")).as("cent_emb"))
@@ -149,6 +145,7 @@ object Centroids {
       a0.select(col("vec_id"), col("embedding")), cents1)
     Similarity.cellTopK(assigned, k, queryMod)
       .withColumn("rank", col("rank").cast("long"))
+      .localCheckpoint()
   }
 
   /** Per-class prototypes: embeddings joined to document labels on
@@ -182,19 +179,17 @@ object Centroids {
     * engines and partitionings. Seed = smallest vec_id (sel_dist2 0).
     * Output: (sel_idx, vec_id, sel_dist2) — sel_dist2 is the covering
     * radius² at selection time, non-increasing over rounds. */
-  def kCenterSelect(vecs: DataFrame, k: Int = 4): DataFrame = {
-    val q = vecs.select(col("vec_id"),
+  def kCenterSelect(vecs: DataFrame, k: Int = 4): DataFrame = Graft.cached { cache =>
+    val q = cache(vecs.select(col("vec_id"),
         transform(col("embedding"),
-          x => floor(x.cast("double") * 1000.0).cast("long")).as("q"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          x => floor(x.cast("double") * 1000.0).cast("long")).as("q")))
     // fused integer sq-dist kernel (VecSqDist) — n×k evaluations per
     // selection round; bit-identical to the HOF fold (VecSqDistParity)
     val d2 = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
       VecSqDist.sqDistFused(a, b)
-    val seed = q.orderBy("vec_id").limit(1)
+    val seed = cache(q.orderBy("vec_id").limit(1)
       .select(lit(1L).as("sel_idx"), col("vec_id"), col("q"),
-        lit(0L).as("sel_dist2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        lit(0L).as("sel_dist2")))
     val chosen = (2 to k).foldLeft(seed) { case (centers, idx) =>
       val c = broadcast(
         centers.select(col("vec_id").as("c_id"), col("q").as("cq")))
@@ -209,15 +204,11 @@ object Centroids {
             struct(col("mind2").as("d"), (-col("vec_id")).as("nid"))).as("q"))
         .select(lit(idx.toLong).as("sel_idx"), (-col("m.nid")).as("vec_id"),
           col("q"), col("m.d").as("sel_dist2"))
-      // persist each round: the next round's broadcast re-reads the
+      // cache each round: the next round's broadcast re-reads the
       // chosen set, and without it the plan re-runs all prior argmaxes
-      centers.unionByName(far)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      cache(centers.unionByName(far))
     }
-    val out = chosen.select("sel_idx", "vec_id", "sel_dist2")
-      .orderBy("sel_idx")
-    out.count() // force before unpersisting the inputs
-    q.unpersist()
-    out
+    chosen.select("sel_idx", "vec_id", "sel_dist2").orderBy("sel_idx")
+      .localCheckpoint()
   }
 }

@@ -3,6 +3,7 @@ package graft.ann
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Graft
 
 /** Similarity search over an embedding column (`Array[Float]`).
   *
@@ -508,15 +509,12 @@ object Similarity {
     * already-distinct representative set (collapsing there is a no-op
     * that would only add exchanges). */
   def nearDupPairsCollapsed(vecs: DataFrame, thresholdPermille: Int = 450,
-                            dim: Int = 64): DataFrame = {
+                            dim: Int = 64): DataFrame = Graft.cached { cache =>
     // group frame + member rows (round-5 row-shaped convention: no
-    // collect_list member arrays anywhere); persisted because it feeds
-    // the probe, both expansion joins, and the within-group leg; the
-    // cache lives until `unpersist` or `clearCache` (as TfIdf.topTerms'
-    // `tf` does)
-    val gmK = vecs.groupBy(col("embedding"))
-      .agg(min(col("vec_id")).as("gid"), count(lit(1)).as("m"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // collect_list member arrays anywhere); cached because it feeds
+    // the probe, both expansion joins, and the within-group leg
+    val gmK = cache(vecs.groupBy(col("embedding"))
+      .agg(min(col("vec_id")).as("gid"), count(lit(1)).as("m")))
     val memRows = vecs.select(col("vec_id"), col("embedding"))
       .join(gmK.select(col("embedding"), col("gid")), Seq("embedding"))
       .select(col("gid"), col("vec_id"))
@@ -540,7 +538,7 @@ object Similarity {
       .join(memRows.select(col("gid"), col("vec_id").as("id_b")), "gid")
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"), col("cos_permille"))
-    cross.unionByName(within)
+    cross.unionByName(within).localCheckpoint()
   }
 
   /** SemDeDup-style semantic dedup VERDICT (Abbas et al. 2023): a vector
@@ -555,7 +553,7 @@ object Similarity {
     * Output per vector: kept flag, how many dominating near-dups exist,
     * and the smallest dominating id (null when kept). */
   def semanticDedup(vecs: DataFrame, thresholdPermille: Int = 450,
-                    dim: Int = 64): DataFrame = {
+                    dim: Int = 64): DataFrame = Graft.cached { cache =>
     // Exact-clone collapse first — the production dedup order (exact
     // before near): identical embeddings share their bucket AND every
     // cosine, so the LSH probe + cosine work runs on one REPRESENTATIVE
@@ -575,11 +573,9 @@ object Similarity {
     // form was one multi-GB row that would hit the 2 GiB limit long
     // before the quadratic it replaced. gmK feeds five plan legs (both
     // sides of nearDupPairs' probe, selfSim, and the member join), so it
-    // persists; the cache lives until `unpersist` or `clearCache` (as
-    // TfIdf.topTerms' `tf` does).
-    val gmK = vecs.groupBy(col("embedding"))
-      .agg(min(col("vec_id")).as("gid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // is cached.
+    val gmK = cache(vecs.groupBy(col("embedding"))
+      .agg(min(col("vec_id")).as("gid")))
     val reps = gmK.select(col("gid").as("vec_id"), col("embedding"))
     val simPairs = nearDupPairs(reps, thresholdPermille, dim)
     // within-group similarity: cosine(v, v) through the SAME permille
@@ -619,5 +615,6 @@ object Similarity {
       .filter(col("tag") === 0)
       .select(col("id").as("vec_id"), col("ndom").as("n_dominating"),
         col("mind").as("min_dominator"), (col("ndom") === 0L).as("kept"))
+      .localCheckpoint()
   }
 }

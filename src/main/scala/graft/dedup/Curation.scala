@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Graft
 import graft.text.TextAnalysis
 
 /** End-to-end corpus curation — the composition a training-data pipeline
@@ -25,31 +26,28 @@ object Curation {
   /** Verdict per document: kept | quality_<bucket> | lang | exact_dup |
     * near_dup. Drop order matches a real pipeline: cheap gates first, then
     * exact, then near-dup — a doc failing several stages reports the first. */
-  def curate(docs: DataFrame, jaccardPermilleMin: Int = 600): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+  def curate(docs: DataFrame, jaccardPermilleMin: Int = 600): DataFrame = Graft.cached { cache =>
     val qc = TextAnalysis.qualityColumns(col("text"))
     // ONE corpus scan: gates + the exact-dedup key (norm only for rows
     // that pass the gates — failed rows never pay the 128-bit hash), then
     // cached. Every later stage reads this cache; the parquet scan and
     // the gate expression trees run exactly once.
-    val gated = docs.select(col("doc_id"), col("text"),
+    val gated = cache(docs.select(col("doc_id"), col("text"),
         qc("quality_bucket").as("quality_bucket"),
         TextAnalysis.langId(col("text")).as("lang_pred"))
       .withColumn("norm",
-        when(col("quality_bucket") === "ok" && col("lang_pred") === "en", norm))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        when(col("quality_bucket") === "ok" && col("lang_pred") === "en", norm)))
     val normed = gated.filter(col("norm").isNotNull)
       .select(col("doc_id"), col("text"), col("norm"))
     val exactKeeper = normed.groupBy("norm")
       .agg(min(col("doc_id")).as("exact_keeper"))
     // withExact feeds the survivor sketch stages AND the final verdict
     // join; cached so the exact-dedup shuffle (groupBy norm + join back)
-    // runs once, not once per consumer. At 100 TB these two persists
+    // runs once, not once per consumer. At 100 TB these two caches
     // replace three full corpus re-scans and a repeated exact-key
-    // exchange. The cache lives until `unpersist` or `clearCache`.
-    val withExact = normed.join(exactKeeper, "norm")
-      .select(col("doc_id"), col("text"), col("exact_keeper"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // exchange.
+    val withExact = cache(normed.join(exactKeeper, "norm")
+      .select(col("doc_id"), col("text"), col("exact_keeper")))
     // survivors' three consumers (LSH candidates + both sides of the
     // jaccard verify) each re-run the shingle sketch off this filter over
     // the withExact cache — the sketch work is theirs, the scan is free.
@@ -70,6 +68,7 @@ object Curation {
           .when(col("near_keeper").isNotNull &&
             col("near_keeper") =!= col("doc_id"), lit("near_dup"))
           .otherwise(lit("kept")).as("verdict"))
+      .localCheckpoint()
   }
 
   /** Incremental batch-vs-index dedup — the shape a production corpus

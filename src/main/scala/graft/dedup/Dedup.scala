@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Graft
 import graft.text.TextAnalysis._
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH,
@@ -58,11 +59,10 @@ object Dedup {
     * Shape: same one hash-agg shuffle as [[exactByHash]], carrying the
     * 32-char folded key; the corpus joins back to the tiny evasive-key
     * set by key (broadcast). */
-  def homoglyphDups(docs: DataFrame): DataFrame = {
-    val keyed = docs.select(col("doc_id"),
+  def homoglyphDups(docs: DataFrame): DataFrame = Graft.cached { cache =>
+    val keyed = cache(docs.select(col("doc_id"),
       exactKeyHash(col("text")).as("raw_h"),
-      exactKeyHash(homoglyphFold(col("text"))).as("fold_h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      exactKeyHash(homoglyphFold(col("text"))).as("fold_h")))
     val evasive = keyed.groupBy("fold_h").agg(
         min(col("doc_id")).as("keeper_id"),
         count(lit(1)).as("n_docs"),
@@ -71,6 +71,7 @@ object Dedup {
     keyed.join(broadcast(evasive), "fold_h")
       .select(col("doc_id"), col("keeper_id"), col("n_docs"),
         col("n_raw_variants"))
+      .localCheckpoint()
   }
 
   /** Exact dedup keyed on the content hash. */
@@ -155,17 +156,17 @@ object Dedup {
     * cluster size, keeper flag, and floor(1000/n) permille weight. The
     * shuffle is keyed on the 128-bit content hash both ways (group, then
     * re-join); document text never moves. */
-  def clusterWeights(docs: DataFrame): DataFrame = {
-    val keyed = docs.select(col("doc_id"), exactKeyHash(col("text")).as("norm_h"))
-      // feeds both the group pass and the join-back; persisted so the
-      // text scan + md5 runs once
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  def clusterWeights(docs: DataFrame): DataFrame = Graft.cached { cache =>
+    // feeds both the group pass and the join-back; cached so the text
+    // scan + md5 runs once
+    val keyed = cache(docs.select(col("doc_id"), exactKeyHash(col("text")).as("norm_h")))
     val groups = keyed.groupBy("norm_h")
       .agg(min(col("doc_id")).as("keeper_id"), count(lit(1)).as("n_copies"))
     keyed.join(groups, Seq("norm_h"))
       .select(col("doc_id"), col("n_copies"),
         (col("doc_id") === col("keeper_id")).as("is_keeper"),
         floor(lit(1000.0) / col("n_copies")).cast("long").as("weight_permille"))
+      .localCheckpoint()
   }
 
   // ---- shingles + minhash ----------------------------------------------------
@@ -368,13 +369,12 @@ object Dedup {
     * signatures fold minhash runs with the [[bandSig]] polynomial, so
     * the r=2 row reproduces the production banding. */
   def lshSweep(docs: DataFrame, sampleMod: Long = 11L,
-               tauPermille: Long = 500L): DataFrame = {
+               tauPermille: Long = 500L): DataFrame = Graft.cached { cache =>
     val sample = docs.filter(col("doc_id") % sampleMod === 0)
-    val truth = SetSimJoin.similarPairs(sample, tauPermille)
-      .select("doc_a", "doc_b")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val truth = cache(SetSimJoin.similarPairs(sample, tauPermille)
+      .select("doc_a", "doc_b"))
     val sigs = signatures(sample)
-    val cands = Seq(1, 2, 4, 8).map { r =>
+    val cands = cache(Seq(1, 2, 4, 8).map { r =>
       // posexplode, not a union of per-band selects — the bandTable
       // lesson: pruned union branches re-run the sketch pass per band
       val bands = sigs.select(col("doc_id"), lit(r.toLong).as("r"),
@@ -391,10 +391,9 @@ object Dedup {
           col("doc_id").as("doc_b")), Seq("r", "band_idx", "sig"))
         .filter(col("doc_a") < col("doc_b"))
         .select("r", "doc_a", "doc_b").distinct()
-    }.reduce(_ unionByName _)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }.reduce(_ unionByName _))
     val nTruth = truth.count()
-    val out = cands.groupBy("r")
+    cands.groupBy("r")
       .agg(count(lit(1)).as("n_candidates"))
       .join(cands.join(truth, Seq("doc_a", "doc_b"))
         .groupBy("r").agg(count(lit(1)).as("n_caught")), Seq("r"), "left")
@@ -407,9 +406,7 @@ object Dedup {
         expr("n_caught * 1000 DIV greatest(n_candidates, 1L)"))
       .select("r", "bands", "n_candidates", "n_truth", "n_caught",
         "recall_permille", "precision_permille")
-    out.count()
-    truth.unpersist(); cands.unpersist()
-    out
+      .localCheckpoint()
   }
 
   // ---- simhash ----------------------------------------------------------------
@@ -471,16 +468,14 @@ object Dedup {
     * localCheckpoint (the kCore discipline: persist-only keeps execution
     * cached but nests the previous round's LOGICAL plan inside the next,
     * and Catalyst analysis grows with the round count). */
-  def duplicateClusters(pairs: DataFrame, maxIter: Int = 10): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+  def duplicateClusters(pairs: DataFrame, maxIter: Int = 10): DataFrame = Graft.cached { cache =>
     // edges are REPARTITIONED on the join key before caching: the cached
     // InMemoryRelation keeps that hash partitioning, so the per-iteration
     // join never re-shuffles the (static) edge set — only the (shrinking
     // change-front) label side moves each round
-    val edges = pairs.select(col("doc_a"), col("doc_b"))
+    val edges = cache(pairs.select(col("doc_a"), col("doc_b"))
       .unionByName(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .repartition(col("doc_b"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("doc_b")))
     var labels = edges.select(col("doc_a").as("id")).distinct()
       .withColumn("label", col("id"))
       .localCheckpoint(true)
@@ -501,7 +496,6 @@ object Dedup {
       converged = changed == 0
       i += 1
     }
-    edges.unpersist()
     labels.select(col("id").as("doc_id"), col("label").as("keeper_id"))
   }
 

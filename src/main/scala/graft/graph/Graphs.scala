@@ -3,7 +3,7 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.Graft
 
 /** Graph analytics over transcript-derived graphs: weighted PageRank on the
   * tool-transition graph and triangle counting on the login co-occurrence
@@ -22,7 +22,7 @@ import org.apache.spark.storage.StorageLevel
   *    broadcasts it) + one hash-agg on dst. Integer fixed-point (1e9
   *    scale, multiply-then-DIV) keeps every step bit-exact in both Spark
   *    and DuckDB — no float summation-order drift — and the per-iteration
-  *    persist cuts the lineage so step k never recomputes step k-1.
+  *    localCheckpoint cuts the lineage so step k never recomputes step k-1.
   *  - Triangle counting uses the degree-orientation bound (orient every
   *    edge low-degree → high-degree, ties by name): each oriented vertex
   *    has out-degree ≤ √(2m), so the wedge join produces ≤ m·√(2m) rows —
@@ -59,16 +59,14 @@ object Graphs {
     * division — deterministic, order-independent). The dangling-mass term
     * is a 1-row aggregate joined back by a literal-true broadcast, never
     * a driver collect. Output: (v, r) at iteration `iters`. */
-  def pageRank(edges: DataFrame, iters: Int = 3): DataFrame = {
-    val spark = edges.sparkSession
-    val e = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    val verts = e.select(col("src").as("v"))
-      .unionByName(e.select(col("dst").as("v")))
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
+  def pageRank(edges: DataFrame, iters: Int = 3): DataFrame = Graft.cached { cache =>
+    val e = cache(edges)
+    val verts = cache(e.select(col("src").as("v"))
+      .unionByName(e.select(col("dst").as("v"))).distinct())
     val outw = e.groupBy("src").agg(sum("w").as("wout"))
     // edge rows pre-joined with their source's total out-weight: computed
     // once, reused by every iteration
-    val ew = e.join(outw, "src").persist(StorageLevel.MEMORY_AND_DISK)
+    val ew = cache(e.join(outw, "src"))
     val nRow = verts.agg(count(lit(1)).as("nv"))
 
     // the loop frame is LINEAGE-TRUNCATED each round (eager
@@ -95,8 +93,6 @@ object Graphs {
             expr(s"$DampX1e3 * dangle DIV (1000 * nv)")).as("r"))
         .localCheckpoint(true)
     }
-    // final ranks are materialized; release the loop-invariant frames
-    e.unpersist(); verts.unpersist(); ew.unpersist()
     ranks
   }
 
@@ -130,11 +126,11 @@ object Graphs {
     * triangle (a,b,c) is found exactly once (at its lowest-degree apex,
     * wedge legs ordered b < c) and credited to all three corners.
     * Output: (node, n_tri) for vertices in ≥1 triangle. */
-  def triangleCounts(edges: DataFrame): DataFrame = {
+  def triangleCounts(edges: DataFrame): DataFrame = Graft.cached { cache =>
     val deg = edges.select(col("u").as("x"))
       .unionByName(edges.select(col("v").as("x")))
       .groupBy(col("x")).agg(count(lit(1)).as("d"))
-    val oriented = edges
+    val oriented = cache(edges
       .join(deg.select(col("x").as("u"), col("d").as("du")), "u")
       .join(deg.select(col("x").as("v"), col("d").as("dv")), "v")
       .select(
@@ -143,8 +139,7 @@ object Graphs {
           .otherwise(col("v")).as("src"),
         when(col("du") < col("dv") ||
           (col("du") === col("dv") && col("u") < col("v")), col("v"))
-          .otherwise(col("u")).as("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+          .otherwise(col("u")).as("dst")))
     val e1 = oriented.select(col("src"), col("dst").as("b"))
     val e2 = oriented.select(col("src"), col("dst").as("c"))
     val wedges = e1.join(e2, "src").filter(col("b") < col("c"))
@@ -153,6 +148,7 @@ object Graphs {
       Seq("b", "c"))
     tris.select(explode(array(col("src"), col("b"), col("c"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("n_tri"))
+      .localCheckpoint()
   }
 
   /** Triangle counts over the login co-occurrence graph — the packaged
@@ -183,10 +179,9 @@ object Graphs {
     * and the min-label tie-break make the result bit-stable across engines
     * (synchronous LPA can oscillate on bipartite structure; the unrolled
     * count pins WHICH snapshot is reported). */
-  def labelPropagation(directedEdges: DataFrame, iters: Int = 3): DataFrame = {
-    val sym = symmetrize(directedEdges).persist(StorageLevel.MEMORY_AND_DISK)
-    val verts = sym.select(col("a").as("v")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+  def labelPropagation(directedEdges: DataFrame, iters: Int = 3): DataFrame = Graft.cached { cache =>
+    val sym = cache(symmetrize(directedEdges))
+    val verts = cache(sym.select(col("a").as("v")).distinct())
     var labels = verts.select(col("v"), col("v").as("lbl"))
     for (i <- 1 to iters) {
       val votes = sym
@@ -205,7 +200,6 @@ object Graphs {
         .select(col("v"), coalesce(col("lbl"), col("v")).as("lbl"))
         .localCheckpoint(true)
     }
-    sym.unpersist(); verts.unpersist()
     labels
   }
 
@@ -216,9 +210,8 @@ object Graphs {
     * then a min-dist hash-agg). Unreached vertices are absent from the
     * output — at 10^12 turns the dist table is bounded by the reachable
     * vertex set, not the corpus. */
-  def bfsDistances(edges: DataFrame, iters: Int = 4): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+  def bfsDistances(edges: DataFrame, iters: Int = 4): DataFrame = Graft.cached { cache =>
+    val e = cache(edges.select(col("src"), col("dst")))
     val seed = e.select(col("src").as("v"))
       .unionByName(e.select(col("dst").as("v")))
       .agg(min("v").as("v")).select(col("v"), lit(0L).as("dist"))
@@ -232,7 +225,6 @@ object Graphs {
         .groupBy("v").agg(min("dist").as("dist"))
         .localCheckpoint(true)
     }
-    e.unpersist()
     dist
   }
 
@@ -471,12 +463,11 @@ object Graphs {
     * Scale shape: per half-round one equi-join of the edge frame with
     * the score table (both keyed on the endpoint) + one vertex hash-agg;
     * the normalizing max is a 1-row broadcast. Edge frame and vertex set
-    * persist across rounds; everything is equi-keyed, nothing quadratic. */
-  def hits(edges: DataFrame, iters: Int = 2): DataFrame = {
-    val e = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    val verts = e.select(col("src").as("v"))
-      .unionByName(e.select(col("dst").as("v")))
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
+    * stay cached across rounds; everything is equi-keyed, nothing quadratic. */
+  def hits(edges: DataFrame, iters: Int = 2): DataFrame = Graft.cached { cache =>
+    val e = cache(edges)
+    val verts = cache(e.select(col("src").as("v"))
+      .unionByName(e.select(col("dst").as("v"))).distinct())
     // each half-round's score table is lineage-truncated by an eager
     // localCheckpoint (the kCore discipline): `a` is built from `h` and
     // `h` from `a`, so persist-only plans nest one more half-round of
@@ -501,8 +492,6 @@ object Graphs {
           .groupBy(col("src").as("v")).agg(sum(expr("a * w")).as("raw")),
         "h")
     }
-    e.unpersist()
-    verts.unpersist()
     h.join(a, "v")
       .select(col("v"), col("h").as("hub_x1e3"), col("a").as("auth_x1e3"))
   }

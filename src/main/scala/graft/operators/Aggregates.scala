@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Graft
 
 /** Aggregation operators (SURVEY.md §2.7): per-group counters (A2/A3),
   * summary stats (A4), rolling time-bucket metrics (A5/W3), sampler (A8),
@@ -222,10 +223,7 @@ object Aggregates {
     * MAD, and the final join — the two percentile aggregates and both
     * broadcast joins run on aggregate-sized data only. */
   def robustAnomaly(parsed: DataFrame, zX1e3Min: Long = 3500L): DataFrame =
-    robustAnomalyFromHourly(
-      hourlyCounts(parsed)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      zX1e3Min)
+    robustAnomalyFromHourly(hourlyCounts(parsed), zX1e3Min)
 
   /** The corpus-sized reduction feeding [[robustAnomaly]] — also the
     * sum-mergeable state the streaming twin
@@ -235,9 +233,9 @@ object Aggregates {
       .agg(count(lit(1)).as("n"))
 
   /** The percentile half of [[robustAnomaly]], off an already-aggregated
-    * (name, hour, n) frame. Callers with more than one consumer should
-    * persist the input (the frame is aggregate-sized; three consumers —
-    * median, MAD, final join — read it). */
+    * (name, hour, n) frame. Three consumers — median, MAD, final join —
+    * read it: an input that ends in its aggregate's exchange is read
+    * once through that exchange, any other is worth caching. */
   def robustAnomalyFromHourly(hourly: DataFrame,
                               zX1e3Min: Long = 3500L): DataFrame = {
     val med = hourly.groupBy("name")
@@ -268,13 +266,10 @@ object Aggregates {
     * aggregate-sized hourly frame (now into ≤ 24× more, still bounded,
     * cells). */
   def seasonalAnomaly(parsed: DataFrame, zX1e3Min: Long = 3500L): DataFrame =
-    seasonalAnomalyFromHourly(
-      hourlyCounts(parsed)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      zX1e3Min)
+    seasonalAnomalyFromHourly(hourlyCounts(parsed), zX1e3Min)
 
   /** The percentile half of [[seasonalAnomaly]], off an aggregated
-    * (name, hour, n) frame (persist the input — three consumers). */
+    * (name, hour, n) frame (three consumers, as [[robustAnomalyFromHourly]]). */
   def seasonalAnomalyFromHourly(hourly: DataFrame,
                                 zX1e3Min: Long = 3500L): DataFrame = {
     val h = hourly.withColumn("hod", hour(col("hour")).cast("long"))
@@ -400,10 +395,11 @@ object Aggregates {
     * Scale shape: the pairwise self-join runs on the (name, day)
     * AGGREGATE (days², not events²); at decade-scale histories sample
     * the day grid first — the estimator is sampling-stable by design. */
-  def volumeTrend(parsed: DataFrame, slopeX2e3Min: Long = 1000L): DataFrame = {
-    val daily = dailyCounts(parsed)
-      .withColumn("d", expr("unix_timestamp(CAST(day AS TIMESTAMP)) DIV 86400"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  def volumeTrend(parsed: DataFrame, slopeX2e3Min: Long = 1000L): DataFrame = Graft.cached { cache =>
+    // cached: the self-join's inferred not-null filters differ per side,
+    // so the two sides would not share the daily aggregate's exchange
+    val daily = cache(dailyCounts(parsed)
+      .withColumn("d", expr("unix_timestamp(CAST(day AS TIMESTAMP)) DIV 86400")))
     val a = daily.select(col("name"), col("d").as("d1"), col("n").as("n1"))
     val b = daily.select(col("name"), col("d").as("d2"), col("n").as("n2"))
     val slopes = a.join(b, "name").filter(col("d2") > col("d1"))
@@ -420,6 +416,7 @@ object Aggregates {
         when(col("med_slope_x2e3") >= slopeX2e3Min, "rising")
           .when(col("med_slope_x2e3") <= -slopeX2e3Min, "falling")
           .otherwise("flat"))
+      .localCheckpoint()
   }
 
   /** Two-sample Kolmogorov–Smirnov drift per source file on a numeric
@@ -436,13 +433,14 @@ object Aggregates {
     * Shape: ONE corpus hash-agg to (src_file, bucket); the dense
     * grid (sources × global buckets), cumulative windows, and the
     * corpus-marginal comparison all run on that aggregate. */
-  def ksDrift(parsed: DataFrame, driftPpmMin: Long = 100000L): DataFrame = {
-    val hist = parsed
+  def ksDrift(parsed: DataFrame, driftPpmMin: Long = 100000L): DataFrame = Graft.cached { cache =>
+    // cached: its consumers prune it to different columns, so they would
+    // not share the histogram aggregate's exchange
+    val hist = cache(parsed
       .filter(col("duration").isNotNull && col("duration") >= 1L)
       .select(col("src_file"),
         length(bin(col("duration"))).cast("long").as("bucket"))
-      .groupBy("src_file", "bucket").agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy("src_file", "bucket").agg(count(lit(1)).as("n")))
     val buckets = hist.select("bucket").distinct()
     val srcs = hist.groupBy("src_file").agg(sum("n").as("n_src"))
     val glob = hist.groupBy("bucket").agg(sum("n").as("n_g"))
@@ -463,6 +461,7 @@ object Aggregates {
       .groupBy("src_file")
       .agg(first("n_src").as("n_values"), max("gap_ppm").as("ks_ppm"))
       .withColumn("drift", col("ks_ppm") >= driftPpmMin)
+      .localCheckpoint()
   }
 
   /** The daily twin of [[hourlyCounts]] — the trend/changepoint grain
@@ -489,7 +488,6 @@ object Aggregates {
     * AGGREGATE per name. */
   def cusumChangepoints(parsed: DataFrame): DataFrame = {
     val daily = dailyCounts(parsed)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val mu = daily.groupBy("name")
       .agg(expr("sum(n) DIV count(1)").as("mu"))
     val w = Window.partitionBy("name").orderBy("day")
@@ -618,15 +616,13 @@ object Aggregates {
     * only candidate-bucket rows (an equi-join on (name, bucket) against
     * the ≤ |names|·|ps| candidate list — broadcast). */
   def exactQuantiles2Pass(parsed: DataFrame, ps: Seq[Int] = Seq(50, 95, 99),
-                          bucketWidth: Long = 16L): DataFrame = {
+                          bucketWidth: Long = 16L): DataFrame = Graft.cached { cache =>
     // the narrow (name, v, bucket) projection feeds BOTH the histogram
-    // pass and the candidate-bucket join — persisted so the parse runs
-    // once, not once per pass (the cache lives until `unpersist` or
-    // `clearCache`, as TfIdf.topTerms' tf does)
-    val vals = parsed.select(col("name"), col("duration").cast("long").as("v"))
+    // pass and the candidate-bucket join — cached so the parse runs
+    // once, not once per pass
+    val vals = cache(parsed.select(col("name"), col("duration").cast("long").as("v"))
       .filter(col("v").isNotNull)
-      .withColumn("bucket", expr(s"v DIV $bucketWidth"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("bucket", expr(s"v DIV $bucketWidth")))
     val wCum = Window.partitionBy("name").orderBy("bucket")
       .rowsBetween(Window.unboundedPreceding, 0)
     val cum = vals.groupBy("name", "bucket").agg(count(lit(1)).as("c"))
@@ -644,6 +640,7 @@ object Aggregates {
       .select(col("name"), col("p"), col("n"), col("k"),
         element_at(col("vs"),
           (col("k") - col("cum_before")).cast("int")).as("value"))
+      .localCheckpoint()
   }
 
   /** WINSORIZED mean per group — the robust aggregation between the

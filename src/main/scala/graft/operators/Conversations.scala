@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Graft
 
 /** Conversation-level data-quality operators over the transcript table —
   * the checks an agent-transcript training pipeline runs before the
@@ -179,6 +180,8 @@ object Conversations {
     * 128-bit key where only (key, conv_id) pairs move; the keeper is the
     * smallest conv_id per key. */
   def convDedup(transcripts: DataFrame): DataFrame = {
+    // keyed feeds BOTH the group pass and the join-back; both read the
+    // conversation aggregation's one exchange (3 narrow cols per conv)
     val keyed = transcripts
       .select(col("conv_id"), col("turn_idx"),
         md5(concat(col("role"), lit(":"),
@@ -190,9 +193,6 @@ object Conversations {
       .select(col("conv_id"), col("n_turns"),
         md5(array_join(transform(col("turns"), t => t("th")), "")
           .cast("binary")).as("conv_key"))
-      // keyed feeds BOTH the group pass and the join-back; persisted so
-      // the conversation aggregation runs once (3 narrow cols per conv)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val groups = keyed.groupBy("conv_key")
       .agg(min(col("conv_id")).as("keeper_conv"), count(lit(1)).as("n_dups"))
     keyed.join(groups, Seq("conv_key"))
@@ -471,7 +471,7 @@ object Conversations {
     * candidate-sized. */
   def convNearDup(transcripts: DataFrame,
                   minJaccardPermille: Long = 100L,
-                  maxBucketSize: Long = 64L): DataFrame = {
+                  maxBucketSize: Long = 64L): DataFrame = Graft.cached { cache =>
     import graft.text.TextAnalysis.P
     import graft.dedup.Dedup
     val h = conv(substring(md5(
@@ -485,14 +485,13 @@ object Conversations {
         s => s.getField("h")).as("hs"))
     val n = size(col("hs"))
     // the (conv, shingle-set) frame feeds the signature pass AND both
-    // sides of the verify join — persisted so the conv_id aggregation
-    // runs once, not once per downstream plan copy
-    val shx = seqs.select(col("conv_id"),
+    // sides of the verify join — cached so the conv_id aggregation runs
+    // once, not once per downstream plan copy
+    val shx = cache(seqs.select(col("conv_id"),
       when(n >= 2, array_distinct(zip_with(
           slice(col("hs"), lit(1), n - 1), slice(col("hs"), lit(2), n - 1),
           (a, b) => (a * 31L + b) % P)))
-        .otherwise(array(element_at(col("hs"), 1))).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .otherwise(array(element_at(col("hs"), 1))).as("sh")))
     val sigs = shx.select(
       (col("conv_id") +: (0 until Dedup.NumHashes).map(i =>
         Dedup.minhashOver(col("sh"), i).as(s"mh$i"))): _*)
@@ -506,13 +505,12 @@ object Conversations {
     // drop OVERSIZED buckets before the self-join: a band signature shared
     // by hundreds of conversations is non-discriminative (templated
     // corpora produce them) and would blow the candidate space O(bucket²)
-    // — the standard LSH hot-bucket guard; persisted because both join
+    // — the standard LSH hot-bucket guard; cached because both join
     // sides consume it
-    val bands = bandsAll
+    val bands = cache(bandsAll
       .withColumn("bn", count(lit(1)).over(
         Window.partitionBy("band_idx", "band_sig")))
-      .filter(col("bn") <= maxBucketSize).drop("bn")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .filter(col("bn") <= maxBucketSize).drop("bn"))
     val cand = bands.as("l")
       .join(bands.as("r"), col("l.band_idx") === col("r.band_idx") &&
         col("l.band_sig") === col("r.band_sig") &&
@@ -527,6 +525,7 @@ object Conversations {
           / size(array_union(col("sh_a"), col("sh_b"))).cast("long")).cast("long"))
       .filter(col("jaccard_permille") >= minJaccardPermille)
       .select("conv_a", "conv_b", "jaccard_permille")
+      .localCheckpoint()
   }
 
   /** Conversation outcome funnel over the PARSED frame: per conversation,
@@ -608,7 +607,6 @@ object Conversations {
       .groupBy("conv_id")
       .agg(array_sort(collect_list(struct(col("turn_idx"), col("tt"))))
         .getField("tt").as("tts"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     (1 to maxDepth).map { d =>
       perConv.filter(size(col("tts")) >= d)
         .select(md5(array_join(slice(col("tts"), 1, d), "|").cast("binary"))

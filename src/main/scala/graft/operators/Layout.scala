@@ -262,7 +262,6 @@ object Layout {
       .withColumn("quota", expr("total DIV g")
         + when(col("rk") <= expr("total % g"), 1L).otherwise(0L))
       .withColumn("excess", col("n") - col("quota"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val donors = quota.filter(col("excess") > 0)
       .withColumn("dhi", sum("excess").over(wCum))
       .withColumn("dlo", col("dhi") - col("excess"))

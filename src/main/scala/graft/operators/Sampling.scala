@@ -162,11 +162,10 @@ object Sampling {
     * (permille proportions, no budget); this is the allocation step that
     * turns those shares into exact integer row counts. */
   def mixturePlan(docs: DataFrame, budget: Long = 1000L): DataFrame = {
-    // cached: the corpus-sized count agg runs once; the Σw total, the
-    // shares, and the leftover all read this |sources|-row frame
+    // the corpus-sized count agg runs once: the Σw total, the shares and
+    // the leftover all read this |sources|-row frame through its exchange
     val w = docs.groupBy("source").agg(count(lit(1)).as("n_docs"))
       .withColumn("weight", floor(sqrt(col("n_docs").cast("double"))).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tot = w.agg(sum("weight").as("w_tot"))
     val shares = w.crossJoin(broadcast(tot))
       .withColumn("base", expr(s"${budget}L * weight DIV w_tot"))
@@ -206,7 +205,6 @@ object Sampling {
   def waterFill(docs: DataFrame, budget: Long = 1000L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val caps = docs.groupBy("source").agg(count(lit(1)).as("cap"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tot = caps.agg(count(lit(1)).as("n"), sum("cap").as("c_tot"))
     val wAsc = Window.orderBy(col("cap").asc, col("source").asc)
     val ranked = caps.crossJoin(broadcast(tot))
@@ -216,7 +214,6 @@ object Sampling {
       .withColumn("sat",
         col("pfx") - col("cap") + col("cap") * (col("n") - col("r") + 1)
           <= budget || col("c_tot") <= budget)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val star = ranked.agg(
       coalesce(max(when(col("sat"), col("r"))), lit(0L)).as("rstar"),
       coalesce(max(when(col("sat"), col("pfx"))), lit(0L)).as("pstar"))

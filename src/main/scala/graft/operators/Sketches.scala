@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Graft
 
 /** Sketch-shaped aggregates — the bounded-state summaries a 100 TB pipeline
   * runs INSTEAD of exact single-reducer statistics. Both operators reduce to
@@ -411,18 +412,16 @@ object Sketches {
     * negative guarantee means nothing true is skipped. The exact-overlap
     * arm (broadcast semi-join on real index shingles) is the accuracy
     * diagnostic, affordable at test scale — same pattern as HLL/CMS. */
-  def bloomPrefilter(docs: DataFrame, minShingles: Int = 3): DataFrame = {
-    // persisted: the tokenize+shingle explode feeds BOTH parity branches —
-    // without the persist the (expensive) tokenization pass runs twice
-    val sh = docs.select(col("doc_id"),
+  def bloomPrefilter(docs: DataFrame, minShingles: Int = 3): DataFrame = Graft.cached { cache =>
+    // cached: the tokenize+shingle explode feeds BOTH parity branches —
+    // without the cache the (expensive) tokenization pass runs twice
+    val sh = cache(docs.select(col("doc_id"),
       explode(array_distinct(graft.dedup.Dedup.shingleHashes(col("text"))))
         .as("sh"))
-      .withColumn("key", col("sh").cast("string"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // persisted: the distinct index set feeds BOTH the word-table build and
-    // the exact-arm broadcast — without the persist its shuffle runs twice
-    val index = sh.filter(col("doc_id") % 2 === 0).select("key", "sh").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("key", col("sh").cast("string")))
+    // cached: the distinct index set feeds BOTH the word-table build and
+    // the exact-arm broadcast — without the cache its shuffle runs twice
+    val index = cache(sh.filter(col("doc_id") % 2 === 0).select("key", "sh").distinct())
     val filterRow = bloomRow(bloomWordTable(index, "key"))
     // the probe stays PER-INSTANCE (map-only, constant memory): shingle
     // vocabularies grow with the corpus, so a distinct-probe-then-
@@ -439,6 +438,7 @@ object Sketches {
       sum(when(col("ish").isNotNull, 1L).otherwise(0L)).as("n_true"))
       .withColumn("n_false_pos", col("n_maybe") - col("n_true"))
       .withColumn("needs_verify", col("n_maybe") >= minShingles)
+      .localCheckpoint()
   }
 
   /** Count-min sketch over turn templates (depth 4 × width 256 = 1024
@@ -566,7 +566,6 @@ object Sketches {
   def kmvSetOps(docs: DataFrame, k: Int = KmvK): DataFrame = {
     val spark = docs.sparkSession
     val sk = kmvSketch(docs, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val est = kmvEstimates(sk, k)
     val pairs = est.select(col("source").as("src_a"), col("kmv_est").as("est_a"))
       .crossJoin(est.select(col("source").as("src_b"), col("kmv_est").as("est_b")))

@@ -1,10 +1,9 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.storage.StorageLevel
+import graft.Graft
 
 /** The checkpointed fold behind the stream-state twins ([[SnapshotStream]],
   * [[BloomStream]], [[CmsStream]], [[HllStream]], [[AnomalyStream]],
@@ -31,9 +30,9 @@ import org.apache.spark.storage.StorageLevel
   *    outputs are at-least-once: a death between them and the flip
   *    replays them.
   *
-  * Frames the step persists through its [[Cache]] are unpersisted when the
-  * batch ends, also when a write throws, so a failed query leaves nothing
-  * in the session's cache.
+  * Frames the step persists through its [[Graft.Cache]] are unpersisted
+  * when the batch ends, also when a write throws, so a failed query
+  * leaves nothing in the session's cache.
   */
 object FoldState {
 
@@ -47,31 +46,17 @@ object FoldState {
   def table(spark: SparkSession, root: String)(empty: => DataFrame): DataFrame =
     current(root).fold(empty)(spark.read.parquet(_))
 
-  /** A per-batch cache scope: `cache(df)` persists `df` until the batch ends. */
-  final class Cache private[FoldState] {
-    private val frames = ArrayBuffer.empty[DataFrame]
-    def apply(df: DataFrame): DataFrame = {
-      frames += df.persist(StorageLevel.MEMORY_AND_DISK)
-      df
-    }
-    // dependents first, so no cached plan is recompiled over a dropped one
-    private[FoldState] def release(): Unit =
-      frames.reverseIterator.foreach(_.unpersist())
-  }
-
   /** Fold `stream` into the state under `root`; `step(batch, batchId,
     * cache)` writes the batch's outputs and returns the new state. */
   def start(stream: DataFrame, root: String, checkpoint: String)(
-      step: (DataFrame, Long, Cache) => DataFrame): StreamingQuery =
+      step: (DataFrame, Long, Graft.Cache) => DataFrame): StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val next = s"$root/state_${batchId % 2}"
         if (!current(root).contains(next)) {
-          val cache = new Cache
-          try step(batch, batchId, cache).write.mode("overwrite").parquet(next)
-          finally cache.release()
+          Graft.cached(cache => step(batch, batchId, cache).write.mode("overwrite").parquet(next))
           flip(root, next)
         }
       }

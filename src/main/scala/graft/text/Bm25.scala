@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Graft
 
 /** BM25 sparse retrieval — the lexical complement of the dense ANN stack
   * (query docs retrieve their lexically-closest corpus docs; the standard
@@ -85,23 +86,20 @@ object Bm25 {
     * anchor probe and by (doc_id) for adjacency — two exchanges of the
     * anchor-filtered sliver, never of the full index. Self-matches
     * (a query doc finding its own opening) are excluded. */
-  def phraseSearch(docs: DataFrame, queryMod: Int = 211): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+  def phraseSearch(docs: DataFrame, queryMod: Int = 211): DataFrame = Graft.cached { cache =>
     val posAll = docs.select(col("doc_id"),
       posexplode(TextAnalysis.tokHashes(col("text"))).as(Seq("pos", "tok")))
-    val q = docs.filter(col("doc_id") % queryMod === 0)
+    val q = cache(docs.filter(col("doc_id") % queryMod === 0)
       .select(col("doc_id").as("q_id"), TextAnalysis.tokHashes(col("text")).as("th"))
       .filter(size(col("th")) >= 3)
       .select(col("q_id"), col("th")(0).as("t0"), col("th")(1).as("t1"),
-        col("th")(2).as("t2"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        col("th")(2).as("t2")))
     // postings pruned to query terms ONCE — everything downstream runs
     // on the sliver, never the full positional index
     val qterms = q.select(col("t0").as("tok"))
       .unionByName(q.select(col("t1").as("tok")))
       .unionByName(q.select(col("t2").as("tok"))).distinct()
-    val pos = posAll.join(broadcast(qterms), Seq("tok"), "left_semi")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val pos = cache(posAll.join(broadcast(qterms), Seq("tok"), "left_semi"))
     // anchor each query on its LEAST-FREQUENT term (the classic phrase-
     // eval trick): candidate starts per query shrink from df(first term)
     // to df(rarest term) — on template-heavy corpora the difference is
@@ -143,10 +141,11 @@ object Bm25 {
       .groupBy("q_id", "doc_id")
       .agg(count(lit(1)).as("n_matches"),
         min("start").cast("long").as("first_pos"))
+      .localCheckpoint()
   }
 
   /** Top-k corpus docs per query doc by integer-exact BM25. */
-  def topK(docs: DataFrame, k: Int = 5, queryMod: Int = 211): DataFrame = {
+  def topK(docs: DataFrame, k: Int = 5, queryMod: Int = 211): DataFrame = Graft.cached { cache =>
     val toks = docs.select(col("doc_id"),
       explode(TextAnalysis.tokHashes(col("text"))).as("tok"))
     val tf = toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
@@ -162,9 +161,8 @@ object Bm25 {
         explode(array_distinct(TextAnalysis.tokHashes(col("text")))).as("tok"))
 
     // posting rows for query tokens only — the single corpus-wide pass;
-    // persisted because it feeds both the df aggregate and the scoring join
-    val cand = tf.join(broadcast(qterms.select("tok").distinct()), "tok")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // cached because it feeds both the df aggregate and the scoring join
+    val cand = cache(tf.join(broadcast(qterms.select("tok").distinct()), "tok"))
 
     // df per query token: the filtered posting stream holds exactly the
     // (doc, tok) pairs that count, so df = its per-token row count
@@ -200,6 +198,7 @@ object Bm25 {
     scored.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select(col("q_id"), col("rank"), col("doc_id"), col("score_micro"))
+      .localCheckpoint()
   }
 
   /** Retrieval-quality eval — MRR and precision@k of the BM25 ranking
@@ -276,13 +275,12 @@ object Bm25 {
     *
     * Scale shape: the pairwise self-join runs on the CANDIDATE frame
     * (≤ k rows per query — ≤ k² pairs per query, never corpus-sized),
-    * equi-keyed on q_id; the candidate frame is persisted so the BM25 +
-    * rerank chain executes once, not once per join side. */
+    * equi-keyed on q_id; both join sides read one exchange of the
+    * candidate frame, so the rerank chain executes once. */
   def rankAgreement(docs: DataFrame, k: Int = 5,
                     queryMod: Int = 211): DataFrame = {
     val rr = rerankTopK(docs, k, queryMod)
       .select("q_id", "doc_id", "bm25_rank", "rerank")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val a = rr.as("a")
     val b = rr.as("b")
     a.join(b, col("a.q_id") === col("b.q_id") &&

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Graft
 
 /** Corpus-shaping operators a web-scale training-data pipeline runs after
   * cleaning: fill-in-middle restructuring, quality-quantile bucketing,
@@ -61,18 +62,17 @@ object CorpusOps {
     * broadcast-joins back. No per-document window, no global sort (an
     * ntile over partitionBy(lang) would funnel each language through one
     * reducer — exactly the 100 TB anti-pattern this avoids). */
-  def qualityDeciles(docs: DataFrame): DataFrame = {
-    val scored = docs.select(col("doc_id"), col("lang"),
+  def qualityDeciles(docs: DataFrame): DataFrame = Graft.cached { cache =>
+    // scored feeds BOTH the distribution pass and the join-back; cached
+    // so the token-hash scoring (fused TokenScore pass) runs once
+    // (measured 5.6 s → half on the 25k-doc bench corpus)
+    val scored = cache(docs.select(col("doc_id"), col("lang"),
       TokenScore.scoreStruct(col("text")).as("_s"))
       .select(col("doc_id"), col("lang"),
         when(col("_s.n_tokens") > 0,
           floor(col("_s.score_sum") * lit(1000.0) / col("_s.n_tokens"))
             .cast("long"))
-          .otherwise(lit(0L)).as("logit_x1e3"))
-      // scored feeds BOTH the distribution pass and the join-back;
-      // persisted so the token-hash scoring (fused TokenScore pass) runs
-      // once (measured 5.6 s → half on the 25k-doc bench corpus)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .otherwise(lit(0L)).as("logit_x1e3")))
     val dist = scored.groupBy("lang", "logit_x1e3").agg(count(lit(1)).as("n"))
     val w = Window.partitionBy("lang").orderBy("logit_x1e3")
     val buckets = dist
@@ -84,6 +84,7 @@ object CorpusOps {
           .as("decile"))
     scored.join(broadcast(buckets), Seq("lang", "logit_x1e3"))
       .select("doc_id", "lang", "logit_x1e3", "decile")
+      .localCheckpoint()
   }
 
   /** Deterministic synthetic URL for a document — the corpus carries no
@@ -264,18 +265,17 @@ object CorpusOps {
     * (non-negative, so floor-vs-truncate divide semantics never diverge;
     * `above` carries the sign separately).
     *
-    * Scale shape: one map-only scoring pass (persisted — feeds the logit
+    * Scale shape: one map-only scoring pass (cached — feeds the logit
     * histogram and the final frame), two aggregate-sized histograms, two
     * broadcast joins. The corpus never shuffles. */
-  def qualityZ(docs: DataFrame, zX1e3Min: Long = 3000L): DataFrame = {
-    val scored = docs.select(col("doc_id"), col("lang"),
+  def qualityZ(docs: DataFrame, zX1e3Min: Long = 3000L): DataFrame = Graft.cached { cache =>
+    val scored = cache(docs.select(col("doc_id"), col("lang"),
         TokenScore.scoreStruct(col("text")).as("_s"))
       .select(col("doc_id"), col("lang"),
         when(col("_s.n_tokens") > 0,
           floor(col("_s.score_sum") * lit(1000.0) / col("_s.n_tokens"))
             .cast("long"))
-          .otherwise(lit(0L)).as("logit_x1e3"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .otherwise(lit(0L)).as("logit_x1e3")))
     val lh = scored.groupBy(col("lang"), col("logit_x1e3").as("v"))
       .agg(count(lit(1)).as("cnt"))
     val med = medX2FromHist(lh, "lang", "v")
@@ -291,6 +291,7 @@ object CorpusOps {
       .withColumn("is_outlier", col("z_x1e3") >= zX1e3Min)
       .select("doc_id", "lang", "logit_x1e3", "med_x2", "mad_x4",
         "z_x1e3", "above", "is_outlier")
+      .localCheckpoint()
   }
 
   /** Multi-signal quality ENSEMBLE by rank averaging — the standard fix
@@ -303,9 +304,9 @@ object CorpusOps {
     * map pass at 100 TB.
     *
     * Shape: ONE map pass computes all three signals off the scan
-    * (persisted, narrow); three ≤41-row histograms + CDF windows; three
+    * (cached, narrow); three ≤41-row histograms + CDF windows; three
     * broadcast probes back. No corpus sort, no per-doc window. */
-  def ensembleRank(docs: DataFrame): DataFrame = {
+  def ensembleRank(docs: DataFrame): DataFrame = Graft.cached { cache =>
     val nTok = size(col("toks"))
     val nStop = size(filter(col("toks"),
       t => TextAnalysis.stopwords.map(w => t === w).reduce(_ || _)))
@@ -318,13 +319,12 @@ object CorpusOps {
     val logit = when(col("_s.n_tokens") > 0,
       floor(col("_s.score_sum") * lit(1000.0) / col("_s.n_tokens"))
         .cast("long")).otherwise(0L)
-    val sig = docs
+    val sig = cache(docs
       .select(col("doc_id"), TokenScore.scoreStruct(col("text")).as("_s"),
         TextAnalysis.tokens(col("text")).as("toks"),
         TextAnalysis.tokHashes(col("text")).as("th"))
       .select(col("doc_id"), logit.as("logit_x1e3"),
-        (lit(1000L) - stopPm).as("stop_inv"), (lit(1000L) - topPm).as("rep_inv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        (lit(1000L) - stopPm).as("stop_inv"), (lit(1000L) - topPm).as("rep_inv")))
     // CDF rank from a bounded histogram: rank = docs strictly below this
     // bucket, as permille of the corpus (bucket-granular by design)
     def cdf(sigCol: String, width: Long): DataFrame = {
@@ -357,6 +357,7 @@ object CorpusOps {
         col("rank_stop_inv").as("rank_stop"),
         col("rank_rep_inv").as("rank_rep"),
         col("ensemble_permille"), col("keep"))
+      .localCheckpoint()
   }
 
   /** Pairwise vocabulary drift between sources: total-variation distance
@@ -379,11 +380,12 @@ object CorpusOps {
     * top-K pick is a window over the vocabulary aggregate; everything
     * pairwise runs on the dense |sources|×(K+1) grid — broadcast-sized at
     * any corpus scale. */
-  def vocabDrift(docs: DataFrame, k: Int = 20): DataFrame = {
-    val counts = docs
+  def vocabDrift(docs: DataFrame, k: Int = 20): DataFrame = Graft.cached { cache =>
+    // cached: its consumers prune it to different columns, so they would
+    // not share the aggregate's exchange
+    val counts = cache(docs
       .select(col("source"), explode(TextAnalysis.tokens(col("text"))).as("tok"))
-      .groupBy("source", "tok").agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy("source", "tok").agg(count(lit(1)).as("n")))
     val tots = counts.groupBy("source").agg(sum("n").as("tot"))
     val topk = counts.groupBy("tok").agg(sum("n").as("gn"))
       .withColumn("rk", row_number().over(
@@ -401,7 +403,7 @@ object CorpusOps {
     val b = grid.select(col("source").as("src_b"), col("tok"),
       col("ppm").as("ppm_b"))
     // the grid is |sources|×(K+1) — aggregate-sized — but it descends from
-    // joins over persisted aggregates, so Spark's size estimate is too
+    // joins over cached aggregates, so Spark's size estimate is too
     // coarse to pick the broadcast on its own (planned a sort-merge join)
     val headL1 = a.join(broadcast(b), Seq("tok"))
       .filter(col("src_a") < col("src_b"))
@@ -414,6 +416,7 @@ object CorpusOps {
         col("other_ppm").as("ob"))), "src_b")
       .select(col("src_a"), col("src_b"),
         expr("(head_l1 + abs(oa - ob)) DIV 2").as("tv_ppm"))
+      .localCheckpoint()
   }
 
   /** Per-source token-concentration profile: Herfindahl index (collision

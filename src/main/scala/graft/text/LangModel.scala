@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Graft
 import graft.text.TextAnalysis._
 
 /** Statistical-language-model operators over the documents table: a pruned
@@ -57,14 +58,13 @@ object LangModel {
     * (fluent / templated); near-zero = improbable token soup. Docs with
     * fewer than two tokens carry no signal and are omitted.
     *
-    * Plan shape: the pair stream is persisted once (one tokenization
+    * Plan shape: the pair stream is cached once (one tokenization
     * pass feeds the model agg, the prefix agg, AND the scoring join —
     * not three corpus re-parses); both count tables are
     * vocabulary-bounded after `minCount`, so AQE broadcasts them; one
     * hash-agg folds back to doc_id. */
-  def lmScore(docs: DataFrame, minCount: Int = 2): DataFrame = {
-    val pairs = bigramStream(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  def lmScore(docs: DataFrame, minCount: Int = 2): DataFrame = Graft.cached { cache =>
+    val pairs = cache(bigramStream(docs))
     val scored = pairs
       .join(bigramCounts(pairs, minCount), Seq("h1", "h2"), "left")
       .join(prefixCounts(pairs, minCount), Seq("h1"), "left")
@@ -74,6 +74,7 @@ object LangModel {
       .agg(count(lit(1)).as("n_bigrams"), sum(col("pp")).as("sum_pp"))
       .select(col("doc_id"), col("n_bigrams"),
         expr("sum_pp DIV n_bigrams").as("lm_score_permille"))
+      .localCheckpoint()
   }
 
   /** One round of BPE pair mining per language: the most frequent adjacent
@@ -131,10 +132,9 @@ object LangModel {
     * hash-agg + one unigram agg; lift and the global top-k rank run on
     * the filtered aggregate. */
   def collocations(docs: DataFrame, minSupport: Long = 5L,
-                   topK: Int = 20): DataFrame = {
-    val toks = docs.select(TextAnalysis.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 2)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                   topK: Int = 20): DataFrame = Graft.cached { cache =>
+    val toks = cache(docs.select(TextAnalysis.tokens(col("text")).as("toks"))
+      .filter(size(col("toks")) >= 2))
     val bigrams = toks.select(explode(zip_with(
         slice(col("toks"), 1, Int.MaxValue - 1),
         slice(col("toks"), 2, Int.MaxValue - 1),
@@ -143,9 +143,8 @@ object LangModel {
       .groupBy(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
       .agg(count(lit(1)).as("n_ab"))
       .filter(col("n_ab") >= minSupport)
-    val uni = toks.select(explode(col("toks")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("n_w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val uni = cache(toks.select(explode(col("toks")).as("w"))
+      .groupBy("w").agg(count(lit(1)).as("n_w")))
     val total = uni.agg(sum("n_w").as("n_total"))
     val lifted = bigrams
       .join(uni.select(col("w").as("w1"), col("n_w").as("n_a")), "w1")
@@ -159,6 +158,7 @@ object LangModel {
     lifted.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= topK)
       .select("rank", "w1", "w2", "n_ab", "lift_x1e3")
+      .localCheckpoint()
   }
 
   /** Apply a BPE merge table to the corpus and report per-doc compression

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Graft
 
 /** DSIR-style data selection (Xie et al. 2023, "Data Selection for
   * Language Models via Importance Resampling"): score every raw document
@@ -38,7 +39,7 @@ object Selection {
     * Output: (doc_id, lang, n_tokens, weight_sum, mean_weight_micro,
     * selected); zero-token docs keep weight 0 and are never selected. */
   def dsirWeights(docs: DataFrame, buckets: Int = 1024,
-                  targetLang: String = "en"): DataFrame = {
+                  targetLang: String = "en"): DataFrame = Graft.cached { cache =>
     // ONE tokenize+explode pass, reduced immediately to per-(doc, bucket)
     // counts — every downstream consumer (rates, threshold, scores) reads
     // this cached frame instead of re-tokenizing the corpus. The frame is
@@ -46,11 +47,10 @@ object Selection {
     // than the instance level, and map-side combine shrinks the agg input
     // before its one shuffle. Previously rates/threshold/scores each ran
     // the explode from scratch: three full corpus passes → one.
-    val docBucket = docs.select(col("doc_id"), col("lang"),
+    val docBucket = cache(docs.select(col("doc_id"), col("lang"),
         explode(TextAnalysis.tokHashes(col("text"))).as("h"))
       .withColumn("b", col("h") % buckets)
-      .groupBy("doc_id", "lang", "b").agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy("doc_id", "lang", "b").agg(count(lit(1)).as("cnt")))
     // feature table: ≤`buckets` rows regardless of corpus size
     val rates = docBucket.groupBy("b").agg(
         sum("cnt").as("n_raw"),
@@ -77,6 +77,7 @@ object Selection {
         coalesce(col("mean_weight_micro"), lit(0L)).as("mean_weight_micro"),
         (coalesce(col("mean_weight_micro"), lit(0L)) >= col("share_micro"))
           .as("selected"))
+      .localCheckpoint()
   }
 
   /** The actual DSIR RESAMPLE — the second half of importance resampling
@@ -212,7 +213,7 @@ object Selection {
     * adds anything new. Output per round: the pick, its marginal gain,
     * and the running covered-phrase count.
     *
-    * Scale shape: k driver-sequenced rounds over the persisted distinct
+    * Scale shape: k driver-sequenced rounds over the cached distinct
     * (doc_id, shingle) projection. The covered set is the union of ≤k doc
     * phrase sets — broadcast-sized by construction — so each round is
     * one broadcast anti-join + hash-agg + 1-row argmax; no quadratic
@@ -231,12 +232,11 @@ object Selection {
       .orderBy(col("gain").desc, col("doc_id"))
   }
 
-  def maxCoverageSelect(docs: DataFrame, k: Int = 6): DataFrame = {
+  def maxCoverageSelect(docs: DataFrame, k: Int = 6): DataFrame = Graft.cached { cache =>
     val spark = docs.sparkSession
     import spark.implicits._
-    val ex = docs.select(col("doc_id"), explode(array_distinct(
-        graft.dedup.Dedup.shingleHashes(col("text")))).as("tok"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ex = cache(docs.select(col("doc_id"), explode(array_distinct(
+        graft.dedup.Dedup.shingleHashes(col("text")))).as("tok")))
     ex.count()
     var chosen = Vector.empty[Long]
     val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
@@ -257,7 +257,6 @@ object Selection {
         round += 1
       }
     }
-    ex.unpersist()
     rows.toSeq.toDF("round", "doc_id", "gain", "covered_total")
   }
 

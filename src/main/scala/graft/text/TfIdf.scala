@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Graft
 
 /** Per-document top terms by tf-idf — the salient-term extraction step
   * (topic tagging, dedup explanations, corpus exploration).
@@ -61,16 +62,13 @@ object TfIdf {
       .filter(col("rank") <= k)
   }
 
-  def topTerms(docs: DataFrame, k: Int = 3): DataFrame = {
+  def topTerms(docs: DataFrame, k: Int = 3): DataFrame = Graft.cached { cache =>
     val toks = docs.select(col("doc_id"),
       explode(TextAnalysis.tokHashes(col("text"))).as("tok"))
-    // tf feeds BOTH the join and the df aggregate; persisted so the
+    // tf feeds BOTH the join and the df aggregate; cached so the
     // explode+hash scan runs exactly once (exchange reuse does not fire
-    // across the extra final-agg level here — measured). The cache lives
-    // until `unpersist` or `clearCache`: Spark's CacheManager holds it
-    // after the result frame is dropped.
-    val tf = toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // across the extra final-agg level here — measured)
+    val tf = cache(toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf")))
     // df derives from tf — its rows are already distinct (doc, tok) pairs,
     // so a plain count replaces a second scan with a countDistinct
     val df = tf.groupBy("tok").agg(count(lit(1)).as("df"))
@@ -85,6 +83,7 @@ object TfIdf {
       .filter(col("rank") <= k)
       .select(col("doc_id"), col("rank"), col("tok"), col("tf"), col("df"),
         col("score"))
+      .localCheckpoint()
   }
 
   /** Salient-passage selection: each document's most INFORMATIVE
@@ -100,11 +99,10 @@ object TfIdf {
     * (vocabulary-bounded agg), one chunk explode whose (chunk, tok)
     * stream joins the df frame on tok, then a per-doc rank window on
     * the chunk-level frame (≤ len/chunk rows per doc). */
-  def salientPassage(docs: DataFrame, chunk: Int = 20): DataFrame = {
-    val toks = docs.select(col("doc_id"),
+  def salientPassage(docs: DataFrame, chunk: Int = 20): DataFrame = Graft.cached { cache =>
+    val toks = cache(docs.select(col("doc_id"),
         TextAnalysis.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .filter(size(col("toks")) > 0))
     val df = toks.select(col("doc_id"),
         explode(array_distinct(col("toks"))).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("df"))
@@ -136,5 +134,6 @@ object TfIdf {
         col("passage"))).as("_t"))
       .select(col("doc_id"), col("_t.chunk_idx").cast("long").as("chunk_idx"),
         (-col("_t.nr")).as("rarity_score"), col("_t.passage").as("passage"))
+      .localCheckpoint()
   }
 }

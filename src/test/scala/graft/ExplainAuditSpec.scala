@@ -4,13 +4,15 @@ package graft
   * cartesian/nested-loop joins anywhere, and exchange counts pinned so a
   * future refactor can't silently re-introduce plan-copy recomputation
   * (the q140 band union originally re-ran the conv_id aggregation per
-  * band side — 10 exchanges; the persisted-shx + posexplode shape is 5). */
+  * band side — 10 exchanges; the cached-shx + posexplode shape is 5).
+  * An operator that materializes its result in a cache scope is audited
+  * on the plan that computed it ([[SparkSpec.computedPlan]]). */
 class ExplainAuditSpec extends SparkSpec {
   test("plan audit: q134/q138/q140 exchange counts and join kinds") {
     val s = TestSpark.spark
     val d = "/root/testdata/sf0.001"
     def audit(q: String) = {
-      val p = SparkEntry.queries(q)(s, d).queryExecution.executedPlan.toString
+      val p = computedPlan(SparkEntry.queries(q)(s, d))
       assert(!p.contains("CartesianProduct") &&
         !p.contains("BroadcastNestedLoopJoin"), s"$q has a product join")
       "Exchange hashpartitioning".r.findAllIn(p).size
@@ -28,16 +30,15 @@ class ExplainAuditSpec extends SparkSpec {
     // q149's only nested-loop join is the 1-row broadcast filter map —
     // constant-size at any corpus scale, so it's the intended shape; the
     // batch side must never hit a CartesianProduct or a hash-shuffled join
-    val p149 = SparkEntry.queries("q149_bloom_prefilter")(s, d)
-      .queryExecution.executedPlan.toString
+    val p149 = computedPlan(SparkEntry.queries("q149_bloom_prefilter")(s, d))
     assert(!p149.contains("CartesianProduct"), "q149 has a cartesian")
     // 3 real exchanges (index distinct, word table, per-doc agg); the
-    // persisted index's distinct prints once per cached-side reference
+    // cached index's distinct prints once per cached-side reference
     // (word-table build + exact-arm broadcast), same as q140's guard
     assert("Exchange hashpartitioning".r.findAllIn(p149).size <= 4,
       "q149: index distinct + word table + per-doc agg only")
     assert(p149.contains("InMemoryTableScan"),
-      "q149: the index set must be persisted, not recomputed per consumer")
+      "q149: the index set must be cached, not recomputed per consumer")
     // q150 is map-only up to one ≤64-row aggregate
     val p150 = SparkEntry.queries("q150_zorder_layout")(s, d)
       .queryExecution.executedPlan.toString

@@ -53,7 +53,7 @@ class LangModelSpec extends SparkSpec {
 
   test("scale shapes: lmScore joins are equi-joins, repetition is map-only") {
     val docs = Seq((0L, "a b c"), (1L, "a b d")).toDF("doc_id", "text")
-    val lmPlan = LangModel.lmScore(docs).queryExecution.executedPlan.toString
+    val lmPlan = computedPlan(LangModel.lmScore(docs))
     assert(!lmPlan.contains("CartesianProduct"))
     // repetitionStats must stay a pure projection: no exchange at all
     val repPlan = TextAnalysis.repetitionStats(docs)

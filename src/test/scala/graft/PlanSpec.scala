@@ -116,11 +116,10 @@ class PlanSpec extends SparkSpec {
   test("ANN near-dup and bucketed top-k plans are equi-joins (no cartesian)") {
     val vecs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val plans = Seq(
-      "nearDupPairs" -> ann.Similarity.nearDupPairs(vecs),
-      "nearDupPairsCollapsed" -> ann.Similarity.nearDupPairsCollapsed(vecs),
-      "bucketedTopK" -> ann.Similarity.bucketedTopK(vecs))
-    plans.foreach { case (nm, df) =>
-      val plan = df.queryExecution.sparkPlan.toString
+      "nearDupPairs" -> computedPlan(ann.Similarity.nearDupPairs(vecs)),
+      "nearDupPairsCollapsed" -> computedPlan(ann.Similarity.nearDupPairsCollapsed(vecs)),
+      "bucketedTopK" -> computedPlan(ann.Similarity.bucketedTopK(vecs)))
+    plans.foreach { case (nm, plan) =>
       assert(!plan.contains("CartesianProduct"), s"$nm has a cartesian product")
       assert(!plan.contains("BroadcastNestedLoopJoin"), s"$nm nested-loop joins")
     }
@@ -129,9 +128,8 @@ class PlanSpec extends SparkSpec {
   test("blockingRecall / lshSweep truth rides the PPJoin — no cartesian " +
     "anywhere in the eval harness (round-5: the sample crossJoin is gone)") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    Seq("blockingRecall" -> dedup.Dedup.blockingRecall(docs),
-        "lshSweep" -> dedup.Dedup.lshSweep(docs)).foreach { case (nm, df) =>
-      val plan = df.queryExecution.sparkPlan.toString
+    Seq("blockingRecall" -> computedPlan(dedup.Dedup.blockingRecall(docs)),
+        "lshSweep" -> computedPlan(dedup.Dedup.lshSweep(docs))).foreach { case (nm, plan) =>
       assert(!plan.contains("CartesianProduct"), s"$nm has a cartesian product")
     }
   }
@@ -197,7 +195,7 @@ class PlanSpec extends SparkSpec {
 
   test("curation near-dup stage stays an equi-join (no cartesian)") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val plan = dedup.Curation.curate(docs).queryExecution.sparkPlan.toString
+    val plan = computedPlan(dedup.Curation.curate(docs))
     assert(!plan.contains("CartesianProduct"), "curation has a cartesian product")
     assert(!plan.contains("BroadcastNestedLoopJoin"), "curation nested-loop joins")
   }
@@ -218,7 +216,7 @@ class PlanSpec extends SparkSpec {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     // DSIR: the <=1024-row rate table and the 1-row threshold broadcast;
     // the only sort-merge allowed is the final doc_id left join
-    val dsir = finalPlanOf(text.Selection.dsirWeights(docs))
+    val dsir = computedPlan(text.Selection.dsirWeights(docs))
     assert(dsir.contains("BroadcastHashJoin"), "dsir rate probe must broadcast")
     assert(!dsir.contains("CartesianProduct"), "dsir cartesian")
     // delete propagation / contamination spans: pure broadcast probes —
@@ -248,11 +246,10 @@ class PlanSpec extends SparkSpec {
     // triangle count + link prediction: every join keyed on vertex ids
     val parsed = Pipeline.parsed(spark, tiny)
     Seq(
-      "triangles" -> graph.Graphs.loginTriangles(parsed),
-      "linkPredict" -> graph.Graphs.linkPredict(
-        graph.Graphs.loginCooccurrenceEdges(parsed))
-    ).foreach { case (nm, df) =>
-      val plan = df.queryExecution.sparkPlan.toString
+      "triangles" -> computedPlan(graph.Graphs.loginTriangles(parsed)),
+      "linkPredict" -> computedPlan(graph.Graphs.linkPredict(
+        graph.Graphs.loginCooccurrenceEdges(parsed)))
+    ).foreach { case (nm, plan) =>
       assert(!plan.contains("CartesianProduct"), s"$nm cartesian")
       assert(!plan.contains("BroadcastNestedLoopJoin"), s"$nm nested loop")
     }

@@ -347,8 +347,7 @@ class SimilaritySpec extends SparkSpec {
     assert(out(11L) == ((1L, Some(10L), false)))
     assert(out(12L) == ((2L, Some(10L), false)))
     assert(out(20L) == ((0L, None, true)))
-    val plan = graft.ann.Similarity.semanticDedup(vecs)
-      .queryExecution.executedPlan.toString
+    val plan = computedPlan(graft.ann.Similarity.semanticDedup(vecs))
     assert(!plan.contains("CartesianProduct"))
   }
 

@@ -428,7 +428,7 @@ class TrainingOpsSpec extends SparkSpec {
 
   test("scale shapes: no cartesian product in bm25 or scrub; render is one exchange") {
     val docs = Seq((0L, "a b c"), (1L, "a b d")).toDF("doc_id", "text")
-    val bmPlan = Bm25.topK(docs).queryExecution.executedPlan.toString
+    val bmPlan = computedPlan(Bm25.topK(docs))
     assert(!bmPlan.contains("CartesianProduct"))
     val scrubPlan = Boilerplate.scrub(docs).queryExecution.executedPlan.toString
     assert(!scrubPlan.contains("CartesianProduct"))
